@@ -5,12 +5,11 @@ Scale posture:
 - exact_duplicates: one groupBy on md5(text) — the canonical 100 TB dedup.
 - jaccard_pairs: *exact* near-dup within token-length bands — the
   correctness/oracle path. O(B²) per band; band width bounds the blow-up.
-- minhash_lsh_pairs: the scale path — shingle -> k minhashes -> banded
-  signatures -> candidates via equi-join on (band, signature) -> exact
-  Jaccard verification on candidates only. All joins are shuffle-hash on
-  small keys; no cross join anywhere.
-- simhash: 16-bit sign-summed token-hash sketch per doc; near-dup candidates
-  share the sketch (hamming-0) or a rotated band.
+- minhash_lsh_pairs / containment_pairs / simhash_dup_pairs(_auto): the
+  scale paths — a per-doc sketch (k minhashes, or a SimHash) feeds the
+  banded candidate-pair engine (banding.banded_pairs, which states the
+  join shape and the persist/pin contract once), and only the candidates
+  are verified exactly (shingle counts, or bit_count(xor)).
 
 Hashing: both sketch families take ``hash_fn``:
 - ``"md5"`` (registry default): hashes derive from Spark's md5() hex string,
@@ -28,6 +27,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import caching
+from .banding import banded_pairs
 from .text import tokens
 
 
@@ -245,14 +245,13 @@ def _signatures_from_shingles(
     )
 
 
-def _banded_signatures(
-    sigs: DataFrame, num_hashes: int, bands: int, hash_fn: str
-) -> DataFrame:
-    """(_id, band, sig) — one LSH band signature row per (doc, band), the
-    join key of every banded candidate search AND the persisted manifest
-    format of the incremental near-dup path (incremental_minhash). One
-    band's signature digests its rows_per_band minhashes; a single explode
-    emits the band rows, no shuffle."""
+def minhash_band_sigs(num_hashes: int, bands: int, hash_fn: str = "md5") -> list[Column]:
+    """LSH band signature expressions over the ``mh_0..mh_{k-1}`` minhash
+    columns: band b digests its ``num_hashes // bands`` minhashes (md5 of
+    the '|'-joined decimals, DuckDB-reproducible; ``hash`` otherwise). ONE
+    source of truth for the batch candidate join, the band manifest of the
+    incremental path (_banded_signatures) and the row-wise streaming form
+    (rowwise_minhash_bands), so the three can never band differently."""
     if bands <= 0 or num_hashes % bands != 0:
         raise ValueError(
             f"bands ({bands}) must evenly divide num_hashes ({num_hashes}); "
@@ -266,15 +265,67 @@ def _banded_signatures(
             return F.md5(F.concat_ws("|", *[c.cast("string") for c in cols]))
         return F.hash(*cols).cast("string")
 
-    band_structs = F.array(
-        *[
-            F.struct(F.lit(b).alias("band"), band_sig(b).alias("sig"))
-            for b in range(bands)
-        ]
+    return [band_sig(b) for b in range(bands)]
+
+
+def _banded_signatures(
+    sigs: DataFrame, num_hashes: int, bands: int, hash_fn: str
+) -> DataFrame:
+    """(_id, band, sig) — one LSH band signature row per (doc, band): the
+    persisted manifest format of the incremental near-dup path
+    (incremental_minhash, corpus_band_manifest). A single posexplode emits
+    the band rows, no shuffle."""
+    band_sigs = minhash_band_sigs(num_hashes, bands, hash_fn)
+    return sigs.select("_id", F.posexplode(F.array(*band_sigs)).alias("band", "sig"))
+
+
+def _shingle_overlap_pairs(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    num_hashes: int,
+    bands: int,
+    n: int,
+    hash_fn: str,
+) -> DataFrame:
+    """Banded-minhash candidates with their exact shingle counts:
+    (src, dst, _inter, _na, _nb) — |A∩B|, |A|, |B|. The one verification
+    join of minhash_lsh_pairs and containment_pairs, which differ only in
+    the final ratio.
+
+    The exploded shingle set is persisted ONCE and feeds the signature
+    aggregation, the sizes and the intersection join — a single explode
+    pass (sharing it measured ~25% faster at sf0.1 than exploding for
+    signatures separately). The signatures are the engine's sketch
+    (banding.banded_pairs).
+
+    Verification is candidate-bounded by join STRATEGY, not an extra
+    semi-join pass: candidates are near-dup-proportional (tiny), so AQE
+    broadcasts them into both shingle joins — the shingle stream never
+    shuffles, it is scanned once from cache and hash-probed against the
+    broadcast candidates (an explicit semi-join prefilter measured 2-3x
+    slower at sf0.1). sizes partial-aggregates the cached shingles:
+    shuffle volume is |docs| counts, not shingle rows."""
+    sh = exploded_shingles(df, id_col, text_col, n).persist()
+    cand = banded_pairs(
+        _signatures_from_shingles(sh, num_hashes, hash_fn),
+        "_id",
+        minhash_band_sigs(num_hashes, bands, hash_fn),
     )
-    return sigs.select("_id", F.explode(band_structs).alias("bs")).select(
-        "_id", "bs.band", "bs.sig"
+    sizes = sh.groupBy("_id").agg(F.count("*").alias("_n"))
+    inter = (
+        cand.join(sh.select(F.col("_id").alias("src"), "sh"), "src")
+        .join(sh.select(F.col("_id").alias("dst"), "sh"), ["dst", "sh"])
+        .groupBy("src", "dst")
+        .agg(F.count("*").alias("_inter"))
     )
+    counted = (
+        cand.join(inter, ["src", "dst"], "left")
+        .join(sizes.select(F.col("_id").alias("src"), F.col("_n").alias("_na")), "src")
+        .join(sizes.select(F.col("_id").alias("dst"), F.col("_n").alias("_nb")), "dst")
+        .withColumn("_inter", F.coalesce(F.col("_inter"), F.lit(0)))
+    )
+    return caching.pin(counted, sh, *caching.pinned(cand))
 
 
 def minhash_lsh_pairs(
@@ -289,58 +340,16 @@ def minhash_lsh_pairs(
 ) -> DataFrame:
     """Scale-path near-dup: banded minhash candidates, verified with exact
     Jaccard. Output (src, dst, jaccard) with jaccard >= min_jaccard.
-
-    The exploded shingle set is persisted ONCE and feeds both the signature
-    aggregation and the verification join — a single explode pass. (An
-    earlier variant cached the shingles but still exploded separately for
-    signatures, which measured 15% slower; sharing the persisted frame for
-    both consumers removes a full explode+hash pass and wins ~25% at
-    sf0.1.) The shingle cache is pinned to the result —
-    caching.release(result) after the final action."""
-    sh = exploded_shingles(df, id_col, text_col, n).persist()
-    sigs = _signatures_from_shingles(sh, num_hashes, hash_fn)
-    # The band-signature frame feeds BOTH sides of the candidate
-    # self-join; unpersisted, each side re-runs the signature aggregation
-    # (one md5 + 16 affine mins per shingle occurrence — the family's
-    # per-row hot loop) over the shingle cache. The frame is |docs| x
-    # bands rows — signature-manifest-sized at any scale — so persist it
-    # too (pinned to the result with the shingle cache).
-    exploded = _banded_signatures(sigs, num_hashes, bands, hash_fn).persist()
-    cand = (
-        exploded.alias("a")
-        .join(exploded.alias("b"), ["band", "sig"])
-        .filter(F.col("a._id") < F.col("b._id"))
-        .select(F.col("a._id").alias("src"), F.col("b._id").alias("dst"))
-        .distinct()
+    Candidates and counts come from _shingle_overlap_pairs; caches follow
+    the banding.banded_pairs pin contract."""
+    counted = _shingle_overlap_pairs(df, id_col, text_col, num_hashes, bands, n, hash_fn)
+    i = F.col("_inter")
+    verified = counted.withColumn(
+        "jaccard", i / (F.col("_na") + F.col("_nb") - i)
+    ).filter(F.col("jaccard") >= min_jaccard)
+    return caching.pin(
+        verified.select("src", "dst", "jaccard"), *caching.pinned(counted)
     )
-    # Verification is candidate-bounded by join STRATEGY, not an extra
-    # semi-join pass: cand is near-dup-proportional (tiny), so AQE
-    # broadcasts it into both shingle joins — the shingle stream never
-    # shuffles, it is scanned once from cache and hash-probed against the
-    # broadcast candidates. (An explicit semi-join prefilter of the
-    # shingle set was measured 2-3x slower end-to-end at sf0.1: it adds a
-    # blocking broadcast stage without removing any shuffle the broadcast
-    # joins hadn't already removed.) sizes partial-aggregates the cached
-    # shingles: shuffle volume is |docs| counts, not shingle rows.
-    sizes = sh.groupBy("_id").agg(F.count("*").alias("_n"))
-    inter = (
-        cand.join(sh.select(F.col("_id").alias("src"), "sh"), "src")
-        .join(sh.select(F.col("_id").alias("dst"), "sh"), ["dst", "sh"])
-        .groupBy("src", "dst")
-        .agg(F.count("*").alias("_inter"))
-    )
-    verified = (
-        cand.join(inter, ["src", "dst"], "left")
-        .join(sizes.select(F.col("_id").alias("src"), F.col("_n").alias("_na")), "src")
-        .join(sizes.select(F.col("_id").alias("dst"), F.col("_n").alias("_nb")), "dst")
-        .withColumn(
-            "jaccard",
-            F.coalesce(F.col("_inter"), F.lit(0))
-            / (F.col("_na") + F.col("_nb") - F.coalesce(F.col("_inter"), F.lit(0))),
-        )
-        .filter(F.col("jaccard") >= min_jaccard)
-    )
-    return caching.pin(verified.select("src", "dst", "jaccard"), sh, exploded)
 
 
 def _cluster_labels(
@@ -658,42 +667,28 @@ def simhash_dup_pairs(
 ) -> DataFrame:
     """Near-dup pairs by SimHash with exact Hamming-LSH banding: the sketch
     is split into max_hamming+1 bands, so a pair within max_hamming differing
-    bits leaves at least one band identical (pigeonhole) — the
-    (band_idx, band_value) equi-join has FULL recall, and bit_count(xor)
-    verifies the true hamming distance. One exploded self-join replaces a
-    per-band join union; the N-row sketch is persisted so the token explode
-    + bit aggregation runs once, not once per join side (cache pinned to
-    the result — caching.release(result) after the final action)."""
+    bits leaves at least one band identical (pigeonhole) — the banded join
+    (banding.banded_pairs) has FULL recall, and bit_count(xor) verifies the
+    true hamming distance."""
     n_bands = max_hamming + 1
     band_w = max(1, bits // n_bands)
-    sk = simhash(df, id_col, text_col, bits, hash_fn).persist()
     bands = []
     for i in range(n_bands):
         shifted = F.shiftright(F.col("simhash"), i * band_w)
         if i < n_bands - 1:
             shifted = shifted.bitwiseAND(F.lit(2**band_w - 1))
         bands.append(shifted.cast("long"))
-    keyed = sk.select(
-        F.col(id_col).alias("_id"),
-        "simhash",
-        F.posexplode(F.array(*bands)),  # -> pos (band idx), col (band value)
+    cand = banded_pairs(
+        simhash(df, id_col, text_col, bits, hash_fn), id_col, bands, carry=["simhash"]
     )
     out = (
-        keyed.alias("a")
-        .join(keyed.alias("b"), ["pos", "col"])
-        .filter(F.col("a._id") < F.col("b._id"))
-        .select(
-            F.col("a._id").alias("src"),
-            F.col("b._id").alias("dst"),
-            F.col("a.simhash").alias("sh_a"),
-            F.col("b.simhash").alias("sh_b"),
+        cand.withColumn(
+            "hamming", F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b")))
         )
-        .distinct()
-        .withColumn("hamming", F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b"))))
         .filter(F.col("hamming") <= max_hamming)
         .select("src", "dst", "hamming")
     )
-    return caching.pin(out, sk)
+    return caching.pin(out, *caching.pinned(cand))
 
 
 def auto_simhash_bits(
@@ -803,33 +798,25 @@ def simhash_dup_pairs_auto(
             "bands (need at least 1 bit per band)"
         )
     bits = (bits // n_bands) * n_bands
-    sk = simhash_bands(df, id_col, text_col, bits, n_bands).persist()
-    keyed = sk.select(
-        F.col(id_col).alias("_id"), "bands", F.posexplode("bands")
+    cand = banded_pairs(
+        simhash_bands(df, id_col, text_col, bits, n_bands),
+        id_col,
+        [F.col("bands")[i] for i in range(n_bands)],
+        carry=["bands"],
     )
-    out = (
-        keyed.alias("a")
-        .join(keyed.alias("b"), ["pos", "col"])
-        .filter(F.col("a._id") < F.col("b._id"))
-        .select(
-            F.col("a._id").alias("src"),
-            F.col("b._id").alias("dst"),
-            F.aggregate(
-                F.zip_with(
-                    F.col("a.bands"),
-                    F.col("b.bands"),
-                    lambda x, y: F.bit_count(x.bitwiseXOR(y)).cast("long"),
-                ),
-                F.lit(0).cast("long"),
-                lambda acc, x: acc + x,
-            )
-            .cast("int")
-            .alias("hamming"),
-        )
-        .distinct()
-        .filter(F.col("hamming") <= F.lit(max_hamming))
+    hamming = F.aggregate(
+        F.zip_with(
+            F.col("bands_a"),
+            F.col("bands_b"),
+            lambda x, y: F.bit_count(x.bitwiseXOR(y)).cast("long"),
+        ),
+        F.lit(0).cast("long"),
+        lambda acc, x: acc + x,
+    ).cast("int")
+    out = cand.select("src", "dst", hamming.alias("hamming")).filter(
+        F.col("hamming") <= F.lit(max_hamming)
     )
-    return caching.pin(out, sk)
+    return caching.pin(out, *caching.pinned(cand))
 
 
 def rowwise_minhash_bands(
@@ -854,7 +841,7 @@ def rowwise_minhash_bands(
     verification, e.g. streaming.stream_near_dup_verified — a later join
     back to the source would be a stream-stream join, so the array must
     ride along)."""
-    rows_per_band = num_hashes // bands
+    band_sigs = minhash_band_sigs(num_hashes, bands)
     sh = shingles(F.col(text_col), n)
     consts = minhash_affine_constants(num_hashes)
     # one md5+conv per shingle occurrence, projected as its own column so
@@ -886,16 +873,9 @@ def rowwise_minhash_bands(
         F.col("mh_0").isNotNull()
     )
 
-    def band_sig(bi: int) -> Column:
-        cols = [F.col(f"mh_{bi * rows_per_band + r}") for r in range(rows_per_band)]
-        return F.md5(F.concat_ws("|", *[c.cast("string") for c in cols]))
-
-    band_structs = F.array(
-        *[F.struct(F.lit(bi).alias("band"), band_sig(bi).alias("sig")) for bi in range(bands)]
-    )
     return sigs.select(
-        F.col(id_col), F.explode(band_structs).alias("bs"), *carried
-    ).select(id_col, "bs.band", "bs.sig", *carried)
+        F.col(id_col), F.posexplode(F.array(*band_sigs)).alias("band", "sig"), *carried
+    )
 
 
 def corpus_band_manifest(
@@ -1568,45 +1548,19 @@ def containment_pairs(
     recall with more/narrower bands or run the chunk-level operators
     (:func:`chunk_dedup` / :func:`cdc_chunk_dedup`), which detect shared
     spans independent of document size. Verification is exact and
-    candidate-bounded: the shingle explode is persisted once and feeds
-    signatures, sizes, and the intersection join (pin carried to the
-    result; caller releases). Output (src, dst, containment, jaccard) —
-    jaccard comes free from the same counts and lets callers separate
-    "same doc" (both high) from "contained doc" (containment high,
-    jaccard low).
+    candidate-bounded (_shingle_overlap_pairs, the minhash_lsh_pairs
+    counts). Output (src, dst, containment, jaccard) — jaccard comes free
+    from the same counts and lets callers separate "same doc" (both high)
+    from "contained doc" (containment high, jaccard low).
     """
-    sh = exploded_shingles(df, id_col, text_col, n).persist()
-    sigs = _signatures_from_shingles(sh, num_hashes, hash_fn)
-    # The band-signature frame feeds BOTH sides of the candidate
-    # self-join; unpersisted, each side re-runs the signature aggregation
-    # (one md5 + 16 affine mins per shingle occurrence — the family's
-    # per-row hot loop) over the shingle cache. The frame is |docs| x
-    # bands rows — signature-manifest-sized at any scale — so persist it
-    # too (pinned to the result with the shingle cache).
-    exploded = _banded_signatures(sigs, num_hashes, bands, hash_fn).persist()
-    cand = (
-        exploded.alias("a")
-        .join(exploded.alias("b"), ["band", "sig"])
-        .filter(F.col("a._id") < F.col("b._id"))
-        .select(F.col("a._id").alias("src"), F.col("b._id").alias("dst"))
-        .distinct()
-    )
-    sizes = sh.groupBy("_id").agg(F.count("*").alias("_n"))
-    inter = (
-        cand.join(sh.select(F.col("_id").alias("src"), "sh"), "src")
-        .join(sh.select(F.col("_id").alias("dst"), "sh"), ["dst", "sh"])
-        .groupBy("src", "dst")
-        .agg(F.count("*").alias("_inter"))
-    )
-    i = F.coalesce(F.col("_inter"), F.lit(0))
+    counted = _shingle_overlap_pairs(df, id_col, text_col, num_hashes, bands, n, hash_fn)
+    i = F.col("_inter")
     verified = (
-        cand.join(inter, ["src", "dst"], "left")
-        .join(sizes.select(F.col("_id").alias("src"), F.col("_n").alias("_na")), "src")
-        .join(sizes.select(F.col("_id").alias("dst"), F.col("_n").alias("_nb")), "dst")
-        .withColumn("containment", i / F.least(F.col("_na"), F.col("_nb")))
+        counted.withColumn("containment", i / F.least(F.col("_na"), F.col("_nb")))
         .withColumn("jaccard", i / (F.col("_na") + F.col("_nb") - i))
         .filter(F.col("containment") >= min_containment)
     )
     return caching.pin(
-        verified.select("src", "dst", "containment", "jaccard"), sh, exploded
+        verified.select("src", "dst", "containment", "jaccard"),
+        *caching.pinned(counted),
     )

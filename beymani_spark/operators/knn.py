@@ -238,22 +238,19 @@ def lsh_pair_distances(
     df: DataFrame,
     id_col: str,
     vec_col: str,
-    keys: Sequence[str] = (),
     n_planes: int | str = 8,
     seed: int = 42,
-    dim: int | None = None,
-    probe: int = 1,
     target_bucket: int = 8,
 ) -> DataFrame:
     """Scale path: random-hyperplane LSH bucketing, exact distances within
-    probed buckets only. Recall is approximate (neighbors split across
-    buckets are missed); ``probe=1`` (default) pairs rows whose signatures
-    differ by at most one bit (src side explodes to its bucket + one-bit
-    flips; each qualifying pair matches exactly one probe, so no dedup
-    shuffle is needed) — measured kNN recall@5 on the sf0.001 embeddings
-    (near-uniform vectors, the adversarial case): 0.50 at 4 planes, 0.11 at
-    8, for (n_planes+1)x the src rows. ``probe=0`` is the single-probe
-    path; raise n_planes for smaller buckets.
+    probed buckets only — ordered (src, dst, dist) pairs, both directions.
+    Recall is approximate (neighbors split across buckets are missed):
+    rows pair when their signatures differ by at most one bit, through the
+    probe join of banding.banded_pairs (one hyperplane kernel pass, each
+    pair matched by one probe, no dedup shuffle) — measured kNN recall@5
+    on the sf0.001 embeddings (near-uniform vectors, the adversarial
+    case): 0.50 at 4 planes, 0.11 at 8, for (n_planes+1)x the probe rows.
+    Raise n_planes for smaller buckets.
 
     ``n_planes='auto'`` sizes the plane count to the DATA:
     max(8, ceil(log2(n / target_bucket))) via one cheap count, holding the
@@ -265,41 +262,44 @@ def lsh_pair_distances(
     A fixed-N deployment can precompute the same formula and pass the int."""
     import random
 
-    from .similarity import add_lsh_bucket
+    from .banding import banded_pairs
+    from .similarity import _as_double, add_lsh_bucket, one_bit_probes
 
     if n_planes == "auto":
         n_planes = auto_planes(df.count(), target_bucket)
-    if dim is None:
-        probe_row = df.select(vec_col).first()
-        if probe_row is None:  # empty input: no pairs, right shape
-            id_t = df.schema[id_col].dataType.simpleString()
-            key_ddl = "".join(
-                f"{k} {df.schema[k].dataType.simpleString()}, " for k in keys
-            )
-            return df.sparkSession.createDataFrame(
-                [], f"{key_ddl}src {id_t}, dst {id_t}, dist double"
-            )
-        dim = len(probe_row[0])
+    probe_row = df.select(vec_col).first()
+    if probe_row is None:  # empty input: no pairs, right shape
+        id_t = df.schema[id_col].dataType.simpleString()
+        return df.sparkSession.createDataFrame(
+            [], f"src {id_t}, dst {id_t}, dist double"
+        )
+    dim = len(probe_row[0])
     rng = random.Random(seed)
     planes = [[rng.gauss(0, 1) for _ in range(dim)] for _ in range(n_planes)]
-    if not probe:
-        bucketed = add_lsh_bucket(df, vec_col, planes)
-        return pair_distances(bucketed, id_col, vec_col, [*keys, "_bucket"]).drop("_bucket")
-    vec_d = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    a = (
-        add_lsh_bucket(df, vec_col, planes, out_col="_probes", hamming=1)
-        .withColumn("_bucket", F.explode("_probes"))
-        .select(*keys, F.col(id_col).alias("src"), vec_d.alias("_va"), "_bucket")
+    cand = banded_pairs(
+        add_lsh_bucket(df.select(id_col, vec_col), vec_col, planes),
+        id_col,
+        [F.col("_sig")],
+        carry=[vec_col],
+        probes=one_bit_probes(F.col("_sig"), n_planes),
     )
-    b = add_lsh_bucket(df, vec_col, planes).select(
-        *keys, F.col(id_col).alias("dst"), vec_d.alias("_vb"), "_bucket"
+
+    # the engine emits each unordered pair once (src < dst); one explode
+    # restores both directions. (x-y)^2 == (y-x)^2 exactly, so the shared
+    # distance is the one either direction would compute, bit for bit.
+    both = F.array(
+        F.struct(F.col("src"), F.col("dst")),
+        F.struct(F.col("dst").alias("src"), F.col("src").alias("dst")),
     )
-    return (
-        a.join(b, [*keys, "_bucket"])
-        .filter(F.col("src") != F.col("dst"))
-        .withColumn("dist", euclidean(F.col("_va"), F.col("_vb")))
-        .drop("_va", "_vb", "_bucket")
+    dist = euclidean(
+        _as_double(F.col(f"{vec_col}_a")), _as_double(F.col(f"{vec_col}_b"))
     )
+    out = (
+        cand.withColumn("dist", dist)
+        .select(F.explode(both).alias("_p"), "dist")
+        .select("_p.src", "_p.dst", "dist")
+    )
+    return caching.pin(out, *caching.pinned(cand))
 
 
 def knn(

@@ -44,6 +44,9 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions import caching
+from .banding import banded_pairs
+
 MEDIA_SCHEMA = (
     "media_id long, kind string, payload binary, "
     "meta struct<format: string, width: int, height: int, duration_ms: int>"
@@ -563,17 +566,6 @@ def sample_frames(
     return _spread(df).mapInPandas(
         gen,
         schema=f"{id_col} long, frame_idx int, offset_ms long, frame_features array<double>",
-    )
-
-
-def media_metadata_stats(df: DataFrame, kind_col: str = "kind", payload_col: str = "payload") -> DataFrame:
-    """Payload-size profile per media kind — metadata-style scan. Uses
-    length(payload) which still reads payload bytes; for true metadata-only
-    scans keep sizes as a separate column at ingest."""
-    return df.groupBy(kind_col).agg(
-        F.count("*").alias("cnt"),
-        F.avg(F.length(payload_col)).alias("avg_bytes"),
-        F.max(F.length(payload_col)).alias("max_bytes"),
     )
 
 
@@ -1312,22 +1304,41 @@ def phash64(
     return _spread(df).mapInPandas(gen, schema=f"{id_col} long, phash string")
 
 
-def phash_band_sigs(hash_col: str, composite: bool = False) -> list:
-    """Band signature expressions for a 16-hex-char pHash column: the four
-    16-bit hex bands, or (composite) the C(4,2)=6 concatenated band
-    pairs. ONE source of truth for batch (phash_dup_pairs) and streaming
-    (stream_media_phash_dedup) so band math can never diverge."""
+def phash_band_sigs(hash_col: str | F.Column, composite: bool = False) -> list:
+    """Band signature expressions for a 16-hex-char pHash (a column name or
+    expression): the four 16-bit hex bands, or (composite) the C(4,2)=6
+    concatenated band pairs. ONE source of truth for batch (phash_dup_pairs,
+    video_phash_dup_pairs per frame) and streaming (stream_media_phash_dedup)
+    so band math can never diverge."""
     if composite:
         import itertools
 
         return [
             F.concat(
-                F.substring(F.col(hash_col), 1 + 4 * i, 4),
-                F.substring(F.col(hash_col), 1 + 4 * j, 4),
+                F.substring(hash_col, 1 + 4 * i, 4),
+                F.substring(hash_col, 1 + 4 * j, 4),
             )
             for i, j in itertools.combinations(range(4), 2)
         ]
-    return [F.substring(F.col(hash_col), 1 + 4 * b, 4) for b in range(4)]
+    return [F.substring(hash_col, 1 + 4 * b, 4) for b in range(4)]
+
+
+def resolve_composite_bands(composite_bands: bool | str, max_hamming: int) -> bool:
+    """The one radius rule of perceptual banding: ``"auto"`` picks composite
+    2-of-4 banding whenever the radius permits it (max_hamming <= 2) and
+    single 4x16-bit bands only for radius 3. Pigeonhole recall holds for
+    max_hamming <= 2 (composite: two flips disturb at most two bands,
+    leaving an intact pair) or <= 3 (single bands); any other radius
+    raises."""
+    if composite_bands == "auto":
+        composite_bands = max_hamming <= 2
+    limit = 2 if composite_bands else 3
+    if not 0 <= max_hamming <= limit:
+        raise ValueError(
+            f"{'composite 2-of-4' if composite_bands else 'single 4x16'} phash"
+            f" banding guarantees recall only for 0 <= max_hamming <= {limit}"
+        )
+    return bool(composite_bands)
 
 
 def phash_hamming(a: str, b: str) -> F.Column:
@@ -1341,43 +1352,6 @@ def phash_hamming(a: str, b: str) -> F.Column:
         t = F.bit_count(ba.bitwiseXOR(bb))
         ham = t if ham is None else (ham + t)
     return ham
-
-
-def _banded_candidates(hashed, sigs, id_col, hash_col):
-    """Shared candidate stage for every banded perceptual-hash pair
-    engine: posexplode the band signatures, equi-join on (band, sig),
-    keep src < dst, distinct — ONE copy of the join/distinct invariants
-    for the image, composite, and video forms. Output columns:
-    (src, _ha, dst, _hb).
-
-    The hash frame is PERSISTED before the self-join: both join sides
-    read it, and without a cache each side re-executes the full upstream
-    lineage — for every consumer that is the perceptual-hash mapInPandas
-    kernel (DCT / FFT per item, plus the PNG/AVI decode where used), the
-    dominant cost of the family, run twice per query (measured plan:
-    documents scanned 4x, two MapInPandas nodes per kernel). The cached
-    frame is (id, 16*k hex chars) — fingerprint-sized at any corpus
-    scale. Cache ownership passes to the caller via caching.pin."""
-    from ..functions import caching
-
-    hashed = hashed.persist()
-    exploded = hashed.select(
-        F.col(id_col).alias("_id"), F.col(hash_col).alias("_h"),
-        F.posexplode(F.array(*sigs)).alias("band", "sig"),
-    )
-    out = (
-        exploded.alias("a")
-        .join(exploded.alias("b"), ["band", "sig"])
-        .filter(F.col("a._id") < F.col("b._id"))
-        .select(
-            F.col("a._id").alias("src"),
-            F.col("a._h").alias("_ha"),
-            F.col("b._id").alias("dst"),
-            F.col("b._h").alias("_hb"),
-        )
-        .distinct()
-    )
-    return caching.pin(out, hashed)
 
 
 def phash_dup_pairs(
@@ -1396,33 +1370,14 @@ def phash_dup_pairs(
     parsing per band — no signed-64 shift semantics to match across
     engines). Output (src, dst, hamming) with hamming <= max_hamming.
 
-    Banding mode — the DEFAULT is the scale-safe form: with
-    ``composite_bands="auto"`` (default) the engine picks composite
-    2-of-4 banding whenever the radius permits it (max_hamming <= 2, the
-    default and the practical near-dup radius for 64-bit pHash at corpus
-    scale) and falls back to single bands only when the caller asks for
-    radius 3, the one radius only single bands can guarantee. Composite
-    candidates must share a PAIR of bands (C(4,2)=6 composite 32-bit
-    signatures), putting buckets at N/2^32 — pigeonhole covers
-    max_hamming <= 2 because two bit flips disturb at most two bands,
-    leaving an intact pair. Single 16-bit bands put N/2^16 items per
-    bucket per band — fine to ~10^6 items (measured: linear time to 5M
-    items at 100x, BASELINE.md §8.6) but candidate volume grows N^2/2^16
-    and dominates the next decade, so radius-3 callers own that trade
-    explicitly (``composite_bands=False`` pins single bands at any
-    radius <= 3)."""
-    if composite_bands == "auto":
-        composite_bands = max_hamming <= 2
-    if composite_bands:
-        if not (0 <= max_hamming <= 2):
-            raise ValueError(
-                "composite 2-of-4 banding guarantees recall only for"
-                " max_hamming <= 2"
-            )
-    elif not (0 <= max_hamming <= 3):
-        raise ValueError(
-            "banded 4x16 phash guarantees recall only for max_hamming <= 3"
-        )
+    Banding mode (resolve_composite_bands): ``"auto"`` (default) is the
+    scale-safe composite 2-of-4 banding for max_hamming <= 2 — buckets at
+    N/2^32 — and single 16-bit bands only for an explicit radius 3, whose
+    N/2^16 buckets measured linear to 5M items (BASELINE.md §8.6) but grow
+    candidate volume N^2/2^16 beyond that; ``composite_bands=False`` pins
+    single bands at any radius <= 3. Candidates come from
+    banding.banded_pairs (its pin contract applies)."""
+    composite = resolve_composite_bands(composite_bands, max_hamming)
     # length contract enforced row-locally (the video form's guard, same
     # hazard): a short/malformed hash — '' or a 64-char vhash passed by
     # mistake — yields '' band substrings that share ('', band) buckets
@@ -1430,13 +1385,12 @@ def phash_dup_pairs(
     # NULL hammings would then be silently dropped. Mismatched rows are
     # excluded, and excluded loudly in the plan, not hashed wrongly.
     hashed = hashed.filter(F.length(F.col(hash_col)) == 16)
-    sigs = phash_band_sigs(hash_col, composite_bands)
-    cand = _banded_candidates(hashed, sigs, id_col, hash_col)
-    verified = cand.withColumn("hamming", phash_hamming("_ha", "_hb")).filter(
-        F.col("hamming") <= max_hamming
+    cand = banded_pairs(
+        hashed, id_col, phash_band_sigs(hash_col, composite), carry=[hash_col]
     )
-    from ..functions import caching
-
+    verified = cand.withColumn(
+        "hamming", phash_hamming(f"{hash_col}_a", f"{hash_col}_b")
+    ).filter(F.col("hamming") <= max_hamming)
     return caching.pin(
         verified.select("src", "dst", "hamming"), *caching.pinned(cand)
     )
@@ -1608,32 +1562,11 @@ def video_phash_dup_pairs(
     implies frame 0 is within 3, so one of its bands collides. Output
     (src, dst, max_frame_hamming).
 
-    Banding mode — the DEFAULT is the scale-safe form (the image form's
-    rule): ``composite_bands="auto"`` picks composite banding whenever
-    the radius permits (max_hamming <= 2, the default), single bands only
-    for an explicit radius-3 call. Composite candidates share a
-    concatenated band PAIR within one frame (C(4,2)=6 32-bit signatures
-    per frame), buckets at N/2^32, pigeonhole covering per-frame
-    hamming <= 2 (two flips within a frame disturb at most two of ITS
-    bands, leaving an intact pair among that frame's six). The
-    single-band collision floor is PER BAND, not per video: (frame, band)
-    keys give 4*n_frames buckets per item but each 16-bit bucket still
-    holds N/2^16 items, so candidate volume grows N^2/2^16 exactly as the
-    image form's 100x capture measured (BASELINE.md §8.6-8.7) — radius-3
-    callers own that trade explicitly (``composite_bands=False``)."""
-    if composite_bands == "auto":
-        composite_bands = max_hamming <= 2
-    if composite_bands:
-        if not (0 <= max_hamming <= 2):
-            raise ValueError(
-                "composite 2-of-4 banding guarantees recall only for"
-                " max_hamming <= 2"
-            )
-    elif not (0 <= max_hamming <= 3):
-        raise ValueError(
-            "banded 4x16 per-frame phash guarantees recall only for"
-            " max_hamming <= 3"
-        )
+    Banding mode: the image form's rule (resolve_composite_bands), applied
+    per frame — composite signatures pair bands WITHIN one frame. The
+    single-band collision floor is per band, not per video: each 16-bit
+    bucket still holds N/2^16 items (BASELINE.md §8.6-8.7)."""
+    composite = resolve_composite_bands(composite_bands, max_hamming)
     nf = int(n_frames)
     # length contract enforced row-locally: a signature whose length
     # disagrees with n_frames is a caller mismatch (hashed with a
@@ -1644,33 +1577,17 @@ def video_phash_dup_pairs(
     # excluded loudly in the plan (the filter is visible), not hashed
     # wrongly.
     hashed = hashed.filter(F.length(F.col(hash_col)) == 16 * nf)
-    if composite_bands:
-        import itertools
-
-        sigs = [
-            F.concat(
-                F.substring(F.col(hash_col), 1 + 16 * f + 4 * i, 4),
-                F.substring(F.col(hash_col), 1 + 16 * f + 4 * j, 4),
-            )
-            for f in range(nf)
-            for i, j in itertools.combinations(range(4), 2)
-        ]
-    else:
-        sigs = [
-            F.substring(F.col(hash_col), 1 + 16 * f + 4 * b, 4)
-            for f in range(nf)
-            for b in range(4)
-        ]
-    cand = _banded_candidates(hashed, sigs, id_col, hash_col)
+    frames = [F.substring(hash_col, 1 + 16 * f, 16) for f in range(nf)]
+    sigs = [s for fr in frames for s in phash_band_sigs(fr, composite)]
+    cand = banded_pairs(hashed, id_col, sigs, carry=[hash_col])
     frame_hams = [
         phash_hamming(
-            F.substring("_ha", 1 + 16 * f, 16), F.substring("_hb", 1 + 16 * f, 16)
+            F.substring(f"{hash_col}_a", 1 + 16 * f, 16),
+            F.substring(f"{hash_col}_b", 1 + 16 * f, 16),
         )
         for f in range(nf)
     ]
     worst = F.greatest(*frame_hams) if nf > 1 else frame_hams[0]
-    from ..functions import caching
-
     return caching.pin(
         cand.withColumn("max_frame_hamming", worst)
         .filter(F.col("max_frame_hamming") <= max_hamming)

@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .banding import banded_pairs
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -24,58 +26,50 @@ def _as_double(v: Column) -> Column:
 
 
 def add_lsh_bucket(
-    df: DataFrame,
-    vec_col: str,
-    planes: list[list[float]],
-    out_col: str = "_bucket",
-    hamming: int = 0,
+    df: DataFrame, vec_col: str, planes: list[list[float]]
 ) -> DataFrame:
     """Random-hyperplane signature as a numpy mapInPandas matmul: one
     (batch x dim) @ (dim x planes) product per Arrow batch instead of
     n_planes interpreted zip_with/aggregate folds per row (BASELINE.md
-    measured the fold path ~6x slower).
-
-    ``hamming=0``: output = input + bit-string ``out_col``.
-    ``hamming=1``: ``out_col`` is instead an array of the signature plus its
-    n_planes one-bit flips — the multi-probe set. Explode it on the smaller
-    side of a bucket join to pair every row whose true signatures differ by
-    at most one bit (each qualifying pair matches exactly one probe, so the
-    join stays duplicate-free)."""
-    import numpy as np
-    from pyspark.sql.types import ArrayType, StringType, StructType
+    measured the fold path ~6x slower). Output = input + ``_sig``, one
+    '0'/'1' char per plane; probe sets derive from it as codegen
+    expressions (one_bit_probes), so the kernel runs once per row."""
+    from pyspark.sql.types import StringType, StructType
 
     p_t = [list(col) for col in zip(*planes)]  # (dim, n_planes)
-    n_planes = len(planes)
-    typ = StringType() if hamming == 0 else ArrayType(StringType())
-    schema = StructType(list(df.schema.fields)).add(out_col, typ)
+    schema = StructType(list(df.schema.fields)).add("_sig", StringType())
 
     def gen(batches):
         import numpy as np  # re-import for the serialized closure
 
         p = np.asarray(p_t, dtype=np.float64)
-
-        def run(pdf):
+        for pdf in batches:
             out = pdf.copy()
             if not len(pdf):
-                out[out_col] = []
-                return out
-            v = np.stack([np.asarray(x, dtype=np.float64) for x in pdf[vec_col]])
-            bits = np.where(v @ p >= 0, "1", "0")
-            sigs = ["".join(r) for r in bits]
-            if hamming == 0:
-                out[out_col] = sigs
+                out["_sig"] = []
             else:
-                out[out_col] = [
-                    [s] + [s[:i] + ("0" if s[i] == "1" else "1") + s[i + 1 :]
-                           for i in range(n_planes)]
-                    for s in sigs
-                ]
-            return out
-
-        for pdf in batches:
-            yield run(pdf)
+                v = np.stack([np.asarray(x, dtype=np.float64) for x in pdf[vec_col]])
+                out["_sig"] = ["".join(r) for r in np.where(v @ p >= 0, "1", "0")]
+            yield out
 
     return df.mapInPandas(gen, schema)
+
+
+def one_bit_probes(sig: Column, n_bits: int) -> list[Column]:
+    """The multi-probe set of an ``n_bits``-char '0'/'1' signature: the
+    signature itself plus its ``n_bits`` one-bit flips, as codegen string
+    expressions. Joined against plain signatures it pairs every row whose
+    signatures differ by at most one bit, each such pair through exactly
+    one probe (the members are pairwise distinct)."""
+    flips = [
+        F.concat(
+            F.substring(sig, 1, i),
+            F.when(F.substring(sig, i + 1, 1) == "1", "0").otherwise("1"),
+            F.substring(sig, i + 2, n_bits - i - 1),
+        )
+        for i in range(n_bits)
+    ]
+    return [sig, *flips]
 
 
 def with_norm(df: DataFrame, vec_col: str) -> DataFrame:
@@ -165,15 +159,13 @@ def cosine_dup_pairs_lsh(
 ) -> DataFrame:
     """Bucketed near-dup pairs — the SCALE path for ``cosine_dup_pairs``:
     random-hyperplane signatures bucket the vectors, candidate pairs are
-    rows whose signatures differ by at most ONE bit (bucket join of each
-    row's signature + its one-bit flips against plain signatures; each
-    qualifying unordered pair matches exactly one probe under the
-    ``src < dst`` filter, so the join is duplicate-free with no dedup
-    shuffle), and the exact cosine runs only inside candidates. Work is
-    sum(bucket_i^2) ~ N^2/2^planes instead of N^2/2, and
-    ``n_planes='auto'`` (knn.auto_planes) grows the plane count with N so
-    the expected bucket size stays constant — the same scale knob that
-    keeps lsh_pair_distances/semantic_dedup linear at 10x/100x.
+    rows whose signatures differ by at most ONE bit (the probe join of
+    banding.banded_pairs over one_bit_probes: the signature kernel runs
+    once, and no dedup shuffle runs), and the exact cosine runs only
+    inside candidates. Work is sum(bucket_i^2) ~ N^2/2^planes instead of
+    N^2/2, and ``n_planes='auto'`` (knn.auto_planes) grows the plane count
+    with N so the expected bucket size stays constant — the same scale
+    knob that keeps lsh_pair_distances/semantic_dedup linear at 10x/100x.
 
     ``center=True`` subtracts the corpus mean before hashing (cosine is
     still computed on the RAW vectors): near-dup corpora live in a narrow
@@ -197,8 +189,8 @@ def cosine_dup_pairs_lsh(
 
     # One persisted pass of the (possibly expensive — decode, quantize)
     # upstream pipeline: the count, the centering mean, the dim probe, and
-    # BOTH sides of the bucket join read this frame — without the pin the
-    # upstream would execute five times (the build_corpus_mixed trap).
+    # the signature sketch read this frame — without the pin the upstream
+    # would execute once per consumer (the build_corpus_mixed trap).
     base = (
         with_norm(df, vec_col)
         .select(F.col(id_col).alias("_id"), "_vec", "_norm")
@@ -265,31 +257,23 @@ def cosine_dup_pairs_lsh(
         )
         hash_col = "_cvec"
 
-    a = (
-        add_lsh_bucket(hashed, hash_col, planes, out_col="_probes", hamming=1)
-        .withColumn("_bucket", F.explode("_probes"))
-        .select(
-            F.col("_id").alias("src"),
-            F.col("_vec").alias("_va"),
-            F.col("_norm").alias("_na"),
-            "_bucket",
-        )
+    sketch = add_lsh_bucket(hashed, hash_col, planes).select(
+        "_id", "_vec", "_norm", "_sig"
     )
-    b = add_lsh_bucket(hashed, hash_col, planes).select(
-        F.col("_id").alias("dst"),
-        F.col("_vec").alias("_vb"),
-        F.col("_norm").alias("_nb"),
-        "_bucket",
+    cand = banded_pairs(
+        sketch,
+        "_id",
+        [F.col("_sig")],
+        carry=["_vec", "_norm"],
+        probes=one_bit_probes(F.col("_sig"), n_planes),
     )
-    cos = _dot(F.col("_va"), F.col("_vb")) / (F.col("_na") * F.col("_nb"))
+    cos = _dot(F.col("_vec_a"), F.col("_vec_b")) / (F.col("_norm_a") * F.col("_norm_b"))
     out = (
-        a.join(b, "_bucket")
-        .filter(F.col("src") < F.col("dst"))
-        .withColumn("cosine", cos)
+        cand.withColumn("cosine", cos)
         .filter(F.col("cosine") >= F.lit(float(threshold)))
         .select("src", "dst", "cosine")
     )
-    return caching.pin(out, base)
+    return caching.pin(out, base, *caching.pinned(cand))
 
 
 def ann_lsh_topk(
@@ -300,7 +284,6 @@ def ann_lsh_topk(
     k: int = 5,
     n_planes: int = 6,
     seed: int = 42,
-    dim: int | None = None,
     probe: int = 1,
     n_tables: int = 1,
 ) -> DataFrame:
@@ -323,83 +306,47 @@ def ann_lsh_topk(
     signatures come out of ONE mapInPandas matmul over the concatenated
     plane matrix; each table's bucket is its signature slice prefixed
     with the table id, so the bucket join stays a single equi-join.
-    ``n_tables=1`` is result-identical to the historical single-table
-    path (same rng stream and probe set, no dedup stage; the probe flips
-    are now codegen string expressions instead of Python-built arrays —
-    same values, cheaper plan)."""
+    ``n_tables=1`` is the same code path with one ``"0:"``-prefixed
+    bucket (no dedup stage: each probe of one table is distinct). Probe
+    flips are codegen string expressions (one_bit_probes)."""
     import random
 
-    if dim is None:
-        dim = len(df.select(vec_col).first()[0])
+    dim = len(df.select(vec_col).first()[0])
     L, P = int(n_tables), int(n_planes)
     rng = random.Random(seed)
     # one continuous stream: table t owns planes [t*P, (t+1)*P) — table 0
     # is exactly the n_tables=1 plane set
     planes = [[rng.gauss(0, 1) for _ in range(dim)] for _ in range(L * P)]
+    tables = [F.substring("_sig", t * P + 1, P) for t in range(L)]
 
-    def table_buckets(sig_col):
-        return [
-            F.concat(F.lit(f"{t}:"), F.substring(sig_col, t * P + 1, P))
-            for t in range(L)
+    def buckets(sigs_of):
+        # each table's bucket keys carry its "t:" prefix so one equi-join
+        # serves every table
+        keys = [
+            F.concat(F.lit(f"{t}:"), key)
+            for t, sig in enumerate(tables)
+            for key in sigs_of(sig)
         ]
+        return F.explode(F.array(*keys)).alias("_bucket")
 
-    base = add_lsh_bucket(with_norm(df, vec_col), vec_col, planes, out_col="_sig")
-    if L == 1:
-        base = base.withColumn("_bucket", F.col("_sig"))
-    else:
-        base = base.withColumn("_bucket", F.explode(F.array(*table_buckets(F.col("_sig")))))
-    base = base.select(
+    base = add_lsh_bucket(with_norm(df, vec_col), vec_col, planes).select(
         F.col(id_col).alias("neighbor_id"),
         F.col("_vec").alias("_vb"),
         F.col("_norm").alias("_nb"),
-        "_bucket",
+        buckets(lambda sig: [sig]),
     )
-    q = add_lsh_bucket(with_norm(query_df, vec_col), vec_col, planes, out_col="_sig")
-    if L == 1:
-        if probe:
-            # signature plus its P one-bit flips (historical multi-probe)
-            flips = [
-                F.concat(
-                    F.substring("_sig", 1, i),
-                    F.when(F.substring("_sig", i + 1, 1) == "1", "0").otherwise("1"),
-                    F.substring("_sig", i + 2, P - i - 1),
-                )
-                for i in range(P)
-            ]
-            q = q.withColumn("_bucket", F.explode(F.array(F.col("_sig"), *flips)))
-        else:
-            q = q.withColumn("_bucket", F.col("_sig"))
-    else:
-        probes = []
-        for t, b in enumerate(table_buckets(F.col("_sig"))):
-            probes.append(b)
-            if probe:
-                # flip within the table's own bits (positions after "t:")
-                pre = len(f"{t}:")
-                for i in range(P):
-                    probes.append(
-                        F.concat(
-                            F.substring(b, 1, pre + i),
-                            F.when(
-                                F.substring(b, pre + i + 1, 1) == "1", "0"
-                            ).otherwise("1"),
-                            F.substring(b, pre + i + 2, P - i - 1),
-                        )
-                    )
-        q = q.withColumn("_bucket", F.explode(F.array(*probes)))
-    q = q.select(
+    q = add_lsh_bucket(with_norm(query_df, vec_col), vec_col, planes).select(
         F.col(id_col).alias("query_id"),
         F.col("_vec").alias("_vq"),
         F.col("_norm").alias("_nq"),
-        "_bucket",
+        buckets(lambda sig: one_bit_probes(sig, P) if probe else [sig]),
     )
     joined = q.join(base, "_bucket").filter(F.col("query_id") != F.col("neighbor_id"))
     cos = _dot(F.col("_vq"), F.col("_vb")) / (F.col("_nq") * F.col("_nb"))
     scored = joined.withColumn("cosine", cos).select("query_id", "neighbor_id", "cosine")
     if L > 1:
-        # a pair found by several tables (or several probes of one table)
-        # must rank once — candidate rows are value-identical, so distinct
-        # is a deterministic dedup
+        # a pair found by several tables must rank once — candidate rows
+        # are value-identical, so distinct is a deterministic dedup
         scored = scored.distinct()
     w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id").asc())
     return (

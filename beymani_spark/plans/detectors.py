@@ -22,7 +22,7 @@ from typing import Protocol, runtime_checkable
 
 from pyspark.sql import DataFrame
 
-from ..operators import histogram, multivariate, profile, zscore
+from ..operators import multivariate, profile, zscore
 
 
 @runtime_checkable
@@ -51,37 +51,6 @@ class ZScoreDetector:
             df, model, self.keys, self.values, self.weights, self.strategy,
             self.threshold, self.exp_const, self.cycle, self.ts,
         )
-
-
-@dataclass
-class RobustZScoreDetector:
-    keys: Sequence[str]
-    values: Sequence[str]
-    threshold: float = 3.5
-    cycle: str | None = None
-    ts: str | None = None
-
-    def fit(self, df: DataFrame) -> DataFrame:
-        return profile.median_mad(df, self.keys, self.values, self.cycle, self.ts)
-
-    def score(self, df: DataFrame, model: DataFrame) -> DataFrame:
-        return zscore.robust_zscore(
-            df, model, self.keys, self.values, threshold=self.threshold,
-            cycle=self.cycle, ts=self.ts,
-        )
-
-
-@dataclass
-class EstimatedProbabilityDetector:
-    keys: Sequence[str]
-    spec: Sequence[tuple[str, float | None]]
-    threshold: float = 0.99
-
-    def fit(self, df: DataFrame) -> DataFrame:
-        return histogram.multivariate_histogram(df, self.keys, self.spec)
-
-    def score(self, df: DataFrame, model: DataFrame) -> DataFrame:
-        return histogram.est_prob_score(df, model, self.keys, self.spec, self.threshold)
 
 
 @dataclass

@@ -101,7 +101,7 @@ def _lof_lsh_oracle(sf_dir: str) -> str:
     signatures (auto plane count, random.Random(42)) are replayed
     off-Spark over the same float64 upcast and baked as VALUES; the pair
     restriction — neighbors only within signature Hamming distance 1, the
-    probe=1 multi-probe contract of knn.lsh_pair_distances — is applied in
+    one-bit multi-probe contract of knn.lsh_pair_distances — is applied in
     SQL, and the LOF tail (k-distance, reach, lrd, cap) is the exact
     query's own verified SQL, reused verbatim."""
     import random

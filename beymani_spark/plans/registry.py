@@ -56,266 +56,3 @@ from . import queries_drift  # noqa: E402,F401
 from . import queries_gaps  # noqa: E402,F401
 from . import queries_relational  # noqa: E402,F401
 from . import queries_packing  # noqa: E402,F401
-
-# The driver's correctness harness checks a bounded prefix of queries() in
-# registration order (observed: exactly the first 50). The window ROTATES
-# per round so every registry query accumulates a driver-green row — and so
-# the NEWEST driver-green row for every query stays fresh: r2 verified its
-# front-50, r3 the next 50, r4 the 9 never-windowed + its 21 new queries +
-# 20 r3-certified refreshes, r5 re-certified the r2-stale core 50
-# (CORRECTNESS_r02..r05). tests/test_rotation_audit.py enforces this
-# machinery: it fails if any registered query goes too long without a
-# driver-green row given the committed CORRECTNESS files + this window.
-# Round-9 window (the r8 verdict's directive #1): a full stable
-# stalest-first sort over CORRECTNESS_r01..r08 — never-driver-checked
-# round-9 additions lead, then the 19 r4-certified queries (stalest on
-# record), then the r5 block filling the window; the r8-certified set
-# rotates to the tail as the freshest. The rotation is now AUTOMATED:
-# run `python tools/rotate_window.py` at the start of each round (after
-# the driver commits the previous CORRECTNESS record) to regenerate this
-# list; tests/test_rotation_audit.py enforces the ordering against the
-# committed CORRECTNESS records.
-_PRIORITY = [
-    # --- newest driver row r6 ---
-    "semantic_dedup",
-    "topic_drift",
-    "prototype_prune",
-    "tfidf_topk",
-    "cdc_chunk_dedup",
-    "semantic_leak_check",
-    "curation_report",
-    "vocab_coverage",
-    "source_similarity",
-    "weighted_sample",
-    "weighted_sample_by",
-    "corpus_cube",
-    "event_pairs",
-    "rolling_features",
-    "benford_audit",
-    "user_event_pivot",
-    "json_field_stats",
-    "funnel_steps",
-    "cohort_retention",
-    "rolling_active_users",
-    "last_touch_attribution",
-    "shipping_priority",
-    "late_shipment_priority",
-    "event_gaps",
-    "constraint_audit",
-    "referential_audit",
-    "fuzzy_name_match",
-    "small_quantity_revenue",
-    "promo_revenue_share",
-    "context_length_plan",
-    # --- newest driver row r7 ---
-    "linear_attribution",
-    "funnel_time_bounded",
-    "media_features_png",
-    "media_features_jpg",
-    "gopher_quality",
-    "domain_cap",
-    "pii_pseudonymize",
-    "u_shaped_attribution",
-    "text_normalize",
-    "sentence_stats",
-    "column_profile",
-    "column_profile_drift",
-    "dedup_rate_by_source",
-    "media_dup_pairs_lsh",
-    "isolation_forest_merge",
-    "dedup_simhash_auto",
-    "lof_lsh",
-    "embedding_dup_clusters_lsh",
-    "numeric_profile",
-    "source_gram_topk",
-    "dedup_corpus_best",
-    "numeric_profile_drift",
-    "finite_audit",
-    "finite_gate",
-    "compression_ratio",
-    "dedup_containment",
-    "local_supplier_volume",
-    "returned_item_revenue",
-    "quality_fuse",
-    "quality_fuse_by_lang",
-    "anomaly_score_fuse",
-    "media_phash_dup_pairs",
-    "media_phash_dup_pairs_c2",
-    "media_phash_png",
-    "audio_dup_pairs",
-    "video_phash_dup_pairs",
-    "lang_fertility",
-    "compaction_plan",
-    "dedup_minhash_lsh",
-    "embedding_quantize",
-    "lang_id",
-    "quality_score",
-    "token_count",
-    "bpe_token_count",
-    "text_features",
-    "doc_fingerprint",
-    "repetition_score",
-    "contamination_check",
-    "bigram_logprob",
-    "vocab_topk",
-    # --- newest driver row r8 ---
-    "audio_dup_pairs_c2",
-    "video_phash_dup_pairs_c2",
-    "multigram_multivariate",
-    "volume_shipping",
-    "market_share",
-    "customer_order_distribution",
-    "large_volume_customers",
-    "embedding_audit",
-    "temperature_mix",
-    "corpus_stats",
-    "stratified_sample",
-    "train_split",
-    "decayed_sample",
-    "media_resize",
-    "media_frames",
-    "asof_join_snapshots",
-    "sessionize_events",
-    "rollup_timebuckets",
-    "pricing_summary",
-    "pii_scan",
-    "chunk_dedup",
-    "domain_mix",
-    "dedup_incremental",
-    "corpus_build",
-    "corpus_audit",
-    "audio_features",
-    "resample_ffill",
-    "top_customers_by_nation",
-    "autoencoder_tanh",
-    "corpus_build_mixed",
-    "training_chunks",
-    "pack_manifest",
-    "quality_rank_gate",
-    "ann_lsh_multitable",
-    "dedup_stats",
-    "group_split",
-    "corpus_build_incremental",
-    "corpus_audit_incremental",
-    "corpus_build_stats",
-    "corpus_quality_drift",
-    "isolation_forest",
-    "kmeans_cluster_score",
-    "kmeans_mixed",
-    "pca_reconstruction",
-    "autoencoder",
-    "ann_ivf_topk",
-    "zscore_seasonal",
-    "zscore_polarity_high",
-    "keyed_threshold_tagging",
-    "quartiles",
-    # --- newest driver row r9 ---
-    "markov_global",
-    "top_supplier_revenue",
-    "idle_customer_balance",
-    "zscore_seasonal_nightday",
-    "repeat_mix",
-    "forecast_revenue_change",
-    "discounted_revenue",
-    "corpus_shuffle",
-    "attr_histogram",
-    "multivariate_histogram_members",
-    "markov_cond_prob_spread",
-    "markov_miss_prob",
-    "markov_miss_rate",
-    "markov_entropy_reduction",
-    "change_point_multi",
-    "change_point_resume",
-    "subsequence_distance_ref",
-    "stream_schema_rollup",
-    "dedup_exact",
-    "dedup_simhash",
-    "dedup_jaccard",
-    "dedup_clusters",
-    "dedup_corpus",
-    "embedding_dup_clusters",
-    "cosine_dup_pairs",
-    "cosine_topk",
-    "ann_lsh_topk",
-    "corpus_to_manifest",
-    "zscore",
-    "multivariate_histogram",
-    "markov_cond_prob",
-    "ngram_frequency",
-    "spectral_residual",
-    "one_step_ahead",
-    "subsequence_distance",
-    "local_neighborhood",
-    "change_point",
-    "in_range",
-    "out_range",
-    "lof",
-    "level_shift_segments",
-    "score_level_shift",
-    "outlier_cluster",
-    "hierarchical_aggregate",
-    "outlier_counts",
-    "threshold_learner",
-    "pseudo_relevance_threshold",
-    "clean_output_anti_join",
-    "robust_zscore",
-    "extreme_value",
-    # --- newest driver row r10 ---
-    "curriculum_plan",
-    "bm25_topk",
-    "hybrid_retrieval",
-    "est_prob",
-    "est_attr_prob",
-    "est_meta_prob",
-    "est_cum_prob",
-    "iqr_score",
-    "mahalanobis",
-    "entropy_increase",
-    "distribution_sorter",
-    "entropy_sorter",
-    "average_distance",
-    "neighbor_density",
-    "relative_density",
-    "numerical_stats",
-    "median_mad",
-    "temporal_aggregate",
-    "auto_correlation",
-    "discretize_quantile",
-    "markov_transition",
-    "drift_ddm",
-    "drift_eddm",
-    "drift_fhddm",
-    "drift_ecdd",
-    "lp_drift",
-    "drift_consensus",
-    "local_drift",
-    "score_stats",
-    "media_features",
-    "corpus_length_drift",
-    "media_dup_pairs",
-    "corpus_quality_drift_by_lang",
-    "pack_manifest_incremental",
-    "boilerplate_scrub",
-    "dedup_minhash_incremental",
-    "topic_mix",
-    "perplexity_gate",
-    "skew_audit",
-    "corpus_diff",
-    "zipf_spectrum",
-    "split_leak_check",
-    "token_mix",
-    "quality_calibrate",
-    "anomaly_pipeline",
-    "winsorize",
-    "zscore_attribution",
-    "ngram_novelty",
-    "quality_sample",
-    "lang_confusion",
-]
-_rank = {n: i for i, n in enumerate(_PRIORITY)}
-_ordered = sorted(
-    QUERIES.items(),
-    key=lambda kv: (kv[1].oracle is None, _rank.get(kv[0], len(_PRIORITY))),
-)
-QUERIES.clear()
-QUERIES.update(_ordered)

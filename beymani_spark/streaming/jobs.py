@@ -1451,12 +1451,9 @@ def stream_media_phash_dedup(
 ) -> DataFrame:
     """Streaming media near-dup against a standing corpus: each arriving
     item is pHashed in-stream (multimodal.phash64 — mapInPandas is
-    stream-compatible and stateless), banded the way the batch pair
-    engine bands (``composite_bands="auto"``, the default, resolves to
-    the scale-safe composite 2-of-4 pairs for max_hamming <= 2 — the
-    default radius — and to single 4x16-bit hex bands only for an
-    explicit radius-3 call, the batch engine's rule),
-    and stream-static equi-joined to the corpus band table; matches
+    stream-compatible and stateless), banded by the batch engine's radius
+    rule (multimodal.resolve_composite_bands), and stream-static
+    equi-joined to the corpus band table; matches
     verify with the exact band-wise bit_count(xor) hamming IN the
     stream, so the emitted rows are verified duplicates, not candidates.
     Output (media_id, corpus_media_id, hamming <= max_hamming).
@@ -1466,24 +1463,16 @@ def stream_media_phash_dedup(
     no state (the stateless-join class). Batch==stream parity holds
     per-row because both sides run the identical kernel and band math
     (parity-tested)."""
-    from ..operators.multimodal import phash64
+    from ..operators.multimodal import (
+        phash64,
+        phash_band_sigs,
+        phash_hamming,
+        resolve_composite_bands,
+    )
 
-    if composite_bands == "auto":
-        composite_bands = max_hamming <= 2
-    if composite_bands:
-        if not (0 <= max_hamming <= 2):
-            raise ValueError(
-                "composite 2-of-4 banding guarantees recall only for"
-                " max_hamming <= 2"
-            )
-    elif not (0 <= max_hamming <= 3):
-        raise ValueError(
-            "banded 4x16 phash guarantees recall only for max_hamming <= 3"
-        )
-    from ..operators.multimodal import phash_band_sigs, phash_hamming
-
+    composite = resolve_composite_bands(composite_bands, max_hamming)
     hashed = phash64(stream_df, id_col, payload_col, decode)
-    sigs = phash_band_sigs("phash", composite_bands)
+    sigs = phash_band_sigs("phash", composite)
     s_bands = hashed.select(
         F.col(id_col),
         F.col("phash").alias("_hs"),
@@ -1504,20 +1493,14 @@ def stream_media_phash_dedup(
     # unbounded, one entry per pair ever seen, and wrongly suppressing a
     # legitimately re-sent item — is pure liability. Keep only the row
     # whose band is the FIRST matching band, a row-local predicate on the
-    # two hashes both sides already carry.
-    if composite_bands:
-        import itertools
-
-        band_eqs = [
-            (F.substring("_hs", 1 + 4 * i, 4) == F.substring("_hc", 1 + 4 * i, 4))
-            & (F.substring("_hs", 1 + 4 * j, 4) == F.substring("_hc", 1 + 4 * j, 4))
-            for i, j in itertools.combinations(range(4), 2)
-        ]
-    else:
-        band_eqs = [
-            F.substring("_hs", 1 + 4 * b, 4) == F.substring("_hc", 1 + 4 * b, 4)
-            for b in range(4)
-        ]
+    # two hashes both sides already carry (both are 16 hex, so equal band
+    # signatures mean equal bands).
+    band_eqs = [
+        a == b
+        for a, b in zip(
+            phash_band_sigs("_hs", composite), phash_band_sigs("_hc", composite)
+        )
+    ]
     first_match = None
     for b in range(len(band_eqs) - 1, -1, -1):
         first_match = (

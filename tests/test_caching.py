@@ -53,11 +53,37 @@ def test_back_to_back_pipeline_ops_no_storage_leak(spark):
     assert cache_empty()
     docs = _docs(spark)
 
-    pairs = dedup.minhash_lsh_pairs(docs, "doc_id")
-    pairs.count()
-    assert not cache_empty(), "minhash cache should be live mid-op"
-    caching.release(pairs, blocking=True)
-    assert cache_empty(), "minhash release leaked its shingle cache"
+    # every caller of the banded candidate-pair engine (banding.banded_pairs)
+    from beymani_spark.operators import knn, multimodal, similarity
+
+    from .conftest import SF_SMOKE
+
+    emb = load_table(spark, SF_SMOKE, "embeddings")
+    media = docs.select(
+        docs["doc_id"].alias("media_id"), docs["text"].cast("binary").alias("payload")
+    )
+    engine_callers = {
+        "minhash": lambda: dedup.minhash_lsh_pairs(docs, "doc_id"),
+        "containment": lambda: dedup.containment_pairs(docs, "doc_id"),
+        "simhash": lambda: dedup.simhash_dup_pairs(docs, "doc_id"),
+        "simhash_auto": lambda: dedup.simhash_dup_pairs_auto(docs, "doc_id"),
+        "phash": lambda: multimodal.phash_dup_pairs(multimodal.phash64(media)),
+        "video": lambda: multimodal.video_phash_dup_pairs(
+            multimodal.video_phash(media, n_frames=4)
+        ),
+        "cosine_lsh": lambda: similarity.cosine_dup_pairs_lsh(
+            emb, "vec_id", "embedding", threshold=0.4
+        ),
+        "lsh_pair_distances": lambda: knn.lsh_pair_distances(
+            emb, "vec_id", "embedding", n_planes="auto"
+        ),
+    }
+    for name, build in engine_callers.items():
+        pairs = build()
+        pairs.count()
+        assert not cache_empty(), f"{name} cache should be live mid-op"
+        caching.release(pairs, blocking=True)
+        assert cache_empty(), f"{name} release leaked a cache"
 
     lp = text.bigram_logprob(docs)
     lp.count()

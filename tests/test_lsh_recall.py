@@ -102,7 +102,7 @@ def test_lsh_pair_distances_knn_recall_vs_exact(spark, emb):
     k = 5
     exact = knn.knn(knn.pair_distances(emb, "vec_id", "embedding"), k=k).toPandas()
     approx = knn.knn(
-        knn.lsh_pair_distances(emb, "vec_id", "embedding", n_planes=4, seed=42, probe=1),
+        knn.lsh_pair_distances(emb, "vec_id", "embedding", n_planes=4, seed=42),
         k=k,
     ).toPandas()
     truth = {(r.src, r.dst) for r in exact.itertuples()}
@@ -265,7 +265,7 @@ def test_auto_planes_holds_bucket_size_constant(spark, emb):
         p = auto_planes(n, 8)
         assert 4 <= n / 2**p <= 8, (n, p)
     # integration: 'auto' resolves and produces the same pair semantics
-    got = knn.lsh_pair_distances(emb, "vec_id", "embedding", n_planes="auto", probe=1)
+    got = knn.lsh_pair_distances(emb, "vec_id", "embedding", n_planes="auto")
     assert got.filter("src = dst").count() == 0
     assert {"src", "dst", "dist"} <= set(got.columns)
 

@@ -778,8 +778,8 @@ def test_u_shaped_attribution_keyed_windows_no_cartesian(spark):
 
 
 def test_media_dup_pairs_lsh_bucket_join_no_allpairs(spark):
-    """The REGISTERED media_dup_pairs_lsh form must pair via the _bucket
-    equi-join (candidate volume sum(bucket^2) ~ N^2/2^planes with
+    """The REGISTERED media_dup_pairs_lsh form must pair via the LSH
+    signature equi-join (candidate volume sum(bucket^2) ~ N^2/2^planes with
     auto-sized planes) — never a cartesian / broadcast-nested-loop
     all-pairs — and the decode+quantize pipeline must be pinned once for
     its four consumers (count, mean, both join sides)."""
@@ -794,7 +794,7 @@ def test_media_dup_pairs_lsh_bucket_join_no_allpairs(spark):
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert re.search(
-        r"(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin) \[_bucket", plan
+        r"(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin) \[sig", plan
     ), "pair stage must be keyed on the LSH bucket"
     assert "InMemoryTableScan" in plan, "decode pipeline must be pinned, not re-run"
     pinned = caching.pinned(out)
@@ -803,6 +803,51 @@ def test_media_dup_pairs_lsh_bucket_join_no_allpairs(spark):
     # check the released frames directly, not the session-global cache
     # census — the shared test session may hold other tests' caches
     assert all(not f.storageLevel.useMemory for f in pinned)
+
+
+def _executed_node_counts(df):
+    """Executed physical nodes of ``df`` by name, each counted once: AQE
+    plans and query stages are unwrapped, and a cached relation's build
+    plan counts once however many InMemoryTableScans read it."""
+    from collections import Counter
+
+    counts, seen = Counter(), set()
+
+    def walk(node):
+        cls = node.getClass().getSimpleName()
+        if cls == "AdaptiveSparkPlanExec":
+            return walk(node.executedPlan())
+        if cls.endswith("QueryStageExec"):
+            return walk(node.plan())
+        counts[node.nodeName()] += 1
+        if cls == "InMemoryTableScanExec":
+            builder = node.relation().cacheBuilder()
+            if builder.hashCode() not in seen:
+                seen.add(builder.hashCode())
+                walk(builder.cachedPlan())
+        children = node.children()
+        for i in range(children.size()):
+            walk(children.apply(i))
+
+    walk(df._jdf.queryExecution().executedPlan())
+    return counts
+
+
+def test_probe_join_callers_sign_once(spark):
+    """The hyperplane probe-join callers run the signature kernel ONCE: the
+    banded engine persists the signed sketch and both join sides (probes
+    and plain signatures) read it, instead of one mapInPandas per side."""
+    from beymani_spark.functions import caching
+    from beymani_spark.operators import knn, similarity
+
+    emb = load_table(spark, SF, "embeddings").select("vec_id", "embedding")
+    for out in (
+        similarity.cosine_dup_pairs_lsh(emb, "vec_id", "embedding", threshold=0.4),
+        knn.lsh_pair_distances(emb, "vec_id", "embedding", n_planes="auto"),
+    ):
+        out.collect()
+        assert _executed_node_counts(out)["MapInPandas"] == 1
+        caching.release(out)
 
 
 def test_isolation_forest_merge_fit_presamples_union_score_no_exchange(spark):
