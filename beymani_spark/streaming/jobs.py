@@ -6,7 +6,10 @@ fieldsGrouping by entity -> stateful predictor bolt -> Redis alert queue
 40-61). The Structured Streaming translation:
 
   spout                 -> readStream (kafka/file/rate source)
-  fieldsGrouping(entity)-> state-store hash partitioning of groupBy(entity)
+  fieldsGrouping(entity)-> state-store hash partitioning of groupBy(entity),
+                           one partition per core of the cluster the query
+                           first starts on (sources/streams.py:_start_query);
+                           the checkpoint freezes that count for restarts
   predictor bolt state  -> broadcast model join (stateless kernels) or
                            applyInPandasWithState (windowed kernels)
   alert queue           -> writeStream sink of filter(label == 'O')
@@ -36,6 +39,7 @@ from pyspark.sql.types import StructType
 
 from ..functions.scores import tag_label
 from ..operators.markov import UNSEEN_NEG_LOG_PROB
+from ..sources.streams import _start_query
 
 
 _INT64_EDGE = float(2**63)  # 2^63 is exactly representable; 2^63-1 is not
@@ -1409,11 +1413,10 @@ def stream_constraint_gate(
         if mode == "tag_only" or all(r.passed for r in rows):
             batch_df.write.mode("append").parquet(out_path)
 
-    return (
-        stream_df.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint)
-        .start()
+    writer = stream_df.writeStream.foreachBatch(_process).option(
+        "checkpointLocation", checkpoint
     )
+    return _start_query(stream_df.sparkSession, writer)
 
 
 def stream_quality_fuse(

@@ -12,6 +12,7 @@ import pandas as pd
 import pytest
 
 from beymani_spark.operators import multimodal
+from beymani_spark.sources import streams
 from beymani_spark.streaming import drift as drift_mod
 from beymani_spark.streaming.jobs import (
     alerts,
@@ -141,13 +142,10 @@ def test_stream_drift_matches_batch(spark, error_stream, detector, params):
         out = apply_stream_drift(
             stream, ["model_id"], "ts", "is_error", detector, **params
         )
-        q = (
-            out.writeStream.format("memory")
-            .queryName(f"drift_{detector}_t")
-            .outputMode("append")
-            .option("checkpointLocation", chk)
-            .trigger(availableNow=True)
-            .start()
+        q = streams.start_sink(
+            out,
+            {"format": "memory", "queryName": f"drift_{detector}_t",
+             "outputMode": "append", "checkpoint": chk, "trigger": "availableNow"},
         )
         q.awaitTermination(180)
         got = (
@@ -194,13 +192,10 @@ def test_stream_zscore_matches_batch(spark, stream_dirs):
 
     stream = spark.readStream.schema(ev.schema).parquet(src)
     scored = stream_zscore(stream, stats, ["event_type"], ["value"], threshold=3.0)
-    q = (
-        alerts(scored)
-        .writeStream.format("memory")
-        .queryName("alerts_t")
-        .option("checkpointLocation", chk + "/zs")
-        .trigger(availableNow=True)
-        .start()
+    q = streams.start_sink(
+        alerts(scored),
+        {"format": "memory", "queryName": "alerts_t", "checkpoint": chk + "/zs",
+         "trigger": "availableNow"},
     )
     q.awaitTermination(120)
     got = spark.sql("select event_id from alerts_t").toPandas()
@@ -216,13 +211,10 @@ def test_stream_temporal_aggregate_runs(spark, stream_dirs):
     ev = load_table(spark, "/root/testdata/sf0.001", "events")
     stream = spark.readStream.schema(ev.schema).parquet(src)
     agg = stream_temporal_aggregate(stream, ["event_type"], "ts", "value", "1 hour", "2 hours")
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("tagg_t")
-        .outputMode("append")
-        .option("checkpointLocation", chk + "/ta")
-        .trigger(availableNow=True)
-        .start()
+    q = streams.start_sink(
+        agg,
+        {"format": "memory", "queryName": "tagg_t", "outputMode": "append",
+         "checkpoint": chk + "/ta", "trigger": "availableNow"},
     )
     q.awaitTermination(120)
     n = spark.sql("select * from tagg_t").count()
@@ -236,13 +228,10 @@ def test_stream_ewma_stateful(spark, stream_dirs):
     ev = load_table(spark, "/root/testdata/sf0.001", "events")
     stream = spark.readStream.schema(ev.schema).parquet(src)
     scored = apply_stream_ewma(stream, ["event_type"], "ts", "value", alpha=0.2, threshold=4.0)
-    q = (
-        scored.writeStream.format("memory")
-        .queryName("ewma_t")
-        .outputMode("append")
-        .option("checkpointLocation", chk + "/ew")
-        .trigger(availableNow=True)
-        .start()
+    q = streams.start_sink(
+        scored,
+        {"format": "memory", "queryName": "ewma_t", "outputMode": "append",
+         "checkpoint": chk + "/ew", "trigger": "availableNow"},
     )
     q.awaitTermination(180)
     out = spark.sql("select * from ewma_t").toPandas()
@@ -305,13 +294,10 @@ def test_stream_one_step_ahead_matches_batch(spark, stream_dirs):
     scored = apply_stream_one_step_ahead(
         stream, ["event_type"], "ts", "value", window=8, threshold=3.0
     )
-    q = (
-        scored.writeStream.format("memory")
-        .queryName("osa_t")
-        .outputMode("append")
-        .option("checkpointLocation", chk + "/osa")
-        .trigger(availableNow=True)
-        .start()
+    q = streams.start_sink(
+        scored,
+        {"format": "memory", "queryName": "osa_t", "outputMode": "append",
+         "checkpoint": chk + "/osa", "trigger": "availableNow"},
     )
     q.awaitTermination(120)
     got = (
@@ -361,12 +347,10 @@ def test_stream_dedup_exact_drops_cross_batch_duplicates(spark):
         schema = spark.read.parquet(src + "/b0").schema
         stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src + "/b0")
         deduped = stream_dedup_exact(stream, ["content_hash"], "ts", "2 hours")
-        q = (
-            deduped.writeStream.format("memory")
-            .queryName("dedup_t")
-            .option("checkpointLocation", chk)
-            .trigger(availableNow=True)
-            .start()
+        q = streams.start_sink(
+            deduped,
+            {"format": "memory", "queryName": "dedup_t", "checkpoint": chk,
+             "trigger": "availableNow"},
         )
         q.awaitTermination(120)
         got = spark.sql("select content_hash from dedup_t").toPandas()
@@ -399,13 +383,10 @@ def test_streaming_training_pipeline_matches_batch(spark):
             ).select("doc_id")
 
         stream = spark.readStream.schema(docs.schema).parquet(src)
-        q = (
-            pipeline(stream)
-            .writeStream.format("memory")
-            .queryName("pipe_t")
-            .option("checkpointLocation", chk)
-            .trigger(availableNow=True)
-            .start()
+        q = streams.start_sink(
+            pipeline(stream),
+            {"format": "memory", "queryName": "pipe_t", "checkpoint": chk,
+             "trigger": "availableNow"},
         )
         q.awaitTermination(120)
         got = sorted(r.doc_id for r in spark.sql("select doc_id from pipe_t").collect())
@@ -464,12 +445,10 @@ def test_stream_near_dup_candidates_against_corpus(spark):
         )
         stream = spark.readStream.schema(new.schema).parquet(src)
         out = stream_near_dup_candidates(stream, corpus_bands)
-        q = (
-            out.writeStream.format("memory")
-            .queryName("nd_t")
-            .option("checkpointLocation", chk)
-            .trigger(availableNow=True)
-            .start()
+        q = streams.start_sink(
+            out,
+            {"format": "memory", "queryName": "nd_t", "checkpoint": chk,
+             "trigger": "availableNow"},
         )
         q.awaitTermination(120)
         got = spark.sql("select * from nd_t").toPandas()
@@ -509,13 +488,10 @@ def test_stream_sessionize_matches_batch_sessions(spark):
 
         stream = spark.readStream.schema(df.schema).parquet(src)
         out = stream_sessionize(stream, ["user_id"], "ts", "value", "100 seconds", "10 minutes")
-        q = (
-            out.writeStream.format("memory")
-            .queryName("sess_t")
-            .outputMode("complete")
-            .option("checkpointLocation", chk)
-            .trigger(availableNow=True)
-            .start()
+        q = streams.start_sink(
+            out,
+            {"format": "memory", "queryName": "sess_t", "outputMode": "complete",
+             "checkpoint": chk, "trigger": "availableNow"},
         )
         q.awaitTermination(120)
         got = spark.sql("select user_id, n_events from sess_t").toPandas()
@@ -567,12 +543,10 @@ def test_stream_corpus_filter_matches_batch_and_dedups_cross_batch(spark):
             stream, "doc_id", "text", ts_col="ts", quality_min=0.6,
             watermark="2 hours",
         )
-        q = (
-            out.writeStream.format("memory")
-            .queryName("scf_t")
-            .option("checkpointLocation", chk)
-            .trigger(availableNow=True)
-            .start()
+        q = streams.start_sink(
+            out,
+            {"format": "memory", "queryName": "scf_t", "checkpoint": chk,
+             "trigger": "availableNow"},
         )
         q.awaitTermination(120)
         got = spark.sql(
@@ -619,12 +593,10 @@ def test_chunk_for_training_is_streaming_safe(spark):
             .parquet(src + "/b")
         )
         out = packing.chunk_for_training(stream, "doc_id", max_tokens=16, stride=8)
-        q = (
-            out.writeStream.format("memory")
-            .queryName("chunk_t")
-            .option("checkpointLocation", chk)
-            .trigger(availableNow=True)
-            .start()
+        q = streams.start_sink(
+            out,
+            {"format": "memory", "queryName": "chunk_t", "checkpoint": chk,
+             "trigger": "availableNow"},
         )
         q.awaitTermination(120)
         got = spark.sql(
@@ -660,13 +632,10 @@ def test_stream_topic_assign_matches_batch(spark, stream_dirs):
     )
 
     stream = spark.readStream.schema(emb.schema).parquet(src)
-    q = (
-        stream_topic_assign(stream, cents, "vec_id", "embedding")
-        .writeStream.format("memory")
-        .queryName("topics_t")
-        .option("checkpointLocation", chk + "/tp")
-        .trigger(availableNow=True)
-        .start()
+    q = streams.start_sink(
+        stream_topic_assign(stream, cents, "vec_id", "embedding"),
+        {"format": "memory", "queryName": "topics_t", "checkpoint": chk + "/tp",
+         "trigger": "availableNow"},
     )
     q.awaitTermination(120)
     got = {
@@ -712,13 +681,10 @@ def test_stream_near_dup_verified_filters_and_matches_batch(spark, stream_dirs):
     stream_rows.write.mode("overwrite").parquet(src)
     stream = spark.readStream.schema(stream_rows.schema).parquet(src)
 
-    q = (
-        stream_near_dup_verified(stream, manifest, min_jaccard=0.5)
-        .writeStream.format("memory")
-        .queryName("ndv_t")
-        .option("checkpointLocation", chk + "/ndv")
-        .trigger(availableNow=True)
-        .start()
+    q = streams.start_sink(
+        stream_near_dup_verified(stream, manifest, min_jaccard=0.5),
+        {"format": "memory", "queryName": "ndv_t", "checkpoint": chk + "/ndv",
+         "trigger": "availableNow"},
     )
     q.awaitTermination(120)
     got = spark.sql(
@@ -765,13 +731,10 @@ def test_stream_keyword_tag_matches_batch_tfidf(spark, stream_dirs):
     vocab, n_docs = tfidf_vocab(docs, "text")
 
     stream = spark.readStream.schema(docs.schema).parquet(src)
-    q = (
-        stream_keyword_tag(stream, vocab, n_docs, "doc_id", "text", k=5)
-        .writeStream.format("memory")
-        .queryName("kw_t")
-        .option("checkpointLocation", chk + "/kw")
-        .trigger(availableNow=True)
-        .start()
+    q = streams.start_sink(
+        stream_keyword_tag(stream, vocab, n_docs, "doc_id", "text", k=5),
+        {"format": "memory", "queryName": "kw_t", "checkpoint": chk + "/kw",
+         "trigger": "availableNow"},
     )
     q.awaitTermination(120)
     got = {
@@ -826,13 +789,10 @@ def test_stream_tag_learned_threshold_matches_batch_pipeline(spark, stream_dirs)
 
     stream = spark.readStream.schema(ev.schema).parquet(src)
     scored_s = stream_zscore(stream, stats, ["event_type"], ["value"])
-    q = (
-        stream_tag_learned_threshold(scored_s, thr, ["event_type"])
-        .writeStream.format("memory")
-        .queryName("ltag_t")
-        .option("checkpointLocation", chk + "/ltag")
-        .trigger(availableNow=True)
-        .start()
+    q = streams.start_sink(
+        stream_tag_learned_threshold(scored_s, thr, ["event_type"]),
+        {"format": "memory", "queryName": "ltag_t", "checkpoint": chk + "/ltag",
+         "trigger": "availableNow"},
     )
     q.awaitTermination(120)
     got = spark.sql(
@@ -895,16 +855,13 @@ def test_stream_interval_join_matches_batch(spark, stream_dirs):
             F.col("ts").alias("rts"),
         )
     )
-    q = (
+    q = streams.start_sink(
         stream_interval_join(
             ls, rs, [("l_user", "r_user")], "lts", "rts", 300, watermark="10 minutes"
         )
-        .filter("left_id != right_id")
-        .writeStream.format("memory")
-        .queryName("sij_t")
-        .option("checkpointLocation", chk + "/sij")
-        .trigger(availableNow=True)
-        .start()
+        .filter("left_id != right_id"),
+        {"format": "memory", "queryName": "sij_t", "checkpoint": chk + "/sij",
+         "trigger": "availableNow"},
     )
     q.awaitTermination(180)
     got = {
@@ -955,10 +912,10 @@ def test_stream_entropy_increase_matches_batch_and_accumulates(spark, stream_dir
         stream, model_rows, ["event_type"], "ts", "value",
         width=10.0, threshold=0.01, update=False,
     )
-    q = (
-        scored.writeStream.format("memory").queryName("ei_t")
-        .outputMode("append").option("checkpointLocation", chk + "/ei")
-        .trigger(availableNow=True).start()
+    q = streams.start_sink(
+        scored,
+        {"format": "memory", "queryName": "ei_t", "outputMode": "append",
+         "checkpoint": chk + "/ei", "trigger": "availableNow"},
     )
     q.awaitTermination(120)
     got = (
@@ -988,10 +945,10 @@ def test_stream_entropy_increase_matches_batch_and_accumulates(spark, stream_dir
         stream2, model_rows, ["event_type"], "event_id", "value",
         width=10.0, threshold=0.01, update=True,
     )
-    q2 = (
-        scored2.writeStream.format("memory").queryName("ei_u")
-        .outputMode("append").option("checkpointLocation", chk + "/ei_u")
-        .trigger(availableNow=True).start()
+    q2 = streams.start_sink(
+        scored2,
+        {"format": "memory", "queryName": "ei_u", "outputMode": "append",
+         "checkpoint": chk + "/ei_u", "trigger": "availableNow"},
     )
     q2.awaitTermination(120)
     pdf = ev.toPandas()
@@ -1062,15 +1019,12 @@ def test_stream_quality_fuse_matches_batch_and_nulls_unlearned(spark, stream_dir
 
     scored.write.mode("overwrite").parquet(src)
     stream = spark.readStream.schema(scored.schema).parquet(src)
-    q = (
+    q = streams.start_sink(
         stream_quality_fuse(
             stream, stats, ["quality", "type_token_ratio"], [2.0, 1.0], by=["lang"]
-        )
-        .writeStream.format("memory")
-        .queryName("qfuse_t")
-        .option("checkpointLocation", chk + "/qfuse")
-        .trigger(availableNow=True)
-        .start()
+        ),
+        {"format": "memory", "queryName": "qfuse_t", "checkpoint": chk + "/qfuse",
+         "trigger": "availableNow"},
     )
     q.awaitTermination(120)
     got = {
@@ -1120,13 +1074,10 @@ def test_stream_media_phash_dedup_matches_batch(spark, stream_dirs):
     }
 
     stream = spark.readStream.schema(arriving.schema).parquet(src + "/media")
-    q = (
-        stream_media_phash_dedup(stream, corpus_hashes)
-        .writeStream.format("memory")
-        .queryName("phash_t")
-        .option("checkpointLocation", chk + "/phash")
-        .trigger(availableNow=True)
-        .start()
+    q = streams.start_sink(
+        stream_media_phash_dedup(stream, corpus_hashes),
+        {"format": "memory", "queryName": "phash_t", "checkpoint": chk + "/phash",
+         "trigger": "availableNow"},
     )
     q.awaitTermination(120)
     got = {
@@ -1198,15 +1149,12 @@ def test_stream_media_phash_dedup_composite_matches_batch(spark, stream_dirs):
     )
 
     stream = spark.readStream.schema(arriving.schema).parquet(src + "/media_c2")
-    q = (
+    q = streams.start_sink(
         stream_media_phash_dedup(
             stream, poisoned, max_hamming=2, composite_bands=True
-        )
-        .writeStream.format("memory")
-        .queryName("phash_c2_t")
-        .option("checkpointLocation", chk + "/phash_c2")
-        .trigger(availableNow=True)
-        .start()
+        ),
+        {"format": "memory", "queryName": "phash_c2_t", "checkpoint": chk + "/phash_c2",
+         "trigger": "availableNow"},
     )
     q.awaitTermination(120)
     got = {
@@ -1250,13 +1198,10 @@ def test_stream_kmeans_score_matches_batch(spark, stream_dirs):
     }
 
     stream = spark.readStream.schema(arriving.schema).parquet(src + "/km")
-    q = (
-        stream_kmeans_score(stream, model, keys, vals)
-        .writeStream.format("memory")
-        .queryName("km_t")
-        .option("checkpointLocation", chk + "/km")
-        .trigger(availableNow=True)
-        .start()
+    q = streams.start_sink(
+        stream_kmeans_score(stream, model, keys, vals),
+        {"format": "memory", "queryName": "km_t", "checkpoint": chk + "/km",
+         "trigger": "availableNow"},
     )
     q.awaitTermination(120)
     got = {
@@ -1302,13 +1247,10 @@ def test_stream_isolation_forest_matches_batch(spark, stream_dirs):
     }
 
     stream = spark.readStream.schema(arriving.schema).parquet(src + "/isf")
-    q = (
-        stream_isolation_forest_score(stream, model, keys, vals)
-        .writeStream.format("memory")
-        .queryName("isf_t")
-        .option("checkpointLocation", chk + "/isf")
-        .trigger(availableNow=True)
-        .start()
+    q = streams.start_sink(
+        stream_isolation_forest_score(stream, model, keys, vals),
+        {"format": "memory", "queryName": "isf_t", "checkpoint": chk + "/isf",
+         "trigger": "availableNow"},
     )
     q.awaitTermination(120)
     got = {
@@ -1379,15 +1321,12 @@ def test_stream_multigram_matches_batch_across_batches(spark, stream_dirs):
         .option("maxFilesPerTrigger", 1)
         .parquet(dest)
     )
-    q = (
+    q = streams.start_sink(
         apply_stream_multigram(
             stream, "user_id", "ts", spec, seq_len=3, order_cols=["event_id"]
-        )
-        .writeStream.format("memory")
-        .queryName("mg_t")
-        .option("checkpointLocation", chk + "/mg")
-        .trigger(availableNow=True)
-        .start()
+        ),
+        {"format": "memory", "queryName": "mg_t", "checkpoint": chk + "/mg",
+         "trigger": "availableNow"},
     )
     q.awaitTermination(120)
     got = Counter(
@@ -1456,10 +1395,10 @@ def test_stream_bucket_rule_nonfinite_and_overflow(spark, stream_dirs):
             stream, model_rows, ["key"], "event_id", "value",
             width=10.0, threshold=0.01, update=update,
         )
-        q = (
-            scored.writeStream.format("memory").queryName(mode)
-            .outputMode("append").option("checkpointLocation", chk + "/" + mode)
-            .trigger(availableNow=True).start()
+        q = streams.start_sink(
+            scored,
+            {"format": "memory", "queryName": mode, "outputMode": "append",
+             "checkpoint": chk + "/" + mode, "trigger": "availableNow"},
         )
         q.awaitTermination(120)
         outs[mode] = (
@@ -1481,14 +1420,13 @@ def test_stream_bucket_rule_nonfinite_and_overflow(spark, stream_dirs):
     # multigram: the non-finite/overflow column values are skipped from
     # the composite symbol exactly like a failed cast
     stream = spark.readStream.schema(df.schema).parquet(src + "/nf")
-    q = (
+    q = streams.start_sink(
         apply_stream_multigram(
             stream, "key", "ts", [("value", 10.0)], seq_len=1,
             order_cols=["event_id"],
-        )
-        .writeStream.format("memory").queryName("nf_mg")
-        .option("checkpointLocation", chk + "/nf_mg")
-        .trigger(availableNow=True).start()
+        ),
+        {"format": "memory", "queryName": "nf_mg", "checkpoint": chk + "/nf_mg",
+         "trigger": "availableNow"},
     )
     q.awaitTermination(120)
     grams = [
@@ -1567,10 +1505,10 @@ def _run_markov_replay(spark, src, chk, name, clock):
         window=5, threshold=100.0,
         state_timeout_ms=3_600_000, state_timeout_clock=clock,
     )
-    q = (
-        scored.writeStream.format("memory").queryName(name)
-        .outputMode("append").option("checkpointLocation", chk + "/" + name)
-        .trigger(availableNow=True).start()
+    q = streams.start_sink(
+        scored,
+        {"format": "memory", "queryName": name, "outputMode": "append",
+         "checkpoint": chk + "/" + name, "trigger": "availableNow"},
     )
     q.awaitTermination(120)
     rows = spark.sql(
@@ -1674,13 +1612,10 @@ def test_stream_multigram_boolean_categorical_matches_batch(
     )
     df.coalesce(1).write.mode("overwrite").parquet(src + "/mgb")
     stream = spark.readStream.schema(df.schema).parquet(src + "/mgb")
-    q = (
-        apply_stream_multigram(stream, "uid", "event_id", spec, seq_len=2)
-        .writeStream.format("memory")
-        .queryName("mgb_t")
-        .option("checkpointLocation", chk + "/mgb")
-        .trigger(availableNow=True)
-        .start()
+    q = streams.start_sink(
+        apply_stream_multigram(stream, "uid", "event_id", spec, seq_len=2),
+        {"format": "memory", "queryName": "mgb_t", "checkpoint": chk + "/mgb",
+         "trigger": "availableNow"},
     )
     q.awaitTermination(120)
     got = Counter(
@@ -1742,16 +1677,13 @@ def test_stream_markov_global_matches_batch(spark, stream_dirs):
         .option("maxFilesPerTrigger", 1)
         .parquet(dest)
     )
-    q = (
+    q = streams.start_sink(
         apply_stream_markov_global(
             stream, model_rows, ["user_id"], "ts", "event_type",
             metric="missProbability", threshold=0.85,
-        )
-        .writeStream.format("memory")
-        .queryName("mkvg_t")
-        .option("checkpointLocation", chk + "/mkvg")
-        .trigger(availableNow=True)
-        .start()
+        ),
+        {"format": "memory", "queryName": "mkvg_t", "checkpoint": chk + "/mkvg",
+         "trigger": "availableNow"},
     )
     q.awaitTermination(180)
     got = spark.sql("select * from mkvg_t").toPandas()
@@ -1817,13 +1749,10 @@ def test_stream_markov_null_state_chunk_independent(spark, stream_dirs):
             .option("maxFilesPerTrigger", 1)
             .parquet(d)
         )
-        q = (
-            fn(stream, model_rows, ["user_id"], "ts", "state", **kw)
-            .writeStream.format("memory")
-            .queryName(f"q_{name}")
-            .option("checkpointLocation", f"{chk}/{name}")
-            .trigger(availableNow=True)
-            .start()
+        q = streams.start_sink(
+            fn(stream, model_rows, ["user_id"], "ts", "state", **kw),
+            {"format": "memory", "queryName": f"q_{name}",
+             "checkpoint": f"{chk}/{name}", "trigger": "availableNow"},
         )
         q.awaitTermination(120)
         return (
@@ -1874,16 +1803,13 @@ def test_stream_entropy_frozen_boolean_buckets_match_model(spark, stream_dirs):
 
     df.coalesce(1).write.mode("overwrite").parquet(src + "/entb")
     stream = spark.readStream.schema(df.schema).parquet(src + "/entb")
-    q = (
+    q = streams.start_sink(
         apply_stream_entropy_increase(
             stream, model_rows, ["k"], "ts", "flag", width=None,
             threshold=0.5, update=False,
-        )
-        .writeStream.format("memory")
-        .queryName("entb_t")
-        .option("checkpointLocation", chk + "/entb")
-        .trigger(availableNow=True)
-        .start()
+        ),
+        {"format": "memory", "queryName": "entb_t", "checkpoint": chk + "/entb",
+         "trigger": "availableNow"},
     )
     q.awaitTermination(120)
     got = spark.sql("select bucket, score, label from entb_t").toPandas()
@@ -1904,15 +1830,12 @@ def test_stream_multigram_non_numeric_bucketed_col_skips(spark, stream_dirs):
     df = spark.createDataFrame(rows, "event_id long, uid long, v string")
     df.coalesce(1).write.mode("overwrite").parquet(src + "/mgnn")
     stream = spark.readStream.schema(df.schema).parquet(src + "/mgnn")
-    q = (
+    q = streams.start_sink(
         apply_stream_multigram(
             stream, "uid", "event_id", [("v", 4.0)], seq_len=2
-        )
-        .writeStream.format("memory")
-        .queryName("mgnn_t")
-        .option("checkpointLocation", chk + "/mgnn")
-        .trigger(availableNow=True)
-        .start()
+        ),
+        {"format": "memory", "queryName": "mgnn_t", "checkpoint": chk + "/mgnn",
+         "trigger": "availableNow"},
     )
     q.awaitTermination(120)
     grams = [r["gram"] for r in spark.sql("select gram from mgnn_t").collect()]
@@ -1967,16 +1890,13 @@ def test_stream_markov_state_timeout_evicts_idle_entities(spark, stream_dirs):
             .option("maxFilesPerTrigger", 1)
             .parquet(d)
         )
-        q = (
+        q = streams.start_sink(
             apply_stream_markov(
                 stream, model_rows, ["user_id"], "ts", "state",
                 window=5, threshold=2.0, **kw,
-            )
-            .writeStream.format("memory")
-            .queryName(f"q_{name}")
-            .option("checkpointLocation", f"{chk}/{name}")
-            .trigger(processingTime="1 second")
-            .start()
+            ),
+            {"format": "memory", "queryName": f"q_{name}",
+             "checkpoint": f"{chk}/{name}", "trigger": "1 second"},
         )
         # processing-time triggers (availableNow would collapse the idle
         # gap): wait until all 6 rows have been processed
@@ -2013,16 +1933,13 @@ def test_stream_entropy_update_true_coerce_failure_skips(spark, stream_dirs):
     df = spark.createDataFrame(rows, "ts long, k long, v string")
     df.coalesce(1).write.mode("overwrite").parquet(src + "/entc")
     stream = spark.readStream.schema(df.schema).parquet(src + "/entc")
-    q = (
+    q = streams.start_sink(
         apply_stream_entropy_increase(
             stream, [], ["k"], "ts", "v", width=2.0, threshold=0.5,
             update=True,
-        )
-        .writeStream.format("memory")
-        .queryName("entc_t")
-        .option("checkpointLocation", chk + "/entc")
-        .trigger(availableNow=True)
-        .start()
+        ),
+        {"format": "memory", "queryName": "entc_t", "checkpoint": chk + "/entc",
+         "trigger": "availableNow"},
     )
     q.awaitTermination(120)
     got = spark.sql("select v, bucket from entc_t").toPandas()

@@ -8,7 +8,7 @@ import pytest
 
 from beymani_spark.functions.skew import observed_label_counts, salted_numerical_stats
 from beymani_spark.operators import markov, profile, zscore
-from beymani_spark.sources import load_table
+from beymani_spark.sources import load_table, streams
 from beymani_spark.streaming.jobs import apply_stream_markov
 
 
@@ -59,13 +59,10 @@ def test_stream_markov_matches_batch(spark):
             stream, model_rows, ["user_id"], "ts", "event_type",
             window=5, threshold=2.0,
         )
-        q = (
-            scored.writeStream.format("memory")
-            .queryName("mkv_t")
-            .outputMode("append")
-            .option("checkpointLocation", chk)
-            .trigger(availableNow=True)
-            .start()
+        q = streams.start_sink(
+            scored,
+            {"format": "memory", "queryName": "mkv_t", "outputMode": "append",
+             "checkpoint": chk, "trigger": "availableNow"},
         )
         q.awaitTermination(180)
         got = spark.sql("select * from mkv_t").toPandas()

@@ -1,11 +1,15 @@
 """Config-driven streaming source entry (sources/streams.py): value
-decoding, rate-source soak through a real scoring job, and exactly-once
-checkpoint restart through open_stream/start_sink."""
+decoding, rate-source soak through a real scoring job, exactly-once
+checkpoint restart through open_stream/start_sink, and the state-store
+partition count start_sink gives new and restarted checkpoints."""
 from __future__ import annotations
 
+import datetime as dt
+import json
 import time
 
 import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from beymani_spark.sources import streams
@@ -143,6 +147,113 @@ def test_file_stream_checkpoint_restart_exactly_once(spark, tmp_path):
     assert len(got) == 150, f"restart broke exactly-once: {len(got)} rows"
     assert sorted(got.id) == list(range(150))
     assert (got.doubled == got.value * 2).all()
+
+
+# --- state-store partitioning: one partition per core ------------------------
+
+_SHUFFLE = "spark.sql.shuffle.partitions"
+
+
+def _write_dedup_slice(spark, src, i):
+    """Slice ``i`` of a keyed event stream: keys k0..k{5+i}, each once per
+    slice, so every key after slice 0 also repeats an earlier arrival."""
+    rows = [(f"k{k}", dt.datetime(2024, 1, 1, 0, i, k), float(k)) for k in range(6 + i)]
+    spark.createDataFrame(rows, "key string, ts timestamp, v double").coalesce(1).write.parquet(
+        f"{src}/s{i}"
+    )
+
+
+def _dedup_drain(spark, src, out, ck, direct=False):
+    """availableNow drain of stream_dedup_exact over the slices (one per
+    micro-batch) into a parquet sink; ``direct`` starts it with plain
+    writeStream instead of start_sink."""
+    from beymani_spark.streaming.jobs import stream_dedup_exact
+
+    stream = streams.open_stream(spark, {
+        "format": "file", "path": f"{src}/*", "schema": "key string, ts timestamp, v double",
+        "maxFilesPerTrigger": "1",
+    })
+    deduped = stream_dedup_exact(stream, ["key"], "ts", "24 hours")
+    if direct:
+        q = (
+            deduped.writeStream.format("parquet").option("checkpointLocation", ck)
+            .trigger(availableNow=True).start(out)
+        )
+    else:
+        q = streams.start_sink(
+            deduped, {"format": "parquet", "path": out, "checkpoint": ck,
+                      "trigger": "availableNow"},
+        )
+    q.awaitTermination(120)
+    assert q.exception() is None
+
+
+def _recorded_partitions(ck):
+    """(shuffle partitions recorded in each offsets entry, partition dirs of
+    operator 0's state store)."""
+    entries = [p for p in (ck / "offsets").iterdir() if p.name.isdigit()]
+    recorded = {int(json.loads(p.read_text().splitlines()[1])["conf"][_SHUFFLE]) for p in entries}
+    return recorded, len([p for p in (ck / "state" / "0").iterdir() if p.name.isdigit()])
+
+
+def _rows(spark, out):
+    return sorted(map(tuple, spark.read.parquet(out).toPandas().itertuples(index=False)))
+
+
+def test_start_sink_gives_new_stream_one_state_partition_per_core(spark, tmp_path):
+    """A new checkpoint started through start_sink gets min(session
+    partitions, defaultParallelism) state partitions; the session keeps its
+    own value after start_sink returns or raises; the output equals the
+    same drain started directly at the session's 32 partitions."""
+    src = str(tmp_path / "src")
+    for i in range(3):
+        _write_dedup_slice(spark, src, i)
+    prior = spark.conf.get(_SHUFFLE)
+    assert prior == "32"
+    cores = min(32, spark.sparkContext.defaultParallelism)
+
+    _dedup_drain(spark, src, str(tmp_path / "ref"), str(tmp_path / "ck_ref"), direct=True)
+    assert _recorded_partitions(tmp_path / "ck_ref") == ({32}, 32)
+
+    _dedup_drain(spark, src, str(tmp_path / "out"), str(tmp_path / "ck"))
+    assert spark.conf.get(_SHUFFLE) == prior
+    assert _recorded_partitions(tmp_path / "ck") == ({cores}, cores)
+    got = _rows(spark, str(tmp_path / "out"))
+    assert got == _rows(spark, str(tmp_path / "ref"))
+    assert sorted(k for k, _, _ in got) == sorted(f"k{k}" for k in range(8))
+
+    rate = streams.open_stream(spark, {"format": "rate", "rowsPerSecond": "1"})
+    with pytest.raises(ValueError, match="requires 'path'"):
+        streams.start_sink(rate, {"format": "parquet", "checkpoint": str(tmp_path / "ck_bad")})
+    assert spark.conf.get(_SHUFFLE) == prior
+    # raised by Spark inside start(): no aggregation for complete mode
+    with pytest.raises(AnalysisException, match="(?i)complete"):
+        streams.start_sink(rate, {"format": "memory", "queryName": "bad_mode",
+                                  "outputMode": "complete"})
+    assert spark.conf.get(_SHUFFLE) == prior
+
+
+def test_start_sink_resumes_old_checkpoint_at_recorded_partitions(spark, tmp_path):
+    """A checkpoint first written at 32 state partitions by plain
+    writeStream, resumed through start_sink after a new slice lands, keeps
+    32 partitions and stays exactly-once."""
+    src, out, ck = str(tmp_path / "src"), str(tmp_path / "out"), tmp_path / "ck"
+    for i in range(2):
+        _write_dedup_slice(spark, src, i)
+    _dedup_drain(spark, src, out, str(ck), direct=True)
+    def commits():
+        return [p for p in (ck / "commits").iterdir() if p.name.isdigit()]
+
+    n_before = len(commits())
+    _write_dedup_slice(spark, src, 2)
+    _dedup_drain(spark, src, out, str(ck))
+
+    assert len(commits()) > n_before
+    assert _recorded_partitions(ck) == ({32}, 32)
+    got = _rows(spark, out)
+    assert sorted(k for k, _, _ in got) == sorted(f"k{k}" for k in range(8))
+    first_ts = {f"k{k}": dt.datetime(2024, 1, 1, 0, 0 if k < 6 else k - 5, k) for k in range(8)}
+    assert {k: ts for k, ts, _ in got} == first_ts
 
 
 def test_kafka_branch_fails_with_clear_error_without_connector(spark):
