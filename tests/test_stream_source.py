@@ -14,6 +14,8 @@ from pyspark.sql import functions as F
 
 from beymani_spark.sources import streams
 
+_SHUFFLE = "spark.sql.shuffle.partitions"
+
 
 # --- decode_value (broker-free kafka payload parsing) ------------------------
 
@@ -61,12 +63,15 @@ def test_open_stream_rejects_unknown_format(spark):
 
 def test_start_sink_validates_file_sink_config(spark, tmp_path):
     """A file-format sink without 'path' must fail with a descriptive
-    ValueError (not a raw KeyError), symmetric with the checkpoint check."""
+    ValueError (not a raw KeyError), symmetric with the checkpoint check,
+    and leave the session's shuffle partitions as they were."""
     src = streams.open_stream(spark, {"format": "rate", "rowsPerSecond": "1"})
+    prior = spark.conf.get(_SHUFFLE)
     with pytest.raises(ValueError, match="requires 'path'"):
         streams.start_sink(src, {"format": "parquet", "checkpoint": str(tmp_path / "ck")})
     with pytest.raises(ValueError, match="checkpoint"):
         streams.start_sink(src, {"format": "parquet", "path": str(tmp_path / "out")})
+    assert spark.conf.get(_SHUFFLE) == prior
 
 
 # --- rate-source soak through a real scoring job -----------------------------
@@ -151,8 +156,6 @@ def test_file_stream_checkpoint_restart_exactly_once(spark, tmp_path):
 
 # --- state-store partitioning: one partition per core ------------------------
 
-_SHUFFLE = "spark.sql.shuffle.partitions"
-
 
 def _write_dedup_slice(spark, src, i):
     """Slice ``i`` of a keyed event stream: keys k0..k{5+i}, each once per
@@ -223,9 +226,6 @@ def test_start_sink_gives_new_stream_one_state_partition_per_core(spark, tmp_pat
     assert sorted(k for k, _, _ in got) == sorted(f"k{k}" for k in range(8))
 
     rate = streams.open_stream(spark, {"format": "rate", "rowsPerSecond": "1"})
-    with pytest.raises(ValueError, match="requires 'path'"):
-        streams.start_sink(rate, {"format": "parquet", "checkpoint": str(tmp_path / "ck_bad")})
-    assert spark.conf.get(_SHUFFLE) == prior
     # raised by Spark inside start(): no aggregation for complete mode
     with pytest.raises(AnalysisException, match="(?i)complete"):
         streams.start_sink(rate, {"format": "memory", "queryName": "bad_mode",
