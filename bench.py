@@ -103,7 +103,8 @@ def main() -> None:
     # record BASELINE.md cites. Round = SPARK_GRAFT_ROUND if set, else
     # 1 + the highest round with a recorded CORRECTNESS_r*.json (so every
     # capture taken while building round N lands in bench_out_rNN.json and
-    # earlier rounds' committed records are never touched again).
+    # earlier rounds' captures are never touched again). The captures are
+    # git-ignored: a record is regenerated on demand, not committed.
     repo = os.path.dirname(os.path.abspath(__file__))
     rnd = os.environ.get("SPARK_GRAFT_ROUND")
     if rnd is None:
@@ -121,7 +122,7 @@ def main() -> None:
     )
     # only the canonical sf0.1 run owns the stamped record: quick smoke
     # drives at other SFs (e.g. the verify recipe's sf0.01 pass) print the
-    # JSON line but must not overwrite the committed sf0.1 capture
+    # JSON line but must not overwrite the sf0.1 capture
     if sf == 0.1 or "SPARK_GRAFT_BENCH_OUT" in os.environ:
         with open(out_path, "w") as f:
             f.write(line + "\n")

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import caching
+from .prefix import literal_offsets
 from .text import tokens
 
 
@@ -79,57 +80,6 @@ def chunk_for_training(
         )
     )
     return out
-
-
-def _ranged_prefix(narrow: DataFrame, range_cols, partitions: int, total):
-    """Shared distributed prefix-sum scaffold (pack_sequences token
-    offsets, shuffle_plan positions, curriculum_plan ranks): range-
-    partition the narrow frame by ``range_cols``, tag partition ids, and
-    compute each partition's base offset (sum of ``total``, an aggregate
-    expression, over all earlier range partitions).
-
-    The frame persists AFTER the range exchange: every consumer (the
-    per-partition window AND the totals aggregate) must observe the SAME
-    physical range boundaries or the base offsets misalign
-    (RangePartitioner samples with an RDD-id-derived seed — two
-    materializations can draw different boundaries; without a cache the
-    consistency rides on exchange reuse). ONE home for this invariant.
-
-    The per-partition totals COLLECT to the driver (one bounded job over
-    the fresh cache — |partitions| longs, cluster-parallelism-sized
-    metadata, never data) and come back as a dense offsets ARRAY literal
-    indexed by _pid. This replaces the former |partitions|-row offsets
-    frame + BroadcastHashJoin per consumer: one plan has zero joins and
-    zero BroadcastExchange sub-jobs, and callers that also need the grand
-    total (curriculum_plan's n_total) read it off the same collect
-    instead of paying a second count() job.
-
-    Returns (ranged, w, base_col, grand_total): the persisted frame, the
-    per-partition window ordered by range_cols, the base-offset COLUMN
-    (usable directly against ranged's _pid), and sum(total) overall."""
-    ranged = (
-        narrow.repartitionByRange(
-            int(partitions), *[F.col(c) for c in range_cols]
-        )
-        .withColumn("_pid", F.spark_partition_id())
-        .persist()
-    )
-    w = Window.partitionBy("_pid").orderBy(*range_cols)
-    rows = ranged.groupBy("_pid").agg(total.alias("_ptotal")).collect()
-    ptot = {r["_pid"]: int(r["_ptotal"]) for r in rows}
-    # range partitions are ordered by construction, so the base of
-    # partition p is the sum of the totals of partitions < p; empty
-    # partitions (no totals row) contribute 0. Dense array over every
-    # requested pid so element_at stays in range under ANSI.
-    bases: list[int] = []
-    acc = 0
-    for p in range(int(partitions)):
-        bases.append(acc)
-        acc += ptot.get(p, 0)
-    base_col = F.element_at(
-        F.array(*[F.lit(b).cast("long") for b in bases]), F.col("_pid") + 1
-    )
-    return ranged, w, base_col, bases, acc
 
 
 def pack_sequences(
@@ -194,10 +144,9 @@ def pack_sequences(
         F.col(id_col),
         (F.coalesce(n_tok, F.lit(0)) + F.lit(int(sep_tokens))).alias("_span"),
     )
-    # the shared prefix-sum scaffold (persist-after-exchange invariant
-    # lives in _ranged_prefix); the frame is (id, span, pid) longs,
-    # pinned to the result
-    ranged, w0, base_col, _, _ = _ranged_prefix(
+    # the shared prefix-sum scaffold (prefix.py); the frame is
+    # (id, span, pid) longs, pinned to the result
+    ranged, w0, base_col, _, _ = literal_offsets(
         narrow, [id_col], int(partitions), F.sum("_span")
     )
     # per-partition running total (window re-shuffles by _pid: rows of one
@@ -278,7 +227,7 @@ def shuffle_plan(
         partitions = df.sparkSession.sparkContext.defaultParallelism
     u = hash_uniform(F.col(id_col), seed)
     narrow = df.select(F.col(id_col), u.alias(key_col))
-    ranged, w, base_col, _, _ = _ranged_prefix(
+    ranged, w, base_col, _, _ = literal_offsets(
         narrow, [key_col, id_col], int(partitions), F.count("*")
     )
     out = ranged.withColumn("_rk", F.row_number().over(w)).select(
@@ -315,9 +264,9 @@ def curriculum_plan(
     deterministically (id tie-break).
 
     Scale shape: two distributed prefix-sum passes over narrow
-    projections (the shuffle_plan / pack_sequences ``_ranged_prefix``
-    engine) — one over (-score, id) for the exact global quality rank,
-    one over (stage, shuffle_key, id) for the position. Each is one
+    projections (``prefix.literal_offsets``, as in shuffle_plan and
+    pack_sequences) — one over (-score, id) for the exact global quality
+    rank, one over (stage, shuffle_key, id) for the position. Each is one
     range exchange with driver-collected base offsets (element_at
     literals); stage boundaries are the K-1 closed-form-rank rows
     fetched from the pass-1 cache, so pass 2 never re-runs pass 1's
@@ -336,7 +285,7 @@ def curriculum_plan(
         -F.col(score_col).cast("double"), F.lit(float("inf"))
     )
     narrow = df.select(F.col(id_col), negq.alias("_negq"))
-    ranged, w, _base_col, bases, n_total = _ranged_prefix(
+    ranged, w, _base_col, bases, n_total = literal_offsets(
         narrow, ["_negq", id_col], int(partitions), F.count("*")
     )
     if n_total == 0:
@@ -405,7 +354,7 @@ def curriculum_plan(
         stage_col.alias("stage"),
         hash_uniform(F.col(id_col), seed).alias("_skey"),
     )
-    ranged2, w2, base2_col, _, _ = _ranged_prefix(
+    ranged2, w2, base2_col, _, _ = literal_offsets(
         narrow2, ["stage", "_skey", id_col], int(partitions), F.count("*")
     )
     out = ranged2.withColumn("_rk", F.row_number().over(w2)).select(

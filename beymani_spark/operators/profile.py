@@ -22,12 +22,14 @@ from __future__ import annotations
 import math
 
 from collections.abc import Sequence
+from functools import reduce
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import caching
 from ..functions.seasonal import cycle_index
+from . import prefix
 
 
 def _explode_attrs(
@@ -310,79 +312,22 @@ def ks_two_sample(
     the other side's count 0.
 
     Scale shape: one partial-agg groupBy per distinct (keys, quantized
-    value), then a DISTRIBUTED prefix sum over the grouped value frame —
-    range partition by (keys, value), per-(keys, partition) ROWS cumsum,
-    broadcast per-(keys, partition) base offsets (the pack_sequences
-    pattern, packing.py). There is NO single-partition stage over a
-    data-sized or key-sized frame, so wide domains (raw token counts,
-    epoch timestamps, high-cardinality doubles) are as safe as [0,1]-like
-    ones — per key too: a key's distinct values span partitions and each
-    slice cumsums independently. The broadcast base/total frame is
-    O(|keys| x |partitions|) rows of longs — fine for governance-gate key
-    cardinalities (domains, languages); for millions of keys swap the
-    broadcast for a plain hash join on (*keys, _pid)."""
+    value) with one count column per frame, then the keyed distributed
+    prefix sum (``prefix.keyed_cumsum``) over that grouped frame. There is
+    NO single-partition stage over a data-sized or key-sized frame, so
+    wide domains (raw token counts, epoch timestamps, high-cardinality
+    doubles) are as safe as [0,1]-like ones — per key too: a key's
+    distinct values span partitions and each slice cumsums
+    independently."""
     r = int(round_decimals)
-    ks = [F.col(k) for k in keys]
-    a = df_a.filter(F.col(col).isNotNull()).select(
-        *ks, F.round(F.col(col), r).alias("_v"), F.lit(1).alias("_ia"), F.lit(0).alias("_ib")
-    )
-    b = df_b.filter(F.col(col).isNotNull()).select(
-        *ks, F.round(F.col(col), r).alias("_v"), F.lit(0).alias("_ia"), F.lit(1).alias("_ib")
-    )
-    g = (
-        a.unionByName(b)
-        .groupBy(*keys, "_v")
-        .agg(F.sum("_ia").alias("_ca"), F.sum("_ib").alias("_cb"))
-    )
-    parts = df_a.sparkSession.sparkContext.defaultParallelism
-    # persist AFTER the range exchange: the cumsum window and the per-slice
-    # totals must observe the SAME physical range boundaries or the base
-    # offsets misalign (RangePartitioner samples with an RDD-id-derived
-    # seed, so two materializations of the exchange can draw different
-    # boundaries — without a cache the consistency rides entirely on
-    # exchange reuse, which a session can disable). Also saves each branch
-    # re-running the scans + melt + aggregation. Pinned to the result.
-    ranged = (
-        g.repartitionByRange(int(parts), *ks, F.col("_v"))
-        .withColumn("_pid", F.spark_partition_id())
-        .persist()
-    )
-    wloc = Window.partitionBy(*keys, "_pid").orderBy("_v").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    local = ranged.select(
-        *keys,
-        "_pid",
-        F.sum("_ca").over(wloc).alias("_la"),
-        F.sum("_cb").over(wloc).alias("_lb"),
-    )
-    # per-(keys, partition) totals -> cumulative bases + per-key grand
-    # totals: an O(|keys| x |partitions|)-row frame, broadcast back (range
-    # partitions are ordered by construction and (keys, _v) sorts keys
-    # first, so within a key, partition p's base is the sum of that key's
-    # totals in partitions < p)
-    totals = ranged.groupBy(*keys, "_pid").agg(
-        F.sum("_ca").alias("_ta"), F.sum("_cb").alias("_tb")
-    )
-    wbase = Window.partitionBy(*keys).orderBy("_pid").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    wtot = Window.partitionBy(*keys)
-    base = totals.select(
-        *keys,
-        "_pid",
-        F.coalesce(F.sum("_ta").over(wbase), F.lit(0)).alias("_ba"),
-        F.coalesce(F.sum("_tb").over(wbase), F.lit(0)).alias("_bb"),
-        F.sum("_ta").over(wtot).alias("_na"),
-        F.sum("_tb").over(wtot).alias("_nb"),
-    )
-    c = local.join(F.broadcast(base), [*keys, "_pid"]).select(
-        *keys,
-        (F.col("_ba") + F.col("_la")).alias("_fa"),
-        (F.col("_bb") + F.col("_lb")).alias("_fb"),
-        "_na",
-        "_nb",
-    )
+
+    def side(df: DataFrame) -> DataFrame:
+        return df.filter(F.col(col).isNotNull()).select(
+            *keys, F.round(F.col(col), r).alias("_v")
+        )
+
+    g = _value_counts([side(df_a), side(df_b)], [*keys, "_v"])
+    ranged, cum, _ = prefix.keyed_cumsum(g, keys, "_v", ["_c0", "_c1"])
     # try_divide: a key present in only ONE frame has a zero count on the
     # other side — ANSI long/long division would fail the whole job on
     # that key; NULL matches DuckDB's divide-by-zero result, so the
@@ -391,16 +336,16 @@ def ks_two_sample(
         F.round(
             F.max(
                 F.abs(
-                    F.try_divide(F.col("_fa"), F.col("_na"))
-                    - F.try_divide(F.col("_fb"), F.col("_nb"))
+                    F.try_divide(F.col("_c0_cum"), F.col("_c0_n"))
+                    - F.try_divide(F.col("_c1_cum"), F.col("_c1_n"))
                 )
             ),
             6,
         ).alias("ks_stat"),
-        F.max("_na").alias("n_a"),
-        F.max("_nb").alias("n_b"),
+        F.max("_c0_n").alias("n_a"),
+        F.max("_c1_n").alias("n_b"),
     ]
-    out = c.groupBy(*keys).agg(*aggs) if keys else c.agg(*aggs)
+    out = cum.groupBy(*keys).agg(*aggs) if keys else cum.agg(*aggs)
     return caching.pin(out, ranged)
 
 
@@ -596,93 +541,26 @@ def column_profile_drift(
     )
 
 
-def numeric_profile(
-    df: DataFrame,
-    cols: Sequence[str],
-    quantiles: Sequence[float] = (0.25, 0.5, 0.75),
-    exact: bool = True,
-    method: str = "prefix",
-) -> DataFrame:
-    """Per-column numeric distribution card: one row per column with
-    (n, n_nulls, mean, std, min, q25, q50, q75, max) — the numeric
-    companion to ``column_profile``'s completeness card, and the summary
-    table a feature/label review reads before training (the reference's
-    olss.py score-statistics report generalized to any numeric column,
-    `python/app/olss.py:35-115`). Quantiles are EXACT linear-interpolated
-    order statistics (``quantile_cont`` semantics), so the card is
-    oracle-verifiable.
-
-    Two exact engines, same values bit-for-bit:
-
-    - ``method='prefix'`` (default, the 100 TB shape): one moments pass
-      (count/nulls/mean/std/min/max — a single partial+final aggregate
-      over a pruned scan) plus one melt -> partial-aggregated
-      groupBy(column, value) -> the repo's DISTRIBUTED prefix-sum CDF
-      (the ks_two_sample machinery: range partition by (column, value),
-      per-slice ROWS cumsum, broadcast per-slice base offsets — NO
-      single-partition stage and no per-column value map, so a column
-      with billions of distinct values profiles as safely as an enum).
-      The straddling order statistics come from a conditional min over
-      the cum frame against a |cols| x |quantiles| broadcast rank spec;
-      the interpolation replays Spark's ``percentile`` arithmetic
-      (pos = q*(n-1); lo*(ceil(pos)-pos) + hi*(pos-floor(pos))) so both
-      methods agree exactly.
-    - ``method='map'``: the single-aggregate ``percentile`` form — one
-      pass total, but the aggregation state is a per-column
-      O(distinct values) map; the right choice for enum-like columns or
-      small frames.
-
-    ``exact=False`` swaps the map form's aggregate for
-    ``approx_percentile`` (bounded GK sketch state) — oracle-exempt, for
-    one-pass cards over unbounded-cardinality columns where the second
-    pass of 'prefix' is unwanted.
-    """
-    if not (0 < len(quantiles) and all(0.0 <= q <= 1.0 for q in quantiles)):
+def _check_card_args(cols: Sequence[str], quantiles: Sequence[float]) -> None:
+    """Reject bad numeric-card arguments before any frame is built (and
+    so before anything is persisted)."""
+    if not cols:
+        raise ValueError("cols must name at least one column")
+    if len(set(cols)) != len(cols):
+        raise ValueError(f"cols must be distinct, got {list(cols)}")
+    if not (0 < len(quantiles) and all(0.0 <= float(q) <= 1.0 for q in quantiles)):
         raise ValueError("quantiles must be in [0, 1] and non-empty")
-    if method not in ("prefix", "map"):
-        raise ValueError("method must be 'prefix' or 'map'")
-    qnames = [f"q{int(round(q * 100))}" for q in quantiles]
 
-    if not exact or method == "map":
-        qarr = F.array(*[F.lit(float(q)) for q in quantiles])
-        pct = F.percentile if exact else F.approx_percentile
-        aggs = [F.count(F.lit(1)).alias("_n")]
-        for c in cols:
-            col = F.col(c).cast("double")
-            aggs += [
-                F.count(col).alias(f"_nn_{c}"),
-                F.avg(col).alias(f"_mean_{c}"),
-                F.stddev_samp(col).alias(f"_std_{c}"),
-                F.min(col).alias(f"_min_{c}"),
-                pct(col, qarr).alias(f"_q_{c}"),
-                F.max(col).alias(f"_max_{c}"),
-            ]
-        row = df.agg(*aggs)
-        pairs = ", ".join(
-            f"'{c}', `_nn_{c}`, `_mean_{c}`, `_std_{c}`, `_min_{c}`, "
-            + ", ".join(f"`_q_{c}`[{i}]" for i in range(len(quantiles)))
-            + f", `_max_{c}`"
-            for c in cols
-        )
-        melted = row.select(
-            F.col("_n"),
-            F.expr(
-                f"stack({len(cols)}, {pairs}) as "
-                f"(column, _nonnull, mean, std, min, {', '.join(qnames)}, max)"
-            ),
-        )
-        return melted.select(
-            "column",
-            F.col("_nonnull").alias("n"),
-            (F.col("_n") - F.col("_nonnull")).alias("n_nulls"),
-            "mean",
-            "std",
-            "min",
-            *qnames,
-            "max",
-        )
 
-    # ---- method='prefix': moments pass + distributed prefix-sum quantiles
+def _moments(
+    df: DataFrame, cols: Sequence[str], approx: dict[str, float] | None = None
+) -> DataFrame:
+    """(column, n, n_nulls, mean, std, min, max) per column from ONE
+    aggregate over a pruned scan; the melt to one row per column is a
+    stack() projection of the single aggregate row. ``approx`` maps extra
+    output names to quantiles computed in the same pass with
+    ``approx_percentile``."""
+    names = list(approx or {})
     aggs = [F.count(F.lit(1)).alias("_n")]
     for c in cols:
         col = F.col(c).cast("double")
@@ -693,133 +571,151 @@ def numeric_profile(
             F.min(col).alias(f"_min_{c}"),
             F.max(col).alias(f"_max_{c}"),
         ]
-    row = df.agg(*aggs)
+        if names:
+            qarr = F.array(*[F.lit(float(q)) for q in approx.values()])
+            aggs.append(F.approx_percentile(col, qarr).alias(f"_q_{c}"))
     pairs = ", ".join(
         f"'{c}', `_nn_{c}`, `_mean_{c}`, `_std_{c}`, `_min_{c}`, `_max_{c}`"
+        + "".join(f", `_q_{c}`[{i}]" for i in range(len(names)))
         for c in cols
     )
-    moments = row.select(
-        F.col("_n"),
-        F.expr(
-            f"stack({len(cols)}, {pairs}) as "
-            "(column, _nonnull, mean, std, min, max)"
-        ),
-    ).select(
-        "column",
-        F.col("_nonnull").alias("n"),
-        (F.col("_n") - F.col("_nonnull")).alias("n_nulls"),
-        "mean",
-        "std",
-        "min",
-        "max",
-    )
-
-    # melt to (column, value) occurrence counts: one scan, one
-    # partial-aggregated groupBy — distinct-value granularity
-    melted = (
-        df.select(
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(c).alias("column"),
-                            F.col(c).cast("double").alias("_v"),
-                        )
-                        for c in cols
-                    ]
-                )
-            ).alias("_s")
-        )
-        .select(F.col("_s.column").alias("column"), F.col("_s._v").alias("_v"))
-        .filter(F.col("_v").isNotNull())
-        .groupBy("column", "_v")
-        .agg(F.count(F.lit(1)).alias("_c"))
-    )
-    # distributed prefix sum keyed on the column (the ks_two_sample /
-    # pack_sequences pattern): range partition, per-slice cumsum,
-    # broadcast per-(column, slice) base offsets
-    parts = df.sparkSession.sparkContext.defaultParallelism
-    ranged = (
-        melted.repartitionByRange(int(parts), F.col("column"), F.col("_v"))
-        .withColumn("_pid", F.spark_partition_id())
-        # persist AFTER the range exchange + _pid assignment: the ranged
-        # frame feeds THREE branches (cumsum window, per-slice totals ->
-        # base offsets, rank spec) whose offsets only reconcile if every
-        # branch observes the SAME physical partitioning. Without a cache
-        # that consistency rides on exchange reuse (and each branch
-        # re-runs the scan + melt + aggregation — measured 4 FileScans of
-        # the fact table per card); persisting ANY frame *below* the
-        # range exchange instead breaks reuse and lets the range sampler
-        # draw different boundaries per branch, silently misaligning the
-        # CDF (caught by the parity mirror). The frame is
-        # |distinct (column, value)| narrow rows; pinned to the result,
-        # caller releases.
-        .persist()
-    )
-    wloc = (
-        Window.partitionBy("column", "_pid")
-        .orderBy("_v")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    local = ranged.select(
-        "column", "_pid", "_v", F.sum("_c").over(wloc).alias("_lf")
-    )
-    totals = ranged.groupBy("column", "_pid").agg(F.sum("_c").alias("_t"))
-    wbase = (
-        Window.partitionBy("column")
-        .orderBy("_pid")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    base = totals.select(
-        "column",
-        "_pid",
-        F.coalesce(F.sum("_t").over(wbase), F.lit(0)).alias("_b"),
-        F.sum("_t").over(Window.partitionBy("column")).alias("_cnt"),
-    )
-    cum = local.join(F.broadcast(base), ["column", "_pid"]).select(
-        "column", "_v", (F.col("_b") + F.col("_lf")).alias("_f"), "_cnt"
-    )
-    # rank spec per (column, quantile): Spark percentile arithmetic —
-    # pos = q*(n-1) (one double multiply), straddling 0-based indices
-    # floor/ceil(pos); built from the tiny per-column totals frame
-    spec = (
-        base.groupBy("column")
-        .agg(F.max("_cnt").alias("_cnt"))
+    fields = ", ".join(["column", "_nonnull", "mean", "std", "min", "max", *names])
+    return (
+        df.agg(*aggs)
+        .select(F.col("_n"), F.expr(f"stack({len(cols)}, {pairs}) as ({fields})"))
         .select(
             "column",
-            F.explode(
-                F.array(*[F.lit(float(q)) for q in quantiles])
-            ).alias("_q"),
-            "_cnt",
-        )
-        .withColumn("_pos", F.col("_q") * (F.col("_cnt") - 1).cast("double"))
-        .withColumn("_lo", F.floor(F.col("_pos")))
-        .withColumn("_hi", F.ceil(F.col("_pos")))
-    )
-    straddle = (
-        cum.join(F.broadcast(spec), "column")
-        .groupBy("column", "_q", "_pos", "_lo", "_hi")
-        .agg(
-            F.min(F.when(F.col("_f") >= F.col("_lo") + 1, F.col("_v"))).alias(
-                "_vlo"
-            ),
-            F.min(F.when(F.col("_f") >= F.col("_hi") + 1, F.col("_v"))).alias(
-                "_vhi"
-            ),
+            F.col("_nonnull").alias("n"),
+            (F.col("_n") - F.col("_nonnull")).alias("n_nulls"),
+            "mean",
+            "std",
+            "min",
+            "max",
+            *names,
         )
     )
-    qval = F.when(F.col("_lo") == F.col("_hi"), F.col("_vlo")).otherwise(
-        F.col("_vlo") * (F.col("_hi").cast("double") - F.col("_pos"))
-        + F.col("_vhi") * (F.col("_pos") - F.col("_lo").cast("double"))
+
+
+def _melt(df: DataFrame, cols: Sequence[str]) -> DataFrame:
+    """(column, _v): every non-NULL cell of ``cols`` as a double."""
+    cells = F.array(
+        *[
+            F.struct(F.lit(c).alias("column"), F.col(c).cast("double").alias("_v"))
+            for c in cols
+        ]
     )
-    qcols = [
-        F.min(F.when(F.col("_q") == float(q), F.col("_qv"))).alias(name)
-        for q, name in zip(quantiles, qnames)
+    return (
+        df.select(F.explode(cells).alias("_s"))
+        .select(F.col("_s.column").alias("column"), F.col("_s._v").alias("_v"))
+        .filter(F.col("_v").isNotNull())
+    )
+
+
+def _value_counts(sides: Sequence[DataFrame], group: Sequence[str]) -> DataFrame:
+    """(*group, _c0, ..., _c<k-1>): how many rows of side i carry each
+    distinct ``group`` value — one partial-aggregated groupBy over the
+    union of the sides."""
+    k = len(sides)
+    tagged = [
+        s.select(*group, *[F.lit(int(i == j)).alias(f"_c{j}") for j in range(k)])
+        for i, s in enumerate(sides)
     ]
-    quants = (
-        straddle.withColumn("_qv", qval).groupBy("column").agg(*qcols)
+    return reduce(DataFrame.unionByName, tagged).groupBy(*group).agg(
+        *[F.sum(f"_c{j}").alias(f"_c{j}") for j in range(k)]
     )
-    out = moments.join(quants, "column", "left").select(
+
+
+def _exact_quantiles(
+    cum: DataFrame, base: DataFrame, wanted: dict[str, dict[str, float]]
+) -> DataFrame:
+    """(column, <name>...): exact interpolated quantiles read off a keyed
+    CDF (``prefix.keyed_cumsum`` keyed on ``column``). ``wanted`` maps each
+    count column to {output name: quantile}.
+
+    The arithmetic replays Spark's ``percentile`` (``quantile_cont``
+    semantics): pos = q*(n-1) in one double multiply, and the result is
+    lo*(ceil(pos)-pos) + hi*(pos-floor(pos)), where lo/hi are the 0-based
+    order statistics floor(pos)/ceil(pos) — each the smallest value whose
+    cumulative count exceeds its index. Every order statistic is a
+    conditional min in ONE groupBy(column) over the CDF joined with a
+    |cols|-row broadcast rank spec. A count column with no values for a
+    column reports NULL, never the other side's minimum."""
+    spec = base.groupBy("column").agg(
+        *[F.max(f"{c}_n").alias(f"{c}_n") for c in wanted]
+    )
+    mins = []
+    for c, names in wanted.items():
+        for name, q in names.items():
+            pos = F.lit(float(q)) * (F.col(f"{c}_n") - 1).cast("double")
+            spec = (
+                spec.withColumn(f"{name}_pos", pos)
+                .withColumn(f"{name}_lo", F.floor(F.col(f"{name}_pos")))
+                .withColumn(f"{name}_hi", F.ceil(F.col(f"{name}_pos")))
+            )
+            for e in ("lo", "hi"):
+                hit = F.col(f"{c}_cum") >= F.col(f"{name}_{e}") + 1
+                mins.append(F.min(F.when(hit, F.col("_v"))).alias(f"{name}_v{e}"))
+    straddle = (
+        cum.select("column", "_v", *[f"{c}_cum" for c in wanted])
+        .join(F.broadcast(spec), "column")
+        .groupBy(*spec.columns)
+        .agg(*mins)
+    )
+
+    def value(c: str, name: str) -> Column:
+        pos, lo, hi = (F.col(f"{name}_{x}") for x in ("pos", "lo", "hi"))
+        interp = F.when(lo == hi, F.col(f"{name}_vlo")).otherwise(
+            F.col(f"{name}_vlo") * (hi.cast("double") - pos)
+            + F.col(f"{name}_vhi") * (pos - lo.cast("double"))
+        )
+        return F.when(F.col(f"{c}_n") > 0, interp).alias(name)
+
+    return straddle.select(
+        "column", *[value(c, name) for c, names in wanted.items() for name in names]
+    )
+
+
+def numeric_profile(
+    df: DataFrame,
+    cols: Sequence[str],
+    quantiles: Sequence[float] = (0.25, 0.5, 0.75),
+    exact: bool = True,
+) -> DataFrame:
+    """Per-column numeric distribution card: one row per column with
+    (n, n_nulls, mean, std, min, q25, q50, q75, max) — the numeric
+    companion to ``column_profile``'s completeness card, and the summary
+    table a feature/label review reads before training (the reference's
+    olss.py score-statistics report generalized to any numeric column,
+    `python/app/olss.py:35-115`). Quantiles are EXACT linear-interpolated
+    order statistics (``quantile_cont`` semantics), so the card is
+    oracle-verifiable.
+
+    Scale shape: one moments pass (a single partial+final aggregate over
+    a pruned scan) plus one melt -> partial-aggregated groupBy(column,
+    value) -> the keyed distributed prefix sum (``prefix.keyed_cumsum``)
+    -> :func:`_exact_quantiles`. No single-partition stage and no
+    per-column value map, so a column with billions of distinct values
+    profiles as safely as an enum.
+
+    ``exact=False`` is the one-pass approximate card instead: the moments
+    pass also carries ``approx_percentile`` (bounded GK sketch state) —
+    oracle-exempt, for unbounded-cardinality columns where the second
+    pass is unwanted.
+    """
+    _check_card_args(cols, quantiles)
+    qnames = [f"q{int(round(float(q) * 100))}" for q in quantiles]
+    if len(set(qnames)) != len(qnames):
+        raise ValueError(
+            f"quantiles {list(quantiles)} give duplicate column names {qnames}"
+        )
+    if not exact:
+        return _moments(df, cols, dict(zip(qnames, quantiles))).select(
+            "column", "n", "n_nulls", "mean", "std", "min", *qnames, "max"
+        )
+    g = _value_counts([_melt(df, cols)], ["column", "_v"])
+    ranged, cum, base = prefix.keyed_cumsum(g, ["column"], "_v", ["_c0"])
+    quants = _exact_quantiles(cum, base, {"_c0": dict(zip(qnames, quantiles))})
+    out = _moments(df, cols).join(quants, "column", "left").select(
         "column", "n", "n_nulls", "mean", "std", "min", *qnames, "max"
     )
     return caching.pin(out, ranged)
@@ -830,7 +726,6 @@ def numeric_profile_drift(
     df_b: DataFrame,
     cols: Sequence[str],
     quantiles: Sequence[float] = (0.25, 0.5, 0.75),
-    method: str = "prefix",
 ) -> DataFrame:
     """Numeric distribution drift between two snapshots: per-column
     mean / std / median deltas — the feature-drift alert feed ("did
@@ -841,185 +736,36 @@ def numeric_profile_drift(
     scale, or tail).
 
     The location quantile is 0.5 when ``quantiles`` contains it (the
-    default), else the middle of the requested list. ``method='prefix'``
-    (default) runs ONE joint distributed prefix-sum CDF over both sides
-    (the ks_two_sample two-indicator shape: each side's cumulative counts
-    ride the same range-partitioned pass), plus one cheap moments
-    aggregate per side — half the quantile machinery of two independent
-    cards, same values bit-for-bit. ``method='map'`` joins two one-pass
-    ``numeric_profile`` cards instead. The fact tables never co-shuffle
-    in either form; an empty side reports NULL medians, never a garbage
-    order statistic."""
-    if not (0 < len(quantiles) and all(0.0 <= float(q) <= 1.0 for q in quantiles)):
-        raise ValueError("quantiles must be in [0, 1] and non-empty")
-    if method not in ("prefix", "map"):
-        raise ValueError("method must be 'prefix' or 'map'")
+    default), else the middle of the requested list. ONE joint keyed
+    prefix sum runs over both sides (one count column per side, as in
+    ``ks_two_sample``), plus one moments aggregate per side — half the
+    quantile machinery of two independent cards. The fact tables never
+    co-shuffle; an empty side reports NULL medians, never a garbage order
+    statistic."""
+    _check_card_args(cols, quantiles)
     loc_q = (
         0.5
         if any(float(q) == 0.5 for q in quantiles)
         else float(sorted(float(q) for q in quantiles)[len(quantiles) // 2])
     )
-    if method == "map":
-        qname = f"q{int(round(loc_q * 100))}"
-        a = numeric_profile(df_a, cols, (loc_q,), method="map").select(
+    g = _value_counts([_melt(df_a, cols), _melt(df_b, cols)], ["column", "_v"])
+    ranged, cum, base = prefix.keyed_cumsum(g, ["column"], "_v", ["_c0", "_c1"])
+    med = _exact_quantiles(
+        cum, base, {"_c0": {"_da": loc_q}, "_c1": {"_db": loc_q}}
+    )
+
+    def side(df: DataFrame, s: str) -> DataFrame:
+        return _moments(df, cols).select(
             "column",
-            F.col("n").alias("n_a"),
-            F.col("mean").alias("_ma"),
-            F.col("std").alias("_sa"),
-            F.col(qname).alias("_da"),
-        )
-        b = numeric_profile(df_b, cols, (loc_q,), method="map").select(
-            "column",
-            F.col("n").alias("n_b"),
-            F.col("mean").alias("_mb"),
-            F.col("std").alias("_sb"),
-            F.col(qname).alias("_db"),
-        )
-        joined = a.join(b, "column")
-        return _npd_shape(joined)
-
-    def moments(df: DataFrame, s: str) -> DataFrame:
-        aggs = []
-        for c in cols:
-            col = F.col(c).cast("double")
-            aggs += [
-                F.count(col).alias(f"_nn_{c}"),
-                F.avg(col).alias(f"_mean_{c}"),
-                F.stddev_samp(col).alias(f"_std_{c}"),
-            ]
-        row = df.agg(*aggs)
-        pairs = ", ".join(
-            f"'{c}', `_nn_{c}`, `_mean_{c}`, `_std_{c}`" for c in cols
-        )
-        return row.select(
-            F.expr(
-                f"stack({len(cols)}, {pairs}) as (column, n_{s}, _m{s}, _s{s})"
-            )
+            F.col("n").alias(f"n_{s}"),
+            F.col("mean").alias(f"_m{s}"),
+            F.col("std").alias(f"_s{s}"),
         )
 
-    def melt(df: DataFrame, ia: int, ib: int) -> DataFrame:
-        return (
-            df.select(
-                F.explode(
-                    F.array(
-                        *[
-                            F.struct(
-                                F.lit(c).alias("column"),
-                                F.col(c).cast("double").alias("_v"),
-                            )
-                            for c in cols
-                        ]
-                    )
-                ).alias("_s")
-            )
-            .select(F.col("_s.column").alias("column"), F.col("_s._v").alias("_v"))
-            .filter(F.col("_v").isNotNull())
-            .select(
-                "column", "_v", F.lit(ia).alias("_ia"), F.lit(ib).alias("_ib")
-            )
-        )
-
-    g = (
-        melt(df_a, 1, 0)
-        .unionByName(melt(df_b, 0, 1))
-        .groupBy("column", "_v")
-        .agg(F.sum("_ia").alias("_ca"), F.sum("_ib").alias("_cb"))
+    joined = side(df_a, "a").join(side(df_b, "b"), "column").join(
+        med, "column", "left"
     )
-    parts = df_a.sparkSession.sparkContext.defaultParallelism
-    ranged = (
-        g.repartitionByRange(int(parts), F.col("column"), F.col("_v"))
-        .withColumn("_pid", F.spark_partition_id())
-        # persist AFTER the range exchange — same three-consumer offset-
-        # consistency + recompute rationale as numeric_profile's ranged
-        # frame (a cache below the exchange breaks reuse and misaligns
-        # the per-branch range boundaries)
-        .persist()
-    )
-    wloc = (
-        Window.partitionBy("column", "_pid")
-        .orderBy("_v")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    local = ranged.select(
-        "column",
-        "_pid",
-        "_v",
-        F.sum("_ca").over(wloc).alias("_lfa"),
-        F.sum("_cb").over(wloc).alias("_lfb"),
-    )
-    totals = ranged.groupBy("column", "_pid").agg(
-        F.sum("_ca").alias("_ta"), F.sum("_cb").alias("_tb")
-    )
-    wbase = (
-        Window.partitionBy("column")
-        .orderBy("_pid")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    wtot = Window.partitionBy("column")
-    base = totals.select(
-        "column",
-        "_pid",
-        F.coalesce(F.sum("_ta").over(wbase), F.lit(0)).alias("_ba"),
-        F.coalesce(F.sum("_tb").over(wbase), F.lit(0)).alias("_bb"),
-        F.sum("_ta").over(wtot).alias("_cna"),
-        F.sum("_tb").over(wtot).alias("_cnb"),
-    )
-    cum = local.join(F.broadcast(base), ["column", "_pid"]).select(
-        "column",
-        "_v",
-        (F.col("_ba") + F.col("_lfa")).alias("_fa"),
-        (F.col("_bb") + F.col("_lfb")).alias("_fb"),
-    )
-    spec = base.groupBy("column").agg(
-        F.max("_cna").alias("_cna"), F.max("_cnb").alias("_cnb")
-    )
-    for s in ("a", "b"):
-        spec = (
-            spec.withColumn(
-                f"_pos{s}",
-                F.lit(loc_q) * (F.col(f"_cn{s}") - 1).cast("double"),
-            )
-            .withColumn(f"_lo{s}", F.floor(F.col(f"_pos{s}")))
-            .withColumn(f"_hi{s}", F.ceil(F.col(f"_pos{s}")))
-        )
-    keys = [
-        "column", "_cna", "_cnb",
-        "_posa", "_loa", "_hia", "_posb", "_lob", "_hib",
-    ]
-    st = (
-        cum.join(F.broadcast(spec), "column")
-        .groupBy(*keys)
-        .agg(
-            F.min(F.when(F.col("_fa") >= F.col("_loa") + 1, F.col("_v"))).alias("_vloa"),
-            F.min(F.when(F.col("_fa") >= F.col("_hia") + 1, F.col("_v"))).alias("_vhia"),
-            F.min(F.when(F.col("_fb") >= F.col("_lob") + 1, F.col("_v"))).alias("_vlob"),
-            F.min(F.when(F.col("_fb") >= F.col("_hib") + 1, F.col("_v"))).alias("_vhib"),
-        )
-    )
-
-    def qv(s: str):
-        interp = F.when(
-            F.col(f"_lo{s}") == F.col(f"_hi{s}"), F.col(f"_vlo{s}")
-        ).otherwise(
-            F.col(f"_vlo{s}") * (F.col(f"_hi{s}").cast("double") - F.col(f"_pos{s}"))
-            + F.col(f"_vhi{s}") * (F.col(f"_pos{s}") - F.col(f"_lo{s}").cast("double"))
-        )
-        # an empty side must report NULL, not the min of the other side's
-        # values (its rank thresholds would degenerate to 0)
-        return F.when(F.col(f"_cn{s}") > 0, interp)
-
-    med = st.select("column", qv("a").alias("_da"), qv("b").alias("_db"))
-    joined = (
-        moments(df_a, "a")
-        .join(moments(df_b, "b"), "column")
-        .join(med, "column", "left")
-    )
-    return caching.pin(_npd_shape(joined), ranged)
-
-
-def _npd_shape(joined: DataFrame) -> DataFrame:
-    """Shared output projection for numeric_profile_drift's two engines."""
-    return joined.select(
+    out = joined.select(
         "column",
         "n_a",
         "n_b",
@@ -1033,6 +779,7 @@ def _npd_shape(joined: DataFrame) -> DataFrame:
         F.col("_db").alias("median_b"),
         F.round(F.col("_db") - F.col("_da"), 6).alias("median_delta"),
     )
+    return caching.pin(out, ranged)
 
 
 def finite_audit(df: DataFrame, cols: Sequence[str]) -> DataFrame:

@@ -677,16 +677,14 @@ def q_numeric_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     measure — the numeric companion to column_profile and the generalized
     form of the reference's olss.py score-statistics report
     (`python/app/olss.py:35-115`). Quantiles are EXACT interpolated order
-    statistics (quantile_cont semantics) computed on the default
-    method='prefix' engine: one moments pass + a melt into the
-    distributed prefix-sum CDF — no per-column value map at any
-    distinct-value cardinality (method='map' is the one-pass percentile-
-    aggregate form; exact=False the one-pass approx sketch)."""
+    statistics (quantile_cont semantics): one moments pass + a melt into
+    the distributed prefix-sum CDF — no per-column value map at any
+    distinct-value cardinality."""
     li = load_table(spark, sf_dir, "lineitem")
     out = profile.numeric_profile(
         li, ["l_quantity", "l_extendedprice", "l_discount", "l_tax"]
     )
-    # _round rebuilds the frame — carry the prefix engine's ranged pin
+    # _round rebuilds the frame — carry the prefix sum's ranged pin
     return caching.pin(
         _round(out, ["mean", "std", "min", "q25", "q50", "q75", "max"]),
         *caching.pinned(out),

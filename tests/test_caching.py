@@ -78,11 +78,26 @@ def test_back_to_back_pipeline_ops_no_storage_leak(spark):
             emb, "vec_id", "embedding", n_planes="auto"
         ),
     }
-    for name, build in engine_callers.items():
-        pairs = build()
-        pairs.count()
+    # every caller of the distributed prefix sum (operators/prefix.py)
+    from beymani_spark.operators import packing, profile
+    from pyspark.sql import functions as F
+
+    q = docs.select("doc_id", "lang", F.col("n_chars").cast("double").alias("q"))
+    a, b = q.filter(F.col("doc_id") % 2 == 0), q.filter(F.col("doc_id") % 2 == 1)
+    prefix_callers = {
+        "ks_two_sample": lambda: profile.ks_two_sample(a, b, "q"),
+        "ks_two_sample_keyed": lambda: profile.ks_two_sample(a, b, "q", keys=["lang"]),
+        "numeric_profile": lambda: profile.numeric_profile(q, ["q", "doc_id"]),
+        "numeric_profile_drift": lambda: profile.numeric_profile_drift(a, b, ["q"]),
+        "pack_sequences": lambda: packing.pack_sequences(docs, "doc_id"),
+        "shuffle_plan": lambda: packing.shuffle_plan(docs, "doc_id"),
+        "curriculum_plan": lambda: packing.curriculum_plan(docs, "doc_id", "n_chars"),
+    }
+    for name, build in {**engine_callers, **prefix_callers}.items():
+        out = build()
+        out.count()
         assert not cache_empty(), f"{name} cache should be live mid-op"
-        caching.release(pairs, blocking=True)
+        caching.release(out, blocking=True)
         assert cache_empty(), f"{name} release leaked a cache"
 
     lp = text.bigram_logprob(docs)

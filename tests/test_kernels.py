@@ -694,6 +694,20 @@ def test_numeric_profile_approx_mode_and_validation(spark):
     assert abs(approx["a"]["q50"] - exact["a"]["q50"]) <= 2.0
     with pytest.raises(ValueError):
         numeric_profile(df, ["a"], quantiles=[1.5])
+    # bad args fail with a ValueError naming the problem BEFORE the prefix
+    # sum persists anything (two quantiles naming one output column, no
+    # columns, a repeated column)
+    spark.catalog.clearCache()
+    for kwargs, msg in (
+        ({"quantiles": (0.5, 0.5)}, "duplicate column names"),
+        ({"quantiles": (0.251, 0.249)}, "duplicate column names"),
+        ({"cols": []}, "cols"),
+        ({"cols": ["a", "a"]}, "distinct"),
+    ):
+        args = {"cols": ["a"], **kwargs}
+        with pytest.raises(ValueError, match=msg):
+            numeric_profile(df, **args)
+        assert spark._jsparkSession.sharedState().cacheManager().isEmpty(), kwargs
 
 
 def test_numeric_profile_drift_hand_computed(spark):
@@ -723,8 +737,10 @@ def test_numeric_profile_drift_validation(spark):
         numeric_profile_drift(df, df, ["x"], quantiles=[])
     with pytest.raises(ValueError, match="quantiles"):
         numeric_profile_drift(df, df, ["x"], quantiles=[1.5])
-    with pytest.raises(ValueError, match="method"):
-        numeric_profile_drift(df, df, ["x"], method="perfix")
+    spark.catalog.clearCache()
+    with pytest.raises(ValueError, match="cols"):
+        numeric_profile_drift(df, df, [])
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_numeric_card_queries_carry_release_pins(spark):

@@ -908,22 +908,11 @@ def test_dedup_simhash_auto_band_join_no_cartesian(spark):
 
 
 def test_numeric_profile_plan_shapes(spark):
-    """numeric_profile, both exact engines:
-
-    - method='map' is ONE aggregation pass: a single pruned FileScan,
-      partial+final aggregate, no fact-table hash shuffle — but a
-      percentile value-map lives in the aggregation state.
-    - method='prefix' (default, the 100 TB shape) has NO percentile
-      aggregate anywhere (no per-column value map): the quantiles come
-      from a range-partitioned distributed prefix sum over the
-      partial-aggregated (column, value) counts, so state per task is
-      bounded at any distinct-value cardinality."""
+    """numeric_profile has NO percentile aggregate anywhere (no per-column
+    value map): the quantiles come from a range-partitioned distributed
+    prefix sum over the partial-aggregated (column, value) counts, so
+    state per task is bounded at any distinct-value cardinality."""
     li = load_table(spark, SF, "lineitem")
-    mplan = _plan(profile.numeric_profile(li, ["l_quantity", "l_discount"], method="map"))
-    assert mplan.count("FileScan") == 1, "map: must scan lineitem exactly once"
-    assert "l_orderkey" not in mplan.split("ReadSchema")[-1], "scan must prune"
-    assert "Exchange hashpartitioning" not in mplan, "map: no fact key shuffle"
-    assert "percentile" in mplan
     pplan = _plan(profile.numeric_profile(li, ["l_quantity", "l_discount"]))
     assert "percentile" not in pplan, "prefix: no value-map aggregate"
     assert "rangepartitioning" in pplan, "prefix: distributed CDF partitioning"
