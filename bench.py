@@ -23,6 +23,7 @@ def main() -> None:
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1).rstrip(".")) if m else None
 
+    from beymani_spark.functions import caching
     from beymani_spark.plans import QUERIES
     from beymani_spark.sources import get_spark
 
@@ -53,14 +54,14 @@ def main() -> None:
     warm.write.format("noop").mode("overwrite").save()
 
     def run_once(q) -> float:
-        t0 = time.perf_counter()
-        df = q.builder(spark, sf_dir)
-        df.write.format("noop").mode("overwrite").save()
-        elapsed = time.perf_counter() - t0
-        # queries are measured independently: drop any caches a builder
-        # persisted so later runs neither reuse them nor inherit the
-        # storage pressure (outside the timed region)
-        spark.catalog.clearCache()
+        # queries are measured independently: the scope frees every cache
+        # the builder persisted, outside the timed region, so later runs
+        # neither reuse them nor inherit the storage pressure
+        with caching.scope():
+            t0 = time.perf_counter()
+            df = q.builder(spark, sf_dir)
+            df.write.format("noop").mode("overwrite").save()
+            elapsed = time.perf_counter() - t0
         return elapsed
 
     # Cold pass (headline, comparable to BASELINE.md r1-r3) + warm repeats:

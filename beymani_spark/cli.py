@@ -66,18 +66,17 @@ def main(argv: list[str] | None = None) -> int:
               file=sys.stderr)
         return 2
 
+    from .functions import caching
     from .sources.tables import get_spark
 
     spark = get_spark()
-    df = QUERIES[args.query].builder(spark, args.sf_dir)
-    if args.out:
-        df.write.mode("overwrite").format(args.format).save(args.out)
-        print(f"{args.query}: wrote {args.out} ({args.format})")
-    else:
-        df.show(args.show, truncate=False)
-    from .functions import caching
-
-    caching.release(df)
+    with caching.scope():
+        df = QUERIES[args.query].builder(spark, args.sf_dir)
+        if args.out:
+            df.write.mode("overwrite").format(args.format).save(args.out)
+            print(f"{args.query}: wrote {args.out} ({args.format})")
+        else:
+            df.show(args.show, truncate=False)
     return 0
 
 

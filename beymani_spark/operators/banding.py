@@ -41,19 +41,14 @@ def banded_pairs(
       signature plus its one-bit flips) match each qualifying pair in
       exactly one probe, so no ``distinct`` shuffle runs.
 
-    Persist/pin contract (the one statement of it for every caller): the
-    sketch is persisted here, once, because both join sides read it —
+    The sketch is persisted here, once, because both join sides read it —
     unpersisted, each side would re-run the sketch lineage (the shingle
     aggregation, the perceptual-hash or hyperplane mapInPandas kernel,
     decode included). The cached frame is one fingerprint-sized row per
-    item at any scale. The returned (lazy) frame carries the cache via
-    :func:`caching.pin`; callers that derive their verified result from it
-    pin ``*caching.pinned(pairs)`` (plus their own caches) onto that
-    result, and the final consumer calls ``caching.release(result)`` after
-    its last action. Join keys are small (band int, sig string/long) and
+    item at any scale. Join keys are small (band int, sig string/long) and
     equi-only: no cartesian product anywhere, and candidate volume is the
     sum of squared bucket sizes."""
-    sketch = sketch.persist()
+    sketch = caching.persist(sketch)
 
     def keyed(exprs: Sequence[Column]) -> DataFrame:
         return sketch.select(
@@ -77,4 +72,4 @@ def banded_pairs(
     )
     if probes is None:
         pairs = pairs.distinct()
-    return caching.pin(pairs, sketch)
+    return pairs

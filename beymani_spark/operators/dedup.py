@@ -8,7 +8,7 @@ Scale posture:
 - minhash_lsh_pairs / containment_pairs / simhash_dup_pairs(_auto): the
   scale paths — a per-doc sketch (k minhashes, or a SimHash) feeds the
   banded candidate-pair engine (banding.banded_pairs, which states the
-  join shape and the persist/pin contract once), and only the candidates
+  join shape and the sketch persist once), and only the candidates
   are verified exactly (shingle counts, or bit_count(xor)).
 
 Hashing: both sketch families take ``hash_fn``:
@@ -105,15 +105,13 @@ def jaccard_pairs(
     Count-based explode-join: |A∩B| from an equi-join on (band, shingle) with
     partial-aggregated counts; join volume is Σ_shingle freq². Everything is
     row-based and codegen (see exploded_shingles); the shingle table is
-    persisted because three plan branches consume it — the cache is pinned
-    to the result (caching.release(result) after the final action)."""
+    persisted because three plan branches consume it."""
     sh = exploded_shingles(df, id_col, text_col, n)
     bands = df.repartition(F.col(id_col)).select(
         F.col(id_col).alias("_id"),
         (F.size(tokens(F.col(text_col))) / F.lit(band_width)).cast("long").alias("_band"),
     )
-    ex = sh.join(bands, "_id").persist()
-    _pinned_ex = ex
+    ex = caching.persist(sh.join(bands, "_id"))
     sizes = ex.groupBy("_id", "_band").agg(F.count("*").alias("_n"))
     inter = (
         ex.alias("a")
@@ -140,7 +138,7 @@ def jaccard_pairs(
         .filter(F.col("jaccard") >= min_jaccard)
         .select("src", "dst", "jaccard")
     )
-    return caching.pin(out, _pinned_ex)
+    return out
 
 
 def exploded_shingles(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
@@ -306,7 +304,7 @@ def _shingle_overlap_pairs(
     broadcast candidates (an explicit semi-join prefilter measured 2-3x
     slower at sf0.1). sizes partial-aggregates the cached shingles:
     shuffle volume is |docs| counts, not shingle rows."""
-    sh = exploded_shingles(df, id_col, text_col, n).persist()
+    sh = caching.persist(exploded_shingles(df, id_col, text_col, n))
     cand = banded_pairs(
         _signatures_from_shingles(sh, num_hashes, hash_fn),
         "_id",
@@ -325,7 +323,7 @@ def _shingle_overlap_pairs(
         .join(sizes.select(F.col("_id").alias("dst"), F.col("_n").alias("_nb")), "dst")
         .withColumn("_inter", F.coalesce(F.col("_inter"), F.lit(0)))
     )
-    return caching.pin(counted, sh, *caching.pinned(cand))
+    return counted
 
 
 def minhash_lsh_pairs(
@@ -340,16 +338,13 @@ def minhash_lsh_pairs(
 ) -> DataFrame:
     """Scale-path near-dup: banded minhash candidates, verified with exact
     Jaccard. Output (src, dst, jaccard) with jaccard >= min_jaccard.
-    Candidates and counts come from _shingle_overlap_pairs; caches follow
-    the banding.banded_pairs pin contract."""
+    Candidates and counts come from _shingle_overlap_pairs."""
     counted = _shingle_overlap_pairs(df, id_col, text_col, num_hashes, bands, n, hash_fn)
     i = F.col("_inter")
     verified = counted.withColumn(
         "jaccard", i / (F.col("_na") + F.col("_nb") - i)
     ).filter(F.col("jaccard") >= min_jaccard)
-    return caching.pin(
-        verified.select("src", "dst", "jaccard"), *caching.pinned(counted)
-    )
+    return verified.select("src", "dst", "jaccard")
 
 
 def _cluster_labels(
@@ -386,17 +381,8 @@ def _cluster_labels(
     ``stats``, if given, receives {'n_pairs', 'mode', 'rounds'} after plan
     construction ('rounds' only in distributed mode) — the observability
     hook the giant-chain stress test uses to assert the O(log n) bound."""
-    # The repartition is load-bearing, not a tuning knob: caching directly on
-    # top of a cogroup applyInPandas output (e.g. pairs from
-    # blocked_vec_pairs) hits the Spark 4.1 self-join attribute-dedup bug
-    # during cache materialization — the kernel sees pruned-empty right
-    # frames and the cache silently fills with ZERO rows. An exchange
-    # between the cogroup and the cache breaks the pattern (regression test:
-    # test_persisted_cogroup_pairs_survive_cache).
-    edges_df = (
+    edges_df = caching.persist(
         pairs.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .repartition(F.col("a"))
-        .persist()
     )
     n_pairs = edges_df.count()
     if stats is not None:
@@ -439,10 +425,9 @@ def _cluster_labels(
             StructType([StructField("_cid", id_type), StructField("_rep", id_type)]),
         )
     else:
-        edges = (
+        edges = caching.persist(
             edges_df.union(edges_df.select(F.col("b").alias("a"), F.col("a").alias("b")))
             .distinct()
-            .persist()
         )
         # Each round consumes `labels` TWICE (the candidate min and the
         # label->label compression mapping), so building round r+1 on round
@@ -452,19 +437,18 @@ def _cluster_labels(
         # test). persist() caches data but does not truncate lineage;
         # localCheckpoint does both: every round starts from a flat
         # LogicalRDD, so plan size and per-round driver work stay CONSTANT
-        # across rounds. Block cleanup of superseded rounds is left to
-        # Spark's ContextCleaner (each labels frame is |V| longs — the
-        # sparse verified-pair node set, not the corpus).
+        # across rounds. Superseded rounds' blocks are freed by Spark's
+        # ContextCleaner or at scope exit (each labels frame is |V| longs —
+        # the sparse verified-pair node set, not the corpus).
         # LAZY checkpoints throughout the propagation loop: each round's
         # convergence-sum collect materializes that round's frame in the
         # SAME job (eager=True ran an internal count per round — one
         # extra fixed-latency job per round for nothing). Lineage still
         # truncates at every round boundary, which is the property the
         # loop needs (see the plan-doubling note above).
-        labels = (
+        labels = caching.checkpoint(
             edges.select("a").distinct()
             .select("a", F.col("a").alias("lbl"))
-            .localCheckpoint(eager=False)
         )
         prev_sum = None
         rounds = 0
@@ -482,13 +466,12 @@ def _cluster_labels(
             mapping_df = labels.select(
                 F.col("a").alias("_mfrom"), F.col("lbl").alias("_mto")
             )
-            new = (
+            new = caching.checkpoint(
                 cand.join(mapping_df, cand["lbl"] == mapping_df["_mfrom"], "left")
                 .select(
                     "a",
                     F.least(cand["lbl"], F.coalesce("_mto", cand["lbl"])).alias("lbl"),
                 )
-                .localCheckpoint(eager=False)
             )
             cur_sum = new.agg(
                 F.sum(F.col("lbl").cast("decimal(38,0)")).alias("s")
@@ -688,7 +671,7 @@ def simhash_dup_pairs(
         .filter(F.col("hamming") <= max_hamming)
         .select("src", "dst", "hamming")
     )
-    return caching.pin(out, *caching.pinned(cand))
+    return out
 
 
 def auto_simhash_bits(
@@ -816,7 +799,7 @@ def simhash_dup_pairs_auto(
     out = cand.select("src", "dst", hamming.alias("hamming")).filter(
         F.col("hamming") <= F.lit(max_hamming)
     )
-    return caching.pin(out, *caching.pinned(cand))
+    return out
 
 
 def rowwise_minhash_bands(
@@ -898,7 +881,7 @@ def corpus_band_manifest(
     The shingle column is the same array the signatures derive from
     (shingles(); distinct per doc), so the manifest is self-consistent by
     construction."""
-    ex = exploded_shingles(df, id_col, text_col, n).persist()
+    ex = caching.persist(exploded_shingles(df, id_col, text_col, n))
     bandsdf = _banded_signatures(
         _signatures_from_shingles(ex, num_hashes, "md5"), num_hashes, bands, "md5"
     )
@@ -906,7 +889,7 @@ def corpus_band_manifest(
     out = bandsdf.join(arr, "_id").select(
         F.col("_id").alias(id_col), "band", "sig", "sh"
     )
-    return caching.pin(out, ex)
+    return out
 
 
 def chunk_dedup(
@@ -1267,16 +1250,15 @@ def incremental_minhash(
     rows, probed only by the candidate-bounded verification joins (the tiny
     candidate set broadcasts, so corpus shingles stream past it without
     shuffling — the minhash_lsh_pairs verification shape). Batch-internal
-    pairs reuse the batch shingle cache. Both shingle caches are pinned to
-    the result — caching.release(result) after the final action."""
-    bsh = exploded_shingles(new_df, id_col, text_col, n).persist()
-    csh = exploded_shingles(corpus_df, id_col, text_col, n).persist()
+    pairs reuse the batch shingle cache."""
+    bsh = caching.persist(exploded_shingles(new_df, id_col, text_col, n))
+    csh = caching.persist(exploded_shingles(corpus_df, id_col, text_col, n))
     # batch band signatures feed BOTH sides of the fused candidate join;
     # persist the |batch| x bands frame so the signature aggregation runs
     # once (cband is single-use)
-    bband = _banded_signatures(
+    bband = caching.persist(_banded_signatures(
         _signatures_from_shingles(bsh, num_hashes, hash_fn), num_hashes, bands, hash_fn
-    ).persist()
+    ))
     cband = _banded_signatures(
         _signatures_from_shingles(csh, num_hashes, hash_fn), num_hashes, bands, hash_fn
     )
@@ -1355,7 +1337,7 @@ def incremental_minhash(
             ).alias("best_jaccard"),
         )
     )
-    return caching.pin(ledger, bsh, csh, bband)
+    return ledger
 
 
 def dedup_stats(
@@ -1425,9 +1407,8 @@ def source_similarity(
     # AND the pair stage (both self-join sides in mode='pairs'); without a
     # cache each branch re-runs the shingle explode + the distinct
     # shuffle — the data-sized work of this operator — up to three times
-    # (measured: 3 fact scans). Ownership passes to the caller
-    # (caching.pin / caching.release).
-    sh = (
+    # (measured: 3 fact scans).
+    sh = caching.persist(
         df.select(
             F.col(group_col).alias("_g"),
             F.explode(shingles(F.col(text_col), n)).alias("_sh"),
@@ -1438,7 +1419,6 @@ def source_similarity(
             F.xxhash64("_sh", F.lit(1)).alias("_h2"),
         )
         .distinct()
-        .persist()
     )
     sizes = sh.groupBy("_g").agg(F.count("*").alias("_n"))
     if mode == "pairs":
@@ -1465,7 +1445,7 @@ def source_similarity(
             .groupBy("source_a", "source_b")
             .agg(F.count("*").alias("intersection"))
         )
-    return caching.pin(
+    return (
         pairs.join(
             F.broadcast(sizes.select(F.col("_g").alias("source_a"), F.col("_n").alias("_na"))),
             "source_a",
@@ -1483,8 +1463,7 @@ def source_similarity(
                 / (F.col("_na") + F.col("_nb") - F.col("intersection")),
                 6,
             ).alias("jaccard"),
-        ),
-        sh,
+        )
     )
 
 
@@ -1560,7 +1539,4 @@ def containment_pairs(
         .withColumn("jaccard", i / (F.col("_na") + F.col("_nb") - i))
         .filter(F.col("containment") >= min_containment)
     )
-    return caching.pin(
-        verified.select("src", "dst", "containment", "jaccard"),
-        *caching.pinned(counted),
-    )
+    return verified.select("src", "dst", "containment", "jaccard")

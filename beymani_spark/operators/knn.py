@@ -96,14 +96,6 @@ def blocked_vec_pairs(
     ``kernel(src_ids, src_mat, ref_ids, ref_mat) -> pd.DataFrame`` computes
     one block; per-pair arithmetic identical to the former broadcast path, so
     results are bit-identical.
-
-    WARNING: do NOT ``persist()`` the returned frame directly. Building a
-    cache straight over the cogroup hits the same Spark 4.1 attribute-dedup
-    pruning bug described above — the cache materializes EMPTY (observed:
-    collect() on the persisted frame returns 0 rows while the unpersisted
-    plan returns the right answer). Insert an exchange first
-    (``.repartition(...)``) if the consumer needs caching; see
-    dedup.dedup_clusters.
     """
     import pandas as pd
 
@@ -116,8 +108,7 @@ def blocked_vec_pairs(
     # times per query (tiles count + both cogroup sides; measured plan:
     # two decode MapInPandas nodes + the count). The cache is the keyed
     # vector set — the operator's own input size, nothing bigger.
-    # Ownership passes to the caller via caching.pin on the cogroup
-    # result. ``persist_base=False`` is for PLAIN-SCAN inputs
+    # ``persist_base=False`` is for PLAIN-SCAN inputs
     # (pair_distances_np over a stored vector table): three column-pruned
     # scans are cheaper than writing and reading a cache of the whole
     # vector set — measured both ways at sf0.1 (lof 2.4 s no-persist vs
@@ -125,25 +116,29 @@ def blocked_vec_pairs(
     # at scale (scan vs full-table cache materialization).
     df = base.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
     if persist_base:
-        df = df.persist()
+        df = caching.persist(df)
     if tiles is None:
         # distributed count (a cheap aggregate, not a data collect); when
         # the base is persisted it doubles as the cache materialization,
         # so the upstream lineage runs exactly once
         tiles = max(1, -(-df.count() // target_block))
     t = int(tiles)
+    # Both tile keys are bigint on both sides: pmod(xxhash64) is bigint, so
+    # the replicated sequence must be too. Hash partitioning hashes an int
+    # and a bigint of equal value differently, so mixed key types send a
+    # tile's src and ref rows to different partitions, and every group
+    # then has one empty side once the shuffle has more than one partition.
+    tile_ids = F.explode(F.sequence(F.lit(0).cast("long"), F.lit(t - 1).cast("long")))
     src = df.withColumn("_i", F.pmod(F.xxhash64("_id"), F.lit(t))).withColumn(
-        "_j", F.explode(F.sequence(F.lit(0), F.lit(t - 1)))
+        "_j", tile_ids
     )
-    # The right side MUST use distinct column names: cogrouping two frames cut
-    # from the same lineage trips Spark's self-join attribute dedup, which
-    # prunes the right side's same-named data columns out of the Arrow batch
-    # (observed on Spark 4.1: right frame arrives with only the grouping
-    # columns). Distinct names keep both sides intact — renamed off the
-    # SAME persisted frame, so the cache serves both sides.
+    # The ref side is renamed off the same frame. When both sides keep the
+    # names _id/_v over one persisted frame (cosine_dup_pairs), the
+    # kernel's right frame has no "_id" column (KeyError: '_id'), even with
+    # the tile keys fixed.
     ref = df.select(F.col("_id").alias("_rid"), F.col("_v").alias("_rv"))
     ref = ref.withColumn("_j", F.pmod(F.xxhash64("_rid"), F.lit(t))).withColumn(
-        "_i", F.explode(F.sequence(F.lit(0), F.lit(t - 1)))
+        "_i", tile_ids
     )
 
     def block(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
@@ -157,12 +152,11 @@ def blocked_vec_pairs(
         ref_mat = np.array([np.asarray(v, dtype=float) for v in right["_rv"]])
         return kernel(src_ids, src_mat, ref_ids, ref_mat)
 
-    out = (
+    return (
         src.groupBy("_i", "_j")
         .cogroup(ref.groupBy("_i", "_j"))
         .applyInPandas(block, out_schema)
     )
-    return caching.pin(out, df) if persist_base else out
 
 
 def pair_distances_np(
@@ -217,11 +211,10 @@ def pair_distances_np(
     )
     if k is not None:
         w = Window.partitionBy("src").orderBy(F.col("dist").asc(), F.col("dst").asc())
-        out = caching.pin(
+        out = (
             out.withColumn("_rk", F.row_number().over(w))
             .filter(F.col("_rk") <= k)
-            .drop("_rk"),
-            *caching.pinned(out),
+            .drop("_rk")
         )
     return out
 
@@ -294,12 +287,11 @@ def lsh_pair_distances(
     dist = euclidean(
         _as_double(F.col(f"{vec_col}_a")), _as_double(F.col(f"{vec_col}_b"))
     )
-    out = (
+    return (
         cand.withColumn("dist", dist)
         .select(F.explode(both).alias("_p"), "dist")
         .select("_p.src", "_p.dst", "dist")
     )
-    return caching.pin(out, *caching.pinned(cand))
 
 
 def knn(
@@ -341,17 +333,8 @@ def _nn_shared(pairs: DataFrame, k: int, keys: Sequence[str]) -> DataFrame:
     Exchanges). The nn frame is N*k rows — neighbor-list-sized at any
     scale — so caching it is the guide §5 trade exactly: tiny storage
     against re-running the quadratic engine. MEMORY_AND_DISK (persist
-    default) spills gracefully on huge N. Ownership of the cache passes to
-    the caller via caching.pin on the operator result.
-
-    Safe to cache: knn()'s row_number window forces an Exchange between
-    any cogroup source and this cache, so the Spark 4.1
-    cache-over-cogroup attribute-dedup bug (blocked_vec_pairs WARNING)
-    cannot bite. Pins riding on ``pairs`` (e.g. blocked_vec_pairs' keyed
-    base cache) are carried along so the caller releases the whole
-    chain."""
-    nn = knn(pairs, k, keys).select(*keys, "src", "dst", "dist").persist()
-    return caching.pin(nn, *caching.pinned(pairs))
+    default) spills gracefully on huge N."""
+    return caching.persist(knn(pairs, k, keys).select(*keys, "src", "dst", "dist"))
 
 
 def _density_from_nn(
@@ -370,10 +353,7 @@ def average_distance(
     scale/(avg + EPS) — see EPS for the duplicate-neighborhood guard.
 
     Single-consumer: the kNN frame feeds one aggregate, so no persist."""
-    return caching.pin(
-        _density_from_nn(knn(pairs, k, keys), keys, scale),
-        *caching.pinned(pairs),
-    )
+    return _density_from_nn(knn(pairs, k, keys), keys, scale)
 
 
 def relative_density(
@@ -382,8 +362,7 @@ def relative_density(
     """M6: density(entity) * scale / Σ density(its k neighbors).
 
     The kNN frame is persisted once and feeds both the density aggregate
-    and the neighbor join (see _nn_shared); release via caching.release
-    after the final action."""
+    and the neighbor join (see _nn_shared)."""
     nn = _nn_shared(pairs, k, keys)
     dens = _density_from_nn(nn, keys, scale)
     nbr = nn.join(
@@ -391,14 +370,13 @@ def relative_density(
         [*keys, "dst"],
     )
     nbr_sum = nbr.groupBy(*keys, "src").agg(F.sum("_nd").alias("_nbr_density"))
-    out = (
+    return (
         dens.join(nbr_sum, [*keys, "src"])
         .withColumn(
             "rel_density", F.col("density") * F.lit(float(scale)) / F.col("_nbr_density")
         )
         .drop("_nbr_density")
     )
-    return caching.pin(out, nn, *caching.pinned(nn))
 
 
 def neighbor_density(
@@ -413,8 +391,7 @@ def neighbor_density(
     dens = _density_from_nn(nn, keys, scale).select(
         *keys, F.col("src").alias("dst"), F.col("density").alias("dst_density")
     )
-    out = nn.select(*keys, "src", "dst").join(dens, [*keys, "dst"])
-    return caching.pin(out, nn, *caching.pinned(nn))
+    return nn.select(*keys, "src", "dst").join(dens, [*keys, "dst"])
 
 
 def lof(pairs: DataFrame, k: int, keys: Sequence[str] = ()) -> DataFrame:
@@ -430,8 +407,7 @@ def lof(pairs: DataFrame, k: int, keys: Sequence[str] = ()) -> DataFrame:
     inliers of their own cluster, the standard LOF treatment.
 
     The kNN frame is persisted once and feeds k-distance, reachability,
-    and the neighbor-lrd join (see _nn_shared); caching.release after the
-    final action."""
+    and the neighbor-lrd join (see _nn_shared)."""
     nn = _nn_shared(pairs, k, keys)
     kdist = nn.groupBy(*keys, "src").agg(F.max("dist").alias("kdist"))
     reach = nn.join(
@@ -445,7 +421,7 @@ def lof(pairs: DataFrame, k: int, keys: Sequence[str] = ()) -> DataFrame:
         lrd.select(*keys, F.col("src").alias("dst"), F.col("lrd").alias("_lrd_o")),
         [*keys, "dst"],
     ).groupBy(*keys, "src").agg(F.avg("_lrd_o").alias("_avg_nbr_lrd"))
-    out = (
+    return (
         lrd.join(nbr_lrd, [*keys, "src"])
         .withColumn(
             "lof",
@@ -453,4 +429,3 @@ def lof(pairs: DataFrame, k: int, keys: Sequence[str] = ()) -> DataFrame:
         )
         .select(*keys, "src", "lrd", "lof")
     )
-    return caching.pin(out, nn, *caching.pinned(nn))

@@ -44,7 +44,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions import caching
 from .banding import banded_pairs
 
 MEDIA_SCHEMA = (
@@ -1376,7 +1375,7 @@ def phash_dup_pairs(
     N/2^16 buckets measured linear to 5M items (BASELINE.md §8.6) but grow
     candidate volume N^2/2^16 beyond that; ``composite_bands=False`` pins
     single bands at any radius <= 3. Candidates come from
-    banding.banded_pairs (its pin contract applies)."""
+    banding.banded_pairs."""
     composite = resolve_composite_bands(composite_bands, max_hamming)
     # length contract enforced row-locally (the video form's guard, same
     # hazard): a short/malformed hash — '' or a 64-char vhash passed by
@@ -1391,9 +1390,7 @@ def phash_dup_pairs(
     verified = cand.withColumn(
         "hamming", phash_hamming(f"{hash_col}_a", f"{hash_col}_b")
     ).filter(F.col("hamming") <= max_hamming)
-    return caching.pin(
-        verified.select("src", "dst", "hamming"), *caching.pinned(cand)
-    )
+    return verified.select("src", "dst", "hamming")
 
 
 def audio_fingerprint_hex(clips: Sequence[np.ndarray]) -> list[str]:
@@ -1588,9 +1585,8 @@ def video_phash_dup_pairs(
         for f in range(nf)
     ]
     worst = F.greatest(*frame_hams) if nf > 1 else frame_hams[0]
-    return caching.pin(
+    return (
         cand.withColumn("max_frame_hamming", worst)
         .filter(F.col("max_frame_hamming") <= max_hamming)
-        .select("src", "dst", "max_frame_hamming"),
-        *caching.pinned(cand),
+        .select("src", "dst", "max_frame_hamming")
     )

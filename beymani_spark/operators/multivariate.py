@@ -45,6 +45,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from ..functions import caching
 from ..functions.scores import tag_label
 
 
@@ -493,7 +494,7 @@ def _finalize_model(
     # one materialization). The once-only guarantee is unchanged: after
     # this count the lineage is truncated and no downstream action can
     # re-run the presample+fit.
-    cents = centroids_df.localCheckpoint(eager=False)
+    cents = caching.checkpoint(centroids_df)
     n_model = cents.count()
     if max_model_rows is not None and n_model <= int(max_model_rows):
         centroid_rows = cents.collect()
@@ -521,11 +522,6 @@ def _finalize_model(
             }
             for r in centroid_rows
         ]
-        # checkpoint blocks: Dataset.unpersist is a no-op on a
-        # localCheckpoint (it only consults the CacheManager, which never
-        # held the LogicalRDD) — the model-sized blocks are dropped by
-        # the ContextCleaner once this frame goes unreachable, which is
-        # right here: the returned frame is built from plain rows
         out = spark.createDataFrame(
             model_rows, cents.schema.add("size", "long")
         )
@@ -1296,9 +1292,7 @@ def isolation_forest_score(
     # the former shape paid a second fixed-latency job for nothing. The
     # fit chain still runs exactly once: after this count the lineage is
     # truncated, and the path-picking count cannot re-run it.
-    mdl = model.select(*keys, "tree_id", "tree_json", "sample_n").localCheckpoint(
-        eager=False
-    )
+    mdl = caching.checkpoint(model.select(*keys, "tree_id", "tree_json", "sample_n"))
     n_model = mdl.count()
     over_cap = max_model_rows is None or n_model > int(max_model_rows)
     if over_cap:
@@ -1317,9 +1311,6 @@ def isolation_forest_score(
             df, mdl, keys, values, threshold, out_schema
         )
 
-    # (no unpersist: it is a no-op on a localCheckpoint'd frame — the
-    # bounded checkpoint blocks are ContextCleaner-collected once mdl
-    # goes unreachable after this function returns)
     mdl_rows = mdl.collect()
     forests: dict = {}
     for r in mdl_rows:

@@ -27,7 +27,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions import caching
 from .prefix import literal_offsets
 from .text import tokens
 
@@ -145,7 +144,7 @@ def pack_sequences(
         (F.coalesce(n_tok, F.lit(0)) + F.lit(int(sep_tokens))).alias("_span"),
     )
     # the shared prefix-sum scaffold (prefix.py); the frame is
-    # (id, span, pid) longs, pinned to the result
+    # (id, span, pid) longs
     ranged, w0, base_col, _, _ = literal_offsets(
         narrow, [id_col], int(partitions), F.sum("_span")
     )
@@ -189,7 +188,7 @@ def pack_sequences(
             .alias("n_seq_spanned"),
         )
     )
-    return caching.pin(out, ranged)
+    return out
 
 
 def shuffle_plan(
@@ -235,7 +234,7 @@ def shuffle_plan(
         key_col,
         (base_col + F.col("_rk") - F.lit(1)).cast("long").alias(pos_col),
     )
-    return caching.pin(out, ranged)
+    return out
 
 
 def curriculum_plan(
@@ -362,7 +361,7 @@ def curriculum_plan(
         "stage",
         (base2_col + F.col("_rk") - F.lit(1)).cast("long").alias("curriculum_pos"),
     )
-    return caching.pin(out, ranged, ranged2)
+    return out
 
 
 def context_length_plan(

@@ -102,17 +102,15 @@ def build_corpus_mixed(
     contract, sampling.py). mix_to_targets consumes the corpus in TWO plan
     branches (the stratum-count aggregate and the fact pass), so the built
     corpus is persisted here — without it the whole lang->quality->PII->
-    dedup pipeline executes twice, doubling the dominant cost. The cache
-    is pinned to the result (caller-owned lifetime, functions/caching.py:
-    caching.release(result) after the final action); at cluster scale the
-    same persist (MEMORY_AND_DESERIALIZED spills to disk) is the standard
+    dedup pipeline executes twice, doubling the dominant cost. At cluster
+    scale the same persist (MEMORY_AND_DESERIALIZED spills to disk) is the standard
     stand-in for checkpointing the cleaned corpus to storage before the
     mix pass — either way, one corpus computation, not two.
     """
-    corpus = build_corpus(
+    corpus = caching.persist(build_corpus(
         docs, id_col, text_col, quality_min=quality_min, splits=splits, seed=seed
-    ).persist()
-    mixed = sampling.mix_to_targets(
+    ))
+    return sampling.mix_to_targets(
         corpus,
         id_col,
         "pred_lang",
@@ -122,7 +120,6 @@ def build_corpus_mixed(
         rate_col="rate",
         strict=strict,
     )
-    return caching.pin(mixed, corpus)
 
 
 def corpus_audit(

@@ -28,6 +28,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions import caching
+
 
 def outlier_counts(df: DataFrame, keys: Sequence[str], label_col: str = "label") -> DataFrame:
     """Per-key counts and percentages of O/N/I labels + total."""
@@ -153,10 +155,7 @@ def threshold_learner(
     each branch re-runs the explode + groupBy over the scored fact input
     (measured: the fact table scanned 4x per call, 2x per branch). The
     frame is |keys|x|splits|x2x|classes| rows — model-sized at any scale.
-    Cache ownership passes to the caller (``caching.pin``ned to the
-    result; release after the final action).
     """
-    from ..functions import caching
 
     split_arr = F.array(*[F.lit(float(s)) for s in splits])
     fan = scored.select(
@@ -165,10 +164,9 @@ def threshold_learner(
         F.col(class_col).alias("_cls"),
         F.explode(split_arr).alias("split"),
     ).withColumn("side", F.when(F.col("_score") <= F.col("split"), "le").otherwise("gt"))
-    cnt = (
+    cnt = caching.persist(
         fan.groupBy(*keys, "split", "side", "_cls")
         .agg(F.count("*").alias("n"))
-        .persist()
     )
     side_tot = cnt.groupBy(*keys, "split", "side").agg(F.sum("n").alias("n_side"))
     joined = cnt.join(side_tot, [*keys, "split", "side"])
@@ -182,13 +180,10 @@ def threshold_learner(
     per_side = joined.groupBy(*keys, "split", "side").agg(
         F.sum(impurity_term).alias("impurity"), F.first("n_side").alias("n_side")
     )
-    return caching.pin(
-        per_side.groupBy(*keys, "split").agg(
-            (F.sum(F.col("impurity") * F.col("n_side")) / F.sum("n_side")).alias(
-                "weighted_impurity"
-            )
-        ),
-        cnt,
+    return per_side.groupBy(*keys, "split").agg(
+        (F.sum(F.col("impurity") * F.col("n_side")) / F.sum("n_side")).alias(
+            "weighted_impurity"
+        )
     )
 
 

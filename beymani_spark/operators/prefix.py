@@ -19,8 +19,7 @@ draw different boundaries; without the cache the consistency would ride on
 exchange reuse, which a session can disable. Persisting any frame *below*
 the exchange instead breaks that reuse and lets each branch sample its own
 bounds. The cache also saves every branch re-running the caller's scans and
-aggregations. It is pinned to the caller's result (``caching.pin``); the
-final consumer calls ``caching.release`` after its last action.
+aggregations.
 
 Two offset forms:
 
@@ -43,13 +42,14 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions import caching
+
 
 def _ranged(frame: DataFrame, order_cols: Sequence[str], partitions: int) -> DataFrame:
     """Range-partition ``frame`` on ``order_cols``, tag ``_pid``, persist."""
-    return (
+    return caching.persist(
         frame.repartitionByRange(int(partitions), *[F.col(c) for c in order_cols])
         .withColumn("_pid", F.spark_partition_id())
-        .persist()
     )
 
 
@@ -90,9 +90,8 @@ def keyed_cumsum(
     """Keyed form (the KS gates, the numeric cards). ``frame`` holds one
     row per distinct (keys, ``order``) with long count columns ``counts``.
 
-    Returns ``(ranged, cum, base)``:
+    Returns ``(cum, base)``:
 
-    - ``ranged``: the persisted ranged frame (pin it to the result);
     - ``cum``: ``(*keys, order, <c>_cum, <c>_n for c in counts)`` — the
       inclusive running count of ``c`` within the key in ``order``, and
       the key's total of ``c``;
@@ -140,4 +139,4 @@ def keyed_cumsum(
         ],
         *[f"{c}_n" for c in counts],
     )
-    return ranged, cum, base
+    return cum, base

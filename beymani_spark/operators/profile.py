@@ -95,15 +95,13 @@ def stats_and_quartiles(
     The aggregate expressions are exactly those of the two separate
     builders, so the derived frames are value-identical.
 
-    Returns ``(stats, quartiles, combined)``. ``combined`` is persisted —
-    the two model selects are separate plan branches and would each
-    re-run the aggregation otherwise; it is |keys|x|values| rows
-    (model-sized at any scale). Cache ownership passes to the caller
-    (``caching.pin`` the result, ``caching.release`` after the final
-    action)."""
+    Returns ``(stats, quartiles)``. The combined aggregate under both is
+    persisted — the two model selects are separate plan branches and
+    would each re-run the aggregation otherwise; it is |keys|x|values|
+    rows (model-sized at any scale)."""
     long = _explode_attrs(df, keys, values, cycle, ts)
     group = [c for c in long.columns if c not in ("attr", "value")] + ["attr"]
-    combined = (
+    combined = caching.persist(
         long.groupBy(*group)
         .agg(
             F.count("value").alias("cnt"),
@@ -120,13 +118,12 @@ def stats_and_quartiles(
                 - F.percentile("value", F.lit(0.25))
             ).alias("iqr"),
         )
-        .persist()
     )
     stats = combined.select(
         *group, "cnt", "sum", "sum_sq", "mean", "std", "min", "max"
     )
     quartiles = combined.select(*group, "q1", "q3", "iqr")
-    return stats, quartiles, combined
+    return stats, quartiles
 
 
 def median_mad(
@@ -327,7 +324,7 @@ def ks_two_sample(
         )
 
     g = _value_counts([side(df_a), side(df_b)], [*keys, "_v"])
-    ranged, cum, _ = prefix.keyed_cumsum(g, keys, "_v", ["_c0", "_c1"])
+    cum, _ = prefix.keyed_cumsum(g, keys, "_v", ["_c0", "_c1"])
     # try_divide: a key present in only ONE frame has a zero count on the
     # other side — ANSI long/long division would fail the whole job on
     # that key; NULL matches DuckDB's divide-by-zero result, so the
@@ -346,7 +343,7 @@ def ks_two_sample(
         F.max("_c1_n").alias("n_b"),
     ]
     out = cum.groupBy(*keys).agg(*aggs) if keys else cum.agg(*aggs)
-    return caching.pin(out, ranged)
+    return out
 
 
 def key_skew_audit(
@@ -713,12 +710,11 @@ def numeric_profile(
             "column", "n", "n_nulls", "mean", "std", "min", *qnames, "max"
         )
     g = _value_counts([_melt(df, cols)], ["column", "_v"])
-    ranged, cum, base = prefix.keyed_cumsum(g, ["column"], "_v", ["_c0"])
+    cum, base = prefix.keyed_cumsum(g, ["column"], "_v", ["_c0"])
     quants = _exact_quantiles(cum, base, {"_c0": dict(zip(qnames, quantiles))})
-    out = _moments(df, cols).join(quants, "column", "left").select(
+    return _moments(df, cols).join(quants, "column", "left").select(
         "column", "n", "n_nulls", "mean", "std", "min", *qnames, "max"
     )
-    return caching.pin(out, ranged)
 
 
 def numeric_profile_drift(
@@ -749,7 +745,7 @@ def numeric_profile_drift(
         else float(sorted(float(q) for q in quantiles)[len(quantiles) // 2])
     )
     g = _value_counts([_melt(df_a, cols), _melt(df_b, cols)], ["column", "_v"])
-    ranged, cum, base = prefix.keyed_cumsum(g, ["column"], "_v", ["_c0", "_c1"])
+    cum, base = prefix.keyed_cumsum(g, ["column"], "_v", ["_c0", "_c1"])
     med = _exact_quantiles(
         cum, base, {"_c0": {"_da": loc_q}, "_c1": {"_db": loc_q}}
     )
@@ -779,7 +775,7 @@ def numeric_profile_drift(
         F.col("_db").alias("median_b"),
         F.round(F.col("_db") - F.col("_da"), 6).alias("median_delta"),
     )
-    return caching.pin(out, ranged)
+    return out
 
 
 def finite_audit(df: DataFrame, cols: Sequence[str]) -> DataFrame:

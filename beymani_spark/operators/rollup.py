@@ -26,6 +26,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions import caching
+
 
 def local_neighborhood(
     df: DataFrame,
@@ -86,9 +88,7 @@ def outlier_cluster(
     branch re-runs the whole upstream lineage (scoring included — measured:
     the fact table scanned 4x per call). The cache holds OUTLIER rows only
     (the label filter runs below it), a small fraction of the input at any
-    scale. Ownership passes to the caller (``caching.pin``ned to the
-    result)."""
-    from ..functions import caching
+    scale."""
 
     o = scored.filter(F.col(label_col) == "O")
     wseq = Window.partitionBy(*keys).orderBy(ts, *id_cols)
@@ -97,13 +97,13 @@ def outlier_cluster(
         "_new",
         F.when(gap.isNull() | (gap > max_interval_sec), 1).otherwise(0),
     )
-    o = o.withColumn(
+    o = caching.persist(o.withColumn(
         "cluster_id",
         F.sum("_new").over(
             Window.partitionBy(*keys).orderBy(ts, *id_cols)
             .rowsBetween(Window.unboundedPreceding, 0)
         ),
-    ).persist()
+    ))
     wproto = Window.partitionBy(*keys, "cluster_id").orderBy(
         F.col(score_col).desc(), *[F.col(c).asc() for c in id_cols]
     )
@@ -117,7 +117,7 @@ def outlier_cluster(
         .filter(F.col("_rn") == 1)
         .select(*keys, "cluster_id", *id_cols, F.col(score_col).alias("proto_score"))
     )
-    return caching.pin(stats.join(protos, [*keys, "cluster_id"]), o)
+    return stats.join(protos, [*keys, "cluster_id"])
 
 
 def level_shift_segments(

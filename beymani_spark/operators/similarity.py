@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions import caching
 from .banding import banded_pairs
 
 
@@ -184,17 +185,15 @@ def cosine_dup_pairs_lsh(
     sifarish SameTypeSimilarity's all-pairs matcher (SURVEY.md §2.3)."""
     import random
 
-    from ..functions import caching
     from .knn import auto_planes
 
     # One persisted pass of the (possibly expensive — decode, quantize)
     # upstream pipeline: the count, the centering mean, the dim probe, and
-    # the signature sketch read this frame — without the pin the upstream
+    # the signature sketch read this frame — without the cache the upstream
     # would execute once per consumer (the build_corpus_mixed trap).
-    base = (
+    base = caching.persist(
         with_norm(df, vec_col)
         .select(F.col(id_col).alias("_id"), "_vec", "_norm")
-        .persist()
     )
     probe = base.select("_vec").first()
     if probe is None:  # empty input: no pairs, with the right shape
@@ -273,7 +272,7 @@ def cosine_dup_pairs_lsh(
         .filter(F.col("cosine") >= F.lit(float(threshold)))
         .select("src", "dst", "cosine")
     )
-    return caching.pin(out, base, *caching.pinned(cand))
+    return out
 
 
 def ann_lsh_topk(
@@ -696,8 +695,7 @@ def semantic_dedup(
     list_sum fold, so the ``tau`` compare runs on bit-identical doubles.
 
     The assigned frame feeds three plan branches (both pair sides + the
-    keep join-back), so it is persisted and pinned (caller releases —
-    functions/caching.py convention).
+    keep join-back), so it is persisted.
 
     Reference analogue: cluster-model corpus hygiene composes the same
     model family as beymani's ClusterBasedPredictor
@@ -709,11 +707,10 @@ def semantic_dedup(
     a = topic_assign(
         df, id_col, vec_col, n_topics, iterations, seed, presample, centroids
     )
-    base = (
+    base = caching.persist(
         with_norm(df, vec_col)
         .select(F.col(id_col), "_vec", "_norm")
         .join(a, id_col)
-        .persist()
     )
     left = base.select(
         F.col(id_col).alias("_lid"),
@@ -741,9 +738,8 @@ def semantic_dedup(
         .join(dropped, id_col, "left")
         .select(id_col, "topic", F.col("_dropped").isNull().alias("keep"))
     )
-    from ..functions import caching
 
-    return caching.pin(out, base)
+    return out
 
 
 def topic_share_drift(
@@ -1057,13 +1053,9 @@ def hybrid_rrf_topk(
     single query would single-task-sort the whole embedding table. The
     fusion is a full outer join of two <= n_candidates-row frames and
     the final rank window runs on <= 2*n_candidates rows."""
-    from ..functions import caching
     from .text import bm25_topk
 
     lex_full = bm25_topk(docs, query_terms, id_col=id_col, k=n_candidates)
-    # carry bm25_topk's pinned tf cache through the select (pin handles
-    # ride the specific DataFrame object, not the lineage)
-    pins = caching.pinned(lex_full)
     lex = lex_full.select(F.col(id_col).alias("_id"), F.col("bm25_rank"))
 
     base = with_norm(emb, vec_col).select(
@@ -1096,13 +1088,10 @@ def hybrid_rrf_topk(
     )
     top = fused.orderBy(F.col("rrf_score").desc(), F.col("_id").asc()).limit(k)
     wr = Window.orderBy(F.col("rrf_score").desc(), F.col("_id").asc())
-    return caching.pin(
-        top.withColumn("hybrid_rank", F.row_number().over(wr)).select(
-            F.col("_id").alias(id_col),
-            "bm25_rank",
-            "cos_rank",
-            "rrf_score",
-            "hybrid_rank",
-        ),
-        *pins,
+    return top.withColumn("hybrid_rank", F.row_number().over(wr)).select(
+        F.col("_id").alias(id_col),
+        "bm25_rank",
+        "cos_rank",
+        "rrf_score",
+        "hybrid_rank",
     )

@@ -278,7 +278,7 @@ def bigram_logprob(
     avg_logprob 0 and ppl 1.
 
     Plan: one bigram explode, immediately reduced to (_id, xxhash64(gram),
-    xxhash64(w1)) — the gram STRING never enters a shuffle or the pinned
+    xxhash64(w1)) — the gram STRING never enters a shuffle or the
     cache. Both count groupBys and the two model joins key on the 8-byte
     hashes: fixed-width keys roughly halve exchange bytes vs raw grams and
     blunt hot-bigram skew (uniform key distribution feeds AQE skew-split
@@ -286,14 +286,13 @@ def bigram_logprob(
     ~n²/2⁶⁵ — at 10¹⁰ distinct grams that is O(10³) merged PAIRS, a 1e-7
     relative perturbation of a fluency heuristic: accepted, documented.
     At corpus scale this is two bounded shuffles of distinct-gram
-    cardinality, never a collect. The exploded-bigram cache is pinned to
-    the result — caching.release(result) after the final action."""
+    cardinality, never a collect."""
     g = _exploded_grams(df, id_col, text_col, 2, keep_dups=True)
-    bigrams = g.select(
+    bigrams = caching.persist(g.select(
         "_id",
         F.xxhash64(F.col("gram")).alias("_gh"),
         F.xxhash64(F.split(F.col("gram"), " ", 2)[0]).alias("_w1h"),
-    ).persist()
+    ))
     pair_counts = bigrams.groupBy("_gh").agg(F.count("*").alias("c2"))
     first_counts = bigrams.groupBy("_w1h").agg(F.count("*").alias("c1"))
     scored = (
@@ -305,7 +304,7 @@ def bigram_logprob(
             F.avg(F.log(F.col("c2") / F.col("c1"))).alias("avg_logprob"),
         )
     )
-    out = (
+    return (
         df.select(F.col(id_col))
         .join(scored.withColumnRenamed("_id", id_col), id_col, "left")
         .select(
@@ -315,7 +314,6 @@ def bigram_logprob(
             F.exp(-F.coalesce("avg_logprob", F.lit(0.0))).alias("ppl"),
         )
     )
-    return caching.pin(out, bigrams)
 
 
 def perplexity_gate(
@@ -340,7 +338,6 @@ def perplexity_gate(
     from .sampling import stratified_rank_filter
 
     scored = bigram_logprob(df, id_col, text_col)
-    pins = caching.pinned(scored)
     rounded = (
         scored.filter(F.col("n_bigrams") > 0)
         .withColumn("avg_logprob", F.round("avg_logprob", 6))
@@ -350,8 +347,7 @@ def perplexity_gate(
     gated = stratified_rank_filter(
         rounded, lang_col, "avg_logprob", keep_frac, tiebreak_col=id_col
     )
-    out = gated.select(id_col, lang_col, "n_bigrams", "avg_logprob", "ppl")
-    return caching.pin(out, *pins)
+    return gated.select(id_col, lang_col, "n_bigrams", "avg_logprob", "ppl")
 
 
 def vocab_topk(
@@ -1102,13 +1098,11 @@ def bm25_topk(
     # tf feeds BOTH the df(t) aggregate and the scoring join below;
     # unpersisted, each branch re-runs the tokenize + explode + groupBy
     # over the corpus scan. The frame is |matching docs| x |query terms|
-    # rows of (id, term, counts) — narrow, match-bounded. Pinned to the
-    # result (caching.release after the final action).
-    tf = (
+    # rows of (id, term, counts) — narrow, match-bounded.
+    tf = caching.persist(
         perdoc.select("_id", "_dl", F.explode("_m").alias("token"))
         .groupBy("_id", "token")
         .agg(F.count(F.lit(1)).alias("_tf"), F.max("_dl").alias("_dl"))
-        .persist()
     )
     dfreq = tf.groupBy("token").agg(F.count(F.lit(1)).alias("_df"))
     idf = F.log(
@@ -1130,9 +1124,6 @@ def bm25_topk(
     )
     top = scored.orderBy(F.col("score").desc(), F.col("_id").asc()).limit(k)
     w = Window.orderBy(F.col("score").desc(), F.col("_id").asc())
-    return caching.pin(
-        top.withColumn("bm25_rank", F.row_number().over(w)).select(
-            F.col("_id").alias(id_col), "n_hit_terms", "score", "bm25_rank"
-        ),
-        tf,
+    return top.withColumn("bm25_rank", F.row_number().over(w)).select(
+        F.col("_id").alias(id_col), "n_hit_terms", "score", "bm25_rank"
     )

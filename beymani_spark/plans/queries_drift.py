@@ -578,7 +578,6 @@ def q_media_dup_pairs_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     (BASELINE.md §8); output is the candidate-restricted subset of
     media_dup_pairs (exact duplicates always collide — identical vectors
     share a signature — so dedup recall on true copies is 1)."""
-    from ..functions import caching
     from ..operators import similarity
 
     docs = load_table(spark, sf_dir, "documents")
@@ -596,9 +595,7 @@ def q_media_dup_pairs_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_planes="auto",
         target_bucket=8,
     )
-    out = pairs.select("src", "dst", F.round("cosine", 6).alias("cosine"))
-    # select() returns a new DataFrame — carry the pinned decode cache over
-    return caching.pin(out, *caching.pinned(pairs))
+    return pairs.select("src", "dst", F.round("cosine", 6).alias("cosine"))
 
 
 # 8x8 subsample of the 32x32 pseudo-image: row/col indices

@@ -70,14 +70,13 @@ def q_keyed_threshold_tagging(spark: SparkSession, sf_dir: str) -> DataFrame:
     # branch (its groupBy lineage otherwise re-runs per branch) and thr is
     # broadcast twice (tag + the threshold column join-back) — unpersisted,
     # events scanned 6x; persisted, once per ROW-level branch (3x)
-    stats = profile.numerical_stats(ev, ["event_type"], ["value"]).persist()
+    stats = caching.persist(profile.numerical_stats(ev, ["event_type"], ["value"]))
     scored = zscore.zscore(ev, stats, ["event_type"], ["value"], threshold=3.0)
-    thr = (
+    thr = caching.persist(
         post.pseudo_relevance_threshold(
             scored, ["event_type"], top_fraction=0.05, min_count=20
         )
         .drop("n")
-        .persist()
     )
     out = zscore.tag_with_keyed_threshold(scored, thr, ["event_type"]).join(
         F.broadcast(thr.withColumnRenamed("threshold", "_t2")), ["event_type"], "left"
@@ -85,7 +84,7 @@ def q_keyed_threshold_tagging(spark: SparkSession, sf_dir: str) -> DataFrame:
     res = out.select(
         "event_id", "event_type", "score", F.col("_t2").alias("threshold"), "label"
     )
-    return caching.pin(_round(res, ["score", "threshold"]), stats, thr)
+    return _round(res, ["score", "threshold"])
 
 
 _ENTROPY_INC_ORACLE = """
@@ -125,14 +124,13 @@ def q_entropy_increase(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persist the |keys x buckets| histogram model: entropy_increase_score
     # broadcast-builds it TWICE (per-key N/S aggregate + the bucket join),
     # re-running the bucket groupBy over the fact table per build
-    hist = histogram.attr_histogram(ev, ["event_type"], ["value"], [10.0]).persist()
+    hist = caching.persist(
+        histogram.attr_histogram(ev, ["event_type"], ["value"], [10.0])
+    )
     out = histogram.entropy_increase_score(
         ev, hist, ["event_type"], "value", 10.0, threshold=0.001
     )
-    return caching.pin(
-        _round(out.select("event_id", "event_type", "value", "score", "label"), ["score"]),
-        hist,
-    )
+    return _round(out.select("event_id", "event_type", "value", "score", "label"), ["score"])
 
 
 _DISCRETIZE_ORACLE = """
@@ -390,10 +388,9 @@ def q_subsequence_distance_ref(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_q(sf_dir)
     # persist the |keys|-row split-point model: it is broadcast-built on
     # BOTH sides below, re-running its percentile aggregate per side
-    mid = (
+    mid = caching.persist(
         ev.groupBy("event_type")
         .agg(F.percentile("event_id", F.lit(0.6)).alias("_m"))
-        .persist()
     )
     # fresh scans per side: cogroup over two filters of one plan is ambiguous
     ref = (
@@ -412,7 +409,4 @@ def q_subsequence_distance_ref(spark: SparkSession, sf_dir: str) -> DataFrame:
         test, ref, ["event_type"], "ts", "value", window=16, parallelism=8,
         order_cols=["event_id"], ref_order_cols=["event_id"],
     )
-    return caching.pin(
-        _round(out.select("event_type", "offset", "discord_score"), ["discord_score"]),
-        mid,
-    )
+    return _round(out.select("event_type", "offset", "discord_score"), ["discord_score"])

@@ -5,7 +5,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions import caching
 from ..operators import knn, post, profile, rollup, zscore
 from ..sources import load_table
 from .queries_stats import _round
@@ -248,7 +247,6 @@ def q_outlier_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = rollup.outlier_cluster(
         scored, ["event_type"], "ts", max_interval_sec=86400, id_cols=["event_id"]
     )
-    pins = caching.pinned(out)
     out = out.select(
         "event_type",
         "cluster_id",
@@ -258,8 +256,7 @@ def q_outlier_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         "proto_score",
     )
-    # carry the operator's pinned outlier cache through the select
-    return caching.pin(_round(out, ["proto_score"]), *pins)
+    return _round(out, ["proto_score"])
 
 
 _LEVEL_SHIFT_SEG_ORACLE = _SCORED_CTE.format(thr="1.0") + """

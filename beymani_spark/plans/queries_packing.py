@@ -9,6 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions import caching
 from ..operators import packing, sampling, text
 from ..sources import load_table
 from .registry import register
@@ -285,9 +286,7 @@ def q_corpus_to_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle feeding both rank windows, a zero-shuffle split expression, and
     the distributed prefix sum of pack_sequences. The gated train frame is
     persisted because the pack manifest and the metadata join-back consume
-    it in two plan branches (pin/release convention, functions/caching.py)
-    — without it the whole build pipeline would execute twice."""
-    from ..functions import caching
+    it in two plan branches — without it the whole build pipeline would execute twice."""
     from ..operators import pipeline
 
     docs = load_table(spark, sf_dir, "documents")
@@ -308,16 +307,14 @@ def q_corpus_to_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     split = sampling.deterministic_split(
         gated, "source", (("train", 0.75), ("val", 0.125), ("test", 0.125)), seed=42
     )
-    train = split.filter(F.col("split") == "train").persist()
+    train = caching.persist(split.filter(F.col("split") == "train"))
     packed = packing.pack_sequences(
         train, "doc_id", seq_tokens=_SEQ_TOKENS, sep_tokens=_SEP,
         n_tokens_col="n_tokens",
     )
-    out = packed.join(
+    return packed.join(
         train.select("doc_id", "pred_lang", "source", "quality"), "doc_id"
     )
-    # carry pack_sequences' ranged-frame pin alongside the train pin
-    return caching.pin(out, train, *caching.pinned(packed))
 
 
 @register("quality_rank_gate", _RANK_GATE_ORACLE)

@@ -327,14 +327,13 @@ def q_anomaly_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persist the two |keys|-row model frames (stats, thr): each is
     # consumed by more than one plan branch and would otherwise re-run its
     # fit lineage — including the fact scan — per branch (events 4x -> 3x)
-    stats = profile.numerical_stats(ev, ["event_type"], ["value"]).persist()
+    stats = caching.persist(profile.numerical_stats(ev, ["event_type"], ["value"]))
     scored = zscore.zscore(ev, stats, ["event_type"], ["value"], threshold=3.0)
-    thr = (
+    thr = caching.persist(
         post.pseudo_relevance_threshold(
             scored, ["event_type"], top_fraction=0.05, min_count=20
         )
         .filter(F.col("threshold").isNotNull())
-        .persist()
     )
     tagged = (
         scored.filter(F.col("score").isNotNull())
@@ -350,7 +349,7 @@ def q_anomaly_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.sum("_o") / F.count("*"), R).alias("outlier_rate"),
         F.round(F.first("threshold"), R).alias("threshold"),
     )
-    return caching.pin(out, stats, thr)
+    return out
 
 
 # Winsorize: the clamp runs against ROUND-6 bounds on both sides —
@@ -434,10 +433,7 @@ def q_threshold_learner(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = post.threshold_learner(
         scored, ["event_type"], "cls", _THRESHOLD_LEARNER_SPLITS
     )
-    # carry the operator's pinned count cache through the rounding select
-    return caching.pin(
-        _round(out, ["split", "weighted_impurity"]), *caching.pinned(out)
-    )
+    return _round(out, ["split", "weighted_impurity"])
 
 
 # ---------------------------------------------------------------- temporal
@@ -557,15 +553,14 @@ def q_zscore_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persist the |keys x 2 attrs| stats model: _join_model broadcast-joins
     # it once PER ATTRIBUTE, so the two-attr call re-ran the stats groupBy
     # (and its fact scan) twice
-    stats = profile.numerical_stats(ev, ["event_type"], ["value", "k_val"]).persist()
+    stats = caching.persist(
+        profile.numerical_stats(ev, ["event_type"], ["value", "k_val"])
+    )
     out = zscore.zscore_attribution(
         ev, stats, ["event_type"], ["value", "k_val"], threshold=3.0
     )
-    return caching.pin(
-        out.select(
-            "event_id", "event_type", "z_value", "z_k_val", "max_z", "top_attr"
-        ),
-        stats,
+    return out.select(
+        "event_id", "event_type", "z_value", "z_k_val", "max_z", "top_attr"
     )
 
 
@@ -684,11 +679,7 @@ def q_numeric_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = profile.numeric_profile(
         li, ["l_quantity", "l_extendedprice", "l_discount", "l_tax"]
     )
-    # _round rebuilds the frame — carry the prefix sum's ranged pin
-    return caching.pin(
-        _round(out, ["mean", "std", "min", "q25", "q50", "q75", "max"]),
-        *caching.pinned(out),
-    )
+    return _round(out, ["mean", "std", "min", "q25", "q50", "q75", "max"])
 
 
 def _npd_side_sql(c: str, side: str, suffix: str) -> str:
@@ -738,12 +729,8 @@ def q_numeric_profile_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     a = li.filter(F.col("l_orderkey") % 2 == 0)
     b = li.filter(F.col("l_orderkey") % 2 != 0)
     out = profile.numeric_profile_drift(a, b, ["l_extendedprice", "l_discount"])
-    # _round rebuilds the frame — carry the joint CDF's ranged pin
-    return caching.pin(
-        _round(
-            out, ["mean_a", "mean_b", "std_a", "std_b", "median_a", "median_b"]
-        ),
-        *caching.pinned(out),
+    return _round(
+        out, ["mean_a", "mean_b", "std_a", "std_b", "median_a", "median_b"]
     )
 
 
@@ -904,7 +891,7 @@ def q_anomaly_score_fuse(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import text as text_ops
 
     ev = load_table(spark, sf_dir, "events")
-    stats, model, combined = profile.stats_and_quartiles(
+    stats, model = profile.stats_and_quartiles(
         ev, ["event_type"], ["value"]
     )
     z = (
@@ -926,7 +913,4 @@ def q_anomaly_score_fuse(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = text_ops.quality_fuse(
         scored, ["z_score", "iqr_s"], by=["event_type"]
     )
-    return caching.pin(
-        out.select("event_id", "event_type", "z_score", "iqr_s", "fused_score"),
-        combined,
-    )
+    return out.select("event_id", "event_type", "z_score", "iqr_s", "fused_score")

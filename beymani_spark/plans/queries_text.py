@@ -5,7 +5,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions import caching
 from ..operators import dedup, similarity, text
 from ..sources import load_table
 from .model_oracles import ivf_oracle as _ivf_oracle
@@ -770,10 +769,7 @@ def q_embedding_dup_clusters_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = similarity.cosine_dup_pairs_lsh(
         emb, "vec_id", "embedding", threshold=0.4, n_planes="auto"
     )
-    out = dedup_mod.dedup_clusters(emb, "vec_id", pairs)
-    # dedup_clusters returns a new DataFrame — carry the pinned
-    # embeddings+norm cache over so release() on the result unpersists it
-    return caching.pin(out, *caching.pinned(pairs))
+    return dedup_mod.dedup_clusters(emb, "vec_id", pairs)
 
 
 def _ann_lsh_oracle() -> str:
@@ -3053,11 +3049,9 @@ def q_dedup_corpus_best(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs, "doc_id", num_hashes=16, bands=4, n=3, min_jaccard=0.5, hash_fn="md5"
     )
     kept = dedup.dedup_corpus_best(qdocs, "doc_id", pairs, "_q")
-    out = kept.select(
+    return kept.select(
         "doc_id", F.col("_q").alias("quality"), F.md5("text").alias("content_hash")
     )
-    # carry the minhash shingle pin so release() on the result unpersists it
-    return caching.pin(out, *caching.pinned(pairs))
 
 
 from .model_oracles import compression_ratio_oracle as _compression_ratio_oracle  # noqa: E402

@@ -23,6 +23,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from ..functions import caching
+
 CORRUPT_COL = "_corrupt"
 
 
@@ -67,18 +69,15 @@ def corrupt_lines(df: DataFrame) -> DataFrame:
     Spark forbids queries whose pruned schema is ONLY the corrupt column
     (UNSUPPORTED_FEATURE.QUERY_ONLY_CORRUPT_RECORD_COLUMN) — the documented
     pattern is to cache the parsed frame first, which a real pipeline wants
-    anyway when it splits one parse into valid + dead-letter sinks.
-
-    Cache lifetime: the cache is installed on the CALLER's frame, and the
-    caller owns it — call ``df.unpersist()`` once both the valid and
-    dead-letter sinks have been written."""
-    return df.cache().filter(F.col(CORRUPT_COL).isNotNull()).select(CORRUPT_COL)
+    anyway when it splits one parse into valid + dead-letter sinks. The
+    cache is installed on the caller's frame (``caching.persist``)."""
+    return caching.persist(df).filter(F.col(CORRUPT_COL).isNotNull()).select(CORRUPT_COL)
 
 
 def valid_rows(df: DataFrame) -> DataFrame:
     """The well-formed complement of corrupt_lines (same cache rationale —
     a count() here also prunes the scan to just the corrupt column)."""
-    return df.cache().filter(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
+    return caching.persist(df).filter(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
 
 
 def write_jsonl(df: DataFrame, path: str, mode: str = "overwrite") -> None:

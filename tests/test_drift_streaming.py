@@ -670,48 +670,47 @@ def test_stream_near_dup_verified_filters_and_matches_batch(spark, stream_dirs):
         [(2, _NDV), (4, "totally unrelated corpus record about shipping manifests")],
         ["corpus_doc_id", "text"],
     )
-    manifest = dedup.corpus_band_manifest(corpus, "corpus_doc_id").cache()
-    manifest.count()
-    caching.release(manifest)
+    with caching.scope():
+        manifest = caching.persist(dedup.corpus_band_manifest(corpus, "corpus_doc_id"))
+        manifest.count()
 
-    stream_rows = spark.createDataFrame(
-        [(11, _NDV), (13, _NDV + " tonight"), (15, "nothing shared here at all today")],
-        ["doc_id", "text"],
-    )
-    stream_rows.write.mode("overwrite").parquet(src)
-    stream = spark.readStream.schema(stream_rows.schema).parquet(src)
+        stream_rows = spark.createDataFrame(
+            [(11, _NDV), (13, _NDV + " tonight"), (15, "nothing shared here at all today")],
+            ["doc_id", "text"],
+        )
+        stream_rows.write.mode("overwrite").parquet(src)
+        stream = spark.readStream.schema(stream_rows.schema).parquet(src)
 
-    q = streams.start_sink(
-        stream_near_dup_verified(stream, manifest, min_jaccard=0.5),
-        {"format": "memory", "queryName": "ndv_t", "checkpoint": chk + "/ndv",
-         "trigger": "availableNow"},
-    )
-    q.awaitTermination(120)
-    got = spark.sql(
-        "select distinct doc_id, corpus_doc_id, jaccard from ndv_t"
-    ).collect()
-    pairs = {(r["doc_id"], r["corpus_doc_id"]): r["jaccard"] for r in got}
-    # exact copy verified at 1.0; near copy verified in (0.5, 1); unrelated absent
-    assert pairs[(11, 2)] == 1.0
-    assert (13, 2) in pairs and 0.5 <= pairs[(13, 2)] < 1.0
-    assert not any(d == 15 for d, _ in pairs)
+        q = streams.start_sink(
+            stream_near_dup_verified(stream, manifest, min_jaccard=0.5),
+            {"format": "memory", "queryName": "ndv_t", "checkpoint": chk + "/ndv",
+             "trigger": "availableNow"},
+        )
+        q.awaitTermination(120)
+        got = spark.sql(
+            "select distinct doc_id, corpus_doc_id, jaccard from ndv_t"
+        ).collect()
+        pairs = {(r["doc_id"], r["corpus_doc_id"]): r["jaccard"] for r in got}
+        # exact copy verified at 1.0; near copy verified in (0.5, 1); unrelated absent
+        assert pairs[(11, 2)] == 1.0
+        assert (13, 2) in pairs and 0.5 <= pairs[(13, 2)] < 1.0
+        assert not any(d == 15 for d, _ in pairs)
 
-    # raising the threshold above the near-copy's true jaccard (~0.96:
-    # appending one token to a 25-token doc barely moves the shingle set)
-    # filters the COLLIDING candidate: verification is real, not a
-    # pass-through of band collisions
-    strict = stream_near_dup_verified(stream_rows, manifest, min_jaccard=0.99)
-    strict_pairs = {(r["doc_id"], r["corpus_doc_id"]) for r in strict.collect()}
-    assert (11, 2) in strict_pairs and (13, 2) not in strict_pairs
+        # raising the threshold above the near-copy's true jaccard (~0.96:
+        # appending one token to a 25-token doc barely moves the shingle set)
+        # filters the COLLIDING candidate: verification is real, not a
+        # pass-through of band collisions
+        strict = stream_near_dup_verified(stream_rows, manifest, min_jaccard=0.99)
+        strict_pairs = {(r["doc_id"], r["corpus_doc_id"]) for r in strict.collect()}
+        assert (11, 2) in strict_pairs and (13, 2) not in strict_pairs
 
-    # batch run of the same function == distinct stream output
-    batch = stream_near_dup_verified(stream_rows, manifest, min_jaccard=0.5)
-    batch_pairs = {
-        (r["doc_id"], r["corpus_doc_id"]): r["jaccard"]
-        for r in batch.select("doc_id", "corpus_doc_id", "jaccard").distinct().collect()
-    }
-    assert batch_pairs == pairs
-    manifest.unpersist()
+        # batch run of the same function == distinct stream output
+        batch = stream_near_dup_verified(stream_rows, manifest, min_jaccard=0.5)
+        batch_pairs = {
+            (r["doc_id"], r["corpus_doc_id"]): r["jaccard"]
+            for r in batch.select("doc_id", "corpus_doc_id", "jaccard").distinct().collect()
+        }
+        assert batch_pairs == pairs
 
 
 def test_stream_keyword_tag_matches_batch_tfidf(spark, stream_dirs):

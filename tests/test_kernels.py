@@ -743,29 +743,6 @@ def test_numeric_profile_drift_validation(spark):
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
-def test_numeric_card_queries_carry_release_pins(spark):
-    """The registry builders for both numeric cards must carry the prefix
-    engine's ranged-frame pin through their _round wrappers so
-    caching.release() on the registry result actually unpersists it."""
-    from beymani_spark.functions import caching
-    from beymani_spark.plans.registry import QUERIES
-
-    for name in ("numeric_profile", "numeric_profile_drift"):
-        out = QUERIES[name].builder(spark, "/root/testdata/sf0.001")
-        out.collect()
-        pins = caching.pinned(out)
-        assert pins, f"{name}: pin dropped by the builder"
-        assert all(p.storageLevel.useMemory for p in pins), (
-            f"{name}: pinned frame not actually cached"
-        )
-        caching.release(out, blocking=True)
-        # assert on the released frames themselves, not global cache
-        # emptiness — a shared test session legitimately holds other caches
-        assert all(not p.storageLevel.useMemory for p in pins), (
-            f"{name}: release() left the pinned cache resident"
-        )
-
-
 def test_finite_audit_hand_computed(spark):
     """finite_audit on a frame with every non-finite class present:
     counts are exact and NULL is distinguished from NaN."""

@@ -172,23 +172,25 @@ def test_dedup_corpus_keeps_representatives(spark):
 
 
 def test_persisted_cogroup_pairs_survive_cache(spark):
-    """Regression: caching directly over a cogroup applyInPandas output
-    materializes EMPTY on Spark 4.1 (attribute-dedup pruning empties the
-    right frames during the cache build). Consumers must put an exchange
-    between the cogroup and the cache — this asserts the guarded pattern
-    used by dedup_clusters keeps the rows, and documents the raw footgun."""
+    """Regression: a cache built straight over the blocked engine's cogroup
+    output keeps every pair, with AQE off so the shuffle keeps all its
+    partitions. With int tile keys on one side and bigint on the other, a
+    tile's src and ref rows hashed to different partitions: every group
+    had one empty side, and both the plain and the cached count were 0."""
+    from beymani_spark.functions import caching
     from beymani_spark.sources import load_table
-    import pyspark.sql.functions as F
 
     emb = load_table(spark, SF, "embeddings")
-    pairs = similarity.cosine_dup_pairs(emb, "vec_id", "embedding", threshold=0.4)
-    n_plain = pairs.count()
-    assert n_plain > 0
-    guarded = pairs.repartition(F.col("src")).persist()
+    saved = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
-        assert guarded.count() == n_plain
+        with caching.scope():
+            pairs = similarity.cosine_dup_pairs(emb, "vec_id", "embedding", threshold=0.4)
+            n_plain = pairs.count()
+            assert n_plain > 0
+            assert caching.persist(pairs).count() == n_plain
     finally:
-        guarded.unpersist()
+        spark.conf.set("spark.sql.adaptive.enabled", saved)
 
 
 def test_rowwise_bands_match_batch_on_adversarial_text(spark):
@@ -276,9 +278,9 @@ def test_semantic_dedup_prune_rule_matches_numpy(spark, emb):
     cosine >= tau. Full-check at 500 fixture vectors."""
     from beymani_spark.functions import caching
 
-    out = similarity.semantic_dedup(emb, "vec_id", "embedding", n_topics=8, tau=0.4)
-    got = out.toPandas().set_index("vec_id").sort_index()
-    caching.release(out)
+    with caching.scope():
+        out = similarity.semantic_dedup(emb, "vec_id", "embedding", n_topics=8, tau=0.4)
+        got = out.toPandas().set_index("vec_id").sort_index()
     assert len(got) == emb.count()
 
     rows = emb.collect()
@@ -344,9 +346,10 @@ def test_auto_topics_holds_cluster_size_constant(spark, emb):
     # integration: 'auto' resolves and keeps the same output contract
     from beymani_spark.functions import caching
 
-    out = similarity.semantic_dedup(emb, "vec_id", "embedding", n_topics="auto")
-    got = out.toPandas()
-    caching.release(out)
+    with caching.scope():
+        got = similarity.semantic_dedup(
+            emb, "vec_id", "embedding", n_topics="auto"
+        ).toPandas()
     assert len(got) == emb.count() and {"vec_id", "topic", "keep"} <= set(got)
 
 
@@ -385,10 +388,9 @@ def test_media_dup_pairs_lsh_recall_vs_exact(spark):
     from beymani_spark.functions import caching
     from beymani_spark.plans.registry import QUERIES
 
-    exact = QUERIES["media_dup_pairs"].builder(spark, SF).collect()
-    approx_df = QUERIES["media_dup_pairs_lsh"].builder(spark, SF)
-    approx = approx_df.collect()
-    caching.release(approx_df)
+    with caching.scope():
+        exact = QUERIES["media_dup_pairs"].builder(spark, SF).collect()
+        approx = QUERIES["media_dup_pairs_lsh"].builder(spark, SF).collect()
     truth = {(r.src, r.dst) for r in exact}
     got = {(r.src, r.dst) for r in approx}
     assert got <= truth, "LSH emitted a pair the exact engine did not"
@@ -405,12 +407,12 @@ def test_media_dup_pairs_lsh_exact_duplicates_always_collide(spark, alt_sf_dir):
     from beymani_spark.functions import caching
     from beymani_spark.plans.registry import QUERIES
 
-    exact = QUERIES["media_dup_pairs"].builder(spark, alt_sf_dir).collect()
-    dup_pairs = {(r.src, r.dst) for r in exact if r.cosine == 1.0}
-    assert dup_pairs, "altseed draw should contain exact text copies"
-    approx_df = QUERIES["media_dup_pairs_lsh"].builder(spark, alt_sf_dir)
-    got = {(r.src, r.dst) for r in approx_df.collect()}
-    caching.release(approx_df)
+    with caching.scope():
+        exact = QUERIES["media_dup_pairs"].builder(spark, alt_sf_dir).collect()
+        dup_pairs = {(r.src, r.dst) for r in exact if r.cosine == 1.0}
+        assert dup_pairs, "altseed draw should contain exact text copies"
+        approx_df = QUERIES["media_dup_pairs_lsh"].builder(spark, alt_sf_dir)
+        got = {(r.src, r.dst) for r in approx_df.collect()}
     missed = dup_pairs - got
     assert not missed, f"exact duplicates missed by LSH: {sorted(missed)[:5]}"
 
@@ -433,13 +435,13 @@ def test_embedding_dup_clusters_lsh_refines_exact(spark, alt_sf_dir):
     from beymani_spark.functions import caching
     from beymani_spark.plans.registry import QUERIES
 
-    exact = {
-        r.vec_id: r.cluster_rep
-        for r in QUERIES["embedding_dup_clusters"].builder(spark, alt_sf_dir).collect()
-    }
-    lsh_df = QUERIES["embedding_dup_clusters_lsh"].builder(spark, alt_sf_dir)
-    lsh = {r.vec_id: r.cluster_rep for r in lsh_df.collect()}
-    caching.release(lsh_df)
+    with caching.scope():
+        exact = {
+            r.vec_id: r.cluster_rep
+            for r in QUERIES["embedding_dup_clusters"].builder(spark, alt_sf_dir).collect()
+        }
+        lsh_df = QUERIES["embedding_dup_clusters_lsh"].builder(spark, alt_sf_dir)
+        lsh = {r.vec_id: r.cluster_rep for r in lsh_df.collect()}
     assert set(lsh) == set(exact)
     by_lsh_rep: dict = {}
     for vid, rep in lsh.items():

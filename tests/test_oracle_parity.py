@@ -3,26 +3,64 @@ from __future__ import annotations
 
 import pytest
 
+from beymani_spark.functions import caching
 from beymani_spark.plans import QUERIES
 
 from .oracle import compare, duck_run
 
 ORACLE_QUERIES = [name for name, q in QUERIES.items() if q.oracle is not None]
 
+# Session confs under which every answer must stay the same: results are a
+# function of the data only, not of the shuffle's partition count.
+PHYSICAL_CONFIGS = {
+    "aqe_off": {
+        "spark.sql.exchange.reuse": "false",
+        "spark.sql.adaptive.enabled": "false",
+        "spark.sql.shuffle.partitions": "7",
+    },
+    "coalesce_off": {"spark.sql.adaptive.coalescePartitions.enabled": "false"},
+}
+
+
+def _check(spark, sf_dir, name, conf=None, tag=""):
+    """Build ``name`` and compare it with its oracle inside one cache scope,
+    under the session confs ``conf``. Scope exit must leave no cached
+    relation and no new persistent RDD (the localCheckpoint blocks)."""
+    conf = conf or {}
+    saved = {k: spark.conf.get(k, None) for k in conf}
+    jsc = spark.sparkContext._jsc
+    spark.catalog.clearCache()
+    before = set(jsc.getPersistentRDDs().keys())
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        q = QUERIES[name]
+        with caching.scope():
+            errs = compare(q.builder(spark, sf_dir), duck_run(sf_dir, q.oracle_sql(sf_dir)))
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+    assert not errs, f"{name}{tag}: " + "; ".join(errs)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty(), (
+        f"{name}{tag}: scope exit left a cached relation"
+    )
+    leaked = set(jsc.getPersistentRDDs().keys()) - before
+    assert not leaked, f"{name}{tag}: scope exit left persistent RDDs {sorted(leaked)}"
+
 
 @pytest.mark.parametrize("name", ORACLE_QUERIES)
 def test_oracle_parity(spark, sf_dir, name):
-    q = QUERIES[name]
-    spark_df = q.builder(spark, sf_dir)
-    duck_df = duck_run(sf_dir, q.oracle_sql(sf_dir))
-    errs = compare(spark_df, duck_df)
-    assert not errs, f"{name}: " + "; ".join(errs)
+    _check(spark, sf_dir, name)
 
 
 @pytest.mark.slow  # multi-minute sweep: excluded from the default run (see pyproject)
 def test_all_queries_return_rows(spark, sf_dir):
     for name, q in QUERIES.items():
-        n = q.builder(spark, sf_dir).count()
+        with caching.scope():
+            n = q.builder(spark, sf_dir).count()
         assert n >= 0, name
 
 
@@ -34,11 +72,13 @@ def test_oracle_parity_altseed(spark, alt_sf_dir, name):
     skewed keys, NULL injections, empty/single-token docs, duplicate
     texts/vectors, orphan FKs, timestamp ties. Catches data-dependent
     bugs the single fixed draw structurally cannot."""
-    q = QUERIES[name]
-    spark_df = q.builder(spark, alt_sf_dir)
-    duck_df = duck_run(alt_sf_dir, q.oracle_sql(alt_sf_dir))
-    errs = compare(spark_df, duck_df)
-    assert not errs, f"{name}[altseed]: " + "; ".join(errs)
+    _check(spark, alt_sf_dir, name, tag="[altseed]")
+
+
+@pytest.mark.parametrize("name", ORACLE_QUERIES)
+@pytest.mark.slow  # ~250 s at 4 cores: the default run takes the subsets below
+def test_oracle_queries_physical_config_invariant(spark, sf_dir, name):
+    _check(spark, sf_dir, name, PHYSICAL_CONFIGS["aqe_off"], "[aqe_off]")
 
 
 # Every registry query that runs a distributed prefix sum
@@ -54,27 +94,20 @@ PREFIX_SUM_QUERIES = [
 
 @pytest.mark.parametrize("name", PREFIX_SUM_QUERIES)
 def test_prefix_sum_queries_physical_config_invariant(spark, sf_dir, name):
-    from beymani_spark.functions import caching
+    _check(spark, sf_dir, name, PHYSICAL_CONFIGS["aqe_off"], "[aqe_off]")
 
-    conf = {
-        "spark.sql.exchange.reuse": "false",
-        "spark.sql.adaptive.enabled": "false",
-        "spark.sql.shuffle.partitions": "7",
-    }
-    saved = {k: spark.conf.get(k, None) for k in conf}
-    spark_df = None
-    try:
-        for k, v in conf.items():
-            spark.conf.set(k, v)
-        q = QUERIES[name]
-        spark_df = q.builder(spark, sf_dir)
-        errs = compare(spark_df, duck_run(sf_dir, q.oracle_sql(sf_dir)))
-        assert not errs, f"{name}[reuse off, AQE off, 7 partitions]: " + "; ".join(errs)
-    finally:
-        if spark_df is not None:
-            caching.release(spark_df)
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+
+# Every caller of the blocked all-pairs engine (knn.blocked_vec_pairs): its
+# src and ref tiles meet in one cogroup only if both sides hash the same
+# key types, which a one-partition (coalesced) shuffle cannot show.
+BLOCKED_PAIR_QUERIES = [
+    "average_distance", "neighbor_density", "relative_density", "lof",
+    "cosine_dup_pairs", "media_dup_pairs", "semantic_leak_check",
+    "embedding_dup_clusters",
+]
+
+
+@pytest.mark.parametrize("config", sorted(PHYSICAL_CONFIGS))
+@pytest.mark.parametrize("name", BLOCKED_PAIR_QUERIES)
+def test_blocked_pair_queries_physical_config_invariant(spark, sf_dir, name, config):
+    _check(spark, sf_dir, name, PHYSICAL_CONFIGS[config], f"[{config}]")

@@ -556,8 +556,8 @@ def test_daily_training_prep_end_to_end(spark, docs):
     from beymani_spark.operators import packing, pipeline
 
     targets = {"en": 0.4, "es": 0.3, "de": 0.2, "fr": 0.1}
-    corpus = pipeline.build_corpus_mixed(docs, targets, quality_min=0.6, seed=42)
-    try:
+    with caching.scope():
+        corpus = pipeline.build_corpus_mixed(docs, targets, quality_min=0.6, seed=42)
         kept = corpus.select("doc_id", F.col("clean_text").alias("text"))
         chunks = packing.chunk_for_training(
             kept, "doc_id", max_tokens=32, stride=24
@@ -591,8 +591,6 @@ def test_daily_training_prep_end_to_end(spark, docs):
         for d, n in n_by_doc.items():
             if n <= 32:
                 assert one_window.get(d, 0) == n, (d, n)
-    finally:
-        caching.release(corpus, blocking=True)
 
 
 def test_build_corpus_incremental_day2_semantics(spark, docs):
@@ -902,11 +900,11 @@ def test_simhash_auto_width_and_wide_sketch_semantics(spark):
         "doc_id long, text string",
     )
     # max_hamming=8 -> 9 bands; bits=64 rounds down to 63 (7-bit bands)
-    pairs_df = dedup.simhash_dup_pairs_auto(
-        docs, "doc_id", max_hamming=8, bits=64
-    )
-    got = {(r.src, r.dst): r.hamming for r in pairs_df.collect()}
-    caching.release(pairs_df)
+    with caching.scope():
+        pairs_df = dedup.simhash_dup_pairs_auto(
+            docs, "doc_id", max_hamming=8, bits=64
+        )
+        got = {(r.src, r.dst): r.hamming for r in pairs_df.collect()}
     assert got[(1, 2)] == 0, "exact duplicates must sketch identically"
     assert (1, 3) in got and 0 < got[(1, 3)] <= 8, "near-dup within budget"
     assert (1, 4) not in got and (2, 4) not in got, "unrelated docs excluded"

@@ -247,10 +247,11 @@ def test_incremental_minhash_reuses_both_shingle_caches(spark):
     from beymani_spark.operators import dedup
 
     docs = load_table(spark, SF, "documents")
-    out = dedup.incremental_minhash(
-        docs.filter("doc_id % 2 = 1"), docs.filter("doc_id % 2 = 0"), "doc_id"
-    )
-    plan = _plan(out)
+    with caching.scope():
+        out = dedup.incremental_minhash(
+            docs.filter("doc_id % 2 = 1"), docs.filter("doc_id % 2 = 0"), "doc_id"
+        )
+        plan = _plan(out)
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
     # batch shingles feed: batch sigs, 3 verification sides, 2 size aggs;
     # corpus shingles feed: corpus sigs, 1 verification side, 1 size agg —
@@ -258,7 +259,6 @@ def test_incremental_minhash_reuses_both_shingle_caches(spark):
     assert plan.count("InMemoryTableScan") >= 8, (
         "signature and verification paths must read the persisted shingles"
     )
-    caching.release(out)
 
 
 def test_mix_to_targets_broadcasts_rates_no_fact_shuffle(spark):
@@ -340,22 +340,19 @@ def test_bigram_logprob_joins_on_gram_hash(spark):
     from beymani_spark.operators import text as text_ops
     from beymani_spark.functions import caching
 
-    docs = load_table(spark, SF, "documents")
-    out = text_ops.bigram_logprob(docs, "doc_id", "text")
-    try:
-        plan = _plan(out)
-        import re
+    import re
 
-        parts = re.findall(r"Exchange hashpartitioning\(([^)]*)\)", plan)
-        assert parts, plan
-        # model aggs and scoring joins all key on xxhash64 columns; the raw
-        # gram string must never be a shuffle key (it is not even retained
-        # past the explode projection)
-        for p in parts:
-            assert "gram#" not in p, f"raw gram used as a shuffle key: {p}"
-        assert "_gh" in plan and "_w1h" in plan
-    finally:
-        caching.release(out)
+    docs = load_table(spark, SF, "documents")
+    with caching.scope():
+        plan = _plan(text_ops.bigram_logprob(docs, "doc_id", "text"))
+    parts = re.findall(r"Exchange hashpartitioning\(([^)]*)\)", plan)
+    assert parts, plan
+    # model aggs and scoring joins all key on xxhash64 columns; the raw
+    # gram string must never be a shuffle key (it is not even retained
+    # past the explode projection)
+    for p in parts:
+        assert "gram#" not in p, f"raw gram used as a shuffle key: {p}"
+    assert "_gh" in plan and "_w1h" in plan
 
 
 def test_corpus_build_mixed_computes_corpus_once(spark):
@@ -370,21 +367,19 @@ def test_corpus_build_mixed_computes_corpus_once(spark):
     spark.catalog.clearCache()
     docs = load_table(spark, SF, "documents")
     targets = {"en": 0.4, "es": 0.3, "de": 0.2, "fr": 0.1}
-    out = pipeline.build_corpus_mixed(docs, targets, quality_min=0.6, seed=42)
-    try:
+    with caching.scope():
+        out = pipeline.build_corpus_mixed(docs, targets, quality_min=0.6, seed=42)
         out.count()
         plan = _plan(out)
-        # exactly two cache consumers — the fact pass and ONE stratum-count
-        # aggregate (T comes from a window over the counts frame, not a
-        # second aggregation). Each InMemoryTableScan reprints the cached
-        # definition, so count scans, not InMemoryRelation occurrences.
-        assert plan.count("InMemoryTableScan") == 2, plan
-        # every corpus FileScan sits inside a reprinted cache definition —
-        # a bare (uncached) recompute would add scans without a relation
-        assert "InMemoryRelation" in plan, plan
-    finally:
-        caching.release(out, blocking=True)
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    # exactly two cache consumers — the fact pass and ONE stratum-count
+    # aggregate (T comes from a window over the counts frame, not a
+    # second aggregation). Each InMemoryTableScan reprints the cached
+    # definition, so count scans, not InMemoryRelation occurrences.
+    assert plan.count("InMemoryTableScan") == 2, plan
+    # every corpus FileScan sits inside a reprinted cache definition —
+    # a bare (uncached) recompute would add scans without a relation
+    assert "InMemoryRelation" in plan, plan
 
 
 def test_incremental_build_is_batch_sized(spark):
@@ -417,11 +412,8 @@ def test_dedup_stats_aggregates_are_tiny(spark):
     pairs = dedup.minhash_lsh_pairs(
         docs, "doc_id", num_hashes=16, bands=4, n=3, min_jaccard=0.5, hash_fn="md5"
     )
-    out = dedup.dedup_stats(docs, "doc_id", pairs)
-    plan = _plan(out)
+    plan = _plan(dedup.dedup_stats(docs, "doc_id", pairs))
     assert "partial_count" in plan, plan
-    from beymani_spark.functions import caching
-    caching.release(out)
 
 
 def test_ks_two_sample_never_sorts_raw_inputs(spark):
@@ -455,20 +447,17 @@ def test_corpus_to_manifest_single_pipeline_execution(spark):
     from beymani_spark.functions import caching
     from beymani_spark.plans import QUERIES
 
-    out = QUERIES["corpus_to_manifest"].builder(spark, SF)
-    try:
-        plan = _plan(out)
-        # BOTH consumers (pack prefix sum + metadata join-back) read the
-        # cached train frame — the pipeline materializes once, not once
-        # per branch (the InMemoryTableScans' shared InMemoryRelation is
-        # the cache boundary; the FileScans visible in the plan text are
-        # the cached subtree's lineage printout, executed only at
-        # materialization)
-        assert plan.count("InMemoryTableScan") >= 2, plan[:2000]
-        assert "Exchange rangepartitioning" in plan, plan[:2000]
-        assert "BroadcastHashJoin" in plan, plan[:2000]
-    finally:
-        caching.release(out)
+    with caching.scope():
+        plan = _plan(QUERIES["corpus_to_manifest"].builder(spark, SF))
+    # BOTH consumers (pack prefix sum + metadata join-back) read the
+    # cached train frame — the pipeline materializes once, not once
+    # per branch (the InMemoryTableScans' shared InMemoryRelation is
+    # the cache boundary; the FileScans visible in the plan text are
+    # the cached subtree's lineage printout, executed only at
+    # materialization)
+    assert plan.count("InMemoryTableScan") >= 2, plan[:2000]
+    assert "Exchange rangepartitioning" in plan, plan[:2000]
+    assert "BroadcastHashJoin" in plan, plan[:2000]
 
 
 def test_bucketed_tables_join_without_exchange(spark, tmp_path):
@@ -560,14 +549,12 @@ def test_semantic_dedup_pairs_join_on_cluster_no_cartesian(spark):
     from beymani_spark.operators import similarity as sim
 
     emb = load_table(spark, SF, "embeddings")
-    out = sim.semantic_dedup(emb, "vec_id", "embedding", n_topics=8, tau=0.4)
-    plan = _plan(out)
+    with caching.scope():
+        plan = _plan(sim.semantic_dedup(emb, "vec_id", "embedding", n_topics=8, tau=0.4))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "hashpartitioning(topic" in plan
-    assert "InMemoryTableScan" in plan  # pinned assignment reused, not refit
-    assert caching.pinned(out)
-    caching.release(out)
+    assert "InMemoryTableScan" in plan  # cached assignment reused, not refit
 
 
 def test_registered_semantic_dedup_resolves_auto_topics(spark):
@@ -589,12 +576,12 @@ def test_registered_semantic_dedup_resolves_auto_topics(spark):
     orig = sim.auto_topics
     sim.auto_topics = spy
     try:
-        out = QUERIES["semantic_dedup"].builder(spark, SF)
+        with caching.scope():
+            QUERIES["semantic_dedup"].builder(spark, SF)
     finally:
         sim.auto_topics = orig
     n_rows = load_table(spark, SF, "embeddings").count()
     assert calls == [n_rows], "registered query did not resolve n_topics='auto'"
-    caching.release(out)
 
 
 def test_prototype_prune_single_exchange_no_join(spark):
@@ -781,28 +768,25 @@ def test_media_dup_pairs_lsh_bucket_join_no_allpairs(spark):
     """The REGISTERED media_dup_pairs_lsh form must pair via the LSH
     signature equi-join (candidate volume sum(bucket^2) ~ N^2/2^planes with
     auto-sized planes) — never a cartesian / broadcast-nested-loop
-    all-pairs — and the decode+quantize pipeline must be pinned once for
+    all-pairs — and the decode+quantize pipeline must be cached once for
     its four consumers (count, mean, both join sides)."""
     import re
 
     from beymani_spark.functions import caching
     from beymani_spark.plans.registry import QUERIES
 
-    out = QUERIES["media_dup_pairs_lsh"].builder(spark, SF)
-    out.count()
-    plan = _plan(out)
+    spark.catalog.clearCache()
+    with caching.scope():
+        out = QUERIES["media_dup_pairs_lsh"].builder(spark, SF)
+        out.count()
+        plan = _plan(out)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert re.search(
         r"(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin) \[sig", plan
     ), "pair stage must be keyed on the LSH bucket"
-    assert "InMemoryTableScan" in plan, "decode pipeline must be pinned, not re-run"
-    pinned = caching.pinned(out)
-    assert pinned
-    caching.release(out)
-    # check the released frames directly, not the session-global cache
-    # census — the shared test session may hold other tests' caches
-    assert all(not f.storageLevel.useMemory for f in pinned)
+    assert "InMemoryTableScan" in plan, "decode pipeline must be cached, not re-run"
 
 
 def _executed_node_counts(df):
@@ -841,13 +825,14 @@ def test_probe_join_callers_sign_once(spark):
     from beymani_spark.operators import knn, similarity
 
     emb = load_table(spark, SF, "embeddings").select("vec_id", "embedding")
-    for out in (
-        similarity.cosine_dup_pairs_lsh(emb, "vec_id", "embedding", threshold=0.4),
-        knn.lsh_pair_distances(emb, "vec_id", "embedding", n_planes="auto"),
+    for build in (
+        lambda: similarity.cosine_dup_pairs_lsh(emb, "vec_id", "embedding", threshold=0.4),
+        lambda: knn.lsh_pair_distances(emb, "vec_id", "embedding", n_planes="auto"),
     ):
-        out.collect()
-        assert _executed_node_counts(out)["MapInPandas"] == 1
-        caching.release(out)
+        with caching.scope():
+            out = build()
+            out.collect()
+            assert _executed_node_counts(out)["MapInPandas"] == 1
 
 
 def test_isolation_forest_merge_fit_presamples_union_score_no_exchange(spark):
@@ -895,16 +880,15 @@ def test_dedup_simhash_auto_band_join_no_cartesian(spark):
     from beymani_spark.functions import caching
     from beymani_spark.plans.registry import QUERIES
 
-    out = QUERIES["dedup_simhash_auto"].builder(spark, SF)
-    out.count()
-    plan = _plan(out)
+    spark.catalog.clearCache()
+    with caching.scope():
+        out = QUERIES["dedup_simhash_auto"].builder(spark, SF)
+        out.count()
+        plan = _plan(out)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
-    assert "InMemoryTableScan" in plan, "sketch must be pinned, not rebuilt"
-    pinned = caching.pinned(out)
-    assert pinned
-    caching.release(out)
-    assert all(not f.storageLevel.useMemory for f in pinned)
+    assert "InMemoryTableScan" in plan, "sketch must be cached, not rebuilt"
 
 
 def test_numeric_profile_plan_shapes(spark):
