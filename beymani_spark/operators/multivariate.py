@@ -20,8 +20,10 @@
   kmeans_* ≙ ClusterBasedPredictor (/root/reference/spark/.../cluster/
       ClusterBasedPredictor.scala:45-130): distance to nearest large-enough
       centroid; small clusters fall through to the nearest large cluster.
-      Seeded per-key Lloyd iterations in applyInPandas (centroid model is a
-      DataFrame, broadcast back for scoring).
+      Seeded per-key Lloyd iterations in applyInPandas; both k-means
+      families (numeric and mixed-type) share one assign path and one
+      scoring core, each supplying only its fit, its centroid struct
+      fields and its per-centroid distance term.
   isolation_forest_* ≙ IsolationForestModel/Predictor (/root/reference/spark/
       .../multi/IsolationForestModel.scala:39-233, IsolationForestPredictor
       .scala:37-174): per-key forest fit on bootstrap subsamples; scoring
@@ -32,12 +34,28 @@
       serialized model per key via cogroup — no cartesian, no per-depth
       shuffles, and an explicit seed replaces the reference's Math.random()
       (IsolationForestModel.scala:203) for reproducibility.
+
+Fitted models. The k-means and isolation-forest fits return a ``Model``:
+its ``frame``, plus its ``rows`` on the driver when ``materialize`` found
+the model at or under ``max_model_rows`` (MAX_MODEL_ROWS), else None. The
+rows travel with the value, so no projection can lose them. ``attach``
+gives the fact table its per-key centroids from that value: inline
+literals for a driver-held model of at most _INLINE_MODEL_KEYS keys, a
+broadcast join for a larger driver-held one, a plain join over the cap.
+The literal path stays because it is measured faster: at sf0.01 on 4
+cores kmeans_cluster_score takes 3.52 s and 9 jobs with it and 3.80 s and
+15 jobs with a broadcast join (kmeans_mixed: 4.29 s against 5.28 s).
+Mahalanobis, PCA and the autoencoder still return plain frames and always
+broadcast-join them.
 """
 from __future__ import annotations
 
 import json
 import math
 from collections.abc import Sequence
+from dataclasses import dataclass
+from functools import reduce
+from operator import add, and_
 
 import numpy as np
 import pandas as pd
@@ -47,6 +65,7 @@ from pyspark.sql.types import StructType
 
 from ..functions import caching
 from ..functions.scores import tag_label
+from .multimodal import _spread
 
 
 # ---------------------------------------------------------------- Mahalanobis
@@ -458,83 +477,273 @@ def autoencoder_score(
     return out.drop(*drop)
 
 
+# ---------------------------------------------------------------- Fitted models
+
+#: The one driver-memory cap for a fitted model: every ``max_model_rows``
+#: default. At or under it ``materialize`` collects the rows; above it the
+#: model stays a distributed frame.
+MAX_MODEL_ROWS = 100_000
+
+
+@dataclass(frozen=True)
+class Model:
+    """A fitted per-key model, the state of the reference's one
+    ModelBasedPredictor base (predictor/ModelBasedPredictor.java:32).
+    ``frame`` is always there; ``rows`` holds the same rows on the driver,
+    or is None when the model is over its cap and stays cluster data.
+    Save ``frame``; serve a reloaded one as ``materialize(load_model(...))``."""
+
+    frame: DataFrame
+    rows: list | None
+
+
+def materialize(
+    frame: DataFrame, max_model_rows: int | None = MAX_MODEL_ROWS
+) -> Model:
+    """Run a fitted model frame once and decide where it lives.
+
+    The checkpoint is lazy and the count materializes it in the same job,
+    so the fit runs exactly once and no later action (a size count, a
+    broadcast, a save) re-runs it. Then the split is on the measured size:
+
+    - at or under ``max_model_rows`` the rows are collected and ``frame``
+      becomes a local relation of them, which outlives the cache scope;
+    - above it (a keyed fit over millions of entities) nothing model-sized
+      reaches the driver: ``frame`` stays the checkpoint, ``rows`` is None.
+
+    ``max_model_rows=None`` forces the distributed path."""
+    frame = caching.checkpoint(frame)
+    n_model = frame.count()
+    if max_model_rows is None or n_model > int(max_model_rows):
+        return Model(frame, None)
+    rows = frame.collect()
+    return Model(frame.sparkSession.createDataFrame(rows, frame.schema), rows)
+
+
+#: inline-literal bound: a model with at most this many key groups is baked
+#: into the plan as a when-chain of array literals, with no model join and
+#: no BroadcastExchange job per consumer. Measured at sf0.01 on 4 cores, a
+#: broadcast join instead takes kmeans_cluster_score from 3.52 s and 9 jobs
+#: to 3.80 s and 15 jobs, and kmeans_mixed from 4.29 s to 5.28 s. Past this
+#: size the when-chain would outgrow the JIT method limit (the _nearest
+#: lesson), so larger models take the broadcast join.
+_INLINE_MODEL_KEYS = 64
+
+
+def attach(df: DataFrame, model: Model, keys: Sequence[str], fields) -> DataFrame:
+    """``df`` plus ``_cents``: each row's per-key centroids as an
+    array<struct<cluster_id, fields...>> sorted by cluster_id. ``fields``
+    is [(struct field, model column, type), ...], the one layout that
+    builds both the literal and the joined form. Rows whose key has no
+    model group drop, as in an inner join, and the join keys lead.
+
+    - rows on the driver and at most _INLINE_MODEL_KEYS key groups: a
+      when-chain of array literals (a NULL _cents is the unmatched key);
+    - rows on the driver: a broadcast join;
+    - rows not on the driver (over the cap): an unhinted join, which
+      shuffles or lets AQE re-choose a broadcast at runtime."""
+    groups: dict = {}
+    for r in model.rows or ():
+        groups.setdefault(tuple(r[k] for k in keys), []).append(r)
+    chain = None
+    if 0 < len(groups) <= _INLINE_MODEL_KEYS:
+        try:
+            for kt, grp in groups.items():
+                arr = F.array(
+                    *[
+                        F.struct(
+                            F.lit(int(r["cluster_id"])).cast("int").alias("cluster_id"),
+                            *[
+                                F.lit(r[src]).cast(typ).alias(name)
+                                for name, src, typ in fields
+                            ],
+                        )
+                        for r in sorted(grp, key=lambda r: int(r["cluster_id"]))
+                    ]
+                )
+                # null model keys never equi-join; keep that drop exact
+                cond = reduce(
+                    and_,
+                    [
+                        F.lit(False) if v is None else F.col(k) == F.lit(v)
+                        for k, v in zip(keys, kt)
+                    ],
+                )
+                chain = F.when(cond, arr) if chain is None else chain.when(cond, arr)
+        except Exception:  # py4j raises AttributeError, pyspark TypeError
+            chain = None  # unliteralizable key/centroid type: use the join
+    if chain is not None:
+        rest = [c for c in df.columns if c not in keys]
+        return (
+            df.withColumn("_cents", chain)
+            .filter(F.col("_cents").isNotNull())
+            .select(*keys, *rest, "_cents")
+        )
+    cent = F.struct(
+        F.col("cluster_id"), *[F.col(src).alias(name) for name, src, _ in fields]
+    )
+    per_key = model.frame.groupBy(*keys).agg(
+        F.sort_array(F.collect_list(cent)).alias("_cents")
+    )
+    if model.rows is not None:
+        per_key = F.broadcast(per_key)
+    return df.join(per_key, list(keys))
+
+
 # ---------------------------------------------------------------- KMeans cluster
+#
+# Both k-means families share one assign path, one unrolled-distance loop,
+# one large-cluster rule and one scoring core. A family is a spec: its
+# _cents struct fields (for attach) and its per-centroid distance term.
 
-def _finalize_model(
-    centroids_df: DataFrame,
-    assign_fn,
+def _sq(x):
+    # explicit self-multiplication, not **2: Math.pow(x, 2.0) is not
+    # IEEE-guaranteed to equal x*x, and the DuckDB oracles mirror every
+    # square term-for-term as (x-c)*(x-c)
+    return x * x
+
+
+def _kmeans_spec(values: Sequence[str]):
+    """Squared Euclidean distance to a centroid struct ``c``."""
+    fields = [(v, f"centroid_{v}", "double") for v in values]
+    return fields, lambda c: reduce(add, [_sq(F.col(v) - c[v]) for v in values])
+
+
+def _nearest(
+    df: DataFrame,
+    model: Model,
     keys: Sequence[str],
-    max_model_rows: int | None,
+    spec,
+    max_k: int,
+    name: str,
+    pick,
 ) -> DataFrame:
-    """Materialize a fitted per-key centroid frame and attach full-data
-    nearest-centroid ``size`` counts — the shared tail of kmeans_model /
-    kmeans_mixed_model.
+    """Attach the per-key centroids and add column ``name`` =
+    ``pick(d2 columns, min d2)``, one squared distance per centroid slot.
 
-    The fit chain localCheckpoints FIRST (eager): it runs exactly once,
-    lineage truncates, and no downstream action — the size count, the
-    scorer's broadcast, a model save — can re-run the presample+fit (the
-    lazy-persist refit race this stage exists to prevent). Then the
-    materialization strategy splits on the MEASURED model size:
+    The slots are unrolled with F.get (null past the key's actual centroid
+    count, which least() and the when() chain skip): higher-order
+    transform/array_min are interpreted AND re-evaluate the distance array
+    once per consumer. Each distance is projected as a real column, since
+    an inlined subtree would be copied into least() and every when()
+    branch (~k+2 times), which at production d (tens of attrs) pushes the
+    generated method past the JIT limit into interpreted eval. Values and
+    IEEE op order are unchanged, so the model-baked oracles hold."""
+    fields, term = spec
+    joined = attach(df, model, keys, fields)
+    d2s = [term(F.get(F.col("_cents"), i)) for i in range(max_k)]
+    joined = joined.select("*", *[d2.alias(f"_d2_{i}") for i, d2 in enumerate(d2s)])
+    cols = [F.col(f"_d2_{i}") for i in range(max_k)]
+    m = F.least(*cols) if len(cols) > 1 else cols[0]
+    return joined.withColumn(name, pick(cols, m)).drop(
+        "_cents", *[f"_d2_{i}" for i in range(max_k)]
+    )
 
-    - |keys|·k <= max_model_rows (the common case — moderate key
-      cardinality): collect and rebuild as a LOCAL in-memory relation,
-      merging sizes driver-side. Downstream broadcast-subtree jobs read
-      local rows and no cache entry lingers in long sessions.
-    - above the cap (a keyed fit over millions of entities, where the
-      model itself is cluster data): the model STAYS distributed — sizes
-      attach via a shuffle join on (keys, cluster_id) and nothing
-      model-sized ever touches the driver (the tfidf_vocab(max_vocab)
-      bounding pattern, applied to the detector family).
 
-    ``max_model_rows=None`` forces the distributed path (never collect)."""
-    spark = centroids_df.sparkSession
-    # LAZY checkpoint + count: the count materializes the checkpoint in
-    # the SAME job (eager=True runs an internal count of its own, so the
-    # former eager+count shape paid the fixed per-job latency twice for
-    # one materialization). The once-only guarantee is unchanged: after
-    # this count the lineage is truncated and no downstream action can
-    # re-run the presample+fit.
-    cents = caching.checkpoint(centroids_df)
-    n_model = cents.count()
-    if max_model_rows is not None and n_model <= int(max_model_rows):
-        centroid_rows = cents.collect()
-        centroids = spark.createDataFrame(centroid_rows, cents.schema)
-        # the rows are already on the driver: hand them to the assign/
-        # score paths so small models inline as codegen literals instead
-        # of a broadcast join (see _local_model_rows)
-        centroids._beymani_local_rows = centroid_rows  # type: ignore[attr-defined]
-        size_rows = (
-            assign_fn(centroids, True)
-            .groupBy(*keys, "cluster_id")
-            .agg(F.count("*").alias("size"))
-            .collect()
-        )
-        size_map = {
-            tuple(r[k] for k in (*keys, "cluster_id")): r["size"]
-            for r in size_rows
-        }
-        model_rows = [
-            {
-                **r.asDict(),
-                "size": size_map.get(
-                    tuple(r[k] for k in (*keys, "cluster_id")), 0
-                ),
-            }
-            for r in centroid_rows
-        ]
-        out = spark.createDataFrame(
-            model_rows, cents.schema.add("size", "long")
-        )
-        out._beymani_local_rows = model_rows  # type: ignore[attr-defined]
-        return out
+def _argmin(cols, m):
+    # first-match when() chain over ascending cluster_id: ties resolve to
+    # the lowest cluster_id, matching numpy argmin's first-index rule
+    best = None
+    for i, d2 in enumerate(cols):
+        cid = F.get(F.col("_cents"), i)["cluster_id"]
+        best = F.when(d2 == m, cid) if best is None else best.when(d2 == m, cid)
+    return best
+
+
+def _sized_model(
+    centroids_df: DataFrame,
+    full: DataFrame,
+    keys: Sequence[str],
+    spec,
+    max_k: int,
+    max_model_rows: int | None,
+) -> Model:
+    """Materialize a fitted centroid frame and attach each centroid's
+    ``size``: its full-data nearest-centroid count, a codegen pass over
+    the unsampled table, so the small-cluster rule stays exact on the true
+    distribution even when the fit was presampled. Under the cap the
+    counts merge into the driver rows; over it they attach by a join on
+    (keys, cluster_id) and nothing model-sized touches the driver (the
+    tfidf_vocab(max_vocab) bounding pattern)."""
+    cents = materialize(centroids_df, max_model_rows)
+    ids = [*keys, "cluster_id"]
     sizes = (
-        assign_fn(cents, False)
-        .groupBy(*keys, "cluster_id")
+        _nearest(full, cents, keys, spec, max_k, "cluster_id", _argmin)
+        .groupBy(*ids)
         .agg(F.count("*").alias("size"))
     )
-    return cents.join(sizes, [*keys, "cluster_id"], "left").withColumn(
-        "size", F.coalesce(F.col("size"), F.lit(0).cast("long"))
+    if cents.rows is None:
+        # materialized too, so the scorer's large-cluster total and its
+        # centroid join do not each re-run the full-data size pass
+        return materialize(
+            cents.frame.join(sizes, ids, "left").withColumn(
+                "size", F.coalesce(F.col("size"), F.lit(0).cast("long"))
+            ),
+            None,
+        )
+    size = {tuple(r[k] for k in ids): r["size"] for r in sizes.collect()}
+    rows = [
+        {**r.asDict(), "size": size.get(tuple(r[k] for k in ids), 0)}
+        for r in cents.rows
+    ]
+    schema = StructType([*cents.frame.schema]).add("size", "long")
+    return Model(cents.frame.sparkSession.createDataFrame(rows, schema), rows)
+
+
+def _large_clusters(model: Model, keys: Sequence[str], fraction: float) -> Model:
+    """The clusters holding at least ``fraction`` of their key's rows;
+    small clusters are anomaly pockets (ClusterBasedPredictor.scala:88-103).
+    Over driver rows the rule runs in Python with no Spark job (a long
+    count promotes exactly into double); the frame form is lazy."""
+    total = model.frame.groupBy(*keys).agg(F.sum("size").alias("_total"))
+    frame = model.frame.join(F.broadcast(total), list(keys)).filter(
+        F.col("size") >= F.col("_total") * fraction
     )
+    if model.rows is None:
+        return Model(frame, None)
+    tot: dict = {}
+    for r in model.rows:
+        kt = tuple(r[k] for k in keys)
+        tot[kt] = tot.get(kt, 0) + int(r["size"])
+    return Model(
+        frame,
+        [
+            r
+            for r in model.rows
+            if int(r["size"]) >= tot[tuple(r[k] for k in keys)] * fraction
+        ],
+    )
+
+
+def _cluster_score(
+    df: DataFrame,
+    model: Model,
+    keys: Sequence[str],
+    spec,
+    min_cluster_fraction: float,
+    threshold: float,
+    max_clusters: int | None,
+) -> DataFrame:
+    """sqrt of the distance to the nearest LARGE centroid. The fact table
+    meets one array per key (no xK row explosion, no post-join shuffle).
+    ``max_clusters`` is the unroll width; by default it is read off the
+    driver rows, or off the frame with one job for an over-cap model."""
+    if max_clusters is None:
+        if model.rows is not None:
+            top = max((int(r["cluster_id"]) for r in model.rows), default=None)
+        else:
+            top = model.frame.agg(F.max("cluster_id")).first()[0]
+        if top is None:
+            raise ValueError(
+                "empty kmeans model: the model frame has no centroid rows — "
+                "fit the model over the standing corpus before scoring"
+            )
+        max_clusters = int(top) + 1
+    large = _large_clusters(model, keys, min_cluster_fraction)
+    return _nearest(
+        df, large, keys, spec, int(max_clusters), "score",
+        lambda cols, m: F.sqrt(m),
+    ).withColumn("label", tag_label(F.col("score"), threshold))
 
 
 def kmeans_model(
@@ -545,21 +754,16 @@ def kmeans_model(
     iterations: int = 20,
     seed: int = 42,
     presample: int | None = 8192,
-    max_model_rows: int | None = 100_000,
-) -> DataFrame:
-    """Seeded per-key Lloyd k-means; returns (keys..., cluster_id, size,
-    centroid components).
+    max_model_rows: int | None = MAX_MODEL_ROWS,
+) -> Model:
+    """Seeded per-key Lloyd k-means; the model frame is (keys...,
+    cluster_id, centroid components, size).
 
     The Lloyd fit runs over a hash_presample-bounded pool (~presample rows
     per key), so neither the O(n*k*d) iteration cost nor the fit task's
-    pandas frame grows with the key group; cluster ``size`` is then a
-    whole-data codegen count of nearest-centroid assignments, keeping the
-    small-cluster rule (kmeans_score's min_cluster_fraction) exact on the
-    full distribution rather than the sample. Model materialization is
-    bounded by ``max_model_rows`` (see :func:`_finalize_model`): at or
-    under the cap the |keys|·k model collects to a local relation, above
-    it the model stays distributed end-to-end."""
-    d = len(values)
+    pandas frame grows with the key group; cluster ``size`` is a
+    whole-data count (see :func:`_sized_model`). The model is bounded by
+    ``max_model_rows`` (see :func:`materialize`)."""
     full = df
     if presample:
         df = hash_presample(df, keys, values, presample, seed)
@@ -580,186 +784,18 @@ def kmeans_model(
         f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema if f.name in keys
     )
     cent = ", ".join(f"centroid_{v} double" for v in values)
-    # The model is |keys|*k rows — collect it and rebuild as a LOCAL
-    # DataFrame. The fit chain runs exactly once (one action), downstream
-    # broadcast-subtree jobs read an in-memory relation (no lazy-persist
-    # race that recomputes the presample+fit chain — measured 2x the cold
-    # fit cost before eager materialization), and no cache entry lingers
-    # in long sessions.
     centroids_df = df.groupBy(*keys).applyInPandas(
         fit, schema=f"{key_schema}, cluster_id int, {cent}"
     )
-    # cluster sizes = full-data nearest-centroid counts (codegen pass over
-    # the unsampled table): the small-cluster rule stays exact on the true
-    # distribution even when the fit was presampled.
-    return _finalize_model(
-        centroids_df,
-        lambda cents, bc: _assign_nearest(
-            full, cents, keys, values, int(n_clusters), broadcast_model=bc
-        ),
-        keys,
+    return _sized_model(
+        centroids_df, full, keys, _kmeans_spec(values), int(n_clusters),
         max_model_rows,
-    )
-
-
-#: inline-literal bound: a model with at most this many key groups is
-#: baked into the plan as a when-chain of array literals (no model join,
-#: no BroadcastExchange future job per consumer); larger models keep the
-#: broadcast join — past this size the generated when-chain would
-#: outgrow the JIT method limit (the _materialize_d2 lesson).
-_INLINE_MODEL_KEYS = 64
-
-
-def _local_model_rows(model: DataFrame):
-    """Driver-side rows attached by _finalize_model's under-cap path
-    (None for distributed or file-loaded models)."""
-    rows = getattr(model, "_beymani_local_rows", None)
-    if rows is None:
-        return None
-    return [r if isinstance(r, dict) else r.asDict() for r in rows]
-
-
-def _inline_cents(df: DataFrame, rows, keys: Sequence[str], fields):
-    """Attach a literal ``_cents`` array<struct<cluster_id, ...>> column
-    built from driver-side model rows — the join-free fast path for
-    small under-cap models. ``fields`` is [(struct_field_name,
-    source_row_field, cast_type), ...] in _cents struct order. Key
-    groups sort their centroids by cluster_id (the sort_array order of
-    the broadcast path); rows whose key matches no model group get a
-    NULL _cents and are filtered, reproducing the inner model join.
-    Returns None when the model is too wide to inline (caller falls back
-    to the broadcast join)."""
-    groups: dict = {}
-    for r in rows:
-        groups.setdefault(tuple(r[k] for k in keys), []).append(r)
-    if not groups or len(groups) > _INLINE_MODEL_KEYS:
-        return None
-    try:
-        chain = None
-        for kt, grp in groups.items():
-            grp = sorted(grp, key=lambda r: int(r["cluster_id"]))
-            arr = F.array(
-                *[
-                    F.struct(
-                        F.lit(int(r["cluster_id"])).cast("int").alias("cluster_id"),
-                        *[
-                            F.lit(r[src]).cast(typ).alias(name)
-                            for name, src, typ in fields
-                        ],
-                    )
-                    for r in grp
-                ]
-            )
-            cond = None
-            for k, v in zip(keys, kt):
-                # null model keys never equi-join; keep that drop exact
-                c = F.lit(False) if v is None else (F.col(k) == F.lit(v))
-                cond = c if cond is None else (cond & c)
-            chain = F.when(cond, arr) if chain is None else chain.when(cond, arr)
-    except Exception:
-        return None  # unliteralizable key/centroid type: use the join
-    out = df.withColumn("_cents", chain).filter(F.col("_cents").isNotNull())
-    # reproduce the equi-join's column order (join keys lead) so both
-    # paths return identical schemas
-    rest = [c for c in df.columns if c not in keys]
-    return out.select(*keys, *rest, "_cents")
-
-
-def _unrolled_nearest(values: Sequence[str], max_k: int):
-    """(squared-distance exprs, min expr) against a `_cents`
-    array<struct<cluster_id, v...>> column, unrolled per centroid slot with
-    F.get (null past the key's actual centroid count, which least() and the
-    when() chain skip). Higher-order transform/array_min/array_position are
-    interpreted AND re-evaluate the distance array once per consumer; the
-    unrolled form is plain whole-stage-codegen arithmetic evaluated once."""
-    d2s = []
-    for i in range(max_k):
-        c = F.get(F.col("_cents"), i)
-        d = None
-        for v in values:
-            # explicit self-multiplication, not **2: Math.pow(x, 2.0) is not
-            # IEEE-guaranteed to equal x*x, and the DuckDB oracle mirrors
-            # this expression term-for-term as (x-c)*(x-c)
-            diff = F.col(v) - c[v]
-            term = diff * diff
-            d = term if d is None else d + term
-        d2s.append(d)
-    m = F.least(*d2s) if len(d2s) > 1 else d2s[0]
-    return d2s, m
-
-
-def _materialize_d2(joined: DataFrame, d2s: list) -> tuple[DataFrame, list, "F.Column"]:
-    """Project the per-centroid distance expressions as real columns and
-    rebuild least()/comparisons off the projected columns. Each d2 subtree
-    is otherwise inlined into least() AND every argmin when() branch —
-    ~(k+2) copies — which at production d (tens of attrs) pushes the
-    generated method past the JIT limit into interpreted eval (the same
-    blowup fixed in autoencoder_score). CollapseProject keeps non-cheap
-    aliases referenced more than once; values and IEEE op order are
-    unchanged, so the model-baked oracles are unaffected."""
-    out = joined.select("*", *[d2.alias(f"_d2_{i}") for i, d2 in enumerate(d2s)])
-    cols = [F.col(f"_d2_{i}") for i in range(len(d2s))]
-    m = F.least(*cols) if len(cols) > 1 else cols[0]
-    return out, cols, m
-
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Few-split sources would run the expression-heavy argmin passes on one
-    core; round-robin them first. Multi-split tables at scale skip this."""
-    parallelism = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < parallelism // 2:
-        df = df.repartition(parallelism)
-    return df
-
-
-def _assign_nearest(
-    df: DataFrame,
-    centroids: DataFrame,
-    keys: Sequence[str],
-    values: Sequence[str],
-    max_k: int,
-    broadcast_model: bool = True,
-) -> DataFrame:
-    """Adds cluster_id = nearest centroid per row: broadcast the per-key
-    centroid array (sorted by cluster_id) and unrolled codegen argmin —
-    1:1 join, no row explosion (cf. kmeans_score).
-    ``broadcast_model=False`` drops the hint for over-cap models whose
-    per-key arrays would not fit a broadcast (the join shuffles, or AQE
-    re-chooses broadcast at runtime if the model turns out small)."""
-    joined = None
-    if broadcast_model:
-        rows = _local_model_rows(centroids)
-        if rows is not None:
-            joined = _inline_cents(
-                df, rows, keys, [(v, f"centroid_{v}", "double") for v in values]
-            )
-    if joined is None:
-        cent = F.struct(
-            F.col("cluster_id"), *[F.col(f"centroid_{v}").alias(v) for v in values]
-        )
-        per_key = centroids.groupBy(*keys).agg(
-            F.sort_array(F.collect_list(cent)).alias("_cents")
-        )
-        joined = df.join(
-            F.broadcast(per_key) if broadcast_model else per_key, list(keys)
-        )
-    d2s, _ = _unrolled_nearest(values, max_k)
-    joined, d2_cols, m = _materialize_d2(joined, d2s)
-    # first-match when() chain over ascending cluster_id: ties resolve to the
-    # lowest cluster_id, matching numpy argmin's first-index rule
-    best = None
-    for i, d2 in enumerate(d2_cols):
-        cid = F.get(F.col("_cents"), i)["cluster_id"]
-        best = F.when(d2 == m, cid) if best is None else best.when(d2 == m, cid)
-    return (
-        joined.withColumn("cluster_id", best)
-        .drop("_cents", *[f"_d2_{i}" for i in range(len(d2_cols))])
     )
 
 
 def kmeans_score(
     df: DataFrame,
-    model: DataFrame,
+    model: Model,
     keys: Sequence[str],
     values: Sequence[str],
     min_cluster_fraction: float = 0.05,
@@ -769,53 +805,11 @@ def kmeans_score(
     """Distance to the nearest *large* centroid (small clusters are anomaly
     pockets, cf. ClusterBasedPredictor.scala:88-103).
 
-    ``max_clusters``: unroll width for the codegen argmin (defaults to a
-    driver-side max over the tiny model DF)."""
-    rows = _local_model_rows(model)
-    joined = None
-    if rows is not None:
-        if max_clusters is None:
-            max_clusters = max(int(r["cluster_id"]) for r in rows) + 1
-        # the large-cluster rule evaluated driver-side over the local
-        # model rows — identical arithmetic (long promotes exactly into
-        # double for any realistic count), zero model-side Spark jobs
-        tot: dict = {}
-        for r in rows:
-            kt = tuple(r[k] for k in keys)
-            tot[kt] = tot.get(kt, 0) + int(r["size"])
-        large_rows = [
-            r
-            for r in rows
-            if int(r["size"]) >= tot[tuple(r[k] for k in keys)] * min_cluster_fraction
-        ]
-        joined = _inline_cents(
-            df, large_rows, keys, [(v, f"centroid_{v}", "double") for v in values]
-        )
-    if joined is None:
-        total = model.groupBy(*keys).agg(F.sum("size").alias("_total"))
-        large = (
-            model.join(F.broadcast(total), list(keys))
-            .filter(F.col("size") >= F.col("_total") * min_cluster_fraction)
-        )
-        if max_clusters is None:
-            max_clusters = int(model.agg(F.max("cluster_id")).first()[0]) + 1
-        # fold the (few) large centroids into one array per key: the fact
-        # table joins 1:1 (no xK row explosion) and min-distance is an
-        # unrolled codegen least() — no post-join shuffle, no interpreted
-        # higher-order
-        cent = F.struct(
-            F.col("cluster_id"), *[F.col(f"centroid_{v}").alias(v) for v in values]
-        )
-        per_key = large.groupBy(*keys).agg(
-            F.sort_array(F.collect_list(cent)).alias("_cents")
-        )
-        joined = df.join(F.broadcast(per_key), list(keys))
-    d2s, _ = _unrolled_nearest(values, int(max_clusters))
-    joined, d2_cols, m = _materialize_d2(joined, d2s)
-    return (
-        joined.withColumn("score", F.sqrt(m))
-        .drop("_cents", *[f"_d2_{i}" for i in range(len(d2_cols))])
-        .withColumn("label", tag_label(F.col("score"), threshold))
+    ``max_clusters``: unroll width for the codegen argmin (defaults to the
+    largest cluster_id in the model, plus one)."""
+    return _cluster_score(
+        df, model, keys, _kmeans_spec(values), min_cluster_fraction,
+        threshold, max_clusters,
     )
 
 
@@ -860,6 +854,33 @@ def kmeans_mixed_fit_core(
     return cn, cc, rng_j
 
 
+def _mixed_spec(
+    num_values: Sequence[str], cat_values: Sequence[str], gamma: float
+):
+    """Mixed record distance to a centroid struct ``c``:
+    Σ ((x-c)/range)·((x-c)/range) + gamma · Σ (x_c = c_c ? 0 : 1)."""
+    fields = (
+        [(v, f"centroid_{v}", "double") for v in num_values]
+        + [(f"rng_{v}", f"range_{v}", "double") for v in num_values]
+        + [(c, f"centroid_{c}", "string") for c in cat_values]
+    )
+
+    def term(c):
+        d = reduce(add, [_sq((F.col(v) - c[v]) / c[f"rng_{v}"]) for v in num_values])
+        if not cat_values:
+            return d
+        cat = reduce(
+            add,
+            [
+                F.when(F.col(cv) == c[cv], F.lit(0.0)).otherwise(F.lit(1.0))
+                for cv in cat_values
+            ],
+        )
+        return d + F.lit(float(gamma)) * cat
+
+    return fields, term
+
+
 def kmeans_mixed_model(
     df: DataFrame,
     keys: Sequence[str],
@@ -870,13 +891,12 @@ def kmeans_mixed_model(
     gamma: float = 1.0,
     seed: int = 42,
     presample: int | None = 8192,
-    max_model_rows: int | None = 100_000,
-) -> DataFrame:
-    """Mixed-type cluster model: (keys..., cluster_id, centroid_<v>,
-    range_<v>, centroid_<c>, size). Same scale posture as kmeans_model —
-    hash-presampled bounded fit, ``max_model_rows``-bounded model
-    materialization (:func:`_finalize_model`), full-data codegen size
-    counts."""
+    max_model_rows: int | None = MAX_MODEL_ROWS,
+) -> Model:
+    """Mixed-type cluster model; the frame is (keys..., cluster_id,
+    centroid_<v>, range_<v>, centroid_<c>, size). Same scale posture as
+    kmeans_model: hash-presampled bounded fit, ``max_model_rows``-bounded
+    materialization, full-data codegen size counts."""
     full = df
     all_vals = [*num_values, *cat_values]
     if presample:
@@ -910,110 +930,15 @@ def kmeans_mixed_model(
     centroids_df = df.groupBy(*keys).applyInPandas(
         fit, schema=f"{key_schema}, cluster_id int, {cent}"
     )
-    return _finalize_model(
-        centroids_df,
-        lambda cents, bc: _assign_nearest_mixed(
-            full,
-            cents,
-            keys,
-            num_values,
-            cat_values,
-            gamma,
-            int(n_clusters),
-            broadcast_model=bc,
-        ),
-        keys,
-        max_model_rows,
-    )
-
-
-def _unrolled_nearest_mixed(
-    num_values: Sequence[str],
-    cat_values: Sequence[str],
-    gamma: float,
-    max_k: int,
-):
-    """Mixed-distance analogue of _unrolled_nearest against a ``_cents``
-    array<struct<cluster_id, v..., rng_v..., c...>> column:
-    d2 = Σ ((x-c)/range)·((x-c)/range) + gamma · Σ (x_c = c_c ? 0 : 1),
-    every square an explicit self-multiplication so the DuckDB oracle can
-    mirror it term-for-term."""
-    d2s = []
-    for i in range(max_k):
-        c = F.get(F.col("_cents"), i)
-        d = None
-        for v in num_values:
-            diff = (F.col(v) - c[v]) / c[f"rng_{v}"]
-            term = diff * diff
-            d = term if d is None else d + term
-        cat = None
-        for cv in cat_values:
-            term = F.when(F.col(cv) == c[cv], F.lit(0.0)).otherwise(F.lit(1.0))
-            cat = term if cat is None else cat + term
-        if cat is not None:
-            d = d + F.lit(float(gamma)) * cat
-        d2s.append(d)
-    m = F.least(*d2s) if len(d2s) > 1 else d2s[0]
-    return d2s, m
-
-
-def _mixed_cent_struct(num_values: Sequence[str], cat_values: Sequence[str]):
-    return F.struct(
-        F.col("cluster_id"),
-        *[F.col(f"centroid_{v}").alias(v) for v in num_values],
-        *[F.col(f"range_{v}").alias(f"rng_{v}") for v in num_values],
-        *[F.col(f"centroid_{c}").alias(c) for c in cat_values],
-    )
-
-
-def _mixed_inline_fields(num_values: Sequence[str], cat_values: Sequence[str]):
-    """_inline_cents field spec mirroring _mixed_cent_struct's layout."""
-    return (
-        [(v, f"centroid_{v}", "double") for v in num_values]
-        + [(f"rng_{v}", f"range_{v}", "double") for v in num_values]
-        + [(c, f"centroid_{c}", "string") for c in cat_values]
-    )
-
-
-def _assign_nearest_mixed(
-    df: DataFrame,
-    centroids: DataFrame,
-    keys: Sequence[str],
-    num_values: Sequence[str],
-    cat_values: Sequence[str],
-    gamma: float,
-    max_k: int,
-    broadcast_model: bool = True,
-) -> DataFrame:
-    joined = None
-    if broadcast_model:
-        rows = _local_model_rows(centroids)
-        if rows is not None:
-            joined = _inline_cents(df, rows, keys, _mixed_inline_fields(num_values, cat_values))
-    if joined is None:
-        per_key = centroids.groupBy(*keys).agg(
-            F.sort_array(
-                F.collect_list(_mixed_cent_struct(num_values, cat_values))
-            ).alias("_cents")
-        )
-        joined = df.join(
-            F.broadcast(per_key) if broadcast_model else per_key, list(keys)
-        )
-    d2s, _ = _unrolled_nearest_mixed(num_values, cat_values, gamma, max_k)
-    joined, d2_cols, m = _materialize_d2(joined, d2s)
-    best = None
-    for i, d2 in enumerate(d2_cols):
-        cid = F.get(F.col("_cents"), i)["cluster_id"]
-        best = F.when(d2 == m, cid) if best is None else best.when(d2 == m, cid)
-    return (
-        joined.withColumn("cluster_id", best)
-        .drop("_cents", *[f"_d2_{i}" for i in range(len(d2_cols))])
+    return _sized_model(
+        centroids_df, full, keys, _mixed_spec(num_values, cat_values, gamma),
+        int(n_clusters), max_model_rows,
     )
 
 
 def kmeans_mixed_score(
     df: DataFrame,
-    model: DataFrame,
+    model: Model,
     keys: Sequence[str],
     num_values: Sequence[str],
     cat_values: Sequence[str],
@@ -1023,47 +948,10 @@ def kmeans_mixed_score(
     max_clusters: int | None = None,
 ) -> DataFrame:
     """Mixed-type ClusterBasedPredictor scoring: sqrt of the mixed distance
-    to the nearest LARGE centroid (small clusters are anomaly pockets), as
-    a pure codegen expression over the broadcast model."""
-    rows = _local_model_rows(model)
-    joined = None
-    if rows is not None:
-        if max_clusters is None:
-            max_clusters = max(int(r["cluster_id"]) for r in rows) + 1
-        tot: dict = {}
-        for r in rows:
-            kt = tuple(r[k] for k in keys)
-            tot[kt] = tot.get(kt, 0) + int(r["size"])
-        large_rows = [
-            r
-            for r in rows
-            if int(r["size"]) >= tot[tuple(r[k] for k in keys)] * min_cluster_fraction
-        ]
-        joined = _inline_cents(
-            df, large_rows, keys, _mixed_inline_fields(num_values, cat_values)
-        )
-    if joined is None:
-        total = model.groupBy(*keys).agg(F.sum("size").alias("_total"))
-        large = (
-            model.join(F.broadcast(total), list(keys))
-            .filter(F.col("size") >= F.col("_total") * min_cluster_fraction)
-        )
-        if max_clusters is None:
-            max_clusters = int(model.agg(F.max("cluster_id")).first()[0]) + 1
-        per_key = large.groupBy(*keys).agg(
-            F.sort_array(
-                F.collect_list(_mixed_cent_struct(num_values, cat_values))
-            ).alias("_cents")
-        )
-        joined = df.join(F.broadcast(per_key), list(keys))
-    d2s, _ = _unrolled_nearest_mixed(
-        num_values, cat_values, gamma, int(max_clusters)
-    )
-    joined, d2_cols, m = _materialize_d2(joined, d2s)
-    return (
-        joined.withColumn("score", F.sqrt(m))
-        .drop("_cents", *[f"_d2_{i}" for i in range(len(d2_cols))])
-        .withColumn("label", tag_label(F.col("score"), threshold))
+    to the nearest LARGE centroid, as a pure codegen expression."""
+    return _cluster_score(
+        df, model, keys, _mixed_spec(num_values, cat_values, gamma),
+        min_cluster_fraction, threshold, max_clusters,
     )
 
 
@@ -1136,8 +1024,11 @@ def isolation_forest_fit(
     subsample: int = 256,
     seed: int = 42,
     presample: int | None = 16,
-) -> DataFrame:
-    """Per-key isolation forest; model = (keys..., tree_id, tree_json).
+    max_model_rows: int | None = MAX_MODEL_ROWS,
+) -> Model:
+    """Per-key isolation forest; the model frame is (keys..., tree_id,
+    tree_json, sample_n), bounded by ``max_model_rows`` (see
+    :func:`materialize`).
 
     Each key's forest is fit in one applyInPandas pass over a bounded
     bootstrap subsample — replaces the reference's per-depth-shuffle loop.
@@ -1171,8 +1062,11 @@ def isolation_forest_fit(
     key_schema = ", ".join(
         f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema if f.name in keys
     )
-    return df.groupBy(*keys).applyInPandas(
-        fit, schema=f"{key_schema}, tree_id int, tree_json string, sample_n long"
+    return materialize(
+        df.groupBy(*keys).applyInPandas(
+            fit, schema=f"{key_schema}, tree_id int, tree_json string, sample_n long"
+        ),
+        max_model_rows,
     )
 
 
@@ -1184,7 +1078,8 @@ def isolation_forest_merge(
     num_trees: int = 100,
     subsample: int = 256,
     seed: int = 42,
-) -> DataFrame:
+    max_model_rows: int | None = MAX_MODEL_ROWS,
+) -> Model:
     """#14 IsolationForestMerge (/root/reference/spark/src/main/scala/org/
     beymani/spark/multi/IsolationForestMerge.scala:35-203): incremental
     retraining hook. The reference re-samples the incremental records with
@@ -1195,7 +1090,7 @@ def isolation_forest_merge(
     the model contract — both are random-subsample forest rebuilds."""
     return isolation_forest_fit(
         df_old.select(*keys, *values).unionByName(df_new.select(*keys, *values)),
-        keys, values, num_trees, subsample, seed,
+        keys, values, num_trees, subsample, seed, max_model_rows=max_model_rows,
     )
 
 
@@ -1211,109 +1106,76 @@ def _forest_scores(trees, sample_n: int, x, threshold: float):
     return score, np.where(score > threshold, "O", "N")
 
 
-def _iforest_score_cogroup(
-    df: DataFrame,
-    mdl: DataFrame,
-    keys: Sequence[str],
-    values: Sequence[str],
-    threshold: float,
-    out_schema: StructType,
-) -> DataFrame:
-    """Over-cap isolation-forest scoring: the model stays distributed and
-    facts cogroup with their key's trees — no model-sized driver collect,
-    no broadcast. Math is byte-identical to the broadcast path (tree_id-
-    ordered path-length summation over the same vectorized traversal)."""
-    key_list = list(keys)
-    val_list = list(values)
-
-    def score_group(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        res = left.reset_index(drop=True)
-        if len(res) == 0:
-            res["score"] = pd.Series(dtype="float64")
-            res["label"] = pd.Series(dtype="object")
-            return res
-        if len(right) == 0:
-            res["score"] = None
-            res["label"] = "I"
-            return res
-        right = right.sort_values("tree_id", kind="mergesort")
-        trees = [json.loads(t) for t in right["tree_json"]]
-        n_s = int(right["sample_n"].iloc[0])
-        x = res[val_list].to_numpy(dtype=float)
-        score, label = _forest_scores(trees, n_s, x, threshold)
-        res["score"] = score
-        res["label"] = label
-        return res
-
-    return (
-        df.groupBy(*key_list)
-        .cogroup(mdl.groupBy(*key_list))
-        .applyInPandas(score_group, out_schema)
-    )
-
-
 def isolation_forest_score(
     df: DataFrame,
-    model: DataFrame,
+    model: Model,
     keys: Sequence[str],
     values: Sequence[str],
     threshold: float = 0.6,
-    max_model_rows: int | None = 100_000,
 ) -> DataFrame:
-    """score = 2^(-avg path length / c(sample_n)). Model materialization
-    follows the ``max_model_rows`` bounding convention (the kmeans
-    :func:`_finalize_model` pattern, applied to the forest):
+    """score = 2^(-avg path length / c(sample_n)), on the path the model's
+    materialization chose:
 
-    - |keys| * num_trees <= max_model_rows (the reference's design point —
-      100 trees, moderate key cardinality): the model is collected and
-      broadcast and each partition scores its own rows via vectorized mask
-      traversal (mapInPandas) — the fact table never shuffles, replacing
-      both the reference's cartesian (IsolationForestPredictor.scala:108)
-      and a cogroup exchange.
-    - above the cap (a keyed fit over millions of entities, where the
-      forest itself is cluster data): nothing model-sized touches the
-      driver — facts and trees cogroup on the keys and each task traverses
-      its own key's forest. The fact table pays one keyed shuffle, which
-      at millions of keys is well-spread; that is the price of a model too
-      big to broadcast. ``max_model_rows=None`` forces this path.
+    - rows on the driver (|keys| * num_trees at or under the fit's
+      ``max_model_rows``; the reference's design point is 100 trees and
+      moderate key cardinality): the forest is broadcast and each
+      partition scores its own rows via vectorized mask traversal
+      (mapInPandas) — the fact table never shuffles, replacing both the
+      reference's cartesian (IsolationForestPredictor.scala:108) and a
+      cogroup exchange.
+    - rows not on the driver (a keyed fit over millions of entities, where
+      the forest itself is cluster data): facts and trees cogroup on the
+      keys and each task traverses its own key's forest. The fact table
+      pays one keyed shuffle, which at millions of keys is well-spread.
 
     Both paths sort trees by tree_id before the path-length sum, so scores
     are bit-identical across paths and partitionings. Keys absent from the
     model tag 'I'. A streaming fact frame can only take the broadcast path
     (stream-static cogroup is unsupported), so an over-cap model there
-    raises at plan time — raise ``max_model_rows`` explicitly to opt into
-    collecting a larger deployed model."""
-    out_schema = StructType(
-        [f for f in df.schema if f.name in set(df.columns)]
-    ).add("score", "double").add("label", "string")
+    raises at plan time."""
+    out_schema = StructType([*df.schema]).add("score", "double").add("label", "string")
 
-    # checkpoint first (LAZY + count): the count materializes the
-    # checkpoint in one job — eager=True runs its own internal count, so
-    # the former shape paid a second fixed-latency job for nothing. The
-    # fit chain still runs exactly once: after this count the lineage is
-    # truncated, and the path-picking count cannot re-run it.
-    mdl = caching.checkpoint(model.select(*keys, "tree_id", "tree_json", "sample_n"))
-    n_model = mdl.count()
-    over_cap = max_model_rows is None or n_model > int(max_model_rows)
-    if over_cap:
+    if model.rows is None:
         if df.isStreaming:
             # the only over-cap strategy is a fact-model cogroup, which
             # stream-static frames cannot do — refuse loudly rather than
             # silently collecting a model the cap was set to keep off
             # the driver
             raise ValueError(
-                f"isolation forest model has {n_model} rows, over "
-                f"max_model_rows={max_model_rows}; a streaming scorer "
-                "serves a broadcast model — raise max_model_rows "
-                "explicitly to opt into collecting a model this large"
+                "isolation forest model is over its fit's max_model_rows, "
+                "so its rows are not on the driver; a streaming scorer "
+                "serves a broadcast model — refit with a larger "
+                "max_model_rows to collect a model this large"
             )
-        return _iforest_score_cogroup(
-            df, mdl, keys, values, threshold, out_schema
+
+        def score_group(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
+            res = left.reset_index(drop=True)
+            if len(res) == 0:
+                res["score"] = pd.Series(dtype="float64")
+                res["label"] = pd.Series(dtype="object")
+                return res
+            if len(right) == 0:
+                res["score"] = None
+                res["label"] = "I"
+                return res
+            right = right.sort_values("tree_id", kind="mergesort")
+            trees = [json.loads(t) for t in right["tree_json"]]
+            x = res[list(values)].to_numpy(dtype=float)
+            score, label = _forest_scores(
+                trees, int(right["sample_n"].iloc[0]), x, threshold
+            )
+            res["score"] = score
+            res["label"] = label
+            return res
+
+        return (
+            df.groupBy(*keys)
+            .cogroup(model.frame.groupBy(*keys))
+            .applyInPandas(score_group, out_schema)
         )
 
-    mdl_rows = mdl.collect()
     forests: dict = {}
-    for r in mdl_rows:
+    for r in model.rows:
         k = tuple(r[kk] for kk in keys)
         ent = forests.setdefault(k, {"trees": [], "n": int(r["sample_n"])})
         ent["trees"].append((int(r["tree_id"]), json.loads(r["tree_json"])))
@@ -1346,7 +1208,7 @@ def isolation_forest_score(
 
     def gen(batches):
         # tree traversal costs O(nodes) python ops per chunk regardless of
-        # chunk size — accumulate arrow batches to ~100k rows so the numpy
+        # chunk size — accumulate arrow batches to ~130k rows so the numpy
         # work dominates, with memory still bounded per chunk
         buf, buffered = [], 0
         for pdf in batches:
@@ -1354,20 +1216,12 @@ def isolation_forest_score(
                 continue
             buf.append(pdf)
             buffered += len(pdf)
-            if buffered >= 100_000:
+            if buffered >= 1 << 17:
                 yield score_chunk(pd.concat(buf, ignore_index=True))
                 buf, buffered = [], 0
         if buf:
             yield score_chunk(pd.concat(buf, ignore_index=True))
 
     # few-split sources (one parquet file) would run every chunk in a single
-    # python worker; round-robin them across the cluster first. On a real
-    # multi-split table this branch never fires and the fact table stays
-    # shuffle-free. Streaming frames skip the probe (.rdd is illegal on a
-    # stream — the multimodal._spread guard convention); micro-batch
-    # parallelism is the source's concern there.
-    if not df.isStreaming:
-        parallelism = df.sparkSession.sparkContext.defaultParallelism
-        if df.rdd.getNumPartitions() < parallelism // 2:
-            df = df.repartition(parallelism)
-    return df.mapInPandas(gen, out_schema)
+    # python worker; _spread round-robins them (and skips streams)
+    return _spread(df).mapInPandas(gen, out_schema)

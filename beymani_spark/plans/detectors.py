@@ -10,9 +10,11 @@ DataFrames:
         def score(self, df, model) -> DataFrame  # df + score + label
 
 Models are ordinary DataFrames: persist them with ``model.write.parquet``
-and reload for scoring — replacing the reference's text side-files. Each
-built-in detector below wraps the functional operators; user detectors just
-implement the same two methods.
+and reload for scoring — replacing the reference's text side-files. The
+isolation forest returns a ``multivariate.Model`` instead: persist its
+``frame`` and serve a reloaded one as ``multivariate.materialize(frame)``.
+Each built-in detector below wraps the functional operators; user
+detectors just implement the same two methods.
 """
 from __future__ import annotations
 
@@ -62,12 +64,12 @@ class IsolationForestDetector:
     seed: int = 42
     threshold: float = 0.6
 
-    def fit(self, df: DataFrame) -> DataFrame:
+    def fit(self, df: DataFrame) -> multivariate.Model:
         return multivariate.isolation_forest_fit(
             df, self.keys, self.values, self.num_trees, self.subsample, self.seed
         )
 
-    def score(self, df: DataFrame, model: DataFrame) -> DataFrame:
+    def score(self, df: DataFrame, model: multivariate.Model) -> DataFrame:
         return multivariate.isolation_forest_score(
             df, model, self.keys, self.values, self.threshold
         )

@@ -100,7 +100,7 @@ def kmeans_oracle(sf_dir: str) -> str:
         centers = kmeans_fit_core(
             kept[_KM_VALUES].to_numpy(dtype=float), 4, 20, 42
         )
-        # full-data sizes, mirroring _assign_nearest: self-multiplied
+        # full-data sizes, mirroring _kmeans_spec: self-multiplied
         # squared distance, left-to-right sum, first-index argmin
         x = sub[_KM_VALUES].to_numpy(dtype=float)
         d2 = np.stack(
@@ -167,7 +167,7 @@ def kmeans_mixed_oracle(sf_dir: str) -> str:
             kept[_KMM_CAT].to_numpy(dtype=object),
             4, 20, 1.0, 42,
         )
-        # full-data sizes, mirroring _assign_nearest_mixed term-for-term
+        # full-data sizes, mirroring _mixed_spec term-for-term
         xn = sub[_KM_VALUES].to_numpy(dtype=float)
         xc = sub[_KMM_CAT].to_numpy(dtype=object)
         d2 = np.stack(

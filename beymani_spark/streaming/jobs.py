@@ -1527,34 +1527,26 @@ def stream_media_phash_dedup(
 
 def stream_kmeans_score(
     stream_df: DataFrame,
-    model: DataFrame,
+    model,
     keys,
     values,
     min_cluster_fraction: float = 0.05,
     threshold: float = 3.0,
 ) -> DataFrame:
     """Streaming cluster-distance scoring against a batch-fitted k-means
-    model (multivariate.kmeans_model over the standing corpus): the tiny
-    centroid table broadcasts into the SAME stateless codegen scoring
+    ``Model`` (multivariate.kmeans_model over the standing corpus): the
+    tiny centroid model attaches to the SAME stateless codegen scoring
     expression the batch operator uses — the per-key centroid fold and
-    the large-cluster gate are aggregations over the MODEL (static side),
-    never the stream, so the plan is a stream-static broadcast join plus
-    column expressions: no watermark, no state, per-row output identical
-    to a batch run (parity-tested). Refit cadence is the caller's policy
-    — restart the query with a fresh model (the stream_topic_assign
-    convention). max_clusters resolves from the model at plan time (a
-    driver-side max over the bounded model frame — legal for a stream
-    because the model side is batch)."""
+    the large-cluster gate work on the MODEL (static side), never the
+    stream, so the plan is column expressions over the stream (inline
+    centroid literals, or a stream-static join): no watermark, no state,
+    per-row output identical to a batch run (parity-tested). Refit cadence
+    is the caller's policy — restart the query with a fresh model (the
+    stream_topic_assign convention). The unroll width and the empty-model
+    check read the model's driver rows, so planning runs no Spark job; an
+    over-cap model reads its width off the model frame with one job."""
     from ..operators.multivariate import kmeans_score
 
-    top = model.agg(F.max("cluster_id")).first()[0]
-    if top is None:
-        raise ValueError(
-            "empty kmeans model: the model frame has no centroid rows — "
-            "fit kmeans_model over the standing corpus before starting "
-            "the stream"
-        )
-    max_clusters = int(top) + 1
     return kmeans_score(
         stream_df,
         model,
@@ -1562,34 +1554,29 @@ def stream_kmeans_score(
         values,
         min_cluster_fraction=min_cluster_fraction,
         threshold=threshold,
-        max_clusters=max_clusters,
     )
 
 
 def stream_isolation_forest_score(
     stream_df: DataFrame,
-    model: DataFrame,
+    model,
     keys,
     values,
     threshold: float = 0.6,
-    max_model_rows: int | None = 100_000,
 ) -> DataFrame:
     """Streaming isolation-forest scoring against a batch-fitted forest
-    (multivariate.isolation_forest_fit): the bounded model (|keys| x
-    num_trees JSON paths) collects and broadcasts exactly as in batch,
-    and each micro-batch scores via the same stateless vectorized
-    mapInPandas traversal — stream-compatible, no watermark, no state;
-    keys absent from the model tag 'I' (the serving jobs' unlearned
-    convention). The batch operator's few-split repartition probe is
-    skipped on streams (.rdd is illegal there); micro-batch parallelism
-    belongs to the source. Per-row output equals a batch run over the
-    same rows (parity-tested)."""
+    ``Model`` (multivariate.isolation_forest_fit): the driver-held forest
+    broadcasts exactly as in batch, and each micro-batch scores via the
+    same stateless vectorized mapInPandas traversal — stream-compatible,
+    no watermark, no state; keys absent from the model tag 'I' (the
+    serving jobs' unlearned convention). A model over its fit's
+    ``max_model_rows`` raises at plan time (stream-static cogroup is
+    unsupported). The batch operator's few-split repartition probe is
+    skipped on streams; micro-batch parallelism belongs to the source.
+    Per-row output equals a batch run over the same rows (parity-tested)."""
     from ..operators.multivariate import isolation_forest_score
 
-    return isolation_forest_score(
-        stream_df, model, keys, values, threshold=threshold,
-        max_model_rows=max_model_rows,
-    )
+    return isolation_forest_score(stream_df, model, keys, values, threshold=threshold)
 
 
 def apply_stream_multigram(

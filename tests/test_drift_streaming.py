@@ -1197,8 +1197,17 @@ def test_stream_kmeans_score_matches_batch(spark, stream_dirs):
     }
 
     stream = spark.readStream.schema(arriving.schema).parquet(src + "/km")
+    # the unroll width comes from the model's driver rows: planning the
+    # stream runs no Spark job
+    sc = spark.sparkContext
+    sc.setJobGroup("km_plan", "stream kmeans planning")
+    try:
+        scored = stream_kmeans_score(stream, model, keys, vals)
+        assert not sc.statusTracker().getJobIdsForGroup("km_plan")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
     q = streams.start_sink(
-        stream_kmeans_score(stream, model, keys, vals),
+        scored,
         {"format": "memory", "queryName": "km_t", "checkpoint": chk + "/km",
          "trigger": "availableNow"},
     )
@@ -1555,29 +1564,38 @@ def test_stream_iforest_over_cap_model_raises(spark, stream_dirs):
     )
     model = isolation_forest_fit(
         li, ["l_returnflag"], ["l_quantity", "l_extendedprice"],
-        num_trees=5, subsample=32,
+        num_trees=5, subsample=32, max_model_rows=1,
     )
+    assert model.rows is None
     li.limit(10).write.mode("overwrite").parquet(src + "/ifoc")
     stream = spark.readStream.schema(li.schema).parquet(src + "/ifoc")
     with pytest.raises(ValueError, match="max_model_rows"):
         stream_isolation_forest_score(
-            stream, model, ["l_returnflag"],
-            ["l_quantity", "l_extendedprice"], max_model_rows=1,
+            stream, model, ["l_returnflag"], ["l_quantity", "l_extendedprice"]
         )
 
 
 def test_stream_kmeans_score_empty_model_raises(spark):
-    """An empty centroid frame (a fit that produced nothing, or a wrong
-    path) must fail loudly at plan time, not TypeError on int(None)."""
-    from beymani_spark.operators.multivariate import kmeans_model
+    """An empty centroid model (a fit that produced nothing, or a wrong
+    path) must fail loudly at plan time, not TypeError on int(None), and
+    must read its emptiness off the driver rows without a Spark job."""
+    from beymani_spark.operators.multivariate import kmeans_model, materialize
     from beymani_spark.sources import load_table
     from beymani_spark.streaming.jobs import stream_kmeans_score
 
     li = load_table(spark, "/root/testdata/sf0.001", "lineitem")
     keys, vals = ["l_returnflag"], ["l_quantity"]
-    model = kmeans_model(li, keys, vals, n_clusters=2, presample=64).limit(0)
-    with pytest.raises(ValueError, match="empty kmeans model"):
-        stream_kmeans_score(li, model, keys, vals)
+    fitted = kmeans_model(li, keys, vals, n_clusters=2, presample=64)
+    model = materialize(fitted.frame.limit(0))
+    assert model.rows == []
+    sc = spark.sparkContext
+    sc.setJobGroup("empty_km", "empty kmeans model check")
+    try:
+        with pytest.raises(ValueError, match="empty kmeans model"):
+            stream_kmeans_score(li, model, keys, vals)
+        assert not sc.statusTracker().getJobIdsForGroup("empty_km")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
 
 
 def test_stream_multigram_boolean_categorical_matches_batch(

@@ -338,13 +338,13 @@ def test_isolation_forest_partition_invariant(spark, mv_df):
     kwargs = dict(num_trees=10, subsample=64, seed=7)
     m1 = (
         multivariate.isolation_forest_fit(mv_df, ["key"], ["x", "y"], **kwargs)
-        .toPandas().sort_values("tree_id", ignore_index=True)
+        .frame.toPandas().sort_values("tree_id", ignore_index=True)
     )
     m2 = (
         multivariate.isolation_forest_fit(
             mv_df.repartition(7), ["key"], ["x", "y"], **kwargs
         )
-        .toPandas().sort_values("tree_id", ignore_index=True)
+        .frame.toPandas().sort_values("tree_id", ignore_index=True)
     )
     assert list(m1.tree_json) == list(m2.tree_json)
 
@@ -518,10 +518,10 @@ def test_kmeans_mixed_fit_partition_invariant(spark):
     df8 = spark.createDataFrame(pdf).repartition(8)
     m1 = multivariate.kmeans_mixed_model(
         df1, ["key"], ["x", "y"], ["color"], n_clusters=3, seed=1
-    ).toPandas().sort_values("cluster_id", ignore_index=True)
+    ).frame.toPandas().sort_values("cluster_id", ignore_index=True)
     m8 = multivariate.kmeans_mixed_model(
         df8, ["key"], ["x", "y"], ["color"], n_clusters=3, seed=1
-    ).toPandas().sort_values("cluster_id", ignore_index=True)
+    ).frame.toPandas().sort_values("cluster_id", ignore_index=True)
     pd.testing.assert_frame_equal(m1, m8)
 
 

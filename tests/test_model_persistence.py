@@ -145,6 +145,7 @@ def test_detector_model_roundtrip_serves_stream_scoring(spark, tmp_path):
         isolation_forest_score,
         kmeans_model,
         kmeans_score,
+        materialize,
     )
     from beymani_spark.sources import load_table
     from beymani_spark.sources.models import load_model, save_model
@@ -153,8 +154,8 @@ def test_detector_model_roundtrip_serves_stream_scoring(spark, tmp_path):
     keys, vals = ["l_returnflag"], ["l_quantity", "l_extendedprice"]
 
     km = kmeans_model(li, keys, vals, n_clusters=3, presample=64)
-    save_model(km, str(tmp_path / "km"), "kmeans")
-    km2 = load_model(spark, str(tmp_path / "km"), expect_name="kmeans")
+    save_model(km.frame, str(tmp_path / "km"), "kmeans")
+    km2 = materialize(load_model(spark, str(tmp_path / "km"), expect_name="kmeans"))
     a = {
         (r["l_orderkey"], r["l_linenumber"]): (round(r["score"], 9), r["label"])
         for r in kmeans_score(li, km, keys, vals).collect()
@@ -166,8 +167,8 @@ def test_detector_model_roundtrip_serves_stream_scoring(spark, tmp_path):
     assert a == b and a
 
     isf = isolation_forest_fit(li, keys, vals, num_trees=10, subsample=64)
-    save_model(isf, str(tmp_path / "isf"), "iforest")
-    isf2 = load_model(spark, str(tmp_path / "isf"), expect_name="iforest")
+    save_model(isf.frame, str(tmp_path / "isf"), "iforest")
+    isf2 = materialize(load_model(spark, str(tmp_path / "isf"), expect_name="iforest"))
     a = {
         (r["l_orderkey"], r["l_linenumber"]): (round(r["score"], 9), r["label"])
         for r in isolation_forest_score(li, isf, keys, vals).collect()

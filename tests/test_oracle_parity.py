@@ -111,3 +111,28 @@ BLOCKED_PAIR_QUERIES = [
 @pytest.mark.parametrize("name", BLOCKED_PAIR_QUERIES)
 def test_blocked_pair_queries_physical_config_invariant(spark, sf_dir, name, config):
     _check(spark, sf_dir, name, PHYSICAL_CONFIGS[config], f"[{config}]")
+
+
+# Every registry query that fits a k-means or isolation-forest Model, run
+# again with every materialize forced over the cap (max_model_rows=0), so
+# the model stays a distributed frame end to end.
+MODEL_QUERIES = [
+    "kmeans_cluster_score", "kmeans_mixed", "isolation_forest",
+    "isolation_forest_merge",
+]
+
+
+@pytest.mark.parametrize("name", MODEL_QUERIES)
+def test_model_queries_over_cap_match_oracle(spark, sf_dir, name, monkeypatch):
+    from beymani_spark.operators import multivariate
+
+    real = multivariate.materialize
+    models = []
+
+    def over_cap(frame, max_model_rows=None):
+        models.append(real(frame, max_model_rows=0))
+        return models[-1]
+
+    monkeypatch.setattr(multivariate, "materialize", over_cap)
+    _check(spark, sf_dir, name, tag="[over_cap]")
+    assert models and all(m.rows is None for m in models)

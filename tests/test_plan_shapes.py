@@ -835,7 +835,9 @@ def test_probe_join_callers_sign_once(spark):
             assert _executed_node_counts(out)["MapInPandas"] == 1
 
 
-def test_isolation_forest_merge_fit_presamples_union_score_no_exchange(spark):
+def test_isolation_forest_merge_fit_presamples_union_score_no_exchange(
+    spark, monkeypatch
+):
     """isolation_forest_merge's refit exchange must carry the
     hash-presampled UNION pool (xxhash64 threshold filter below the group
     shuffle — ~2k rows/key at any N, never the fact table), and scoring
@@ -851,10 +853,19 @@ def test_isolation_forest_merge_fit_presamples_union_score_no_exchange(spark):
     keys, vals = ["l_returnflag"], ["l_quantity", "l_extendedprice"]
     old = li.filter(F.col("l_orderkey") % 3 != 0)
     new = li.filter(F.col("l_orderkey") % 3 != 2)
+    fits = []
+    real_materialize = mv.materialize
+
+    def record(frame, *a, **kw):
+        fits.append(frame)
+        return real_materialize(frame, *a, **kw)
+
+    monkeypatch.setattr(mv, "materialize", record)
     model = mv.isolation_forest_merge(
         old, new, keys, vals, num_trees=5, subsample=32, seed=7
     )
-    mplan = _plan(model)
+    (fit,) = fits
+    mplan = _plan(fit)
     assert "FlatMapGroupsInPandas" in mplan
     assert "xxhash64" in mplan, "merged fit pool must be hash-presampled"
     assert "Union" in mplan, "fit must consume the old+new union"
@@ -1148,11 +1159,12 @@ def test_kmeans_model_over_cap_stays_distributed(spark, monkeypatch):
     li = load_table(spark, SF, "lineitem").limit(4000)
     keys = ["l_returnflag", "l_linestatus"]
     vals = ["l_quantity", "l_extendedprice"]
-    expected = sorted(
-        tuple(r)
-        for r in kmeans_model(
-            li, keys, vals, n_clusters=3, presample=64
-        ).collect()
+    small_model = kmeans_model(li, keys, vals, n_clusters=3, presample=64)
+    assert small_model.rows is not None
+    expected = sorted(tuple(r) for r in small_model.frame.collect())
+    small_mixed = kmeans_mixed_model(
+        li, ["l_returnflag"], ["l_quantity"], ["l_linestatus"],
+        n_clusters=2, presample=64,
     )
 
     real_to_pandas = cdf.DataFrame.toPandas
@@ -1167,7 +1179,8 @@ def test_kmeans_model_over_cap_stays_distributed(spark, monkeypatch):
         model = kmeans_model(
             li, keys, vals, n_clusters=3, presample=64, max_model_rows=0
         )
-        assert model.count() == len(expected)
+        assert model.rows is None
+        assert model.frame.count() == len(expected)
         mixed = kmeans_mixed_model(
             li,
             ["l_returnflag"],
@@ -1177,19 +1190,21 @@ def test_kmeans_model_over_cap_stays_distributed(spark, monkeypatch):
             presample=64,
             max_model_rows=0,
         )
-        assert mixed.count() > 0
+        assert mixed.rows is None
     finally:
         monkeypatch.setattr(cdf.DataFrame, "toPandas", real_to_pandas)
         monkeypatch.setattr(cdf.DataFrame, "collect", real_collect)
-    got = sorted(tuple(r) for r in model.collect())
+    got = sorted(tuple(r) for r in model.frame.collect())
     assert got == expected, "over-cap model must equal the collected model"
 
     # end-to-end score parity (round-10 directive): a real fit routed
     # through the distributed path must score bit-identically to the
-    # collected-path model
-    from beymani_spark.operators.multivariate import kmeans_score
+    # collected-path model, for both k-means families
+    from beymani_spark.operators.multivariate import (
+        kmeans_mixed_score,
+        kmeans_score,
+    )
 
-    small_model = kmeans_model(li, keys, vals, n_clusters=3, presample=64)
     want = sorted(
         tuple(r)
         for r in kmeans_score(
@@ -1203,6 +1218,14 @@ def test_kmeans_model_over_cap_stays_distributed(spark, monkeypatch):
         ).collect()
     )
     assert have == want, "over-cap model must score identically"
+    mixed_args = (["l_returnflag"], ["l_quantity"], ["l_linestatus"])
+    want = sorted(
+        tuple(r) for r in kmeans_mixed_score(li, small_mixed, *mixed_args).collect()
+    )
+    have = sorted(
+        tuple(r) for r in kmeans_mixed_score(li, mixed, *mixed_args).collect()
+    )
+    assert have == want and want, "over-cap mixed model must score identically"
 
 
 def test_iforest_over_cap_scores_match_broadcast_path(spark, monkeypatch):
@@ -1225,15 +1248,17 @@ def test_iforest_over_cap_scores_match_broadcast_path(spark, monkeypatch):
         .localCheckpoint(eager=True)  # limit() must not re-sample per job
     )
     keys, vals = ["l_returnflag"], ["l_quantity", "l_extendedprice"]
-    model = mv.isolation_forest_fit(
+    fitted = mv.isolation_forest_fit(
         li, keys, vals, num_trees=20, subsample=64, seed=11
     )
-    # drop one key from the model so both paths exercise the 'I' branch,
-    # and freeze the fit so both paths score the SAME trees
-    model = model.filter(F.col("l_returnflag") != "R").localCheckpoint(eager=True)
+    # drop one key from the model so both paths exercise the 'I' branch;
+    # both materializations serve the SAME trees
+    frame = fitted.frame.filter(F.col("l_returnflag") != "R")
     expected = sorted(
         tuple(r)
-        for r in mv.isolation_forest_score(li, model, keys, vals).collect()
+        for r in mv.isolation_forest_score(
+            li, mv.materialize(frame), keys, vals
+        ).collect()
     )
     assert any(r[-1] == "I" for r in expected)
 
@@ -1247,7 +1272,7 @@ def test_iforest_over_cap_scores_match_broadcast_path(spark, monkeypatch):
     monkeypatch.setattr(cdf.DataFrame, "collect", boom)
     try:
         scored = mv.isolation_forest_score(
-            li, model, keys, vals, max_model_rows=0
+            li, mv.materialize(frame, max_model_rows=0), keys, vals
         )
         assert scored.count() == len(expected)
     finally:
