@@ -491,7 +491,9 @@ class Model:
     ModelBasedPredictor base (predictor/ModelBasedPredictor.java:32).
     ``frame`` is always there; ``rows`` holds the same rows on the driver,
     or is None when the model is over its cap and stays cluster data.
-    Save ``frame``; serve a reloaded one as ``materialize(load_model(...))``."""
+    Save ``frame`` inside the cache scope that fitted it (a checkpoint's
+    blocks go when the scope exits); serve a reloaded one as
+    ``materialize(load_model(...))``."""
 
     frame: DataFrame
     rows: list | None
@@ -506,18 +508,17 @@ def materialize(
     so the fit runs exactly once and no later action (a size count, a
     broadcast, a save) re-runs it. Then the split is on the measured size:
 
-    - at or under ``max_model_rows`` the rows are collected and ``frame``
-      becomes a local relation of them, which outlives the cache scope;
+    - at or under ``max_model_rows`` the rows are collected as well;
     - above it (a keyed fit over millions of entities) nothing model-sized
-      reaches the driver: ``frame`` stays the checkpoint, ``rows`` is None.
+      reaches the driver and ``rows`` is None.
 
-    ``max_model_rows=None`` forces the distributed path."""
+    ``frame`` is the checkpoint either way; the scorers read ``rows`` when
+    they are there. ``max_model_rows=None`` forces the distributed path."""
     frame = caching.checkpoint(frame)
     n_model = frame.count()
     if max_model_rows is None or n_model > int(max_model_rows):
         return Model(frame, None)
-    rows = frame.collect()
-    return Model(frame.sparkSession.createDataFrame(rows, frame.schema), rows)
+    return Model(frame, frame.collect())
 
 
 #: inline-literal bound: a model with at most this many key groups is baked
@@ -662,9 +663,10 @@ def _sized_model(
     ``size``: its full-data nearest-centroid count, a codegen pass over
     the unsampled table, so the small-cluster rule stays exact on the true
     distribution even when the fit was presampled. Under the cap the
-    counts merge into the driver rows; over it they attach by a join on
-    (keys, cluster_id) and nothing model-sized touches the driver (the
-    tfidf_vocab(max_vocab) bounding pattern)."""
+    counts merge into the driver rows, and the model frame is a local
+    relation of them that outlives the cache scope; over it they attach
+    lazily by a join on (keys, cluster_id) and nothing model-sized
+    touches the driver (the tfidf_vocab(max_vocab) bounding pattern)."""
     cents = materialize(centroids_df, max_model_rows)
     ids = [*keys, "cluster_id"]
     sizes = (
@@ -673,9 +675,7 @@ def _sized_model(
         .agg(F.count("*").alias("size"))
     )
     if cents.rows is None:
-        # materialized too, so the scorer's large-cluster total and its
-        # centroid join do not each re-run the full-data size pass
-        return materialize(
+        return Model(
             cents.frame.join(sizes, ids, "left").withColumn(
                 "size", F.coalesce(F.col("size"), F.lit(0).cast("long"))
             ),
@@ -1078,7 +1078,6 @@ def isolation_forest_merge(
     num_trees: int = 100,
     subsample: int = 256,
     seed: int = 42,
-    max_model_rows: int | None = MAX_MODEL_ROWS,
 ) -> Model:
     """#14 IsolationForestMerge (/root/reference/spark/src/main/scala/org/
     beymani/spark/multi/IsolationForestMerge.scala:35-203): incremental
@@ -1090,7 +1089,7 @@ def isolation_forest_merge(
     the model contract — both are random-subsample forest rebuilds."""
     return isolation_forest_fit(
         df_old.select(*keys, *values).unionByName(df_new.select(*keys, *values)),
-        keys, values, num_trees, subsample, seed, max_model_rows=max_model_rows,
+        keys, values, num_trees, subsample, seed,
     )
 
 
@@ -1208,7 +1207,7 @@ def isolation_forest_score(
 
     def gen(batches):
         # tree traversal costs O(nodes) python ops per chunk regardless of
-        # chunk size — accumulate arrow batches to ~130k rows so the numpy
+        # chunk size — accumulate arrow batches to ~100k rows so the numpy
         # work dominates, with memory still bounded per chunk
         buf, buffered = [], 0
         for pdf in batches:
@@ -1216,7 +1215,7 @@ def isolation_forest_score(
                 continue
             buf.append(pdf)
             buffered += len(pdf)
-            if buffered >= 1 << 17:
+            if buffered >= 100_000:
                 yield score_chunk(pd.concat(buf, ignore_index=True))
                 buf, buffered = [], 0
         if buf:

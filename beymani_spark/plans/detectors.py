@@ -6,15 +6,16 @@ ModelBasedPredictor.java:32); ours is a small Python protocol over
 DataFrames:
 
     class Detector(Protocol):
-        def fit(self, df) -> DataFrame        # model as a DataFrame
+        def fit(self, df) -> DataFrame | Model  # the fitted model
         def score(self, df, model) -> DataFrame  # df + score + label
 
-Models are ordinary DataFrames: persist them with ``model.write.parquet``
-and reload for scoring — replacing the reference's text side-files. The
-isolation forest returns a ``multivariate.Model`` instead: persist its
-``frame`` and serve a reloaded one as ``multivariate.materialize(frame)``.
-Each built-in detector below wraps the functional operators; user
-detectors just implement the same two methods.
+A model is a DataFrame, or for the isolation forest a
+``multivariate.Model`` whose ``frame`` is that DataFrame. Persist the
+DataFrame with ``.write.parquet`` and reload it for scoring — replacing
+the reference's text side-files: every built-in ``score`` takes the
+reloaded DataFrame as well as what ``fit`` returned. Each built-in
+detector below wraps the functional operators; user detectors just
+implement the same two methods.
 """
 from __future__ import annotations
 
@@ -29,9 +30,11 @@ from ..operators import multivariate, profile, zscore
 
 @runtime_checkable
 class Detector(Protocol):
-    def fit(self, df: DataFrame) -> DataFrame: ...
+    def fit(self, df: DataFrame) -> DataFrame | multivariate.Model: ...
 
-    def score(self, df: DataFrame, model: DataFrame) -> DataFrame: ...
+    def score(
+        self, df: DataFrame, model: DataFrame | multivariate.Model
+    ) -> DataFrame: ...
 
 
 @dataclass
@@ -69,7 +72,11 @@ class IsolationForestDetector:
             df, self.keys, self.values, self.num_trees, self.subsample, self.seed
         )
 
-    def score(self, df: DataFrame, model: multivariate.Model) -> DataFrame:
+    def score(
+        self, df: DataFrame, model: DataFrame | multivariate.Model
+    ) -> DataFrame:
+        if not isinstance(model, multivariate.Model):  # a reloaded frame
+            model = multivariate.materialize(model)
         return multivariate.isolation_forest_score(
             df, model, self.keys, self.values, self.threshold
         )

@@ -32,7 +32,7 @@ def test_detector_protocol_fit_score_roundtrip(spark, tmp_path):
     assert scored.filter("label = 'O'").count() == direct.filter("label = 'O'").count()
 
 
-def test_detector_protocol_isolation_forest(spark):
+def test_detector_protocol_isolation_forest(spark, tmp_path):
     li = load_table(spark, "/root/testdata/sf0.001", "lineitem").select(
         "l_orderkey", "l_linenumber", "l_returnflag", "l_quantity", "l_extendedprice"
     )
@@ -41,8 +41,14 @@ def test_detector_protocol_isolation_forest(spark):
         num_trees=10, subsample=64,
     )
     assert isinstance(det, Detector)
-    out = det.score(li, det.fit(li))
+    model = det.fit(li)
+    out = det.score(li, model)
     assert out.count() == li.count()
+    # the model's frame persists like any table and scores once reloaded
+    mpath = str(tmp_path / "model")
+    model.frame.write.parquet(mpath)
+    reloaded = det.score(li, spark.read.parquet(mpath))
+    assert sorted(reloaded.collect()) == sorted(out.collect())
 
 
 def test_detector_mahalanobis(spark):
