@@ -1,5 +1,5 @@
 """Banded candidate-pair engine: the one LSH join behind every batch
-near-dup operator (minhash, containment, both simhash forms, perceptual
+near-dup operator (minhash, containment, simhash, perceptual
 image/audio/video hashes, hyperplane cosine and pair distances).
 
 Reference analogue: the banded pair-candidate builder that feeds the

@@ -5,21 +5,19 @@ Scale posture:
 - exact_duplicates: one groupBy on md5(text) — the canonical 100 TB dedup.
 - jaccard_pairs: *exact* near-dup within token-length bands — the
   correctness/oracle path. O(B²) per band; band width bounds the blow-up.
-- minhash_lsh_pairs / containment_pairs / simhash_dup_pairs(_auto): the
-  scale paths — a per-doc sketch (k minhashes, or a SimHash) feeds the
-  banded candidate-pair engine (banding.banded_pairs, which states the
-  join shape and the sketch persist once), and only the candidates
-  are verified exactly (shingle counts, or bit_count(xor)).
+- minhash_lsh_pairs / containment_pairs / simhash_dup_pairs: the scale
+  paths — a per-doc sketch (k minhashes, or a SimHash) feeds the banded
+  candidate-pair engine (banding.banded_pairs, which states the join
+  shape and the sketch persist once), and only the candidates are
+  verified exactly (shingle counts, or bit_count(xor)).
 
-Hashing: both sketch families take ``hash_fn``:
-- ``"md5"`` (registry default): hashes derive from Spark's md5() hex string,
-  which DuckDB computes identically, so MinHash-LSH and SimHash are fully
-  DuckDB-oracle-verifiable (hash parity, not just rows). MinHash takes the
-  lexicographic min over md5 hex strings; SimHash extracts 32 bits from the
-  md5 prefix. md5 is a JVM codegen built-in, so the scale posture is
-  unchanged (one digest per shingle/token occurrence).
-- ``"xxhash64"``: cheaper digests for petabyte-scale runs where oracle
-  reproducibility is not needed.
+Hashing: every MinHash and SimHash sketch derives from Spark's md5() hex
+string, which DuckDB computes identically, so MinHash-LSH and SimHash are
+fully DuckDB-oracle-verifiable (hash parity, not just rows). MinHash takes
+a 32-bit base hash from the first md5 word; SimHash takes sketch bit b
+from md5 word b // 32. md5 is a JVM codegen built-in: one digest per
+shingle/token occurrence. The streaming bands (rowwise_minhash_bands) use
+the same arithmetic, so batch and stream bands always match.
 """
 from __future__ import annotations
 
@@ -194,26 +192,22 @@ def minhash_signatures(
     text_col: str = "text",
     num_hashes: int = 16,
     n: int = 3,
-    hash_fn: str = "md5",
 ) -> DataFrame:
     """k minhashes per doc: minhash_i = min over shingles of h_i(sh).
 
-    ``hash_fn="md5"`` computes ONE md5 per shingle occurrence, takes the
-    first 8 hex chars as a 32-bit base hash, and derives the k hashes as
-    affine maps (a_i*h+b_i) mod 2^61-1 (Kirsch-Mitzenmacher double
-    hashing) — k-1 of the k digests are replaced by integer multiply-adds,
-    and DuckDB reproduces every step bit-for-bit. ``"xxhash64"`` hashes k
-    times with the seed as salt (cheapest digests, not oracle-able).
+    ONE md5 per shingle occurrence: the first 8 hex chars are a 32-bit
+    base hash, and the k hashes are affine maps (a_i*h+b_i) mod 2^61-1
+    (Kirsch-Mitzenmacher double hashing) — k-1 of the k digests are
+    replaced by integer multiply-adds, and DuckDB reproduces every step
+    bit-for-bit.
 
     One explode + one partial-aggregated groupBy — the hash/min aggregates
     run in a single codegen pass."""
     ex = exploded_shingles(df, id_col, text_col, n)
-    return _signatures_from_shingles(ex, num_hashes, hash_fn)
+    return _signatures_from_shingles(ex, num_hashes)
 
 
-def _signatures_from_shingles(
-    ex: DataFrame, num_hashes: int, hash_fn: str
-) -> DataFrame:
+def _signatures_from_shingles(ex: DataFrame, num_hashes: int) -> DataFrame:
     """Signature aggregation over an existing (_id, sh) frame — lets
     minhash_lsh_pairs feed both the signatures and the verification join
     from ONE persisted shingle set instead of exploding twice.
@@ -221,32 +215,24 @@ def _signatures_from_shingles(
     The md5 base hash is projected as its own column before the k affine
     aggregates: CollapseProject won't inline a non-cheap alias referenced k
     times, so each shingle pays ONE digest+conv instead of k (the
-    Kirsch-Mitzenmacher point). ``xxhash64`` stays the production default
-    for petabyte runs where oracle reproducibility isn't needed — k native
-    digests, no hex/string detour at all."""
-    if hash_fn == "md5":
-        keyed = ex.select(
-            "_id",
-            F.conv(F.substring(F.md5("sh"), 1, 8), 16, 10)
-            .cast("long")
-            .alias("_h32"),
-        )
-        hashes = [
-            F.pmod(F.lit(a) * F.col("_h32") + F.lit(b), F.lit(MINHASH_P))
-            for a, b in minhash_affine_constants(num_hashes)
-        ]
-    else:
-        keyed = ex
-        hashes = [F.xxhash64("sh", F.lit(i)) for i in range(num_hashes)]
+    Kirsch-Mitzenmacher point)."""
+    keyed = ex.select(
+        "_id",
+        F.conv(F.substring(F.md5("sh"), 1, 8), 16, 10).cast("long").alias("_h32"),
+    )
+    hashes = [
+        F.pmod(F.lit(a) * F.col("_h32") + F.lit(b), F.lit(MINHASH_P))
+        for a, b in minhash_affine_constants(num_hashes)
+    ]
     return keyed.groupBy("_id").agg(
         *[F.min(h).alias(f"mh_{i}") for i, h in enumerate(hashes)]
     )
 
 
-def minhash_band_sigs(num_hashes: int, bands: int, hash_fn: str = "md5") -> list[Column]:
+def minhash_band_sigs(num_hashes: int, bands: int) -> list[Column]:
     """LSH band signature expressions over the ``mh_0..mh_{k-1}`` minhash
     columns: band b digests its ``num_hashes // bands`` minhashes (md5 of
-    the '|'-joined decimals, DuckDB-reproducible; ``hash`` otherwise). ONE
+    the '|'-joined decimals, DuckDB-reproducible). ONE
     source of truth for the batch candidate join, the band manifest of the
     incremental path (_banded_signatures) and the row-wise streaming form
     (rowwise_minhash_bands), so the three can never band differently."""
@@ -259,21 +245,17 @@ def minhash_band_sigs(num_hashes: int, bands: int, hash_fn: str = "md5") -> list
 
     def band_sig(b: int) -> Column:
         cols = [F.col(f"mh_{b * rows_per_band + r}") for r in range(rows_per_band)]
-        if hash_fn == "md5":
-            return F.md5(F.concat_ws("|", *[c.cast("string") for c in cols]))
-        return F.hash(*cols).cast("string")
+        return F.md5(F.concat_ws("|", *[c.cast("string") for c in cols]))
 
     return [band_sig(b) for b in range(bands)]
 
 
-def _banded_signatures(
-    sigs: DataFrame, num_hashes: int, bands: int, hash_fn: str
-) -> DataFrame:
+def _banded_signatures(sigs: DataFrame, num_hashes: int, bands: int) -> DataFrame:
     """(_id, band, sig) — one LSH band signature row per (doc, band): the
     persisted manifest format of the incremental near-dup path
     (incremental_minhash, corpus_band_manifest). A single posexplode emits
     the band rows, no shuffle."""
-    band_sigs = minhash_band_sigs(num_hashes, bands, hash_fn)
+    band_sigs = minhash_band_sigs(num_hashes, bands)
     return sigs.select("_id", F.posexplode(F.array(*band_sigs)).alias("band", "sig"))
 
 
@@ -284,7 +266,6 @@ def _shingle_overlap_pairs(
     num_hashes: int,
     bands: int,
     n: int,
-    hash_fn: str,
 ) -> DataFrame:
     """Banded-minhash candidates with their exact shingle counts:
     (src, dst, _inter, _na, _nb) — |A∩B|, |A|, |B|. The one verification
@@ -306,9 +287,9 @@ def _shingle_overlap_pairs(
     shuffle volume is |docs| counts, not shingle rows."""
     sh = caching.persist(exploded_shingles(df, id_col, text_col, n))
     cand = banded_pairs(
-        _signatures_from_shingles(sh, num_hashes, hash_fn),
+        _signatures_from_shingles(sh, num_hashes),
         "_id",
-        minhash_band_sigs(num_hashes, bands, hash_fn),
+        minhash_band_sigs(num_hashes, bands),
     )
     sizes = sh.groupBy("_id").agg(F.count("*").alias("_n"))
     inter = (
@@ -334,12 +315,11 @@ def minhash_lsh_pairs(
     bands: int = 4,
     n: int = 3,
     min_jaccard: float = 0.5,
-    hash_fn: str = "md5",
 ) -> DataFrame:
     """Scale-path near-dup: banded minhash candidates, verified with exact
     Jaccard. Output (src, dst, jaccard) with jaccard >= min_jaccard.
     Candidates and counts come from _shingle_overlap_pairs."""
-    counted = _shingle_overlap_pairs(df, id_col, text_col, num_hashes, bands, n, hash_fn)
+    counted = _shingle_overlap_pairs(df, id_col, text_col, num_hashes, bands, n)
     i = F.col("_inter")
     verified = counted.withColumn(
         "jaccard", i / (F.col("_na") + F.col("_nb") - i)
@@ -604,76 +584,6 @@ def dedup_corpus_best(
     return df.join(best.select(F.col("_keep").alias(id_col)), id_col)
 
 
-def simhash(
-    df: DataFrame,
-    id_col: str,
-    text_col: str = "text",
-    bits: int = 16,
-    hash_fn: str = "md5",
-) -> DataFrame:
-    """SimHash sketch: bit b of the sketch is the sign of Σ_tokens ±1 where
-    the sign is bit b of hash(token). ``hash_fn="md5"`` takes the token hash
-    from the first 8 hex chars of md5 (a 32-bit value DuckDB reproduces
-    bit-for-bit; requires bits <= 32); ``"xxhash64"`` is the cheap-digest
-    path."""
-    if hash_fn == "md5":
-        if bits > 32:
-            raise ValueError("md5-mode simhash supports at most 32 bits")
-        token_hash = F.conv(F.substring(F.md5("_tok"), 1, 8), 16, 10).cast("long")
-    else:
-        token_hash = F.xxhash64("_tok")
-    ex = df.select(
-        F.col(id_col).alias("_sid"),
-        F.explode(F.array_distinct(tokens(F.col(text_col)))).alias("_tok"),
-    ).withColumn("_h", token_hash)
-    bit_aggs = [
-        F.sum(
-            F.when(F.shiftright(F.col("_h"), b).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
-        ).alias(f"_bit_{b}")
-        for b in range(bits)
-    ]
-    sums = ex.groupBy("_sid").agg(*bit_aggs)
-    sketch = None
-    for b in range(bits):
-        term = F.when(F.col(f"_bit_{b}") > 0, F.lit(2**b)).otherwise(F.lit(0))
-        sketch = term if sketch is None else sketch + term
-    return sums.select(F.col("_sid").alias(id_col), sketch.cast("long").alias("simhash"))
-
-
-def simhash_dup_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str = "text",
-    bits: int = 16,
-    max_hamming: int = 2,
-    hash_fn: str = "md5",
-) -> DataFrame:
-    """Near-dup pairs by SimHash with exact Hamming-LSH banding: the sketch
-    is split into max_hamming+1 bands, so a pair within max_hamming differing
-    bits leaves at least one band identical (pigeonhole) — the banded join
-    (banding.banded_pairs) has FULL recall, and bit_count(xor) verifies the
-    true hamming distance."""
-    n_bands = max_hamming + 1
-    band_w = max(1, bits // n_bands)
-    bands = []
-    for i in range(n_bands):
-        shifted = F.shiftright(F.col("simhash"), i * band_w)
-        if i < n_bands - 1:
-            shifted = shifted.bitwiseAND(F.lit(2**band_w - 1))
-        bands.append(shifted.cast("long"))
-    cand = banded_pairs(
-        simhash(df, id_col, text_col, bits, hash_fn), id_col, bands, carry=["simhash"]
-    )
-    out = (
-        cand.withColumn(
-            "hamming", F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b")))
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .select("src", "dst", "hamming")
-    )
-    return out
-
-
 def auto_simhash_bits(
     n: int, max_hamming: int = 3, target_bucket: int = 8
 ) -> int:
@@ -681,8 +591,8 @@ def auto_simhash_bits(
     the corpus grows — the Hamming-banding analogue of ``knn.auto_planes``.
     Pigeonhole banding splits ``bits`` into ``max_hamming+1`` bands of
     width w; random-pair candidates per band are N^2/2^w, so a FIXED w
-    (the 16-bit default's w=5) degrades quadratically once N outgrows the
-    band space. w = max(8, ceil(log2(n / target_bucket))) keeps buckets
+    (w=8 for 32 bits at max_hamming=3) degrades quadratically once N
+    outgrows the band space. w = max(8, ceil(log2(n / target_bucket))) keeps buckets
     ~target-sized; the 96-bit cap (three md5 words) holds it to
     target·2^24 ≈ 10^8 docs at 4 bands. Note the SEMANTIC trade: a fixed
     ``max_hamming`` over a wider sketch is a stricter near-dup cut
@@ -708,10 +618,9 @@ def simhash_bands(
     array<long>), band i packing sketch bits [i·w, (i+1)·w), w = bits //
     n_bands. Token-hash bit b comes from bit b%32 of md5 hex word b//32
     (words = successive 8-hex-char slices of the digest), so any width up
-    to 128 stays bit-for-bit reproducible in DuckDB via the same
-    strpos-nibble arithmetic as the 32-bit form. One md5 per distinct
-    token per doc; the per-bit ±1 sums are one partial-aggregated
-    groupBy."""
+    to 128 stays bit-for-bit reproducible in DuckDB via strpos-nibble
+    arithmetic. One md5 per distinct token per doc; the per-bit ±1 sums
+    are one partial-aggregated groupBy."""
     if bits % n_bands:
         raise ValueError("bits must divide evenly into n_bands bands")
     if bits > 128:
@@ -756,22 +665,26 @@ def simhash_bands(
     )
 
 
-def simhash_dup_pairs_auto(
+def simhash_dup_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str = "text",
     max_hamming: int = 3,
-    target_bucket: int = 8,
     bits: int | None = None,
+    target_bucket: int = 8,
 ) -> DataFrame:
-    """``simhash_dup_pairs`` with the sketch width scaled to the DATA
-    (auto_simhash_bits): same pigeonhole full-recall banding — a pair
-    within max_hamming differing bits leaves >= 1 of max_hamming+1 bands
-    identical — but band buckets stay ~target_bucket-sized as the corpus
-    grows, so candidate volume is ~N·bucket instead of N^2/2^w. One cheap
-    count resolves the width; a fixed-N deployment can precompute
-    ``auto_simhash_bits(n)`` and pass ``bits``. Hamming is verified over
-    the FULL wide sketch (sum of per-band bit_count(xor))."""
+    """Near-dup pairs (src, dst, hamming) by SimHash with exact Hamming-LSH
+    banding: the sketch (simhash_bands) is split into max_hamming+1 bands,
+    so a pair within max_hamming differing bits leaves at least one band
+    identical (pigeonhole) — the banded join (banding.banded_pairs) has
+    FULL recall, and the sum of per-band bit_count(xor) verifies the true
+    hamming distance over the whole sketch.
+
+    ``bits=None`` sizes the sketch to the DATA (auto_simhash_bits, one
+    cheap count): band buckets stay ~target_bucket-sized as the corpus
+    grows, so candidate volume is ~N·bucket instead of N^2/2^w. A fixed
+    ``bits`` (rounded down to a multiple of the band count) skips the
+    count; a fixed-N deployment can precompute ``auto_simhash_bits(n)``."""
     n_bands = max_hamming + 1
     if bits is None:
         bits = auto_simhash_bits(df.count(), max_hamming, target_bucket)
@@ -882,9 +795,7 @@ def corpus_band_manifest(
     (shingles(); distinct per doc), so the manifest is self-consistent by
     construction."""
     ex = caching.persist(exploded_shingles(df, id_col, text_col, n))
-    bandsdf = _banded_signatures(
-        _signatures_from_shingles(ex, num_hashes, "md5"), num_hashes, bands, "md5"
-    )
+    bandsdf = _banded_signatures(_signatures_from_shingles(ex, num_hashes), num_hashes, bands)
     arr = df.select(F.col(id_col).alias("_id"), shingles(F.col(text_col), n).alias("sh"))
     out = bandsdf.join(arr, "_id").select(
         F.col("_id").alias(id_col), "band", "sig", "sh"
@@ -1219,7 +1130,6 @@ def incremental_minhash(
     bands: int = 4,
     n: int = 3,
     min_jaccard: float = 0.5,
-    hash_fn: str = "md5",
 ) -> DataFrame:
     """Incremental NEAR-dup ingest: classify every new-batch doc against the
     standing corpus and the batch itself — the fuzzy analogue of
@@ -1256,12 +1166,10 @@ def incremental_minhash(
     # batch band signatures feed BOTH sides of the fused candidate join;
     # persist the |batch| x bands frame so the signature aggregation runs
     # once (cband is single-use)
-    bband = caching.persist(_banded_signatures(
-        _signatures_from_shingles(bsh, num_hashes, hash_fn), num_hashes, bands, hash_fn
-    ))
-    cband = _banded_signatures(
-        _signatures_from_shingles(csh, num_hashes, hash_fn), num_hashes, bands, hash_fn
+    bband = caching.persist(
+        _banded_signatures(_signatures_from_shingles(bsh, num_hashes), num_hashes, bands)
     )
+    cband = _banded_signatures(_signatures_from_shingles(csh, num_hashes), num_hashes, bands)
 
     # FUSED candidate + verification pass: the former shape ran the
     # corpus and batch classes as two separate verified sub-operators —
@@ -1378,7 +1286,6 @@ def source_similarity(
     group_col: str = "source",
     text_col: str = "text",
     n: int = 3,
-    mode: str = "sets",
 ) -> DataFrame:
     """Pairwise n-gram Jaccard between corpus GROUPS (sources, snapshots,
     shards): each group's shingle set is the union over its documents; one
@@ -1389,25 +1296,16 @@ def source_similarity(
     Scale shape: shingles collapse to a TWO-SEED xxhash64 composite (16
     bytes, exact for practical purposes — the chunk_dedup hashed-key
     convention) BEFORE the distinct, so the data-sized shuffle carries
-    longs, never raw shingle strings. ``mode='sets'`` (default) then
-    builds pairs from a per-shingle groupBy whose collected group array
-    is bounded by |groups| (a corpus has tens of sources, not millions) —
-    join volume is at most |distinct shingles| x |groups|^2, never a
-    doc-level self-join. ``mode='pairs'`` is the high-|groups| off-ramp:
-    a streamed self-equi-join on the shingle hash + count aggregate —
-    the same pair volume but NO per-key in-memory array, so a shingle
-    shared by thousands of groups sort-merge-streams instead of
-    materializing a |groups|-sized collect_set on one task. Both modes
-    return identical results (equivalence-tested). Groups sharing no
-    shingle don't appear (their Jaccard is 0 by construction).
+    longs, never raw shingle strings. Pairs come from a per-shingle
+    groupBy whose collected group array is bounded by |groups| (a corpus
+    has tens of sources, not millions) — join volume is at most
+    |distinct shingles| x |groups|^2, never a doc-level self-join. Groups
+    sharing no shingle don't appear (their Jaccard is 0 by construction).
     """
-    if mode not in ("sets", "pairs"):
-        raise ValueError(f"unknown mode: {mode}")
     # Persisted: the distinct group-shingle set feeds the per-group sizes
-    # AND the pair stage (both self-join sides in mode='pairs'); without a
-    # cache each branch re-runs the shingle explode + the distinct
-    # shuffle — the data-sized work of this operator — up to three times
-    # (measured: 3 fact scans).
+    # AND the pair stage; without a cache each branch re-runs the shingle
+    # explode + the distinct shuffle — the data-sized work of this
+    # operator.
     sh = caching.persist(
         df.select(
             F.col(group_col).alias("_g"),
@@ -1421,30 +1319,18 @@ def source_similarity(
         .distinct()
     )
     sizes = sh.groupBy("_g").agg(F.count("*").alias("_n"))
-    if mode == "pairs":
-        pairs = (
-            sh.select("_h1", "_h2", F.col("_g").alias("source_a"))
-            .join(
-                sh.select("_h1", "_h2", F.col("_g").alias("source_b")),
-                ["_h1", "_h2"],
-            )
-            .filter(F.col("source_a") < F.col("source_b"))
-            .groupBy("source_a", "source_b")
-            .agg(F.count("*").alias("intersection"))
-        )
-    else:
-        per_gram = (
-            sh.groupBy("_h1", "_h2")
-            .agg(F.sort_array(F.collect_set("_g")).alias("_gs"))
-            .filter(F.size("_gs") >= 2)
-        )
-        pairs = (
-            per_gram.select(F.explode("_gs").alias("source_a"), "_gs")
-            .select("source_a", F.explode("_gs").alias("source_b"))
-            .filter(F.col("source_a") < F.col("source_b"))
-            .groupBy("source_a", "source_b")
-            .agg(F.count("*").alias("intersection"))
-        )
+    per_gram = (
+        sh.groupBy("_h1", "_h2")
+        .agg(F.sort_array(F.collect_set("_g")).alias("_gs"))
+        .filter(F.size("_gs") >= 2)
+    )
+    pairs = (
+        per_gram.select(F.explode("_gs").alias("source_a"), "_gs")
+        .select("source_a", F.explode("_gs").alias("source_b"))
+        .filter(F.col("source_a") < F.col("source_b"))
+        .groupBy("source_a", "source_b")
+        .agg(F.count("*").alias("intersection"))
+    )
     return (
         pairs.join(
             F.broadcast(sizes.select(F.col("_g").alias("source_a"), F.col("_n").alias("_na"))),
@@ -1511,7 +1397,6 @@ def containment_pairs(
     bands: int = 4,
     n: int = 3,
     min_containment: float = 0.8,
-    hash_fn: str = "md5",
 ) -> DataFrame:
     """Subset/quote near-dup: banded minhash candidates verified with
     *containment* |A∩B| / min(|A|,|B|) instead of Jaccard. Catches the
@@ -1532,7 +1417,7 @@ def containment_pairs(
     from the same counts and lets callers separate "same doc" (both high)
     from "contained doc" (containment high, jaccard low).
     """
-    counted = _shingle_overlap_pairs(df, id_col, text_col, num_hashes, bands, n, hash_fn)
+    counted = _shingle_overlap_pairs(df, id_col, text_col, num_hashes, bands, n)
     i = F.col("_inter")
     verified = (
         counted.withColumn("containment", i / F.least(F.col("_na"), F.col("_nb")))

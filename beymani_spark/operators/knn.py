@@ -17,7 +17,7 @@ Reference semantics sources:
 
 Scale posture: exact pairs run on blocked_vec_pairs — a tiled cogroup
 block-nested-loop with numpy kernels, bounded task memory, and no driver
-collect (shuffle volume N²/target_block rows, the irreducible cost of exact
+collect (shuffle volume N²/TARGET_BLOCK rows, the irreducible cost of exact
 all-pairs); the sub-quadratic approximate path is lsh_pair_distances, which
 buckets vectors with random hyperplane signatures so the self-join only
 compares within buckets. kNN/kdist/lrd/LOF are window + broadcast-join stages
@@ -71,6 +71,13 @@ def pair_distances(
     )
 
 
+#: rows per side of one blocked_vec_pairs tile: the task-memory bound. A
+#: block task holds its two TARGET_BLOCK x dim float64 matrices (32 MB each
+#: at dim 1024) plus per-row temporaries of one matrix's size, whatever N
+#: is; shuffle volume is N^2/TARGET_BLOCK rows.
+TARGET_BLOCK = 4096
+
+
 def blocked_vec_pairs(
     df: DataFrame,
     id_col: str,
@@ -78,7 +85,6 @@ def blocked_vec_pairs(
     kernel,
     out_schema: str,
     tiles: int | None = None,
-    target_block: int = 4096,
     persist_base: bool = True,
 ) -> DataFrame:
     """Distributed block-nested-loop over all vector pairs — the exact-pairs
@@ -87,15 +93,16 @@ def blocked_vec_pairs(
     Both sides are tiled by pmod(xxhash64(id), t); src rows are replicated
     across ref tiles and ref rows across src tiles, then cogrouped on the
     (src_tile, ref_tile) grid so each task sees one bounded numpy block
-    (~target_block x target_block). No row ever reaches the driver and task
-    memory is O(target_block * dim) regardless of N — this is what replaces
+    (~TARGET_BLOCK x TARGET_BLOCK). No row ever reaches the driver and task
+    memory is O(TARGET_BLOCK * dim) regardless of N — this is what replaces
     the round-1 driver-side toPandas() collect. Replicated shuffle volume is
-    N^2/target_block rows, the irreducible cost of *exact* all-pairs; the
+    N^2/TARGET_BLOCK rows, the irreducible cost of *exact* all-pairs; the
     sub-quadratic path remains lsh_pair_distances.
 
     ``kernel(src_ids, src_mat, ref_ids, ref_mat) -> pd.DataFrame`` computes
     one block; per-pair arithmetic identical to the former broadcast path, so
-    results are bit-identical.
+    results are bit-identical. ``tiles`` overrides the count-derived tile
+    count (ceil(N / TARGET_BLOCK)) and skips that count.
     """
     import pandas as pd
 
@@ -121,7 +128,7 @@ def blocked_vec_pairs(
         # distributed count (a cheap aggregate, not a data collect); when
         # the base is persisted it doubles as the cache materialization,
         # so the upstream lineage runs exactly once
-        tiles = max(1, -(-df.count() // target_block))
+        tiles = max(1, -(-df.count() // TARGET_BLOCK))
     t = int(tiles)
     # Both tile keys are bigint on both sides: pmod(xxhash64) is bigint, so
     # the replicated sequence must be too. Hash partitioning hashes an int
@@ -165,7 +172,6 @@ def pair_distances_np(
     vec_col: str,
     k: int | None = None,
     tiles: int | None = None,
-    target_block: int = 4096,
 ) -> DataFrame:
     """Vectorized exact pair distances via the blocked cogroup engine
     (blocked_vec_pairs): numpy arithmetic per block, no driver collect,
@@ -204,7 +210,7 @@ def pair_distances_np(
 
     out = blocked_vec_pairs(
         df, id_col, vec_col, kernel, "src long, dst long, dist double",
-        tiles=tiles, target_block=target_block,
+        tiles=tiles,
         # plain stored-vector inputs in every registry consumer; the
         # downstream density operators persist the N*k nn frame instead
         persist_base=False,
@@ -238,9 +244,9 @@ def lsh_pair_distances(
     """Scale path: random-hyperplane LSH bucketing, exact distances within
     probed buckets only — ordered (src, dst, dist) pairs, both directions.
     Recall is approximate (neighbors split across buckets are missed):
-    rows pair when their signatures differ by at most one bit, through the
-    probe join of banding.banded_pairs (one hyperplane kernel pass, each
-    pair matched by one probe, no dedup shuffle) — measured kNN recall@5
+    rows pair when their signatures differ by at most one bit, through
+    similarity.hyperplane_pairs (one hyperplane kernel pass, each pair
+    matched by one probe, no dedup shuffle) — measured kNN recall@5
     on the sf0.001 embeddings (near-uniform vectors, the adversarial
     case): 0.50 at 4 planes, 0.11 at 8, for (n_planes+1)x the probe rows.
     Raise n_planes for smaller buckets.
@@ -253,10 +259,7 @@ def lsh_pair_distances(
     quadratic path" back to quadratic as N grows (measured: 8 planes at
     10x the clustered bench embeddings ran ~60x, auto-planes ~linear).
     A fixed-N deployment can precompute the same formula and pass the int."""
-    import random
-
-    from .banding import banded_pairs
-    from .similarity import _as_double, add_lsh_bucket, one_bit_probes
+    from .similarity import _as_double, hyperplane_pairs, hyperplanes
 
     if n_planes == "auto":
         n_planes = auto_planes(df.count(), target_bucket)
@@ -266,16 +269,8 @@ def lsh_pair_distances(
         return df.sparkSession.createDataFrame(
             [], f"src {id_t}, dst {id_t}, dist double"
         )
-    dim = len(probe_row[0])
-    rng = random.Random(seed)
-    planes = [[rng.gauss(0, 1) for _ in range(dim)] for _ in range(n_planes)]
-    cand = banded_pairs(
-        add_lsh_bucket(df.select(id_col, vec_col), vec_col, planes),
-        id_col,
-        [F.col("_sig")],
-        carry=[vec_col],
-        probes=one_bit_probes(F.col("_sig"), n_planes),
-    )
+    planes = hyperplanes(len(probe_row[0]), n_planes, seed)
+    cand = hyperplane_pairs(df.select(id_col, vec_col), id_col, vec_col, planes, [vec_col])
 
     # the engine emits each unordered pair once (src < dst); one explode
     # restores both directions. (x-y)^2 == (y-x)^2 exactly, so the shared

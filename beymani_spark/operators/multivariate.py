@@ -277,7 +277,7 @@ def pca_model(
         df = hash_presample(df, keys, values, presample, seed)
     d = len(values)
 
-    def fit(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def fit(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         x = pdf[list(values)].to_numpy(dtype=float)
         mu, basis = pca_fit_core(x, k)
         row = {k_: v_ for k_, v_ in zip(keys, key)}
@@ -372,7 +372,7 @@ def autoencoder_fit(
         df = hash_presample(df, keys, values, presample, seed)
     d = len(values)
 
-    def fit(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def fit(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         x = pdf[list(values)].to_numpy(dtype=float)
         mu, sd, w = ae_fit_core(x, h, epochs, lr, seed, activation)
         row = {k_: v_ for k_, v_ in zip(keys, key)}
@@ -768,7 +768,7 @@ def kmeans_model(
     if presample:
         df = hash_presample(df, keys, values, presample, seed)
 
-    def fit(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def fit(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         x = pdf[list(values)].to_numpy(dtype=float)
         centers = kmeans_fit_core(x, n_clusters, iterations, seed)
         rows = []
@@ -902,7 +902,7 @@ def kmeans_mixed_model(
     if presample:
         df = hash_presample(df, keys, all_vals, presample, seed)
 
-    def fit(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def fit(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         xn = pdf[list(num_values)].to_numpy(dtype=float)
         xc = pdf[list(cat_values)].to_numpy(dtype=object)
         cn, cc, rng_j = kmeans_mixed_fit_core(
@@ -1046,7 +1046,7 @@ def isolation_forest_fit(
     if presample:
         df = hash_presample(df, keys, values, int(presample) * subsample, seed)
 
-    def fit(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def fit(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         x = pdf[list(values)].to_numpy(dtype=float)
         rows = []
         for t, (tree, n_s) in enumerate(

@@ -133,6 +133,10 @@ def one_step_ahead(
     filter instead of a string-prefix scan. For exact continuity, start the
     new run ``window`` rows before the first unscored row (the rolling
     window itself is rebuilt from those rows; scoring begins after them)."""
+    if method not in ("average", "weighted", "ewma"):
+        raise ValueError(f"unknown method: {method}")
+    if method == "weighted" and (weights is None or len(weights) != window):
+        raise ValueError("method='weighted' needs len(weights) == window")
 
     def run(pdf: pd.DataFrame, init: tuple[int, float, float]) -> pd.DataFrame:
         pdf = pdf.sort_values([ts, *order_cols], kind="mergesort").reset_index(drop=True)
@@ -147,18 +151,14 @@ def one_step_ahead(
             ew = (1 - alpha) ** np.arange(window - 1, -1, -1)
             ew_sum = ew.sum()
         elif method == "weighted":
-            if weights is None or len(weights) != window:
-                raise ValueError("method='weighted' needs len(weights) == window")
             ew = np.asarray(weights, dtype=float)
             ew_sum = ew.sum()
         for i in range(window, n):
             w = work[i - window : i]
             if method == "average":
                 p = w.mean()
-            elif method in ("ewma", "weighted"):
-                p = float((w * ew).sum() / ew_sum)
             else:
-                raise ValueError(f"unknown method: {method}")
+                p = float((w * ew).sum() / ew_sum)
             pred[i] = p
             r = x[i] - p
             if r_n >= 3:
@@ -342,7 +342,7 @@ def _subsequence_distance_chunked(
 ) -> DataFrame:
     """Within-key parallel discord profile (see subsequence_distance)."""
 
-    def pkernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def pkernel(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         chunk = int(key[-1])
         pdf = pdf.sort_values([ts, *order_cols], kind="mergesort").reset_index(drop=True)
         x = pdf[value].to_numpy(dtype=float)

@@ -4,8 +4,8 @@ the scale path.
 
 Scale posture: brute force is O(Q·N) with Q small query sets — fine when Q is
 bounded; the ann_lsh_topk path buckets by random-hyperplane signature so each
-query only scans its bucket (plus optionally neighboring buckets via reduced
-signature width). Both keep all arithmetic in JVM array expressions.
+query only scans its bucket and the buckets one bit away. Both keep the
+cosine arithmetic in JVM array expressions.
 """
 from __future__ import annotations
 
@@ -24,6 +24,17 @@ def _dot(a: Column, b: Column) -> Column:
 
 def _as_double(v: Column) -> Column:
     return F.transform(v, lambda x: x.cast("double"))
+
+
+def hyperplanes(dim: int, n_planes: int, seed: int) -> list[list[float]]:
+    """The seeded random hyperplanes every LSH caller signs against:
+    ``n_planes`` normals of ``dim`` gaussians each, drawn in order from one
+    ``random.Random(seed)`` stream (so the first P planes of a longer draw
+    are the P-plane draw). The model-baked oracles replay the same stream."""
+    import random
+
+    rng = random.Random(seed)
+    return [[rng.gauss(0, 1) for _ in range(dim)] for _ in range(n_planes)]
 
 
 def add_lsh_bucket(
@@ -73,6 +84,28 @@ def one_bit_probes(sig: Column, n_bits: int) -> list[Column]:
     return [sig, *flips]
 
 
+def hyperplane_pairs(
+    df: DataFrame,
+    id_col: str,
+    vec_col: str,
+    planes: list[list[float]],
+    carry: list[str],
+) -> DataFrame:
+    """Candidate pairs (src < dst, ``carry`` columns as ``<c>_a``/``<c>_b``)
+    whose hyperplane signatures of ``vec_col`` differ by at most one bit:
+    the signature kernel (add_lsh_bucket) runs once, and the probe join of
+    banding.banded_pairs over one_bit_probes matches each pair through one
+    probe, so no dedup shuffle runs."""
+    sketch = add_lsh_bucket(df, vec_col, planes).select(id_col, *carry, "_sig")
+    return banded_pairs(
+        sketch,
+        id_col,
+        [F.col("_sig")],
+        carry=carry,
+        probes=one_bit_probes(F.col("_sig"), len(planes)),
+    )
+
+
 def with_norm(df: DataFrame, vec_col: str) -> DataFrame:
     v = _as_double(F.col(vec_col))
     return df.withColumn("_vec", v).withColumn("_norm", F.sqrt(_dot(F.col("_vec"), F.col("_vec"))))
@@ -111,7 +144,6 @@ def cosine_dup_pairs(
     vec_col: str,
     threshold: float = 0.9,
     tiles: int | None = None,
-    target_block: int = 4096,
 ) -> DataFrame:
     """All pairs with cosine >= threshold (embedding near-dup).
 
@@ -144,7 +176,7 @@ def cosine_dup_pairs(
 
     return blocked_vec_pairs(
         df, id_col, vec_col, kernel, "src long, dst long, cosine double",
-        tiles=tiles, target_block=target_block,
+        tiles=tiles,
     )
 
 
@@ -156,20 +188,18 @@ def cosine_dup_pairs_lsh(
     n_planes: int | str = "auto",
     seed: int = 42,
     target_bucket: int = 8,
-    center: bool = True,
 ) -> DataFrame:
     """Bucketed near-dup pairs — the SCALE path for ``cosine_dup_pairs``:
     random-hyperplane signatures bucket the vectors, candidate pairs are
-    rows whose signatures differ by at most ONE bit (the probe join of
-    banding.banded_pairs over one_bit_probes: the signature kernel runs
-    once, and no dedup shuffle runs), and the exact cosine runs only
-    inside candidates. Work is sum(bucket_i^2) ~ N^2/2^planes instead of
+    rows whose signatures differ by at most ONE bit (hyperplane_pairs: the
+    signature kernel runs once, and no dedup shuffle runs), and the exact
+    cosine runs only inside candidates. Work is sum(bucket_i^2) ~ N^2/2^planes instead of
     N^2/2, and ``n_planes='auto'`` (knn.auto_planes) grows the plane count
     with N so the expected bucket size stays constant — the same scale
     knob that keeps lsh_pair_distances/semantic_dedup linear at 10x/100x.
 
-    ``center=True`` subtracts the corpus mean before hashing (cosine is
-    still computed on the RAW vectors): near-dup corpora live in a narrow
+    The corpus mean is subtracted before hashing (cosine is still
+    computed on the RAW vectors): near-dup corpora live in a narrow
     cone — e.g. every 16-bucket byte histogram is near uniform — and raw
     hyperplane signs are then dominated by the shared mean component, so
     every row lands in ONE bucket and the "sub-quadratic" path degrades
@@ -183,8 +213,6 @@ def cosine_dup_pairs_lsh(
     >1 bit apart are missed — recall measured in tests/test_lsh_recall.py);
     reference analogue: the banded pair-candidate builder replacing
     sifarish SameTypeSimilarity's all-pairs matcher (SURVEY.md §2.3)."""
-    import random
-
     from .knn import auto_planes
 
     # One persisted pass of the (possibly expensive — decode, quantize)
@@ -231,41 +259,25 @@ def cosine_dup_pairs_lsh(
     ).first()
     if n_planes == "auto":
         n_planes = auto_planes(row["_n"], target_bucket)
-    rng = random.Random(seed)
-    planes = [[rng.gauss(0, 1) for _ in range(dim)] for _ in range(n_planes)]
-
+    planes = hyperplanes(dim, n_planes, seed)
+    # determinism contract: the quantized-integer sums above are exact and
+    # order-independent, the scaled division is one correctly-rounded
+    # float64 op on exact integers, and the final round-6 is the registry
+    # convention applied to the model — so the centering vector (and with
+    # it every signature bit) is a pure function of the DATA, never of
+    # partitioning or summation order.
+    mean = F.array(
+        *[
+            F.lit(round(float(row[f"_s{i}"]) / (row["_n"] * 1e6), 6))
+            for i in range(dim)
+        ]
+    )
     # zero vectors have no direction — they cannot clear a positive
     # threshold, and their norm would divide the cosine by zero
-    hashed = base.filter(F.col("_norm") > 0)
-    hash_col = "_vec"
-    if center:
-        # determinism contract: the quantized-integer sums above are exact
-        # and order-independent, the scaled division is one correctly-
-        # rounded float64 op on exact integers, and the final round-6 is
-        # the registry convention applied to the model — so the centering
-        # vector (and with it every signature bit) is a pure function of
-        # the DATA, never of partitioning or summation order.
-        mean = F.array(
-            *[
-                F.lit(round(float(row[f"_s{i}"]) / (row["_n"] * 1e6), 6))
-                for i in range(dim)
-            ]
-        )
-        hashed = hashed.withColumn(
-            "_cvec", F.zip_with("_vec", mean, lambda a, b: a - b)
-        )
-        hash_col = "_cvec"
-
-    sketch = add_lsh_bucket(hashed, hash_col, planes).select(
-        "_id", "_vec", "_norm", "_sig"
+    hashed = base.filter(F.col("_norm") > 0).withColumn(
+        "_cvec", F.zip_with("_vec", mean, lambda a, b: a - b)
     )
-    cand = banded_pairs(
-        sketch,
-        "_id",
-        [F.col("_sig")],
-        carry=["_vec", "_norm"],
-        probes=one_bit_probes(F.col("_sig"), n_planes),
-    )
+    cand = hyperplane_pairs(hashed, "_id", "_cvec", planes, ["_vec", "_norm"])
     cos = _dot(F.col("_vec_a"), F.col("_vec_b")) / (F.col("_norm_a") * F.col("_norm_b"))
     out = (
         cand.withColumn("cosine", cos)
@@ -283,19 +295,17 @@ def ann_lsh_topk(
     k: int = 5,
     n_planes: int = 6,
     seed: int = 42,
-    probe: int = 1,
     n_tables: int = 1,
 ) -> DataFrame:
     """Approximate top-k: random-hyperplane signature buckets; each query is
     compared only against vectors in its probed buckets. Recall < 1 by
-    design. ``probe=1`` (default) multi-probes the query's bucket plus all
-    one-bit-flip neighbors — measured recall@5 on the sf0.001 embeddings
-    fixture (near-uniform vectors, the adversarial case for hyperplane
-    LSH): single-probe 0.03 at 6 planes; Hamming-1 multi-probe 0.27 at 6
+    design. Each query multi-probes its bucket plus all one-bit-flip
+    neighbors — measured recall@5 on the sf0.001 embeddings fixture
+    (near-uniform vectors, the adversarial case for hyperplane LSH):
+    single-probe 0.03 at 6 planes; Hamming-1 multi-probe 0.27 at 6
     planes, 0.59 at 4, 0.82 at 2 — (n_planes+1)x the candidate volume,
     fewer planes trade bucket size for recall (probed continuously in
-    tests/test_lsh_recall.py). ``probe=0`` is the single-probe scale
-    path.
+    tests/test_lsh_recall.py).
 
     ``n_tables=L`` hashes into L INDEPENDENT plane sets (the standard LSH
     recall amplifier: a true neighbor is missed only if every table
@@ -308,14 +318,11 @@ def ann_lsh_topk(
     ``n_tables=1`` is the same code path with one ``"0:"``-prefixed
     bucket (no dedup stage: each probe of one table is distinct). Probe
     flips are codegen string expressions (one_bit_probes)."""
-    import random
-
     dim = len(df.select(vec_col).first()[0])
     L, P = int(n_tables), int(n_planes)
-    rng = random.Random(seed)
     # one continuous stream: table t owns planes [t*P, (t+1)*P) — table 0
     # is exactly the n_tables=1 plane set
-    planes = [[rng.gauss(0, 1) for _ in range(dim)] for _ in range(L * P)]
+    planes = hyperplanes(dim, L * P, seed)
     tables = [F.substring("_sig", t * P + 1, P) for t in range(L)]
 
     def buckets(sigs_of):
@@ -338,7 +345,7 @@ def ann_lsh_topk(
         F.col(id_col).alias("query_id"),
         F.col("_vec").alias("_vq"),
         F.col("_norm").alias("_nq"),
-        buckets(lambda sig: one_bit_probes(sig, P) if probe else [sig]),
+        buckets(lambda sig: one_bit_probes(sig, P)),
     )
     joined = q.join(base, "_bucket").filter(F.col("query_id") != F.col("neighbor_id"))
     cos = _dot(F.col("_vq"), F.col("_vb")) / (F.col("_nq") * F.col("_nb"))

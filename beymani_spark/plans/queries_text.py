@@ -368,7 +368,7 @@ SELECT src, dst, jaccard FROM mpairs
 def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     out = dedup.minhash_lsh_pairs(
-        docs, "doc_id", num_hashes=16, bands=4, n=3, min_jaccard=0.5, hash_fn="md5"
+        docs, "doc_id", num_hashes=16, bands=4, n=3, min_jaccard=0.5
     )
     return _round(out, ["jaccard"])
 
@@ -402,7 +402,7 @@ FROM lab
 def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     pairs = dedup.minhash_lsh_pairs(
-        docs, "doc_id", num_hashes=16, bands=4, n=3, min_jaccard=0.5, hash_fn="md5"
+        docs, "doc_id", num_hashes=16, bands=4, n=3, min_jaccard=0.5
     )
     return dedup.dedup_clusters(docs, "doc_id", pairs)
 
@@ -435,7 +435,7 @@ def q_dedup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     histogram; duplicate mass = 1 - sum(n_clusters)/sum(n_docs)."""
     docs = load_table(spark, sf_dir, "documents")
     pairs = dedup.minhash_lsh_pairs(
-        docs, "doc_id", num_hashes=16, bands=4, n=3, min_jaccard=0.5, hash_fn="md5"
+        docs, "doc_id", num_hashes=16, bands=4, n=3, min_jaccard=0.5
     )
     return dedup.dedup_stats(docs, "doc_id", pairs)
 
@@ -462,7 +462,7 @@ WHERE coalesce(c.rep, d.doc_id) = d.doc_id
 def q_dedup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     pairs = dedup.minhash_lsh_pairs(
-        docs, "doc_id", num_hashes=16, bands=4, n=3, min_jaccard=0.5, hash_fn="md5"
+        docs, "doc_id", num_hashes=16, bands=4, n=3, min_jaccard=0.5
     )
     out = dedup.dedup_corpus(docs, "doc_id", pairs)
     return out.select("doc_id", F.md5("text").alias("content_hash"))
@@ -508,9 +508,7 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     # 32-bit sketch -> 4 bands of 8 bits: wide enough that band buckets stay
     # small (16-bit/4-bit bands collapse similar docs into huge buckets)
-    return dedup.simhash_dup_pairs(
-        docs, "doc_id", bits=32, max_hamming=3, hash_fn="md5"
-    )
+    return dedup.simhash_dup_pairs(docs, "doc_id", max_hamming=3, bits=32)
 
 
 def _simhash_bit_sql_wide(b: int) -> str:
@@ -585,9 +583,7 @@ def q_dedup_simhash_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     recall at the resolved width; exact duplicates sketch identically at
     any width."""
     docs = load_table(spark, sf_dir, "documents")
-    return dedup.simhash_dup_pairs_auto(
-        docs, "doc_id", max_hamming=3, target_bucket=8
-    )
+    return dedup.simhash_dup_pairs(docs, "doc_id", max_hamming=3, target_bucket=8)
 
 
 _COS_SQL = (
@@ -1774,7 +1770,7 @@ def q_dedup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch = docs.filter(F.col("doc_id") % 2 == 1)
     out = dedup.incremental_minhash(
         batch, corpus, "doc_id", num_hashes=16, bands=4, n=3,
-        min_jaccard=0.5, hash_fn="md5",
+        min_jaccard=0.5,
     )
     return _round(out, ["best_jaccard"])
 
@@ -2295,7 +2291,7 @@ def q_split_leak_check(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     pairs = dedup.minhash_lsh_pairs(
-        docs, "doc_id", num_hashes=16, bands=4, n=3, min_jaccard=0.5, hash_fn="md5"
+        docs, "doc_id", num_hashes=16, bands=4, n=3, min_jaccard=0.5
     )
     labeled = sampling.deterministic_split(
         docs, "doc_id", (("train", 0.75), ("val", 0.125), ("test", 0.125)), seed=42
@@ -3046,7 +3042,7 @@ def q_dedup_corpus_best(spark: SparkSession, sf_dir: str) -> DataFrame:
         "_q", F.round(F.col("quality"), 6)
     ).select(*docs.columns, "_q")
     pairs = dedup.minhash_lsh_pairs(
-        docs, "doc_id", num_hashes=16, bands=4, n=3, min_jaccard=0.5, hash_fn="md5"
+        docs, "doc_id", num_hashes=16, bands=4, n=3, min_jaccard=0.5
     )
     kept = dedup.dedup_corpus_best(qdocs, "doc_id", pairs, "_q")
     return kept.select(

@@ -62,7 +62,6 @@ def test_back_to_back_pipeline_ops_no_storage_leak(spark):
         "minhash": lambda: dedup.minhash_lsh_pairs(docs, "doc_id"),
         "containment": lambda: dedup.containment_pairs(docs, "doc_id"),
         "simhash": lambda: dedup.simhash_dup_pairs(docs, "doc_id"),
-        "simhash_auto": lambda: dedup.simhash_dup_pairs_auto(docs, "doc_id"),
         "phash": lambda: multimodal.phash_dup_pairs(multimodal.phash64(media)),
         "video": lambda: multimodal.video_phash_dup_pairs(
             multimodal.video_phash(media, n_frames=4)

@@ -411,7 +411,7 @@ def test_stream_near_dup_candidates_against_corpus(spark):
 
     # (a) per-row expression bands == groupBy-aggregated batch bands
     rowwise = dedup.rowwise_minhash_bands(docs, "doc_id", "text").toPandas()
-    sigs = dedup.minhash_signatures(docs, "doc_id", "text", 16, 3, "md5")
+    sigs = dedup.minhash_signatures(docs, "doc_id", "text", 16, 3)
     batch = []
     import hashlib as _h  # noqa: F401 (md5 computed in-JVM below)
     rows_per_band = 4

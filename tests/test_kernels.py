@@ -45,7 +45,8 @@ def test_one_step_ahead_finds_spike(spark, seq_df):
 
 def test_one_step_ahead_weighted_method(spark, seq_df):
     """PRED_WEIGHTED_AVERAGE: weights [0,...,0,1] (newest only) must predict
-    the previous value exactly; a bad-length weights list raises."""
+    the previous value exactly; a bad-length weights list or an unknown
+    method raises ValueError from the builder call, before any action."""
     out = sequence.one_step_ahead(
         seq_df.filter("key = 'm1' and ts < 50"), ["key"], "ts", "value",
         window=4, method="weighted", weights=[0.0, 0.0, 0.0, 1.0], threshold=99.0,
@@ -53,11 +54,13 @@ def test_one_step_ahead_weighted_method(spark, seq_df):
     vals = out.value.to_numpy()
     pred = out.predicted.to_numpy()
     np.testing.assert_allclose(pred[4:], vals[3:-1])
-    with pytest.raises(Exception, match="weights"):
+    with pytest.raises(ValueError, match="weights"):
         sequence.one_step_ahead(
             seq_df, ["key"], "ts", "value", window=4, method="weighted",
             weights=[1.0, 2.0],
-        ).toPandas()
+        )
+    with pytest.raises(ValueError, match="unknown method"):
+        sequence.one_step_ahead(seq_df, ["key"], "ts", "value", method="median")
 
 
 def test_one_step_ahead_warm_start_continuity(spark, seq_df):

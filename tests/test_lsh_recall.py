@@ -27,7 +27,7 @@ def test_ann_lsh_topk_recall_vs_exact(spark, emb):
     queries = emb.limit(20)
     exact = similarity.cosine_topk(emb, queries, "vec_id", "embedding", k=5).toPandas()
     approx = similarity.ann_lsh_topk(
-        emb, queries, "vec_id", "embedding", k=5, n_planes=4, seed=42, probe=1
+        emb, queries, "vec_id", "embedding", k=5, n_planes=4, seed=42
     ).toPandas()
     truth = {(r.query_id, r.neighbor_id) for r in exact.itertuples()}
     got = {(r.query_id, r.neighbor_id) for r in approx.itertuples()}
@@ -50,7 +50,7 @@ def test_ann_lsh_multitable_amplifies_recall(spark, emb):
     def recall(L):
         approx = similarity.ann_lsh_topk(
             emb, queries, "vec_id", "embedding", k=5, n_planes=4, seed=42,
-            probe=1, n_tables=L,
+            n_tables=L,
         ).toPandas()
         got = {(r.query_id, r.neighbor_id) for r in approx.itertuples()}
         return len(truth & got) / len(truth)
@@ -212,7 +212,7 @@ def test_rowwise_bands_match_batch_on_adversarial_text(spark):
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     rowwise = dedup.rowwise_minhash_bands(df, "doc_id", "text").toPandas()
-    sigs = dedup.minhash_signatures(df, "doc_id", "text", 16, 3, "md5")
+    sigs = dedup.minhash_signatures(df, "doc_id", "text", 16, 3)
     band_cols = []
     for b in range(4):
         cols = [F.col(f"mh_{b*4+r}") for r in range(4)]

@@ -136,3 +136,31 @@ def test_model_queries_over_cap_match_oracle(spark, sf_dir, name, monkeypatch):
     monkeypatch.setattr(multivariate, "materialize", over_cap)
     _check(spark, sf_dir, name, tag="[over_cap]")
     assert models and all(m.rows is None for m in models)
+
+
+# Every registry query that labels near-dup clusters (dedup._cluster_labels).
+# Above local_threshold verified pairs the labels come from distributed
+# min-label propagation instead of the driver union-find; fixture pair sets
+# are far below the 1M-pair threshold, so the default run never takes it.
+CLUSTER_LABEL_QUERIES = [
+    "dedup_clusters", "dedup_corpus", "embedding_dup_clusters",
+    "embedding_dup_clusters_lsh", "dedup_corpus_best",
+]
+
+
+@pytest.mark.parametrize("name", CLUSTER_LABEL_QUERIES)
+def test_cluster_label_queries_distributed_match_oracle(spark, sf_dir, name, monkeypatch):
+    from beymani_spark.operators import dedup
+
+    real = dedup._cluster_labels
+    runs = []
+
+    def distributed(df, id_col, pairs, src="src", dst="dst", max_iter=25,
+                    local_threshold=None, stats=None):
+        runs.append({} if stats is None else stats)
+        return real(df, id_col, pairs, src, dst, max_iter, 0, runs[-1])
+
+    monkeypatch.setattr(dedup, "_cluster_labels", distributed)
+    _check(spark, sf_dir, name, PHYSICAL_CONFIGS["coalesce_off"], "[distributed]")
+    assert runs and all(r["mode"] == "distributed" for r in runs)
+    assert any(r["n_pairs"] for r in runs), f"{name}: no pairs, propagation untested"

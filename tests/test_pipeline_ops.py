@@ -901,7 +901,7 @@ def test_simhash_auto_width_and_wide_sketch_semantics(spark):
     )
     # max_hamming=8 -> 9 bands; bits=64 rounds down to 63 (7-bit bands)
     with caching.scope():
-        pairs_df = dedup.simhash_dup_pairs_auto(
+        pairs_df = dedup.simhash_dup_pairs(
             docs, "doc_id", max_hamming=8, bits=64
         )
         got = {(r.src, r.dst): r.hamming for r in pairs_df.collect()}
@@ -1102,42 +1102,51 @@ def test_quality_fuse_empty_corpus_scores_null(spark):
 
 
 def test_source_similarity_pairs_mode_equivalent(spark):
-    """mode='pairs' (the high-|groups| off-ramp: streamed self-equi-join
-    on the shingle hash, no per-key collect_set array) must return
-    exactly the sets-mode result — on the parquet fixture and on a
-    hand-built frame where one shingle is shared by MANY groups (the
-    hot-key case the off-ramp exists for)."""
-    from beymani_spark.operators.dedup import source_similarity
+    """source_similarity's hashed-shingle path (two-seed xxhash64 keys, a
+    per-shingle collect_set of groups) must equal exact set arithmetic over
+    the raw shingle strings — on the parquet fixture and on a hand-built
+    frame where one shingle is shared by MANY groups (the hot-key case
+    that bounds the collected group array)."""
+    from pyspark.sql import functions as F
+
+    from beymani_spark.operators.dedup import shingles, source_similarity
     from beymani_spark.sources import load_table
 
+    def result(df):
+        return {
+            (r["source_a"], r["source_b"]): (r["intersection"], r["jaccard"])
+            for r in source_similarity(df, "source", "text", n=3).collect()
+        }
+
+    def exact(df):
+        sets = {}
+        for r in df.select("source", shingles(F.col("text"), 3).alias("sh")).collect():
+            sets.setdefault(r["source"], set()).update(r["sh"])
+        out = {}
+        for a in sets:
+            for b in sets:
+                inter = len(sets[a] & sets[b])
+                if a < b and inter:
+                    out[(a, b)] = (inter, inter / len(sets[a] | sets[b]))
+        return out
+
+    def assert_exact(got, want):
+        assert got.keys() == want.keys()
+        for k, (inter, jac) in want.items():
+            assert got[k][0] == inter and abs(got[k][1] - jac) <= 1e-6, k
+
     docs = load_table(spark, "/root/testdata/sf0.001", "documents")
-    key = lambda r: (r["source_a"], r["source_b"])
-    sets_res = {
-        key(r): (r["intersection"], r["jaccard"])
-        for r in source_similarity(docs, "source", "text", n=3).collect()
-    }
-    pairs_res = {
-        key(r): (r["intersection"], r["jaccard"])
-        for r in source_similarity(
-            docs, "source", "text", n=3, mode="pairs"
-        ).collect()
-    }
-    assert pairs_res == sets_res and sets_res
+    fixture = result(docs)
+    assert fixture
+    assert_exact(fixture, exact(docs))
 
     # hot shingle shared by 30 groups + one private shingle per group
     rows = [(f"g{i:02d}", "common trigram shared by every group") for i in range(30)]
     rows += [(f"g{i:02d}", f"private words only group {i} has") for i in range(30)]
     df = spark.createDataFrame(rows, "source string, text string")
-    a = source_similarity(df, "source", "text", n=3).collect()
-    b = source_similarity(df, "source", "text", n=3, mode="pairs").collect()
-    ka = {key(r): (r["intersection"], r["jaccard"]) for r in a}
-    kb = {key(r): (r["intersection"], r["jaccard"]) for r in b}
-    assert ka == kb and len(ka) == 30 * 29 // 2
-
-    import pytest
-
-    with pytest.raises(ValueError, match="mode"):
-        source_similarity(df, mode="bogus")
+    hot = result(df)
+    assert len(hot) == 30 * 29 // 2
+    assert_exact(hot, exact(df))
 
 
 def test_temperature_mix_flattens_and_binds_smallest(spark, docs):

@@ -227,7 +227,7 @@ def test_minhash_explodes_shingles_once(spark):
 
     docs = load_table(spark, SF, "documents")
     pairs = dedup.minhash_lsh_pairs(
-        docs, "doc_id", num_hashes=16, bands=4, n=3, min_jaccard=0.5, hash_fn="md5"
+        docs, "doc_id", num_hashes=16, bands=4, n=3, min_jaccard=0.5
     )
     plan = _plan(pairs)
     # every shingle consumer (both band-signature sides, the two
@@ -410,7 +410,7 @@ def test_dedup_stats_aggregates_are_tiny(spark):
 
     docs = load_table(spark, SF, "documents")
     pairs = dedup.minhash_lsh_pairs(
-        docs, "doc_id", num_hashes=16, bands=4, n=3, min_jaccard=0.5, hash_fn="md5"
+        docs, "doc_id", num_hashes=16, bands=4, n=3, min_jaccard=0.5
     )
     plan = _plan(dedup.dedup_stats(docs, "doc_id", pairs))
     assert "partial_count" in plan, plan
@@ -943,7 +943,6 @@ def test_dedup_corpus_best_partial_maxby_no_rank_window(spark):
     ).select("doc_id", "text", "_q")
     pairs = dedup_ops.minhash_lsh_pairs(
         docs, "doc_id", num_hashes=16, bands=4, n=3, min_jaccard=0.5,
-        hash_fn="md5",
     )
     plan = _plan(dedup_ops.dedup_corpus_best(qdocs, "doc_id", pairs, "_q"))
     assert "partial_max_by" in plan, "survivor argmax must combine map-side"

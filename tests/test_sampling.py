@@ -536,11 +536,11 @@ def test_simhash_auto_rejects_underwide_sketch(spark):
     raise a clear ValueError, not floor the width to zero."""
     import pytest as _pytest
 
-    from beymani_spark.operators.dedup import simhash_dup_pairs_auto
+    from beymani_spark.operators.dedup import simhash_dup_pairs
 
     df = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
     with _pytest.raises(ValueError, match="bands"):
-        simhash_dup_pairs_auto(df, "doc_id", max_hamming=7, bits=4)
+        simhash_dup_pairs(df, "doc_id", max_hamming=7, bits=4)
 
 
 def test_salted_join_equivalence_and_spread(spark):
