@@ -103,6 +103,75 @@ def spectral_residual(
     return _grouped(df, keys, kernel, "sr_score double, label string")
 
 
+def osa_weights(
+    method: str, window: int, alpha: float, weights: Sequence[float] | None
+) -> np.ndarray | None:
+    """The prediction-window weights of a one-step-ahead ``method``, oldest
+    first: None for 'average' (a plain mean), ``(1 - alpha)`` powers for
+    'ewma', the caller's ``weights`` for 'weighted'. Raises ValueError for
+    an unknown method or a weights list that does not match ``window`` —
+    every entry point calls it before it builds a plan."""
+    if method == "average":
+        return None
+    if method == "ewma":
+        return (1 - alpha) ** np.arange(window - 1, -1, -1)
+    if method == "weighted":
+        if weights is None or len(weights) != window:
+            raise ValueError("method='weighted' needs len(weights) == window")
+        return np.asarray(weights, dtype=float)
+    raise ValueError(f"unknown method: {method}")
+
+
+def osa_scan(
+    x: np.ndarray,
+    window: int,
+    ew: np.ndarray | None,
+    threshold: float,
+    state: tuple,
+) -> tuple[np.ndarray, np.ndarray, tuple]:
+    """The one-step-ahead feedback scan (OneStepAheadPredictor.scala:
+    118-151), resumable: ``state`` is (work tail, r_n, r_s1, r_s2) — up to
+    ``window`` trailing work values, outliers already replaced by their
+    prediction, plus the running residual moments (population std,
+    matching np.std ddof=0). The scan runs over the tail followed by
+    ``x``, so scanning a series in pieces, each resumed from the previous
+    piece's end state, gives the scores of one scan over the whole series.
+    Returns (predicted, score) for the rows of ``x`` — NaN / 0 until the
+    window first fills — and the end state. ``ew`` is the
+    :func:`osa_weights` vector, None for the plain mean."""
+    tail, r_n, r_s1, r_s2 = state
+    # a query restarted with a smaller window resumes from a longer tail
+    tail = np.asarray(tail, dtype=float)[-window:]
+    work = np.concatenate([tail, np.asarray(x, dtype=float)])
+    n = len(work)
+    pred = np.full(n, np.nan)
+    score = np.zeros(n)
+    ew_sum = None if ew is None else ew.sum()
+    # the window FEEDBACK (an outlier is replaced by its prediction before
+    # it can pollute the next window) makes each step depend on the
+    # previous OUTPUT — inherently sequential per key
+    for i in range(window, n):
+        w = work[i - window : i]
+        p = w.mean() if ew is None else float((w * ew).sum() / ew_sum)
+        pred[i] = p
+        r = work[i] - p
+        if r_n >= 3:
+            var = r_s2 / r_n - (r_s1 / r_n) ** 2
+            sd = var**0.5 if var > 0 else 0.0
+        else:
+            sd = 0.0
+        s = abs(r) / sd if sd > 0 else 0.0
+        score[i] = s
+        if s > threshold:
+            work[i] = p  # feedback: outlier replaced by prediction
+        else:
+            r_n += 1
+            r_s1 += r
+            r_s2 += r * r
+    k = len(tail)
+    return pred[k:], score[k:], (work[-window:], r_n, r_s1, r_s2)
+
+
 def one_step_ahead(
     df: DataFrame,
     keys: Sequence[str],
@@ -133,47 +202,14 @@ def one_step_ahead(
     filter instead of a string-prefix scan. For exact continuity, start the
     new run ``window`` rows before the first unscored row (the rolling
     window itself is rebuilt from those rows; scoring begins after them)."""
-    if method not in ("average", "weighted", "ewma"):
-        raise ValueError(f"unknown method: {method}")
-    if method == "weighted" and (weights is None or len(weights) != window):
-        raise ValueError("method='weighted' needs len(weights) == window")
+    ew = osa_weights(method, window, alpha, weights)
 
     def run(pdf: pd.DataFrame, init: tuple[int, float, float]) -> pd.DataFrame:
         pdf = pdf.sort_values([ts, *order_cols], kind="mergesort").reset_index(drop=True)
-        x = pdf[value].to_numpy(dtype=float)
-        n = len(x)
-        work = x.copy()
-        pred = np.full(n, np.nan)
-        score = np.zeros(n)
-        # running residual moments (population std, matching np.std ddof=0)
-        r_n, r_s1, r_s2 = init
-        if method == "ewma":
-            ew = (1 - alpha) ** np.arange(window - 1, -1, -1)
-            ew_sum = ew.sum()
-        elif method == "weighted":
-            ew = np.asarray(weights, dtype=float)
-            ew_sum = ew.sum()
-        for i in range(window, n):
-            w = work[i - window : i]
-            if method == "average":
-                p = w.mean()
-            else:
-                p = float((w * ew).sum() / ew_sum)
-            pred[i] = p
-            r = x[i] - p
-            if r_n >= 3:
-                var = r_s2 / r_n - (r_s1 / r_n) ** 2
-                sd = var**0.5 if var > 0 else 0.0
-            else:
-                sd = 0.0
-            s = abs(r) / sd if sd > 0 else 0.0
-            score[i] = s
-            if s > threshold:
-                work[i] = p  # feedback: outlier replaced by prediction
-            else:
-                r_n += 1
-                r_s1 += r
-                r_s2 += r * r
+        n = len(pdf)
+        pred, score, (_, r_n, r_s1, r_s2) = osa_scan(
+            pdf[value].to_numpy(dtype=float), window, ew, threshold, ((), *init)
+        )
         out = pdf.copy()
         out["predicted"] = pred
         out["osa_score"] = score
@@ -751,47 +787,19 @@ def one_step_ahead_multi(
     )
     if len(wts) != len(values):
         raise ValueError("attr_weights must match values length")
-    if method == "ewma":
-        ew = (1 - alpha) ** np.arange(window - 1, -1, -1)
-        ew_sum = ew.sum()
+    ew = osa_weights(method, window, alpha, None)
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values([ts, *order_cols], kind="mergesort").reset_index(drop=True)
-        n = len(pdf)
-        xs = {v: pdf[v].to_numpy(dtype=float) for v in values}
-        works = {v: xs[v].copy() for v in values}
-        preds = {v: np.full(n, np.nan) for v in values}
-        scores = {v: np.zeros(n) for v in values}
-        moments = {v: [0, 0.0, 0.0] for v in values}  # r_n, r_s1, r_s2
-        for i in range(window, n):
-            for v in values:
-                w = works[v][i - window : i]
-                if method == "average":
-                    p = w.mean()
-                elif method == "ewma":
-                    p = float((w * ew).sum() / ew_sum)
-                else:
-                    raise ValueError(f"unknown method: {method}")
-                preds[v][i] = p
-                r = xs[v][i] - p
-                r_n, r_s1, r_s2 = moments[v]
-                if r_n >= 3:
-                    var = r_s2 / r_n - (r_s1 / r_n) ** 2
-                    sd = var**0.5 if var > 0 else 0.0
-                else:
-                    sd = 0.0
-                s = abs(r) / sd if sd > 0 else 0.0
-                scores[v][i] = s
-                if s > threshold:
-                    works[v][i] = p
-                else:
-                    moments[v] = [r_n + 1, r_s1 + r, r_s2 + r * r]
         out = pdf.copy()
-        comb = np.zeros(n)
+        comb = np.zeros(len(pdf))
         for j, v in enumerate(values):
-            out[f"pred_{v}"] = preds[v]
-            out[f"score_{v}"] = scores[v]
-            comb = comb + wts[j] * scores[v]
+            pred, score, _ = osa_scan(
+                pdf[v].to_numpy(dtype=float), window, ew, threshold, ((), 0, 0.0, 0.0)
+            )
+            out[f"pred_{v}"] = pred
+            out[f"score_{v}"] = score
+            comb = comb + wts[j] * score
         comb = comb / wts.sum()
         out["score"] = comb
         out["label"] = np.where(comb > threshold, "O", "N")

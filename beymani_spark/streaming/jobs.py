@@ -18,13 +18,22 @@ Watermark + late-data policy is a new capability — the reference has none.
 The scoring expressions are the *same* column expressions as the batch
 operators (stats join + tag), so batch/stream parity is by construction.
 
-Timestamp ties: stateful kernels order each micro-batch by ts. Unlike the
-batch operators (which take ``order_cols`` tie-breaks — sequence.py), a
-stream cannot be made tie-deterministic by sorting alone: rows with equal
-timestamps may land in DIFFERENT micro-batches, so arrival order is the
-real order. Exact replays of tie-heavy history should use the batch
-operators with ``order_cols``; the streaming path guarantees determinism
-per micro-batch only.
+Stateful kernels: all seven (ewma, markov, markov_global,
+entropy_increase, drift, one_step_ahead, multigram) run in the one
+``applyInPandasWithState`` frame of :func:`_stateful_stream`, which owns
+eviction, state read/write, timer arming and the sort; each kernel
+supplies only its scan over one key's sorted micro-batch slice.
+
+Timestamp ties: every stateful kernel orders each key's micro-batch slice
+with ONE stable sort on ``(ts, *tie-break columns)`` — the batch
+operators' mergesort convention (sequence.py, drift.drift_detect), so
+same-ts rows within a trigger keep their arrival order and a one-file
+stream scans exactly what the batch scan does. A stream still cannot be
+made tie-deterministic by sorting alone: rows with equal timestamps may
+land in DIFFERENT micro-batches, so arrival order is the real order.
+Exact replays of tie-heavy history should use the batch operators with
+``order_cols``; the streaming path guarantees determinism per micro-batch
+only.
 """
 from __future__ import annotations
 
@@ -35,9 +44,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import StructType
 
-from ..functions.scores import tag_label
 from ..operators.markov import UNSEEN_NEG_LOG_PROB
 from ..sources.streams import _start_query
 
@@ -204,78 +211,90 @@ def alerts(scored: DataFrame, label_col: str = "label") -> DataFrame:
     return scored.filter(F.col(label_col) == "O")
 
 
-def _arm(
-    state: GroupState,
-    state_timeout_ms: int,
-    clock: str = "processing",
-    event_ts_ms: int | None = None,
-) -> None:
-    """Re-arm the idle-eviction timer — call after EVERY state.update in a
-    kernel that supports ``state_timeout_ms`` (forgetting a site would
-    silently give that path keep-forever state under an enabled timeout).
-    A no-op when the timeout is disabled (timeoutConf is NoTimeout and
-    setTimeoutDuration would throw).
-
-    ``clock='processing'`` (default) re-arms a wall-clock duration.
-    ``clock='event'`` arms an EVENT-TIME deadline instead: evict when the
-    query WATERMARK passes the entity's last-seen event time + horizon —
-    the correct horizon during catch-up replay, where a fast replay of
-    old data never idles on the wall clock so ProcessingTimeTimeout
-    evicts nothing (see :func:`_timeout_conf`). ``event_ts_ms`` is the
-    batch's max event time for the entity; when a batch carries no event
-    rows (the empty-frames guard path) it is None and the previously
-    armed deadline is left standing. The deadline clamps to
-    watermark + 1 ms — Spark rejects a timestamp at or below the current
-    watermark. Rows behind the watermark are dropped UPSTREAM of the
-    stateful operator, so a surviving batch's max event time is never
-    below it; the clamp is defense-in-depth for the boundary (an event
-    exactly AT the watermark with ``state_timeout_ms`` rounding to 0)."""
-    if state_timeout_ms <= 0:
-        return
-    if clock == "event":
-        if event_ts_ms is None:
-            return
-        wm = state.getCurrentWatermarkMs()
-        state.setTimeoutTimestamp(max(event_ts_ms + state_timeout_ms, wm + 1))
-    else:
-        state.setTimeoutDuration(state_timeout_ms)
-
-
-def _arm_batch(
-    state: GroupState,
-    state_timeout_ms: int,
-    clock: str,
-    whole: pd.DataFrame,
+def _stateful_stream(
+    stream_df: DataFrame,
+    group_cols: Sequence[str],
     ts: str,
-) -> None:
-    """Data-path arming: on the event clock, the deadline advances to the
-    batch's max event time + horizon (computed lazily — the processing
-    clock never touches the ts column, and an empty slice keeps the
-    previously armed deadline)."""
-    _arm(
-        state,
-        state_timeout_ms,
-        clock,
-        _max_event_ts_ms(whole, ts)
-        if (clock == "event" and state_timeout_ms > 0 and len(whole))
-        else None,
+    sort_cols: Sequence[str],
+    carried: Sequence[str],
+    extra_fields: Sequence[str],
+    state_schema: str,
+    init,
+    scan,
+    state_timeout_ms: int,
+    state_timeout_clock: str,
+) -> DataFrame:
+    """The one ``applyInPandasWithState`` frame of the stateful kernel
+    family. A detector supplies only its parts:
+
+    - ``group_cols`` (the state key) and ``sort_cols`` (tie-breaks after
+      ``ts``: each trigger's rows for a key are concatenated and stably
+      sorted by ``(ts, *sort_cols)`` — one sort for every kernel);
+    - ``carried`` input columns and ``extra_fields`` ("name type" strings)
+      of the output, and ``state_schema``;
+    - ``init(key)``, the state of a key the store has not seen;
+    - ``scan(key, whole, state) -> (out, state)`` over the sorted slice.
+
+    The frame owns everything else: a timed-out key's state is REMOVED
+    (see :func:`_timeout_conf`) and it emits nothing; a trigger with no
+    rows for the key writes the state back unchanged; the idle timer is
+    re-armed after every state write. On the processing clock that is a
+    wall-clock duration. On the event clock the deadline is the slice's
+    max event time + horizon, clamped to watermark + 1 ms (Spark rejects
+    a timestamp at or below the current watermark; rows behind the
+    watermark are dropped upstream, so the clamp only guards the
+    boundary), and a slice without event times leaves the armed deadline
+    standing. Arrow hands TimestampType to pandas as tz-naive values in
+    the SESSION timezone; the repo's sessions run UTC (sources.load_table
+    sets it), so ``.value`` is epoch-UTC ns, matching the watermark's
+    clock; a non-UTC session shifts every deadline by the same offset."""
+    out_schema = ", ".join(
+        [
+            f"`{f.name}` {f.dataType.simpleString()}"
+            for f in stream_df.schema
+            if f.name in carried
+        ]
+        + list(extra_fields)
     )
+    out_cols = [*carried, *(f.split(" ", 1)[0] for f in extra_fields)]
+    timeout_conf = _timeout_conf(state_timeout_ms, state_timeout_clock)
+    event_clock = state_timeout_ms > 0 and state_timeout_clock == "event"
 
+    def fn(key, pdfs, state: GroupState):
+        if state.hasTimedOut:
+            state.remove()  # idle entity: evict (see _timeout_conf)
+            yield pd.DataFrame(columns=out_cols)
+            return
+        st = state.get if state.exists else init(key)
+        frames = [p for p in pdfs if len(p)]
+        out, last_ts = None, pd.NaT
+        if frames:
+            whole = pd.concat(frames).sort_values(
+                [ts, *sort_cols], kind="mergesort"
+            )
+            out, st = scan(key, whole, st)
+            if event_clock:
+                last_ts = pd.to_datetime(whole[ts]).max()
+        state.update(st)
+        if event_clock:
+            if last_ts is not pd.NaT:
+                state.setTimeoutTimestamp(
+                    max(
+                        int(last_ts.value // 1_000_000) + state_timeout_ms,
+                        state.getCurrentWatermarkMs() + 1,
+                    )
+                )
+        elif state_timeout_ms > 0:
+            state.setTimeoutDuration(state_timeout_ms)
+        yield pd.DataFrame(columns=out_cols) if out is None else out
 
-def _max_event_ts_ms(whole: pd.DataFrame, ts: str) -> int | None:
-    """Max event time of a micro-batch slice in epoch-ms, for event-clock
-    arming. None when the slice has no usable timestamps (all-null ts).
-    Arrow hands TimestampType to pandas as tz-naive values in the SESSION
-    timezone; the repo's sessions run UTC (sources.load_table sets it), so
-    `.value` is epoch-UTC ns, matching the watermark's clock. A non-UTC
-    session would shift every deadline by the same tz offset — horizons
-    stay correct relative to each other, and the watermark clamp guards
-    the boundary."""
-    col = pd.to_datetime(whole[ts])
-    v = col.max()
-    if v is pd.NaT:
-        return None
-    return int(v.value // 1_000_000)
+    return stream_df.groupBy(*group_cols).applyInPandasWithState(
+        fn,
+        outputStructType=out_schema,
+        stateStructType=state_schema,
+        outputMode="append",
+        timeoutConf=timeout_conf,
+    )
 
 
 def _timeout_conf(state_timeout_ms: int, clock: str = "processing"):
@@ -317,80 +336,6 @@ def _timeout_conf(state_timeout_ms: int, clock: str = "processing"):
     )
 
 
-def stream_ewma_score(
-    stream_df: DataFrame,
-    keys: Sequence[str],
-    ts: str,
-    value: str,
-    alpha: float = 0.2,
-    threshold: float = 3.0,
-    state_timeout_ms: int = 0,
-    state_timeout_clock: str = "processing",
-):
-    """Per-entity stateful scoring with applyInPandasWithState: keeps an EWMA
-    mean/variance per key (the reference's per-entity record buffer,
-    MarkovModelPredictor.java:286-310, generalized to a numeric stream) and
-    scores each arriving value as |x - ewma| / sqrt(ewvar).
-
-    Returns a function of (keys..., batch iterator, state) suitable for
-    ``stream.groupBy(*keys).applyInPandasWithState(...)``; use
-    ``apply_stream_ewma`` to wire it.
-    """
-
-    out_schema = ", ".join(
-        [f"`{f.name}` {f.dataType.simpleString()}" for f in stream_df.schema if f.name in (*keys, ts, value)]
-        + ["score double", "label string"]
-    )
-    state_schema = "mean double, var double, n long"
-
-    out_cols = [*keys, ts, value, "score", "label"]
-
-    def fn(key, pdfs, state: GroupState):
-        import numpy as np
-
-        if state.hasTimedOut:
-            state.remove()  # idle entity: evict (see _timeout_conf)
-            yield pd.DataFrame(columns=out_cols)
-            return
-        if state.exists:
-            mean, var, n = state.get
-        else:
-            mean, var, n = 0.0, 0.0, 0
-        frames = [p for p in pdfs if len(p)]
-        if not frames:
-            state.update((mean, var, n))
-            _arm(state, state_timeout_ms, state_timeout_clock)
-            yield pd.DataFrame(columns=out_cols)
-            return
-        whole = pd.concat(frames).sort_values(ts, kind="mergesort")
-        xs = whole[value].to_numpy(dtype=float)
-        scores = np.zeros(len(xs))
-        # the EWMA mean/variance recursion is sequential by definition
-        # (each score reads the state the previous event wrote); the loop
-        # runs over a bare float array with columnar output assembly —
-        # the one_step_ahead convention
-        for i in range(len(xs)):
-            x = float(xs[i])
-            if n > 0:
-                sd = var**0.5
-                scores[i] = abs(x - mean) / sd if sd > 0 else 0.0
-            if n == 0:
-                mean, var, n = x, 0.0, 1
-            else:
-                mean = (1 - alpha) * mean + alpha * x
-                var = (1 - alpha) * var + alpha * (x - mean) ** 2
-                n += 1
-        out = whole[[*keys, ts]].copy()
-        out[value] = xs
-        out["score"] = scores
-        out["label"] = np.where(scores > threshold, "O", "N")
-        state.update((mean, var, n))
-        _arm_batch(state, state_timeout_ms, state_timeout_clock, whole, ts)
-        yield out
-
-    return fn, out_schema, state_schema
-
-
 def apply_stream_markov(
     stream_df: DataFrame,
     model_rows: list[dict],
@@ -422,34 +367,9 @@ def apply_stream_markov(
     import numpy as np
 
     probs = {(r["prev_state"], r["cur_state"]): r["prob"] for r in model_rows}
-    out_schema = ", ".join(
-        [
-            f"`{f.name}` {f.dataType.simpleString()}"
-            for f in stream_df.schema
-            if f.name in (*keys, ts, state_col)
-        ]
-        + ["score double", "label string"]
-    )
-    state_schema = "last_state string, scores array<double>"
-    out_cols = [*keys, ts, state_col, "score", "label"]
 
-    def fn(key, pdfs, state: GroupState):
-        if state.hasTimedOut:
-            state.remove()  # idle entity: evict (see _timeout_conf)
-            yield pd.DataFrame(columns=out_cols)
-            return
-        if state.exists:
-            last_state, carry = state.get
-            carry = list(carry)
-        else:
-            last_state, carry = None, []
-        frames = [p for p in pdfs if len(p)]
-        if not frames:
-            state.update((last_state, carry))
-            _arm(state, state_timeout_ms, state_timeout_clock)
-            yield pd.DataFrame(columns=out_cols)
-            return
-        whole = pd.concat(frames).sort_values(ts, kind="mergesort")
+    def scan(key, whole, st):
+        last_state, carry = st[0], list(st[1])
         cur = whole[state_col].to_numpy(dtype=object)
         prev = np.empty(len(cur), dtype=object)
         prev[1:] = cur[:-1]
@@ -483,18 +403,13 @@ def apply_stream_markov(
         out = whole[[*keys, ts, state_col]].copy()
         out["score"] = score
         out["label"] = label
-        state.update(
-            (cur[-1], seq[-window:].tolist() if len(seq) else [])
-        )
-        _arm_batch(state, state_timeout_ms, state_timeout_clock, whole, ts)
-        yield out
+        return out, (cur[-1], seq[-window:].tolist() if len(seq) else [])
 
-    return stream_df.groupBy(*keys).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=_timeout_conf(state_timeout_ms, state_timeout_clock),
+    return _stateful_stream(
+        stream_df, keys, ts, (), (*keys, ts, state_col),
+        ["score double", "label string"],
+        "last_state string, scores array<double>",
+        lambda key: (None, []), scan, state_timeout_ms, state_timeout_clock,
     )
 
 
@@ -568,33 +483,8 @@ def apply_stream_markov_global(
                 1.0 if h > 0 else 0.0
             )
 
-    out_schema = ", ".join(
-        [
-            f"`{f.name}` {f.dataType.simpleString()}"
-            for f in stream_df.schema
-            if f.name in (*keys, ts, state_col)
-        ]
-        + ["score double", "label string"]
-    )
-    state_schema = "last_state string, num double, den double"
-    out_cols = [*keys, ts, state_col, "score", "label"]
-
-    def fn(key, pdfs, state: GroupState):
-        if state.hasTimedOut:
-            state.remove()  # idle entity: evict (see _timeout_conf)
-            yield pd.DataFrame(columns=out_cols)
-            return
-        if state.exists:
-            last_state, num, den = state.get
-        else:
-            last_state, num, den = None, 0.0, 0.0
-        frames = [p for p in pdfs if len(p)]
-        if not frames:
-            state.update((last_state, num, den))
-            _arm(state, state_timeout_ms, state_timeout_clock)
-            yield pd.DataFrame(columns=out_cols)
-            return
-        whole = pd.concat(frames).sort_values(ts, kind="mergesort")
+    def scan(key, whole, st):
+        last_state, num, den = st
         cur = whole[state_col].to_numpy(dtype=object)
         prev = np.empty(len(cur), dtype=object)
         prev[1:] = cur[:-1]
@@ -623,16 +513,14 @@ def apply_stream_markov_global(
         out = whole[[*keys, ts, state_col]].copy()
         out["score"] = score
         out["label"] = label
-        state.update((cur[-1], num, den))
-        _arm_batch(state, state_timeout_ms, state_timeout_clock, whole, ts)
-        yield out
+        return out, (cur[-1], num, den)
 
-    return stream_df.groupBy(*keys).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=_timeout_conf(state_timeout_ms, state_timeout_clock),
+    return _stateful_stream(
+        stream_df, keys, ts, (), (*keys, ts, state_col),
+        ["score double", "label string"],
+        "last_state string, num double, den double",
+        lambda key: (None, 0.0, 0.0), scan, state_timeout_ms,
+        state_timeout_clock,
     )
 
 
@@ -671,6 +559,8 @@ def apply_stream_entropy_increase(
     entity exactly as the reference's fieldsGrouping does."""
     import math
 
+    import numpy as np
+
     seed: dict = {}
     for r in model_rows:
         if "attr" in r and r["attr"] != value:
@@ -687,51 +577,19 @@ def apply_stream_entropy_increase(
     if width is None:
         stream_df = stream_df.withColumn(value, F.col(value).cast("string"))
 
-    out_schema = ", ".join(
-        [
-            f"`{f.name}` {f.dataType.simpleString()}"
-            for f in stream_df.schema
-            if f.name in (*keys, ts, value)
-        ]
-        + ["bucket string", "score double", "label string"]
-    )
-    state_schema = "buckets array<string>, counts array<long>"
+    def init(key):
+        hist = seed.get(tuple(key), {})
+        return list(hist), list(hist.values())
 
-    out_cols = [*keys, ts, value, "bucket", "score", "label"]
-
-    def fn(key, pdfs, state: GroupState):
-        if state.hasTimedOut:
-            state.remove()  # idle entity: evict (see _timeout_conf)
-            yield pd.DataFrame(columns=out_cols)
-            return
-        if state.exists:
-            bks, cts = state.get
-            hist = {b: int(c) for b, c in zip(list(bks), list(cts))}
-        else:
-            hist = dict(seed.get(tuple(key), {}))
-        rows = []
-        # one global ts sort per trigger: a key's rows can arrive as several
-        # arrow chunks, and per-chunk sorting would interleave them
-        frames = [p for p in pdfs if len(p)]
-        # stable sort with the value as secondary key: same-key ts ties are
-        # guaranteed at scale (second-granularity sources), and the fold
-        # order changes update=True scores — (ts, value) mergesort makes
-        # the prequential order deterministic under any arrow chunking
-        # (identical rows are fold-order-invariant)
-        whole = (
-            pd.concat(frames).sort_values([ts, value], kind="mergesort")
-            if frames
-            else pd.DataFrame()
-        )
-        if len(whole) and not update:
+    def scan(key, whole, st):
+        hist = {b: int(c) for b, c in zip(list(st[0]), list(st[1]))}
+        if not update:
             # FROZEN-model serve path (update=False): the histogram never
             # changes, so n/S/H are batch constants and the score is a
             # pure per-row function of the bucket count — fully
             # vectorized (the prequential update=True fold below is
             # inherently sequential: each event mutates the histogram
             # the next one scores against)
-            import numpy as np
-
             vals = whole[value]
             bk = np.full(len(whole), None, dtype=object)
             if width is None:
@@ -768,66 +626,63 @@ def apply_stream_entropy_increase(
             out["label"] = np.where(
                 np.isnan(score), "I", np.where(score > threshold, "O", "N")
             )
-            state.update(
-                (list(hist.keys()), [hist[k_] for k_ in hist])
+            return out, st
+        rows = []
+        for _, row in whole.iterrows():
+            v = row[value]
+            # null/NaN value: no bucket — scored as an unseen bucket
+            # (cnt_b = 0), exactly the batch scorer's null-bucket
+            # left-join arithmetic; never folded into state
+            missing = v is None or (isinstance(v, float) and v != v)
+            if missing:
+                b = None
+            elif width is None:
+                b = str(v)
+            else:
+                # coerce-failures, non-finite values, and out-of-int64
+                # floors render null and are skipped like batch's
+                # failed cast — the frozen path's and multigram's rule
+                b = _safe_bucket_str(v, float(width))
+            n = sum(hist.values())
+            score = None
+            if n > 0:
+                s = sum(c * math.log(c) for c in hist.values())
+                h = math.log(n) - s / n
+                if h > 0:
+                    cb = hist.get(b, 0)
+                    s_new = (
+                        s
+                        - (cb * math.log(cb) if cb > 0 else 0.0)
+                        + (cb + 1) * math.log(cb + 1)
+                    )
+                    h_new = math.log(n + 1) - s_new / (n + 1)
+                    score = (h_new - h) / h
+            rows.append(
+                {
+                    **{k_: row[k_] for k_ in keys},
+                    ts: row[ts],
+                    value: row[value],
+                    "bucket": b,
+                    "score": score,
+                    "label": "I"
+                    if score is None
+                    else ("O" if score > threshold else "N"),
+                }
             )
-            _arm_batch(state, state_timeout_ms, state_timeout_clock, whole, ts)
-            yield out
-            return
-        if len(whole):
-            for _, row in whole.iterrows():
-                v = row[value]
-                # null/NaN value: no bucket — scored as an unseen bucket
-                # (cnt_b = 0), exactly the batch scorer's null-bucket
-                # left-join arithmetic; never folded into state
-                missing = v is None or (isinstance(v, float) and v != v)
-                if missing:
-                    b = None
-                elif width is None:
-                    b = str(v)
-                else:
-                    # coerce-failures, non-finite values, and out-of-int64
-                    # floors render null and are skipped like batch's
-                    # failed cast — the frozen path's and multigram's rule
-                    b = _safe_bucket_str(v, float(width))
-                n = sum(hist.values())
-                score = None
-                if n > 0:
-                    s = sum(c * math.log(c) for c in hist.values())
-                    h = math.log(n) - s / n
-                    if h > 0:
-                        cb = hist.get(b, 0)
-                        s_new = (
-                            s
-                            - (cb * math.log(cb) if cb > 0 else 0.0)
-                            + (cb + 1) * math.log(cb + 1)
-                        )
-                        h_new = math.log(n + 1) - s_new / (n + 1)
-                        score = (h_new - h) / h
-                rows.append(
-                    {
-                        **{k_: row[k_] for k_ in keys},
-                        ts: row[ts],
-                        value: row[value],
-                        "bucket": b,
-                        "score": score,
-                        "label": "I"
-                        if score is None
-                        else ("O" if score > threshold else "N"),
-                    }
-                )
-                if update and b is not None:
-                    hist[b] = hist.get(b, 0) + 1
-        state.update((list(hist.keys()), [hist[k_] for k_ in hist]))
-        _arm_batch(state, state_timeout_ms, state_timeout_clock, whole, ts)
-        yield pd.DataFrame(rows)
+            if b is not None:
+                hist[b] = hist.get(b, 0) + 1
+        return pd.DataFrame(rows), (list(hist), list(hist.values()))
 
-    return stream_df.groupBy(*keys).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=_timeout_conf(state_timeout_ms, state_timeout_clock),
+    # stable sort with the value as secondary key: same-key ts ties are
+    # guaranteed at scale (second-granularity sources), and the fold order
+    # changes update=True scores — (ts, value) makes the prequential order
+    # deterministic under any arrow chunking (identical rows are
+    # fold-order-invariant)
+    return _stateful_stream(
+        stream_df, keys, ts, (value,), (*keys, ts, value),
+        ["bucket string", "score double", "label string"],
+        "buckets array<string>, counts array<long>",
+        init, scan, state_timeout_ms, state_timeout_clock,
     )
 
 
@@ -855,7 +710,8 @@ def apply_stream_drift(
     boundary and the overlap rows are trimmed from the output.
 
     Assumes micro-batches arrive in per-key ``ts`` order (same contract as
-    ``apply_stream_markov``); rows are sorted by ``ts`` within each batch.
+    ``apply_stream_markov``); rows are stably sorted by ``ts`` within each
+    batch, the order batch ``drift_detect`` scans.
     """
     import json
 
@@ -865,45 +721,25 @@ def apply_stream_drift(
 
     if detector not in drift_mod._SCANS:
         raise ValueError(f"unknown detector: {detector}")
-    scan = drift_mod._SCANS[detector]
+    detect = drift_mod._SCANS[detector]
     diag_cols = {"ddm": ["pr", "sd"], "eddm": ["cur"], "fhddm": ["acc"], "ecdd": ["z"]}[
         detector
     ]
     win_size = int(params.get("win_size", 100))
 
-    out_schema = ", ".join(
-        [
-            f"`{f.name}` {f.dataType.simpleString()}"
-            for f in stream_df.schema
-            if f.name in (*keys, ts, error_col)
-        ]
-        + [f"{c} double" for c in diag_cols]
-        + ["drift int"]
-    )
-    state_schema = "state_json string"
-
     def _py(v):
         return v.item() if hasattr(v, "item") else v
 
-    def fn(key, pdfs, state: GroupState):
-        if state.hasTimedOut:
-            state.remove()  # idle entity: evict (see _timeout_conf)
-            yield pd.DataFrame(
-                columns=[*keys, ts, error_col, *diag_cols, "drift"]
-            )
-            return
-        st = json.loads(state.get[0]) if state.exists else {}
+    def scan(key, batch, state_json):
+        st = json.loads(state_json[0])
         tail = st.pop("_tail", [])
-        batch = pd.concat(list(pdfs), ignore_index=True).sort_values(
-            ts, ignore_index=True
-        )
         vals = batch[error_col].to_numpy()
         if detector == "fhddm":
             run = np.concatenate([np.asarray(tail, dtype=vals.dtype), vals])
             skip = len(tail)
         else:
             run, skip = vals, 0
-        out_cols, end = scan(run, **params, state=st or None)
+        out_cols, end = detect(run, **params, state=st or None)
         res = batch[[k for k in (*keys, ts, error_col)]].copy()
         for c in diag_cols:
             res[c] = out_cols[c][skip:]
@@ -911,16 +747,12 @@ def apply_stream_drift(
         end = {k: _py(v) for k, v in dict(end).items()}
         if detector == "fhddm":
             end["_tail"] = [int(v) for v in run[-win_size:]]
-        state.update((json.dumps(end),))
-        _arm_batch(state, state_timeout_ms, state_timeout_clock, batch, ts)
-        yield res
+        return res, (json.dumps(end),)
 
-    return stream_df.groupBy(*keys).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=_timeout_conf(state_timeout_ms, state_timeout_clock),
+    return _stateful_stream(
+        stream_df, keys, ts, (), (*keys, ts, error_col),
+        [f"{c} double" for c in diag_cols] + ["drift int"], "state_json string",
+        lambda key: ("{}",), scan, state_timeout_ms, state_timeout_clock,
     )
 
 
@@ -934,16 +766,41 @@ def apply_stream_ewma(
     state_timeout_ms: int = 0,
     state_timeout_clock: str = "processing",
 ) -> DataFrame:
-    fn, out_schema, state_schema = stream_ewma_score(
-        stream_df, keys, ts, value, alpha, threshold, state_timeout_ms,
-        state_timeout_clock,
-    )
-    return stream_df.groupBy(*keys).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=_timeout_conf(state_timeout_ms, state_timeout_clock),
+    """Per-entity stateful EWMA scoring: keeps an EWMA mean/variance per key
+    (the reference's per-entity record buffer, MarkovModelPredictor.java:
+    286-310, generalized to a numeric stream) and scores each arriving
+    value as |x - ewma| / sqrt(ewvar)."""
+    import numpy as np
+
+    def scan(key, whole, st):
+        mean, var, n = st
+        xs = whole[value].to_numpy(dtype=float)
+        scores = np.zeros(len(xs))
+        # the EWMA mean/variance recursion is sequential by definition
+        # (each score reads the state the previous event wrote); the loop
+        # runs over a bare float array with columnar output assembly —
+        # the one_step_ahead convention
+        for i in range(len(xs)):
+            x = float(xs[i])
+            if n > 0:
+                sd = var**0.5
+                scores[i] = abs(x - mean) / sd if sd > 0 else 0.0
+            if n == 0:
+                mean, var, n = x, 0.0, 1
+            else:
+                mean = (1 - alpha) * mean + alpha * x
+                var = (1 - alpha) * var + alpha * (x - mean) ** 2
+                n += 1
+        out = whole[[*keys, ts]].copy()
+        out[value] = xs
+        out["score"] = scores
+        out["label"] = np.where(scores > threshold, "O", "N")
+        return out, (mean, var, n)
+
+    return _stateful_stream(
+        stream_df, keys, ts, (), (*keys, ts, value),
+        ["score double", "label string"], "mean double, var double, n long",
+        lambda key: (0.0, 0.0, 0), scan, state_timeout_ms, state_timeout_clock,
     )
 
 
@@ -965,102 +822,32 @@ def apply_stream_one_step_ahead(
     :118-151). State = (ring of the last ``window`` *work* values — outliers
     already replaced by their prediction — plus the running residual
     moments), so a restart resumes mid-series exactly like the batch
-    warm-start path. Arithmetic mirrors the batch kernel op-for-op (same
-    numpy mean / moment updates), so stream == batch on an ordered feed by
-    construction."""
+    warm-start path. Both run the one resumable ``sequence.osa_scan``, so
+    stream == batch on an ordered feed by construction."""
     import numpy as np
 
-    if method == "ewma":
-        ew = (1 - alpha) ** np.arange(window - 1, -1, -1)
-    elif method == "weighted":
-        if weights is None or len(weights) != window:
-            raise ValueError("method='weighted' needs len(weights) == window")
-        ew = np.asarray(weights, dtype=float)
-    elif method != "average":
-        raise ValueError(f"unknown method: {method}")
+    from ..operators.sequence import osa_scan, osa_weights
 
-    out_schema = ", ".join(
-        [
-            f"`{f.name}` {f.dataType.simpleString()}"
-            for f in stream_df.schema
-            if f.name in (*keys, ts, value)
-        ]
-        + ["predicted double", "osa_score double", "label string"]
-    )
-    state_schema = "work array<double>, r_n long, r_s1 double, r_s2 double"
+    ew = osa_weights(method, window, alpha, weights)
 
-    out_cols = [*keys, ts, value, "predicted", "osa_score", "label"]
-
-    def fn(key, pdfs, state: GroupState):
-        import numpy as np
-
-        if state.hasTimedOut:
-            state.remove()  # idle entity: evict (see _timeout_conf)
-            yield pd.DataFrame(columns=out_cols)
-            return
-        if state.exists:
-            work, r_n, r_s1, r_s2 = state.get
-            work = list(work)
-        else:
-            work, r_n, r_s1, r_s2 = [], 0, 0.0, 0.0
-        frames = [p for p in pdfs if len(p)]
-        if not frames:
-            state.update((work[-window:], r_n, r_s1, r_s2))
-            _arm(state, state_timeout_ms, state_timeout_clock)
-            yield pd.DataFrame(columns=out_cols)
-            return
-        whole = pd.concat(frames).sort_values(ts, kind="mergesort")
+    def scan(key, whole, st):
         xs = whole[value].to_numpy(dtype=float)
-        n = len(xs)
-        preds = np.full(n, np.nan)
-        scores = np.zeros(n)
-        # the window FEEDBACK (an outlier is replaced by its prediction
-        # before it can pollute the next window) makes each step depend on
-        # the previous OUTPUT — inherently sequential per entity. The loop
-        # runs over a bare float array (no pandas row access, columnar
-        # output assembly); arithmetic is op-for-op the batch kernel's.
-        for i in range(n):
-            x = float(xs[i])
-            if len(work) < window:
-                work.append(x)
-                continue
-            w = np.asarray(work[-window:])
-            if method == "average":
-                p = w.mean()
-            else:
-                p = float((w * ew).sum() / ew.sum())
-            r = x - p
-            if r_n >= 3:
-                var = r_s2 / r_n - (r_s1 / r_n) ** 2
-                sd = var**0.5 if var > 0 else 0.0
-            else:
-                sd = 0.0
-            s = abs(r) / sd if sd > 0 else 0.0
-            preds[i] = float(p)
-            scores[i] = s
-            if s > threshold:
-                work.append(float(p))  # feedback: replace outlier
-            else:
-                work.append(x)
-                r_n += 1
-                r_s1 += r
-                r_s2 += r * r
-            work = work[-window:]
+        preds, scores, (work, r_n, r_s1, r_s2) = osa_scan(
+            xs, window, ew, threshold, st
+        )
         out = whole[[*keys, ts]].copy()
         out[value] = xs
         out["predicted"] = preds
         out["osa_score"] = scores
         out["label"] = np.where(scores > threshold, "O", "N")
-        state.update((work[-window:], r_n, r_s1, r_s2))
-        _arm_batch(state, state_timeout_ms, state_timeout_clock, whole, ts)
-        yield out
+        return out, (work.tolist(), r_n, r_s1, r_s2)
 
-    return stream_df.groupBy(*keys).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=_timeout_conf(state_timeout_ms, state_timeout_clock),
+    return _stateful_stream(
+        stream_df, keys, ts, (), (*keys, ts, value),
+        ["predicted double", "osa_score double", "label string"],
+        "work array<double>, r_n long, r_s1 double, r_s2 double",
+        lambda key: ([], 0, 0.0, 0.0), scan, state_timeout_ms,
+        state_timeout_clock,
     )
 
 
@@ -1623,14 +1410,6 @@ def apply_stream_multigram(
     for c, w in spec:
         if w is None:
             stream_df = stream_df.withColumn(c, F.col(c).cast("string"))
-    out_fields = [
-        f"`{f.name}` {f.dataType.simpleString()}"
-        for f in stream_df.schema
-        if f.name in (*keys, id_col)
-    ]
-    out_schema = ", ".join(out_fields + ["gram string"])
-    state_schema = "syms array<string>"
-
     def _syms(whole: pd.DataFrame) -> "np.ndarray":
         """Vectorized bucket-symbol column: per spec column a valid mask +
         string image (categoricals arrive pre-cast to string Spark-side;
@@ -1661,26 +1440,12 @@ def apply_stream_multigram(
             started |= valid
         return sym
 
-    def fn(key, pdfs, state: GroupState):
+    def scan(key, whole, st):
         import numpy as np
 
-        if state.hasTimedOut:
-            state.remove()  # idle entity: evict (see _timeout_conf)
-            yield pd.DataFrame(columns=[*keys, id_col, "gram"])
-            return
-        tail = list(state.get[0]) if state.exists else []
-        frames = [p for p in pdfs if len(p)]
         key_vals = dict(zip((*keys, id_col), key))
-        if not frames:
-            state.update((tail,))
-            _arm(state, state_timeout_ms, state_timeout_clock)
-            yield pd.DataFrame(columns=[*keys, id_col, "gram"])
-            return
-        whole = pd.concat(frames).sort_values(
-            [ts, *order_cols], kind="mergesort"
-        )
         all_syms = np.concatenate(
-            [np.asarray(tail, dtype=object), _syms(whole)]
+            [np.asarray(list(st[0]), dtype=object), _syms(whole)]
         )
         m = len(all_syms) - seq_len + 1
         if m > 0:
@@ -1692,18 +1457,15 @@ def apply_stream_multigram(
         new_tail = (
             all_syms[-(seq_len - 1):].tolist() if seq_len > 1 else []
         )
-        state.update((new_tail,))
-        _arm_batch(state, state_timeout_ms, state_timeout_clock, whole, ts)
-        yield pd.DataFrame(
+        out = pd.DataFrame(
             {**{c: [v] * len(grams) for c, v in key_vals.items()},
              "gram": grams},
             columns=[*keys, id_col, "gram"],
         )
+        return out, (new_tail,)
 
-    return stream_df.groupBy(*keys, id_col).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=_timeout_conf(state_timeout_ms, state_timeout_clock),
+    return _stateful_stream(
+        stream_df, (*keys, id_col), ts, order_cols, (*keys, id_col),
+        ["gram string"], "syms array<string>", lambda key: ([],), scan,
+        state_timeout_ms, state_timeout_clock,
     )

@@ -172,6 +172,68 @@ def test_stream_drift_matches_batch(spark, error_stream, detector, params):
         shutil.rmtree(chk, ignore_errors=True)
 
 
+@pytest.mark.parametrize(
+    "detector,params",
+    [
+        ("ddm", {"threshold": 2.0, "warmup": 20}),
+        ("fhddm", {"conf_level": 1e-3, "win_size": 25}),
+    ],
+)
+def test_stream_drift_tied_ts_scans_stable_order(spark, detector, params):
+    """Same-ts rows of one micro-batch are scanned in arrival order, the
+    stable ts sort batch drift_detect applies: a one-file stream whose 500
+    rows share 50 timestamps emits exactly the rows of one detector scan
+    over the file's rows, stable-sorted by ts."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from beymani_spark.streaming.jobs import apply_stream_drift
+
+    rng = np.random.RandomState(7)
+    n = 500
+    pdf = pd.DataFrame(
+        {
+            "model_id": "m1",
+            "ts": rng.permutation(np.repeat(np.arange(50), n // 50)).astype("int64"),
+            "is_error": (rng.rand(n) < np.linspace(0.05, 0.5, n)).astype("int64"),
+        }
+    )
+    ordered = pdf.sort_values("ts", kind="mergesort", ignore_index=True)
+    cols, _ = drift_mod._SCANS[detector](ordered["is_error"].to_numpy(), **params)
+    expected = ordered[["ts", "is_error"]].copy()
+    for c, v in cols.items():
+        expected[c] = v
+
+    src = tempfile.mkdtemp(prefix=f"beymani_drift_ties_src_{detector}_")
+    chk = tempfile.mkdtemp(prefix=f"beymani_drift_ties_chk_{detector}_")
+    try:
+        pq.write_table(
+            pa.Table.from_pandas(pdf, preserve_index=False),
+            os.path.join(src, "part-000.parquet"),
+        )
+        stream = spark.readStream.schema(
+            "model_id string, ts long, is_error long"
+        ).parquet(src)
+        out = apply_stream_drift(
+            stream, ["model_id"], "ts", "is_error", detector, **params
+        )
+        q = streams.start_sink(
+            out,
+            {"format": "memory", "queryName": f"drift_ties_{detector}_t",
+             "outputMode": "append", "checkpoint": chk, "trigger": "availableNow"},
+        )
+        q.awaitTermination(180)
+        got = spark.sql(f"select * from drift_ties_{detector}_t").toPandas()
+    finally:
+        shutil.rmtree(src, ignore_errors=True)
+        shutil.rmtree(chk, ignore_errors=True)
+
+    order = list(expected.columns)
+    got = got[order].astype(float).sort_values(order, ignore_index=True)
+    expected = expected.astype(float).sort_values(order, ignore_index=True)
+    pd.testing.assert_frame_equal(got, expected, check_exact=False, rtol=1e-12)
+
+
 @pytest.fixture(scope="module")
 def stream_dirs(spark):
     src = tempfile.mkdtemp(prefix="beymani_stream_src_")
@@ -237,6 +299,74 @@ def test_stream_ewma_stateful(spark, stream_dirs):
     out = spark.sql("select * from ewma_t").toPandas()
     assert len(out) == ev.count()
     assert set(out.label.unique()) <= {"O", "N"}
+
+
+def test_stream_ewma_scores_resume_across_batches(spark):
+    """Stream EWMA scores equal a plain per-key recursion over ts-sorted
+    rows when the feed arrives as three files, one per micro-batch, so
+    every key's (mean, var, n) state resumes across two boundaries."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    alpha, threshold = 0.2, 2.5
+    rng = np.random.RandomState(11)
+    parts = []
+    for key in ("a", "b", "c"):
+        vals = rng.normal(10.0, 1.0, 90)
+        vals[rng.choice(90, 6, replace=False)] += 8.0  # spikes that tag 'O'
+        parts.append(pd.DataFrame({"k": key, "ts": np.arange(90, dtype="int64"), "v": vals}))
+    pdf = pd.concat(parts, ignore_index=True)
+
+    ref = []
+    for key, g in pdf.sort_values("ts", kind="mergesort").groupby("k"):
+        mean, var, n = 0.0, 0.0, 0
+        for t, x in zip(g.ts, g.v):
+            s = 0.0
+            if n > 0:
+                sd = var**0.5
+                s = abs(x - mean) / sd if sd > 0 else 0.0
+            if n == 0:
+                mean, var, n = x, 0.0, 1
+            else:
+                mean = (1 - alpha) * mean + alpha * x
+                var = (1 - alpha) * var + alpha * (x - mean) ** 2
+                n += 1
+            ref.append((key, int(t), s))
+    ref = pd.DataFrame(ref, columns=["k", "ts", "ref_score"])
+
+    src = tempfile.mkdtemp(prefix="beymani_ewma_src_")
+    chk = tempfile.mkdtemp(prefix="beymani_ewma_chk_")
+    try:
+        for i, lo in enumerate((0, 30, 60)):
+            path = os.path.join(src, f"part-{i:03d}.parquet")
+            part = pdf[(pdf.ts >= lo) & (pdf.ts < lo + 30)]
+            pq.write_table(pa.Table.from_pandas(part, preserve_index=False), path)
+            os.utime(path, (1_000_000 + i, 1_000_000 + i))
+        stream = (
+            spark.readStream.schema("k string, ts long, v double")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
+        )
+        scored = apply_stream_ewma(
+            stream, ["k"], "ts", "v", alpha=alpha, threshold=threshold
+        )
+        q = streams.start_sink(
+            scored,
+            {"format": "memory", "queryName": "ewma_resume_t",
+             "outputMode": "append", "checkpoint": chk, "trigger": "availableNow"},
+        )
+        q.awaitTermination(180)
+        got = spark.sql("select * from ewma_resume_t").toPandas()
+    finally:
+        shutil.rmtree(src, ignore_errors=True)
+        shutil.rmtree(chk, ignore_errors=True)
+
+    assert len(got) == len(pdf)
+    m = got.merge(ref, on=["k", "ts"], how="inner", validate="one_to_one")
+    assert len(m) == len(pdf)
+    np.testing.assert_allclose(m.score, m.ref_score, rtol=1e-12, atol=0.0)
+    assert (m.label == np.where(m.ref_score > threshold, "O", "N")).all()
+    assert (m.label == "O").sum() > 0
 
 
 @pytest.fixture(scope="module")

@@ -61,6 +61,16 @@ def test_one_step_ahead_weighted_method(spark, seq_df):
         )
     with pytest.raises(ValueError, match="unknown method"):
         sequence.one_step_ahead(seq_df, ["key"], "ts", "value", method="median")
+    # the multi-attribute form takes no weights list: 'weighted' fails at
+    # planning like any other unsupported method
+    with pytest.raises(ValueError, match="weights"):
+        sequence.one_step_ahead_multi(
+            seq_df, ["key"], "ts", ["value"], window=4, method="weighted"
+        )
+    with pytest.raises(ValueError, match="unknown method"):
+        sequence.one_step_ahead_multi(
+            seq_df, ["key"], "ts", ["value"], method="median"
+        )
 
 
 def test_one_step_ahead_warm_start_continuity(spark, seq_df):
