@@ -3,9 +3,11 @@
   mahalanobis_* ≙ MahalanobisDistancePredictor (/root/reference/src/main/java/
       org/beymani/predictor/MahalanobisDistancePredictor.java:78-105):
       score = (x-μ)ᵀ Σ⁻¹ (x-μ) from keyed mean vector + covariance. The model
-      is one aggregation (avg + covar_samp per pair); the 2-attr path inverts
-      Σ in closed form so scoring stays a pure column expression; higher
-      dimensions invert per-key with numpy on the (tiny) model DataFrame.
+      is one aggregation (avg + covar_samp per pair). For 2 attributes the
+      scorer inverts Σ in closed form; for any other count the fit itself
+      carries Σ⁻¹, inverted once per key by numpy over the aggregated model,
+      with NULL for a one-row or singular covariance. Scoring is one
+      broadcast join and a column expression for every d.
   pca_model/pca_score ≙ PrincipalComponentPredictor (/root/reference/spark/
       src/main/scala/org/beymani/spark/pc/PrincipalComponentPredictor.scala:
       42-112): reconstruction error ‖x - x̂‖ after projecting on the top-k
@@ -45,8 +47,16 @@ broadcast join for a larger driver-held one, a plain join over the cap.
 The literal path stays because it is measured faster: at sf0.01 on 4
 cores kmeans_cluster_score takes 3.52 s and 9 jobs with it and 3.80 s and
 15 jobs with a broadcast join (kmeans_mixed: 4.29 s against 5.28 s).
-Mahalanobis, PCA and the autoencoder still return plain frames and always
-broadcast-join them.
+
+Mahalanobis, PCA and the autoencoder still return plain frames that their
+scorers broadcast-join lazily, because that is measured faster for a
+single-row-per-key model: pca_reconstruction on ``materialize`` plus an
+inline ``attach`` kept its hash and its 5 jobs but lost 10 of 10
+interleaved pairs (median 1.3 s -> 2.0 s at sf0.01 on 4 cores), and
+reading inlined model fields in the arithmetic took 1.41 s against 0.67 s
+for scoring alone. Each of these scorers reads everything model-shaped
+(Σ⁻¹, the component count, the hidden width) from the fitted frame's
+columns, and drops exactly those columns after scoring.
 """
 from __future__ import annotations
 
@@ -71,14 +81,49 @@ from .multimodal import _spread
 # ---------------------------------------------------------------- Mahalanobis
 
 def mahalanobis_model(df: DataFrame, keys: Sequence[str], values: Sequence[str]) -> DataFrame:
-    """Per-key mean vector + sample covariance matrix (wide columns)."""
+    """Per-key mean vector + sample covariance matrix (wide columns
+    ``mean_<v>``, ``cov_<a>_<b>`` for a at or before b).
+
+    For d != 2 the model also carries the inverse covariance as ``inv_i_j``
+    (row-major, i and j index ``values``), computed once per key by one
+    narrow mapInPandas over the aggregated model. A key whose covariance
+    has a NULL or non-finite entry (a one-row key) or is singular
+    (``matrix_rank < d``) gets NULL ``inv_i_j``, so it scores NULL and tags
+    'I', the rule the d == 2 closed form applies through its determinant."""
     aggs = []
     for v in values:
         aggs.append(F.avg(v).alias(f"mean_{v}"))
     for i, a in enumerate(values):
         for b in values[i:]:
             aggs.append(F.covar_samp(F.col(a), F.col(b)).alias(f"cov_{a}_{b}"))
-    return df.groupBy(*keys).agg(*aggs)
+    model = df.groupBy(*keys).agg(*aggs)
+    d = len(values)
+    if d == 2:
+        return model
+    cells = [
+        (i, j, f"cov_{values[min(i, j)]}_{values[max(i, j)]}")
+        for i in range(d)
+        for j in range(d)
+    ]
+
+    def invert(batches):
+        for pdf in batches:
+            cov = np.empty((len(pdf), d, d))
+            for i, j, col in cells:
+                cov[:, i, j] = pdf[col].to_numpy(dtype=float)
+            ok = np.isfinite(cov).all(axis=(1, 2))
+            ok[ok] = np.linalg.matrix_rank(cov[ok]) == d
+            inv = np.full_like(cov, np.nan)  # NaN goes back to Spark as NULL
+            inv[ok] = np.linalg.inv(cov[ok])
+            yield pdf.assign(
+                **{f"inv_{i}_{j}": inv[:, i, j] for i in range(d) for j in range(d)}
+            )
+
+    schema = StructType([*model.schema])
+    for i in range(d):
+        for j in range(d):
+            schema = schema.add(f"inv_{i}_{j}", "double")
+    return model.mapInPandas(invert, schema)
 
 
 def mahalanobis_score(
@@ -88,63 +133,57 @@ def mahalanobis_score(
     values: Sequence[str],
     threshold: float = 9.0,
 ) -> DataFrame:
-    """Squared Mahalanobis distance. d==2 uses the closed-form inverse as a
-    column expression; d>2 inverts per key with numpy (model stays tiny)."""
+    """Squared Mahalanobis distance (x-μ)ᵀ Σ⁻¹ (x-μ) against a broadcast
+    mahalanobis_model, as a column expression. d == 2 inverts Σ in closed
+    form (the oracle's formula; a zero determinant scores NULL); any other
+    d sums the model's ``inv_i_j·dx_i·dx_j``. Keys absent from the model, or
+    with a one-row or singular covariance, score NULL and tag 'I'."""
+    joined = df.join(F.broadcast(model), list(keys), "left")
+    dx = [F.col(v) - F.col(f"mean_{v}") for v in values]
     if len(values) == 2:
         va, vb = values
-        joined = df.join(F.broadcast(model), list(keys), "left")
         a = F.col(f"cov_{va}_{va}")
         b = F.col(f"cov_{vb}_{vb}")
         c = F.col(f"cov_{va}_{vb}")
         det = a * b - c * c
-        dx = F.col(va) - F.col(f"mean_{va}")
-        dy = F.col(vb) - F.col(f"mean_{vb}")
-        score = F.when(
-            F.abs(det) > 0, (b * dx * dx - 2 * c * dx * dy + a * dy * dy) / det
+        x, y = dx
+        score = F.when(F.abs(det) > 0, (b * x * x - 2 * c * x * y + a * y * y) / det)
+    else:
+        score = reduce(
+            add,
+            [
+                F.col(f"inv_{i}_{j}") * dx[i] * dx[j]
+                for i in range(len(values))
+                for j in range(len(values))
+            ],
         )
-        out = joined.withColumn("score", score)
-        drop = [f"mean_{v}" for v in values] + [
-            f"cov_{x}_{y}" for i, x in enumerate(values) for y in values[i:]
-        ]
-        return out.withColumn("label", tag_label(F.col("score"), threshold)).drop(*drop)
+    return _scored(joined, model, keys, score, threshold)
 
-    d = len(values)
 
-    def invert(pdf: pd.DataFrame) -> pd.DataFrame:
-        cov = np.zeros((d, d))
-        for i, a_ in enumerate(values):
-            for j_, b_ in enumerate(values):
-                lo, hi = (a_, b_) if i <= j_ else (b_, a_)
-                cov[i, j_] = pdf[f"cov_{lo}_{hi}"].iloc[0]
-        inv = np.linalg.pinv(cov)
-        row = {k: pdf[k].iloc[0] for k in pdf.columns}
-        for i in range(d):
-            for j_ in range(d):
-                row[f"inv_{i}_{j_}"] = float(inv[i, j_])
-        return pd.DataFrame([row])
-
-    inv_fields = ", ".join(f"inv_{i}_{j} double" for i in range(d) for j in range(d))
-    schema = ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in model.schema)
-    enriched = model.groupBy(*keys).applyInPandas(invert, schema=f"{schema}, {inv_fields}")
-    joined = df.join(F.broadcast(enriched), list(keys), "left")
-    score = None
-    for i, a_ in enumerate(values):
-        for j_, b_ in enumerate(values):
-            term = (
-                F.col(f"inv_{i}_{j_}")
-                * (F.col(a_) - F.col(f"mean_{a_}"))
-                * (F.col(b_) - F.col(f"mean_{b_}"))
-            )
-            score = term if score is None else score + term
-    out = joined.withColumn("score", score)
-    drop = (
-        [f"mean_{v}" for v in values]
-        + [f"cov_{x}_{y}" for i, x in enumerate(values) for y in values[i:]]
-        + [f"inv_{i}_{j}" for i in range(d) for j in range(d)]
+def _scored(
+    joined: DataFrame,
+    model: DataFrame,
+    keys: Sequence[str],
+    score,
+    threshold: float,
+) -> DataFrame:
+    """``score`` and its label on a fact-model join, minus exactly the
+    model's non-key columns."""
+    return (
+        joined.withColumn("score", score)
+        .withColumn("label", tag_label(F.col("score"), threshold))
+        .drop(*[c for c in model.columns if c not in keys])
     )
-    return out.withColumn("label", tag_label(F.col("score"), threshold)).drop(*drop)
 
 
+def _width(model: DataFrame, prefix: str, value: str) -> int:
+    """How many ``<prefix>_<c>_<value>`` columns (c = 0, 1, ...) the fit
+    wrote: the component or hidden width the scorer unrolls."""
+    cols = set(model.columns)
+    c = 0
+    while f"{prefix}_{c}_{value}" in cols:
+        c += 1
+    return c
 
 
 def hash_presample(
@@ -304,14 +343,15 @@ def pca_score(
     model: DataFrame,
     keys: Sequence[str],
     values: Sequence[str],
-    n_components: int = 1,
     threshold: float = 3.0,
 ) -> DataFrame:
     """Reconstruction-error score ‖x - x̂‖ against a broadcast pca_model —
     a pure codegen column expression (projection coefficients come from the
     tiny model join), so the fact table never shuffles and never enters
-    Python. Keys absent from the model (or with a degenerate fit) tag 'I'."""
-    k = int(n_components)
+    Python. The component count is the model's ``pc_<c>_*`` width. Keys
+    absent from the model tag 'I'; a fit pool of at most that many rows
+    scores 0."""
+    k = _width(model, "pc", values[0])
     joined = df.join(F.broadcast(model), list(keys), "left")
     xc = [F.col(v) - F.col(f"mean_{v}") for v in values]
     proj = [F.lit(0.0)] * len(values)
@@ -328,15 +368,9 @@ def pca_score(
         term = diff * diff
         err = term if err is None else err + term
     score = F.when(F.col("n") > k, F.sqrt(err)).otherwise(F.lit(0.0))
-    out = joined.withColumn(
-        "score", F.when(F.col("n").isNotNull(), score)
-    ).withColumn("label", tag_label(F.col("score"), threshold))
-    drop = (
-        ["n"]
-        + [f"mean_{v}" for v in values]
-        + [f"pc_{c}_{v}" for c in range(k) for v in values]
+    return _scored(
+        joined, model, keys, F.when(F.col("n").isNotNull(), score), threshold
     )
-    return out.drop(*drop)
 
 
 # ---------------------------------------------------------------- AutoEncoder
@@ -400,18 +434,17 @@ def autoencoder_score(
     model: DataFrame,
     keys: Sequence[str],
     values: Sequence[str],
-    hidden: int = 2,
     threshold: float = 3.0,
     activation: str = "linear",
 ) -> DataFrame:
     """Reconstruction-error score ‖xs - Wᵀ act(W xs)‖ (standardized space)
     against a broadcast autoencoder_fit model — like pca_score, a pure
     codegen column expression: the fact table never shuffles and never
-    enters Python. Keys absent from the model tag 'I'. ``activation`` must
-    match the fit's."""
+    enters Python. The hidden width is the model's ``w_<c>_*`` width. Keys
+    absent from the model tag 'I'. ``activation`` must match the fit's."""
     if activation not in ("linear", "tanh"):
         raise ValueError(f"unknown activation: {activation}")
-    h = int(hidden)
+    h = _width(model, "w", values[0])
     joined = df.join(F.broadcast(model), list(keys), "left")
     # Standardized inputs and hidden activations are projected as REAL
     # columns, not inlined sub-expressions: every xs_j is referenced by all
@@ -463,18 +496,9 @@ def autoencoder_score(
         term = diff * diff
         err = term if err is None else err + term
     score = F.when(F.col("n") > h, F.sqrt(err)).otherwise(F.lit(0.0))
-    out = joined.withColumn(
-        "score", F.when(F.col("n").isNotNull(), score)
-    ).withColumn("label", tag_label(F.col("score"), threshold))
-    drop = (
-        ["n"]
-        + [f"mean_{v}" for v in values]
-        + [f"std_{v}" for v in values]
-        + [f"w_{c}_{v}" for c in range(h) for v in values]
-        + [f"_xs_{v}" for v in values]
-        + [f"_z_{c}" for c in range(h)]
-    )
-    return out.drop(*drop)
+    return _scored(
+        joined, model, keys, F.when(F.col("n").isNotNull(), score), threshold
+    ).drop(*[f"_xs_{v}" for v in values], *[f"_z_{c}" for c in range(h)])
 
 
 # ---------------------------------------------------------------- Fitted models
@@ -722,26 +746,23 @@ def _cluster_score(
     spec,
     min_cluster_fraction: float,
     threshold: float,
-    max_clusters: int | None,
 ) -> DataFrame:
     """sqrt of the distance to the nearest LARGE centroid. The fact table
     meets one array per key (no xK row explosion, no post-join shuffle).
-    ``max_clusters`` is the unroll width; by default it is read off the
-    driver rows, or off the frame with one job for an over-cap model."""
-    if max_clusters is None:
-        if model.rows is not None:
-            top = max((int(r["cluster_id"]) for r in model.rows), default=None)
-        else:
-            top = model.frame.agg(F.max("cluster_id")).first()[0]
-        if top is None:
-            raise ValueError(
-                "empty kmeans model: the model frame has no centroid rows — "
-                "fit the model over the standing corpus before scoring"
-            )
-        max_clusters = int(top) + 1
+    The unroll width is the model's largest cluster_id plus one, read off
+    the driver rows, or off the frame with one job for an over-cap model."""
+    if model.rows is not None:
+        top = max((int(r["cluster_id"]) for r in model.rows), default=None)
+    else:
+        top = model.frame.agg(F.max("cluster_id")).first()[0]
+    if top is None:
+        raise ValueError(
+            "empty kmeans model: the model frame has no centroid rows — "
+            "fit the model over the standing corpus before scoring"
+        )
     large = _large_clusters(model, keys, min_cluster_fraction)
     return _nearest(
-        df, large, keys, spec, int(max_clusters), "score",
+        df, large, keys, spec, int(top) + 1, "score",
         lambda cols, m: F.sqrt(m),
     ).withColumn("label", tag_label(F.col("score"), threshold))
 
@@ -800,16 +821,11 @@ def kmeans_score(
     values: Sequence[str],
     min_cluster_fraction: float = 0.05,
     threshold: float = 3.0,
-    max_clusters: int | None = None,
 ) -> DataFrame:
     """Distance to the nearest *large* centroid (small clusters are anomaly
-    pockets, cf. ClusterBasedPredictor.scala:88-103).
-
-    ``max_clusters``: unroll width for the codegen argmin (defaults to the
-    largest cluster_id in the model, plus one)."""
+    pockets, cf. ClusterBasedPredictor.scala:88-103)."""
     return _cluster_score(
-        df, model, keys, _kmeans_spec(values), min_cluster_fraction,
-        threshold, max_clusters,
+        df, model, keys, _kmeans_spec(values), min_cluster_fraction, threshold
     )
 
 
@@ -945,13 +961,12 @@ def kmeans_mixed_score(
     gamma: float = 1.0,
     min_cluster_fraction: float = 0.05,
     threshold: float = 1.0,
-    max_clusters: int | None = None,
 ) -> DataFrame:
     """Mixed-type ClusterBasedPredictor scoring: sqrt of the mixed distance
     to the nearest LARGE centroid, as a pure codegen expression."""
     return _cluster_score(
         df, model, keys, _mixed_spec(num_values, cat_values, gamma),
-        min_cluster_fraction, threshold, max_clusters,
+        min_cluster_fraction, threshold,
     )
 
 

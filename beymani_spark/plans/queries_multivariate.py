@@ -76,7 +76,7 @@ def q_pca_reconstruction(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = multivariate.pca_score(
         li, model, ["l_returnflag"], ["l_quantity", "l_extendedprice", "l_discount"],
-        n_components=1, threshold=3.0,
+        threshold=3.0,
     )
     return _round(
         out.select("l_orderkey", "l_linenumber", "l_returnflag", "score", "label"),
@@ -94,7 +94,7 @@ def q_kmeans_cluster_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = multivariate.kmeans_score(
         li, model, ["l_returnflag"], ["l_quantity", "l_extendedprice"],
-        threshold=10000.0, max_clusters=4,
+        threshold=10000.0,
     )
     return _round(
         out.select("l_orderkey", "l_linenumber", "l_returnflag", "score", "label"),
@@ -117,7 +117,7 @@ def q_kmeans_mixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = multivariate.kmeans_mixed_score(
         li, model, ["l_returnflag"], num, cat,
-        gamma=1.0, threshold=0.6, max_clusters=4,
+        gamma=1.0, threshold=0.6,
     )
     return _round(
         out.select("l_orderkey", "l_linenumber", "l_returnflag", "score", "label"),
@@ -189,8 +189,7 @@ def q_autoencoder_tanh(spark: SparkSession, sf_dir: str) -> DataFrame:
         li, ["l_returnflag"], values, hidden=2, seed=42, activation="tanh"
     )
     out = multivariate.autoencoder_score(
-        li, model, ["l_returnflag"], values, hidden=2, threshold=3.0,
-        activation="tanh",
+        li, model, ["l_returnflag"], values, threshold=3.0, activation="tanh"
     )
     return _round(
         out.select("l_orderkey", "l_linenumber", "l_returnflag", "score", "label"),
@@ -212,7 +211,7 @@ def q_autoencoder(spark: SparkSession, sf_dir: str) -> DataFrame:
         li, ["l_returnflag"], values, hidden=2, seed=42
     )
     out = multivariate.autoencoder_score(
-        li, model, ["l_returnflag"], values, hidden=2, threshold=3.0
+        li, model, ["l_returnflag"], values, threshold=3.0
     )
     return _round(
         out.select("l_orderkey", "l_linenumber", "l_returnflag", "score", "label"),

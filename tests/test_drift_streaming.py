@@ -266,11 +266,12 @@ def test_stream_zscore_matches_batch(spark, stream_dirs):
     assert sorted(got.event_id) == sorted(expected.event_id)
 
 
-def test_stream_temporal_aggregate_runs(spark, stream_dirs):
+def test_stream_temporal_aggregate_runs(spark, stream_dirs, tmp_path):
     from beymani_spark.sources import load_table
 
-    src, chk = stream_dirs
+    src, chk = str(tmp_path / "events"), stream_dirs[1]
     ev = load_table(spark, "/root/testdata/sf0.001", "events")
+    ev.write.parquet(src)
     stream = spark.readStream.schema(ev.schema).parquet(src)
     agg = stream_temporal_aggregate(stream, ["event_type"], "ts", "value", "1 hour", "2 hours")
     q = streams.start_sink(
@@ -283,11 +284,12 @@ def test_stream_temporal_aggregate_runs(spark, stream_dirs):
     assert n >= 0  # append mode emits only watermark-closed windows
 
 
-def test_stream_ewma_stateful(spark, stream_dirs):
+def test_stream_ewma_stateful(spark, stream_dirs, tmp_path):
     from beymani_spark.sources import load_table
 
-    src, chk = stream_dirs
+    src, chk = str(tmp_path / "events"), stream_dirs[1]
     ev = load_table(spark, "/root/testdata/sf0.001", "events")
+    ev.write.parquet(src)
     stream = spark.readStream.schema(ev.schema).parquet(src)
     scored = apply_stream_ewma(stream, ["event_type"], "ts", "value", alpha=0.2, threshold=4.0)
     q = streams.start_sink(

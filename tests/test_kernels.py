@@ -247,9 +247,7 @@ def mv_df(spark):
 
 def test_pca_off_manifold(spark, mv_df):
     model = multivariate.pca_model(mv_df, ["key"], ["x", "y"], n_components=1)
-    out = multivariate.pca_score(
-        mv_df, model, ["key"], ["x", "y"], n_components=1
-    ).toPandas()
+    out = multivariate.pca_score(mv_df, model, ["key"], ["x", "y"]).toPandas()
     assert out.sort_values("score", ascending=False).iloc[0].pid == 0
     assert set(out.label) <= {"O", "N"}
 
@@ -258,9 +256,7 @@ def test_autoencoder_off_manifold_recall(spark, mv_df):
     """auen contract (mvand.py): the off-subspace injected point must rank
     first by reconstruction error."""
     model = multivariate.autoencoder_fit(mv_df, ["key"], ["x", "y"], hidden=1, seed=7)
-    out = multivariate.autoencoder_score(
-        mv_df, model, ["key"], ["x", "y"], hidden=1
-    ).toPandas()
+    out = multivariate.autoencoder_score(mv_df, model, ["key"], ["x", "y"]).toPandas()
     assert out.sort_values("score", ascending=False).iloc[0].pid == 0
     assert set(out.label) <= {"O", "N"}
 
@@ -286,9 +282,7 @@ def test_autoencoder_degenerate_inputs(spark):
     )
     df = spark.createDataFrame(pdf)
     model = multivariate.autoencoder_fit(df, ["key"], ["x", "y"], hidden=2)
-    out = multivariate.autoencoder_score(
-        df, model, ["key"], ["x", "y"], hidden=2
-    ).toPandas()
+    out = multivariate.autoencoder_score(df, model, ["key"], ["x", "y"]).toPandas()
     tiny = out[out.key == "tiny"]
     assert (tiny.score == 0.0).all() and (tiny.label == "N").all()
     k = out[out.key == "k"]
@@ -308,25 +302,114 @@ def test_autoencoder_missing_key_tags_I(spark, mv_df):
     other = spark.createDataFrame(
         pd.DataFrame({"key": ["zz"], "pid": [9], "x": [1.0], "y": [2.0]})
     )
-    out = multivariate.autoencoder_score(
-        other, model, ["key"], ["x", "y"], hidden=1
-    ).toPandas()
+    out = multivariate.autoencoder_score(other, model, ["key"], ["x", "y"]).toPandas()
     assert list(out.label) == ["I"]
 
 
-def test_mahalanobis_hand_computed(spark):
-    pdf = pd.DataFrame(
-        {"key": ["k"] * 4, "x": [1.0, 2.0, 3.0, 4.0], "y": [1.0, 2.0, 4.0, 3.0]}
-    )
+_MAHAL_CASES = {
+    "hand": {"x": [1.0, 2.0, 3.0, 4.0], "y": [1.0, 2.0, 4.0, 3.0],
+             "z": [2.0, 1.0, 5.0, 3.0]},
+    # y = 2x, z = 3x: rank-1 covariance
+    "singular": {"x": [1.0, 2.0, 3.0, 4.0, 5.0], "y": [2.0, 4.0, 6.0, 8.0, 10.0],
+                 "z": [3.0, 6.0, 9.0, 12.0, 15.0]},
+    # covar_samp of one row is NULL
+    "one_row": {"x": [1.0], "y": [2.0], "z": [5.0]},
+}
+
+
+@pytest.mark.parametrize(
+    "case, d",
+    [pytest.param(c, d, id=f"{c}-d{d}") for c in _MAHAL_CASES for d in (2, 3)],
+)
+def test_mahalanobis_hand_computed(spark, case, d):
+    """d = 2 scores through the closed form, d = 3 through the model's
+    inverse; both equal numpy's inverse of the sample covariance, and a
+    singular or one-row covariance scores NULL and tags 'I' at every d."""
+    cols = ["x", "y", "z"][:d]
+    pdf = pd.DataFrame(_MAHAL_CASES[case]).assign(key="k")[["key", "x", "y", "z"]]
     df = spark.createDataFrame(pdf)
-    model = multivariate.mahalanobis_model(df, ["key"], ["x", "y"])
-    out = multivariate.mahalanobis_score(df, model, ["key"], ["x", "y"]).toPandas()
-    x = pdf[["x", "y"]].to_numpy()
+    model = multivariate.mahalanobis_model(df, ["key"], cols)
+    out = multivariate.mahalanobis_score(df, model, ["key"], cols).toPandas()
+    if case != "hand":
+        assert out.score.isna().all() and (out.label == "I").all()
+        return
+    x = pdf[cols].to_numpy()
     inv = np.linalg.inv(np.cov(x.T))
-    d = x - x.mean(axis=0)
-    expected = np.einsum("ij,jk,ik->i", d, inv, d)
+    dx = x - x.mean(axis=0)
+    expected = np.einsum("ij,jk,ik->i", dx, inv, dx)
     got = out.sort_values("x").score.to_numpy()
     np.testing.assert_allclose(got, expected, rtol=1e-9)
+
+
+@pytest.fixture(scope="module")
+def mv3_df(spark):
+    rng = np.random.RandomState(5)
+    t = rng.normal(0, 1, (200, 2))
+    x = np.column_stack([t[:, 0], t[:, 1], t[:, 0] - t[:, 1]])
+    x += rng.normal(0, 0.05, x.shape)
+    pdf = pd.DataFrame({"key": "k", "pid": range(200)}).assign(a=x[:, 0], b=x[:, 1], c=x[:, 2])
+    return spark.createDataFrame(pdf)
+
+
+def test_scorers_read_width_from_model(spark, mv3_df):
+    """pca_score and autoencoder_score unroll every component the fit
+    wrote: width-2 fits score as numpy's width-2 reconstruction error. Each
+    single-row scorer returns exactly its input columns plus score and
+    label."""
+    vals = ["a", "b", "c"]
+    x = mv3_df.toPandas().sort_values("pid")[vals].to_numpy()
+    want = [*mv3_df.columns, "score", "label"]
+
+    pm = multivariate.pca_model(mv3_df, ["key"], vals, n_components=2)
+    pca = multivariate.pca_score(mv3_df, pm, ["key"], vals)
+    m = pm.first()
+    mu = np.array([m[f"mean_{v}"] for v in vals])
+    basis = np.array([[m[f"pc_{c}_{v}"] for v in vals] for c in range(2)])
+    xc = x - mu
+    expected = np.sqrt(((xc - xc @ basis.T @ basis) ** 2).sum(axis=1))
+    assert pca.columns == want
+    got = pca.toPandas().sort_values("pid").score.to_numpy()
+    np.testing.assert_allclose(got, expected, rtol=1e-9, atol=1e-12)
+
+    am = multivariate.autoencoder_fit(mv3_df, ["key"], vals, hidden=2, seed=7)
+    ae = multivariate.autoencoder_score(mv3_df, am, ["key"], vals)
+    m = am.first()
+    mu = np.array([m[f"mean_{v}"] for v in vals])
+    sd = np.array([m[f"std_{v}"] for v in vals])
+    w = np.array([[m[f"w_{c}_{v}"] for v in vals] for c in range(2)])
+    xs = (x - mu) / sd
+    expected = np.sqrt(((xs - xs @ w.T @ w) ** 2).sum(axis=1))
+    assert ae.columns == want
+    got = ae.toPandas().sort_values("pid").score.to_numpy()
+    np.testing.assert_allclose(got, expected, rtol=1e-9, atol=1e-12)
+
+    mm = multivariate.mahalanobis_model(mv3_df, ["key"], vals)
+    assert multivariate.mahalanobis_score(mv3_df, mm, ["key"], vals).columns == want
+
+
+def test_materialize_cap_boundary(spark):
+    """A model of exactly max_model_rows rows keeps its rows on the driver;
+    one row more leaves rows None. Either way the fit runs every partition
+    exactly once and the frame holds every row."""
+    from beymani_spark.functions import caching
+
+    for cap, held in ((6, True), (5, False)):
+        seen = spark.sparkContext.accumulator(0)
+
+        def tally(batches):
+            for pdf in batches:
+                seen.add(len(pdf))
+                yield pdf
+
+        with caching.scope():
+            model = multivariate.materialize(
+                spark.range(0, 6, 1, 3).mapInPandas(tally, "id long"), cap
+            )
+            assert (model.rows is not None) == held
+            if held:
+                assert sorted(r.id for r in model.rows) == list(range(6))
+            assert model.frame.count() == 6
+            assert seen.value == 6
 
 
 def test_isolation_forest_deterministic_and_recall(spark, mv_df):
@@ -565,8 +648,7 @@ def test_autoencoder_tanh_activation(spark):
         presample=None, activation="tanh",
     )
     out = mv.autoencoder_score(
-        df, model, ["g"], ["a", "b", "c"], hidden=2, threshold=3.0,
-        activation="tanh",
+        df, model, ["g"], ["a", "b", "c"], threshold=3.0, activation="tanh",
     ).collect()
     scores = {r["id"]: r["score"] for r in out}
     # outlier (last id) scores highest

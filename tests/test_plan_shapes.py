@@ -106,7 +106,7 @@ def test_kmeans_pca_fit_is_presampled_score_is_broadcast(spark):
     keys, vals = ["l_returnflag"], ["l_quantity", "l_extendedprice"]
 
     model = mv.pca_model(li, keys, vals, n_components=1, presample=64)
-    scored = mv.pca_score(li, model, keys, vals, n_components=1)
+    scored = mv.pca_score(li, model, keys, vals)
     scored.count()
     plan = _plan(scored)
     assert "BroadcastHashJoin" in plan
@@ -134,7 +134,7 @@ def test_autoencoder_score_is_broadcast_codegen(spark):
     li = lt(spark, SF, "lineitem")
     keys, vals = ["l_returnflag"], ["l_quantity", "l_extendedprice"]
     model = mv.autoencoder_fit(li, keys, vals, hidden=1, presample=64)
-    scored = mv.autoencoder_score(li, model, keys, vals, hidden=1)
+    scored = mv.autoencoder_score(li, model, keys, vals)
     scored.count()
     plan = _plan(scored)
     assert "BroadcastHashJoin" in plan
@@ -143,6 +143,25 @@ def test_autoencoder_score_is_broadcast_codegen(spark):
     # lives under the broadcast subtree only)
     head = plan.split("BroadcastExchange")[0]
     assert "Python" not in head, "AE scoring must stay JVM-side"
+
+
+def test_mahalanobis_d3_score_is_one_broadcast_join(spark):
+    """d > 2 Mahalanobis scoring reads the inverse the fit wrote: one
+    broadcast join of the model and a column expression, with no per-key
+    Python pass in the scoring plan."""
+    from beymani_spark.operators import multivariate as mv
+    from beymani_spark.sources import load_table as lt
+
+    li = lt(spark, SF, "lineitem")
+    keys = ["l_returnflag"]
+    vals = ["l_quantity", "l_extendedprice", "l_discount"]
+    model = mv.mahalanobis_model(li, keys, vals)
+    scored = mv.mahalanobis_score(li, model, keys, vals)
+    scored.count()
+    plan = _plan(scored)
+    assert plan.count("BroadcastHashJoin") == 1
+    assert "SortMergeJoin" not in plan
+    assert "FlatMapGroupsInPandas" not in plan
 
 
 def test_change_point_checkpoint_filters_before_group_shuffle(spark):
@@ -1206,15 +1225,11 @@ def test_kmeans_model_over_cap_stays_distributed(spark, monkeypatch):
 
     want = sorted(
         tuple(r)
-        for r in kmeans_score(
-            li, small_model, keys, vals, threshold=10000.0, max_clusters=3
-        ).collect()
+        for r in kmeans_score(li, small_model, keys, vals, threshold=10000.0).collect()
     )
     have = sorted(
         tuple(r)
-        for r in kmeans_score(
-            li, model, keys, vals, threshold=10000.0, max_clusters=3
-        ).collect()
+        for r in kmeans_score(li, model, keys, vals, threshold=10000.0).collect()
     )
     assert have == want, "over-cap model must score identically"
     mixed_args = (["l_returnflag"], ["l_quantity"], ["l_linestatus"])
