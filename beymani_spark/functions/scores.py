@@ -18,8 +18,10 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from .scaling import exp_scale
 
 
 def aggregate_scores(
@@ -67,3 +69,24 @@ def tag_label(score: Column, threshold: float) -> Column:
         .when(score > F.lit(float(threshold)), F.lit("O"))
         .otherwise(F.lit("N"))
     )
+
+
+def finish_scores(
+    scored: DataFrame,
+    per_attr: Sequence[Column],
+    weights: Sequence[float] | None,
+    strategy: str,
+    threshold: float,
+    exp_const: float,
+    drop: Sequence[str],
+) -> DataFrame:
+    """The per-attribute scorers' last step: aggregate ``per_attr`` into
+    ``score`` (exp-scaled when ``exp_const`` > 0), tag ``label``, and drop
+    the scorer's model columns."""
+    score = aggregate_scores(per_attr, weights, strategy)
+    if exp_const > 0:
+        score = exp_scale(exp_const, score)
+    out = scored.withColumn("score", score).withColumn(
+        "label", tag_label(F.col("score"), threshold)
+    )
+    return out.drop(*drop)

@@ -22,10 +22,12 @@ def salted_numerical_stats(
     salt_buckets: int = 16,
 ) -> DataFrame:
     """Two-stage count/sum/sumSq/mean/std/min/max per key; equivalent to
-    operators.profile.numerical_stats for a single attribute but resilient
-    to a dominant key. Salt = deterministic hash of a uniform row id."""
+    operators.profile.numerical_stats for a single attribute (std NULL for
+    a one-row key) but resilient to a dominant key. Salt = xxhash64 of the
+    row's own columns, so the grouping is a function of the data, not of
+    the partition layout."""
     salted = df.withColumn(
-        "_salt", F.pmod(F.xxhash64(F.monotonically_increasing_id()), F.lit(salt_buckets))
+        "_salt", F.pmod(F.xxhash64(*df.columns), F.lit(salt_buckets))
     )
     partial = salted.groupBy(*keys, "_salt").agg(
         F.count(value).alias("_c"),
@@ -43,7 +45,9 @@ def salted_numerical_stats(
     )
     n = F.col("cnt")
     mean = F.col("sum") / n
-    var = (F.col("sum_sq") - F.col("sum") * F.col("sum") / n) / (n - 1)
+    # try_divide: a one-row key has n - 1 = 0; ANSI division would fail the
+    # whole query where stddev_samp gives NULL
+    var = F.try_divide(F.col("sum_sq") - F.col("sum") * F.col("sum") / n, n - 1)
     return merged.select(
         *keys,
         F.lit(None).cast("string").alias("attr"),
@@ -51,7 +55,7 @@ def salted_numerical_stats(
         "sum",
         "sum_sq",
         mean.alias("mean"),
-        F.when(var > 0, F.sqrt(var)).otherwise(F.lit(0.0)).alias("std"),
+        F.when(var > 0, F.sqrt(var)).when(var.isNotNull(), F.lit(0.0)).alias("std"),
         "min",
         "max",
     ).withColumn("attr", F.lit("value"))
@@ -98,15 +102,17 @@ def salted_join(
     AQE skew splitting (AQE only splits SORT-merge partitions that
     exceed the skew threshold AFTER a shuffle both sides already paid).
 
+    Each left row's salt is xxhash64 of its own columns, so the result
+    (and the spread) is a function of the data, not of the partition
+    layout; identical left rows share a bucket. xxhash64 rejects map
+    columns, so a left side carrying one must drop or serialize it first.
+
     Only 'inner' and 'left' are supported: a right/full join would count
     unmatched right rows once per replica."""
     if how not in ("inner", "left"):
         raise ValueError(f"salted_join supports inner/left, got {how!r}")
     salted_l = left.withColumn(
-        "_salt",
-        F.pmod(
-            F.xxhash64(F.monotonically_increasing_id()), F.lit(salt_buckets)
-        ).cast("int"),
+        "_salt", F.pmod(F.xxhash64(*left.columns), F.lit(salt_buckets)).cast("int")
     )
     replicated_r = right.withColumn(
         "_salt",

@@ -23,12 +23,12 @@ over the histogram itself, not the data.
 """
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.scores import aggregate_scores, tag_label
+from ..functions.scores import finish_scores, tag_label
 
 #: cap for -log(p) when p == 0, matching the reference's 20.0
 NEG_LOG_CAP = 20.0
@@ -184,29 +184,10 @@ def est_attr_prob_score(
     threshold: float = 0.99,
 ) -> DataFrame:
     """K5: per-attr score = 1 - p̂(x) ('inverse') or -ln p̂(x) ('negLog')."""
-    out = df
-    per_attr = []
-    for v, w in zip(values, widths):
-        sub = hist.filter(F.col("attr") == v).select(
-            *keys, F.col("bucket").alias(f"_b_{v}"), F.col("prob").alias(f"_p_{v}")
-        )
-        out = out.withColumn(f"_b_{v}", bucket_col(v, w)).join(
-            F.broadcast(sub), [*keys, f"_b_{v}"], "left"
-        )
-        p = F.coalesce(F.col(f"_p_{v}"), F.lit(0.0))
-        if strategy == "inverse":
-            per_attr.append(F.lit(1.0) - p)
-        elif strategy == "negLog":
-            per_attr.append(
-                F.when(p > 0, -F.log(p)).otherwise(F.lit(NEG_LOG_CAP))
-            )
-        else:
-            raise ValueError(f"unknown strategy: {strategy}")
-    score = aggregate_scores(per_attr, weights, agg_strategy)
-    out = out.withColumn("score", score).withColumn(
-        "label", tag_label(F.col("score"), threshold)
+    return _scored_from_model_col(
+        df, hist, keys, values, widths, "prob", _prob_score(strategy), weights,
+        agg_strategy, threshold,
     )
-    return out.drop(*[f"_b_{v}" for v in values], *[f"_p_{v}" for v in values])
 
 
 def with_meta_prob(hist: DataFrame, keys: Sequence[str]) -> DataFrame:
@@ -231,6 +212,19 @@ def with_cum_prob(hist: DataFrame, keys: Sequence[str]) -> DataFrame:
     return hist.withColumn("cum_prob", F.sum("prob").over(w))
 
 
+def _prob_score(strategy: str) -> Callable[[Column], Column]:
+    """K5/K6 per-attribute score of a bucket's model probability (NULL for a
+    bucket the model never saw, read as 0): 1 - p ('inverse') or -ln p
+    ('negLog', NEG_LOG_CAP at p = 0)."""
+    if strategy == "inverse":
+        return lambda m: F.lit(1.0) - F.coalesce(m, F.lit(0.0))
+    if strategy == "negLog":
+        return lambda m: F.when(F.coalesce(m, F.lit(0.0)) > 0, -F.log(m)).otherwise(
+            F.lit(NEG_LOG_CAP)
+        )
+    raise ValueError(f"unknown strategy: {strategy}")
+
+
 def _scored_from_model_col(
     df: DataFrame,
     model: DataFrame,
@@ -238,7 +232,7 @@ def _scored_from_model_col(
     values: Sequence[str],
     widths: Sequence[float],
     col: str,
-    score_of,
+    score_of: Callable[[Column], Column],
     weights: Sequence[float] | None,
     agg_strategy: str,
     threshold: float,
@@ -253,11 +247,8 @@ def _scored_from_model_col(
             F.broadcast(sub), [*keys, f"_b_{v}"], "left"
         )
         per_attr.append(score_of(F.col(f"_m_{v}")))
-    score = aggregate_scores(per_attr, weights, agg_strategy)
-    out = out.withColumn("score", score).withColumn(
-        "label", tag_label(F.col("score"), threshold)
-    )
-    return out.drop(*[f"_b_{v}" for v in values], *[f"_m_{v}" for v in values])
+    drop = [*[f"_b_{v}" for v in values], *[f"_m_{v}" for v in values]]
+    return finish_scores(out, per_attr, weights, agg_strategy, threshold, 0.0, drop)
 
 
 def est_meta_prob_score(
@@ -272,19 +263,9 @@ def est_meta_prob_score(
     threshold: float = 0.99,
 ) -> DataFrame:
     """K6: rarity of the bucket's own likelihood."""
-    model = with_meta_prob(hist, keys)
-    if strategy == "inverse":
-        score_of = lambda m: F.lit(1.0) - F.coalesce(m, F.lit(0.0))  # noqa: E731
-    elif strategy == "negLog":
-        score_of = (  # noqa: E731
-            lambda m: F.when(F.coalesce(m, F.lit(0.0)) > 0, -F.log(m)).otherwise(
-                F.lit(NEG_LOG_CAP)
-            )
-        )
-    else:
-        raise ValueError(f"unknown strategy: {strategy}")
     return _scored_from_model_col(
-        df, model, keys, values, widths, "meta_prob", score_of, weights, agg_strategy, threshold
+        df, with_meta_prob(hist, keys), keys, values, widths, "meta_prob",
+        _prob_score(strategy), weights, agg_strategy, threshold,
     )
 
 
@@ -326,11 +307,12 @@ def entropy_increase_score(
     record to bucket b gives H'(b) = ln(N+1) − (S − cnt_b·ln cnt_b +
     (cnt_b+1)·ln(cnt_b+1))/(N+1); score = (H' − H)/H. Unseen bucket:
     cnt_b = 0. Pure aggregates + a broadcast bucket join."""
-    agg = hist.filter(F.col("attr") == value).groupBy(*keys).agg(
+    attr_hist = hist.filter(F.col("attr") == value)
+    agg = attr_hist.groupBy(*keys).agg(
         F.sum("cnt").alias("_N"),
         F.sum(F.col("cnt") * F.log("cnt")).alias("_S"),
     )
-    buckets = hist.filter(F.col("attr") == value).select(
+    buckets = attr_hist.select(
         *keys, "bucket", F.col("cnt").alias("_cnt_b")
     )
     out = (

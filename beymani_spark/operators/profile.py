@@ -11,11 +11,14 @@ pipeline depends on (SURVEY.md §2.4), rebuilt as single groupBy aggregations.
 
 All builders emit LONG format: one row per (keys..., [cycle_index], attr) so a
 single model DataFrame covers many attributes and broadcast-joins back onto
-scoring input — replacing the reference's driver-side model files.
+scoring input — replacing the reference's driver-side model files. This module
+owns that format: :func:`long_form` is the one explode-and-group that every
+builder aggregates, here and in ``zscore.quartiles`` and
+``ranges.range_model_from_quantiles``, and :func:`join_attrs` is the one keyed
+per-attribute join through which every scorer reads a model.
 
 Scale notes: one shuffle each (groupBy with map-side partial aggregation);
-median/MAD uses exact ``percentile`` (two passes) for oracle parity — swap to
-``percentile_approx`` at very high key cardinality if needed.
+median/MAD uses exact ``percentile`` (two passes) for oracle parity.
 """
 from __future__ import annotations
 
@@ -32,30 +35,84 @@ from ..functions.seasonal import cycle_index
 from . import prefix
 
 
-def _explode_attrs(
+def with_cycle(
+    df: DataFrame, cycle: str | None, ts: str | None
+) -> tuple[DataFrame, list[str]]:
+    """``df`` plus its ``cycle_index`` column when ``cycle`` is set, and the
+    extra model keys that adds (``["cycle_index"]`` or ``[]``)."""
+    if cycle is None:
+        return df, []
+    if ts is None:
+        raise ValueError("cycle requires ts column")
+    return df.withColumn("cycle_index", cycle_index(ts, cycle)), ["cycle_index"]
+
+
+def long_form(
     df: DataFrame,
     keys: Sequence[str],
     values: Sequence[str],
-    cycle: str | None = None,
-    ts: str | None = None,
-    extra: Sequence[str] = (),
-) -> DataFrame:
-    """(keys..., [cycle_index], attr, value) long form for multi-attr builders."""
-    cols = [F.col(k) for k in keys]
-    names = list(keys)
-    if cycle is not None:
-        if ts is None:
-            raise ValueError("cycle requires ts column")
-        cols.append(cycle_index(ts, cycle).alias("cycle_index"))
-        names.append("cycle_index")
+    cycle: str | None,
+    ts: str | None,
+) -> tuple[DataFrame, list[str]]:
+    """The (keys..., [cycle_index], attr, value) long form every per-attribute
+    model builder aggregates, and its model grouping (keys...,
+    [cycle_index], attr)."""
+    df, extra = with_cycle(df, cycle, ts)
+    group = [*keys, *extra]
     pairs = F.array(
         *[
             F.struct(F.lit(v).alias("attr"), F.col(v).cast("double").alias("value"))
             for v in values
         ]
     )
-    sel = cols + [F.col(e) for e in extra] + [F.explode(pairs).alias("p")]
-    return df.select(*sel).select(*names, *extra, "p.attr", "p.value")
+    long = df.select(*group, F.explode(pairs).alias("p"))
+    return long.select(*group, "p.attr", "p.value"), [*group, "attr"]
+
+
+def join_attrs(
+    df: DataFrame,
+    model: DataFrame,
+    keys: Sequence[str],
+    values: Sequence[str],
+    model_cols: Sequence[str],
+    cycle: str | None,
+    ts: str | None,
+) -> tuple[DataFrame, list[str]]:
+    """Left broadcast-join each scored attribute's rows of a long model onto
+    ``df`` as ``_<col>_<attr>`` columns; returns the joined frame and the
+    added column names (for the scorer to drop).
+
+    The model is tiny (|keys|×|attrs| rows), so each join is a broadcast hash
+    join — the fact table never shuffles (matches the reference's broadcast
+    model design, StatsBasedOutlierPredictor.scala:183)."""
+    out, extra = with_cycle(df, cycle, ts)
+    join_keys = [*keys, *extra]
+    for v in values:
+        sub = model.filter(F.col("attr") == v).select(
+            *join_keys, *[F.col(c).alias(f"_{c}_{v}") for c in model_cols]
+        )
+        out = out.join(F.broadcast(sub), join_keys, "left")
+    return out, [f"_{c}_{v}" for v in values for c in model_cols]
+
+
+def stats_aggs() -> list[Column]:
+    """count/sum/sumSq/mean/stddev(sample)/min/max of the long form's value."""
+    v = F.col("value")
+    return [
+        F.count(v).alias("cnt"),
+        F.sum(v).alias("sum"),
+        F.sum(v * v).alias("sum_sq"),
+        F.avg(v).alias("mean"),
+        F.stddev_samp(v).alias("std"),
+        F.min(v).alias("min"),
+        F.max(v).alias("max"),
+    ]
+
+
+def quartile_aggs() -> list[Column]:
+    """Exact Q1/Q3/IQR of the long form's value."""
+    q1, q3 = (F.percentile("value", F.lit(q)) for q in (0.25, 0.75))
+    return [q1.alias("q1"), q3.alias("q3"), (q3 - q1).alias("iqr")]
 
 
 def numerical_stats(
@@ -66,17 +123,8 @@ def numerical_stats(
     ts: str | None = None,
 ) -> DataFrame:
     """Per (keys,[cycle],attr): count/sum/sumSq/mean/stddev(sample)/min/max."""
-    long = _explode_attrs(df, keys, values, cycle, ts)
-    group = [c for c in long.columns if c not in ("attr", "value")] + ["attr"]
-    return long.groupBy(*group).agg(
-        F.count("value").alias("cnt"),
-        F.sum("value").alias("sum"),
-        F.sum(F.col("value") * F.col("value")).alias("sum_sq"),
-        F.avg("value").alias("mean"),
-        F.stddev_samp("value").alias("std"),
-        F.min("value").alias("min"),
-        F.max("value").alias("max"),
-    )
+    long, group = long_form(df, keys, values, cycle, ts)
+    return long.groupBy(*group).agg(*stats_aggs())
 
 
 def stats_and_quartiles(
@@ -85,7 +133,7 @@ def stats_and_quartiles(
     values: Sequence[str],
     cycle: str | None = None,
     ts: str | None = None,
-) -> tuple[DataFrame, DataFrame, DataFrame]:
+) -> tuple[DataFrame, DataFrame]:
     """:func:`numerical_stats` + ``zscore.quartiles`` from ONE groupBy pass.
 
     A consumer needing both models over the same (keys, values) grouping
@@ -99,31 +147,11 @@ def stats_and_quartiles(
     persisted — the two model selects are separate plan branches and
     would each re-run the aggregation otherwise; it is |keys|x|values|
     rows (model-sized at any scale)."""
-    long = _explode_attrs(df, keys, values, cycle, ts)
-    group = [c for c in long.columns if c not in ("attr", "value")] + ["attr"]
+    long, group = long_form(df, keys, values, cycle, ts)
     combined = caching.persist(
-        long.groupBy(*group)
-        .agg(
-            F.count("value").alias("cnt"),
-            F.sum("value").alias("sum"),
-            F.sum(F.col("value") * F.col("value")).alias("sum_sq"),
-            F.avg("value").alias("mean"),
-            F.stddev_samp("value").alias("std"),
-            F.min("value").alias("min"),
-            F.max("value").alias("max"),
-            F.percentile("value", F.lit(0.25)).alias("q1"),
-            F.percentile("value", F.lit(0.75)).alias("q3"),
-            (
-                F.percentile("value", F.lit(0.75))
-                - F.percentile("value", F.lit(0.25))
-            ).alias("iqr"),
-        )
+        long.groupBy(*group).agg(*stats_aggs(), *quartile_aggs())
     )
-    stats = combined.select(
-        *group, "cnt", "sum", "sum_sq", "mean", "std", "min", "max"
-    )
-    quartiles = combined.select(*group, "q1", "q3", "iqr")
-    return stats, quartiles
+    return combined.drop("q1", "q3", "iqr"), combined.select(*group, "q1", "q3", "iqr")
 
 
 def median_mad(
@@ -142,8 +170,7 @@ def median_mad(
     the 100 TB path — a mergeable sketch of bounded size per group instead of
     a full sort, at a documented approximation (accuracy=10000 ->
     rank error <= 0.01%)."""
-    long = _explode_attrs(df, keys, values, cycle, ts)
-    group = [c for c in long.columns if c not in ("attr", "value")] + ["attr"]
+    long, group = long_form(df, keys, values, cycle, ts)
     if approx_accuracy:
         p50 = lambda c: F.percentile_approx(c, 0.5, int(approx_accuracy))  # noqa: E731
     else:

@@ -17,7 +17,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.scaling import logistic_scale
-from ..functions.scores import aggregate_scores, tag_label
+from ..functions.scores import finish_scores
+from . import profile
 
 
 def range_model_from_quantiles(
@@ -28,10 +29,7 @@ def range_model_from_quantiles(
     hi_q: float = 0.95,
 ) -> DataFrame:
     """Build a (keys..., attr, lo, hi, mid) range model from exact quantiles."""
-    from .profile import _explode_attrs
-
-    long = _explode_attrs(df, keys, values)
-    group = [c for c in long.columns if c not in ("attr", "value")] + ["attr"]
+    long, group = profile.long_form(df, keys, values, None, None)
     return (
         long.groupBy(*group)
         .agg(
@@ -53,29 +51,16 @@ def _range_scored(
     strategy: str,
     threshold: float,
 ) -> DataFrame:
-    out = df
+    out, drop = profile.join_attrs(df, ranges, keys, values, ["lo", "hi", "mid"], None, None)
     per_attr = []
     for v in values:
-        sub = ranges.filter(F.col("attr") == v).select(
-            *keys,
-            F.col("lo").alias(f"_lo_{v}"),
-            F.col("hi").alias(f"_hi_{v}"),
-            F.col("mid").alias(f"_mid_{v}"),
-        )
-        out = out.join(F.broadcast(sub), list(keys), "left")
-        delta = F.when(
-            F.col(v) > F.col(f"_mid_{v}"), F.col(v) - F.col(f"_hi_{v}")
-        ).otherwise(F.col(f"_lo_{v}") - F.col(v))
+        lo, hi, mid = (F.col(f"_{c}_{v}") for c in ("lo", "hi", "mid"))
+        delta = F.when(F.col(v) > mid, F.col(v) - hi).otherwise(lo - F.col(v))
         s = logistic_scale(exp_const, delta)
         if inside:
             s = F.lit(1.0) - s
-        per_attr.append(F.when(F.col(f"_lo_{v}").isNotNull(), s))
-    score = aggregate_scores(per_attr, weights, strategy)
-    out = out.withColumn("score", score).withColumn(
-        "label", tag_label(F.col("score"), threshold)
-    )
-    drop = [f"_{c}_{v}" for v in values for c in ("lo", "hi", "mid")]
-    return out.drop(*drop)
+        per_attr.append(F.when(lo.isNotNull(), s))
+    return finish_scores(out, per_attr, weights, strategy, threshold, 0.0, drop)
 
 
 def out_range_score(

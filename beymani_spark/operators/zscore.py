@@ -18,63 +18,11 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.scaling import exp_scale
-from ..functions.scores import aggregate_scores, tag_label
-from ..functions.seasonal import cycle_index
-
-
-def _with_cycle(df: DataFrame, cycle: str | None, ts: str | None) -> tuple[DataFrame, list[str]]:
-    if cycle is None:
-        return df, []
-    if ts is None:
-        raise ValueError("cycle requires ts column")
-    return df.withColumn("cycle_index", cycle_index(ts, cycle)), ["cycle_index"]
-
-
-def _join_model(
-    df: DataFrame,
-    model: DataFrame,
-    keys: Sequence[str],
-    values: Sequence[str],
-    model_cols: Sequence[str],
-    cycle: str | None,
-    ts: str | None,
-) -> tuple[DataFrame, list[str]]:
-    """Broadcast-join the long-format model once per scored attribute.
-
-    The model is tiny (|keys|×|attrs| rows), so each join is a broadcast hash
-    join — the fact table never shuffles (matches the reference's broadcast
-    model design, StatsBasedOutlierPredictor.scala:183).
-    """
-    out, extra = _with_cycle(df, cycle, ts)
-    join_keys = list(keys) + extra
-    for v in values:
-        sub = model.filter(F.col("attr") == v).select(
-            *join_keys, *[F.col(c).alias(f"_{c}_{v}") for c in model_cols]
-        )
-        out = out.join(F.broadcast(sub), join_keys, "left")
-    return out, extra
-
-
-def _finish(
-    scored: DataFrame,
-    per_attr: Sequence[Column],
-    weights: Sequence[float] | None,
-    strategy: str,
-    threshold: float,
-    exp_const: float,
-    drop: Sequence[str],
-) -> DataFrame:
-    score = aggregate_scores(per_attr, weights, strategy)
-    if exp_const > 0:
-        score = exp_scale(exp_const, score)
-    out = scored.withColumn("score", score).withColumn(
-        "label", tag_label(F.col("score"), threshold)
-    )
-    return out.drop(*drop)
+from ..functions.scores import finish_scores
+from . import profile
 
 
 def zscore(
@@ -90,7 +38,7 @@ def zscore(
     ts: str | None = None,
 ) -> DataFrame:
     """K1: weighted avg over attrs of |x-μ|/σ; σ<=0 -> attr unavailable."""
-    joined, _ = _join_model(df, stats, keys, values, ["mean", "std"], cycle, ts)
+    joined, drop = profile.join_attrs(df, stats, keys, values, ["mean", "std"], cycle, ts)
     per_attr = [
         F.when(
             F.col(f"_std_{v}") > 0,
@@ -98,8 +46,7 @@ def zscore(
         )
         for v in values
     ]
-    drop = [f"_{c}_{v}" for v in values for c in ("mean", "std")]
-    return _finish(joined, per_attr, weights, strategy, threshold, exp_const, drop)
+    return finish_scores(joined, per_attr, weights, strategy, threshold, exp_const, drop)
 
 
 def apply_polarity(
@@ -111,7 +58,6 @@ def apply_polarity(
     std_mult: float = 2.0,
     cycle: str | None = None,
     ts: str | None = None,
-    label_col: str = "label",
 ) -> DataFrame:
     """Polarity guard (StatsBasedOutlierPredictor.scala:436-470): an 'O' row
     is demoted to 'N' unless the value lies on the configured side of
@@ -119,16 +65,12 @@ def apply_polarity(
     if polarity not in ("high", "low", "both"):
         raise ValueError(f"unknown polarity: {polarity}")
     if cycle is not None and "cycle_index" in scored.columns:
-        joined, extra = scored, ["cycle_index"]
-    else:
-        joined, extra = _with_cycle(scored, cycle, ts)
-    join_keys = list(keys) + extra
-    sub = stats.filter(F.col("attr") == value).select(
-        *join_keys, F.col("mean").alias("_pmean"), F.col("std").alias("_pstd")
-    )
-    out = joined.join(F.broadcast(sub), join_keys, "left")
-    hi = F.col("_pmean") + F.lit(float(std_mult)) * F.col("_pstd")
-    lo = F.col("_pmean") - F.lit(float(std_mult)) * F.col("_pstd")
+        # a seasonal scorer's output already carries its cycle_index
+        keys, cycle = [*keys, "cycle_index"], None
+    out, drop = profile.join_attrs(scored, stats, keys, [value], ["mean", "std"], cycle, ts)
+    mean, std = F.col(f"_mean_{value}"), F.col(f"_std_{value}")
+    hi = mean + F.lit(float(std_mult)) * std
+    lo = mean - F.lit(float(std_mult)) * std
     v = F.col(value)
     if polarity == "high":
         demote = v < hi
@@ -137,9 +79,9 @@ def apply_polarity(
     else:
         demote = (v > lo) & (v < hi)
     new_label = F.when(
-        (F.col(label_col) == "O") & F.col("_pmean").isNotNull() & demote, F.lit("N")
-    ).otherwise(F.col(label_col))
-    return out.withColumn(label_col, new_label).drop("_pmean", "_pstd")
+        (F.col("label") == "O") & mean.isNotNull() & demote, F.lit("N")
+    ).otherwise(F.col("label"))
+    return out.withColumn("label", new_label).drop(*drop)
 
 
 def tag_with_keyed_threshold(
@@ -147,20 +89,26 @@ def tag_with_keyed_threshold(
     thresholds: DataFrame,
     keys: Sequence[str],
     default_threshold: float | None = None,
-    score_col: str = "score",
 ) -> DataFrame:
     """Per-key threshold tagging (OutlierUtility.scala:101-124): each key's
     own threshold (e.g. from post.pseudo_relevance_threshold) replaces the
     global one; keys without a threshold fall back to the default (label 'I'
-    when neither exists)."""
+    when neither exists, or when the score is NULL — an unknown key never
+    passes as normal).
+
+    A stateless broadcast left join, so it tags a streaming ``scored``
+    frame against a batch-learned threshold frame as well — the serve half
+    of the anomaly_pipeline chain, the reference's Storm-predictor pattern
+    (model built offline, records tagged in real time; cf.
+    predictor/ZscorePredictor.java's Redis model cache)."""
     sub = thresholds.select(*keys, F.col("threshold").alias("_thr"))
     out = scored.join(F.broadcast(sub), list(keys), "left")
     thr = F.col("_thr")
     if default_threshold is not None:
         thr = F.coalesce(thr, F.lit(float(default_threshold)))
     label = (
-        F.when(F.col(score_col).isNull() | thr.isNull(), F.lit("I"))
-        .when(F.col(score_col) > thr, F.lit("O"))
+        F.when(F.col("score").isNull() | thr.isNull(), F.lit("I"))
+        .when(F.col("score") > thr, F.lit("O"))
         .otherwise(F.lit("N"))
     )
     return out.withColumn("label", label).drop("_thr")
@@ -179,7 +127,9 @@ def robust_zscore(
     ts: str | None = None,
 ) -> DataFrame:
     """K2: |x-median|/MAD from operators.profile.median_mad model."""
-    joined, _ = _join_model(df, med_model, keys, values, ["median", "mad"], cycle, ts)
+    joined, drop = profile.join_attrs(
+        df, med_model, keys, values, ["median", "mad"], cycle, ts
+    )
     per_attr = [
         F.when(
             F.col(f"_mad_{v}") > 0,
@@ -187,8 +137,7 @@ def robust_zscore(
         )
         for v in values
     ]
-    drop = [f"_{c}_{v}" for v in values for c in ("median", "mad")]
-    return _finish(joined, per_attr, weights, strategy, threshold, exp_const, drop)
+    return finish_scores(joined, per_attr, weights, strategy, threshold, exp_const, drop)
 
 
 def extreme_value(
@@ -204,7 +153,7 @@ def extreme_value(
     ts: str | None = None,
 ) -> DataFrame:
     """K3 Gumbel-style: score = exp(-exp(-|x-μ|/σ)) per attr."""
-    joined, _ = _join_model(df, stats, keys, values, ["mean", "std"], cycle, ts)
+    joined, drop = profile.join_attrs(df, stats, keys, values, ["mean", "std"], cycle, ts)
     per_attr = [
         F.when(
             F.col(f"_std_{v}") > 0,
@@ -212,8 +161,7 @@ def extreme_value(
         )
         for v in values
     ]
-    drop = [f"_{c}_{v}" for v in values for c in ("mean", "std")]
-    return _finish(joined, per_attr, weights, strategy, threshold, exp_const, drop)
+    return finish_scores(joined, per_attr, weights, strategy, threshold, exp_const, drop)
 
 
 def quartiles(
@@ -224,17 +172,8 @@ def quartiles(
     ts: str | None = None,
 ) -> DataFrame:
     """Exact Q1/Q3/IQR per (keys,[cycle],attr) — model for the IQR kernel."""
-    from .profile import _explode_attrs
-
-    long = _explode_attrs(df, keys, values, cycle, ts)
-    group = [c for c in long.columns if c not in ("attr", "value")] + ["attr"]
-    return long.groupBy(*group).agg(
-        F.percentile("value", F.lit(0.25)).alias("q1"),
-        F.percentile("value", F.lit(0.75)).alias("q3"),
-        (F.percentile("value", F.lit(0.75)) - F.percentile("value", F.lit(0.25))).alias(
-            "iqr"
-        ),
-    )
+    long, group = profile.long_form(df, keys, values, cycle, ts)
+    return long.groupBy(*group).agg(*profile.quartile_aggs())
 
 
 def iqr_score(
@@ -250,7 +189,9 @@ def iqr_score(
     ts: str | None = None,
 ) -> DataFrame:
     """K8: 0 inside [Q1,Q3], else distance beyond the quartile over IQR."""
-    joined, _ = _join_model(df, quartile_model, keys, values, ["q1", "q3", "iqr"], cycle, ts)
+    joined, drop = profile.join_attrs(
+        df, quartile_model, keys, values, ["q1", "q3", "iqr"], cycle, ts
+    )
     per_attr = [
         F.when(F.col(f"_iqr_{v}").isNull() | (F.col(f"_iqr_{v}") <= 0), F.lit(None))
         .when(F.col(v) < F.col(f"_q1_{v}"), (F.col(f"_q1_{v}") - F.col(v)) / F.col(f"_iqr_{v}"))
@@ -258,8 +199,7 @@ def iqr_score(
         .otherwise(F.lit(0.0))
         for v in values
     ]
-    drop = [f"_{c}_{v}" for v in values for c in ("q1", "q3", "iqr")]
-    return _finish(joined, per_attr, weights, strategy, threshold, exp_const, drop)
+    return finish_scores(joined, per_attr, weights, strategy, threshold, exp_const, drop)
 
 
 def zscore_attribution(
@@ -286,7 +226,7 @@ def zscore_attribution(
 
     Scale shape: same broadcast-model codegen scan as zscore() — the fact
     table never shuffles; the filter drops non-outliers at the scan."""
-    joined, _ = _join_model(df, stats, keys, values, ["mean", "std"], cycle, ts)
+    joined, _ = profile.join_attrs(df, stats, keys, values, ["mean", "std"], cycle, ts)
     zcols = {}
     for v in values:
         z = F.when(

@@ -176,35 +176,6 @@ def stream_interval_join(
     return l.join(r, cond).withColumn("delta_seconds", delta)
 
 
-def stream_tag_learned_threshold(
-    scored_stream: DataFrame,
-    thresholds: DataFrame,
-    keys: Sequence[str],
-    score_col: str = "score",
-    threshold_col: str = "threshold",
-    label_col: str = "label",
-) -> DataFrame:
-    """Tag a scored stream against a batch-LEARNED per-key threshold frame
-    (post.pseudo_relevance_threshold output) instead of a fixed constant —
-    the serve half of the anomaly_pipeline chain, and the reference's
-    Storm-predictor pattern (model built offline, records tagged in
-    real time; cf. predictor/ZscorePredictor.java's Redis model cache).
-
-    Stateless stream-static LEFT join (broadcast — the threshold frame is
-    n_keys rows): null score OR an unlearned/below-min-count key labels
-    'I' (indeterminate — an unknown key must never silently pass as
-    normal), score > threshold labels 'O', else 'N'. Overwrites
-    ``label_col`` so the output contract matches operators.zscore."""
-    thr = F.broadcast(thresholds.select(*keys, F.col(threshold_col).alias("_thr")))
-    joined = scored_stream.join(thr, list(keys), "left")
-    label = (
-        F.when(F.col(score_col).isNull() | F.col("_thr").isNull(), F.lit("I"))
-        .when(F.col(score_col) > F.col("_thr"), F.lit("O"))
-        .otherwise(F.lit("N"))
-    )
-    return joined.withColumn(label_col, label).drop("_thr")
-
-
 def alerts(scored: DataFrame, label_col: str = "label") -> DataFrame:
     """Alert stream: outliers only (≙ the Redis out-queue filter,
     ZscorePredictor.java:152-157)."""
@@ -1216,7 +1187,7 @@ def stream_quality_fuse(
 ) -> DataFrame:
     """Score a live signal stream against a BATCH-fitted fusion model
     (text.fuse_stats output): the same batch-learn -> stream-serve loop
-    as stream_tag_learned_threshold, for the multi-signal quality
+    as zscore.tag_with_keyed_threshold, for the multi-signal quality
     ensemble. The model is a tiny broadcast frame (1 row, or |strata|
     rows with ``by``), the scoring is stateless codegen, so stream output
     per row is IDENTICAL to a batch fuse_apply over the same rows

@@ -905,7 +905,7 @@ def test_stream_tag_learned_threshold_matches_batch_pipeline(spark, stream_dirs)
 
     from beymani_spark.operators import post, profile, zscore
     from beymani_spark.sources import load_table
-    from beymani_spark.streaming.jobs import stream_tag_learned_threshold, stream_zscore
+    from beymani_spark.streaming.jobs import stream_zscore
 
     src, chk = stream_dirs
     ev = load_table(spark, "/root/testdata/sf0.001", "events").select(
@@ -921,7 +921,7 @@ def test_stream_tag_learned_threshold_matches_batch_pipeline(spark, stream_dirs)
     stream = spark.readStream.schema(ev.schema).parquet(src)
     scored_s = stream_zscore(stream, stats, ["event_type"], ["value"])
     q = streams.start_sink(
-        stream_tag_learned_threshold(scored_s, thr, ["event_type"]),
+        zscore.tag_with_keyed_threshold(scored_s, thr, ["event_type"]),
         {"format": "memory", "queryName": "ltag_t", "checkpoint": chk + "/ltag",
          "trigger": "availableNow"},
     )
@@ -949,7 +949,7 @@ def test_stream_tag_learned_threshold_matches_batch_pipeline(spark, stream_dirs)
         [(999, "unseen_type", 3.0)], ["event_id", "event_type", "value"]
     )
     scored_a = zscore.zscore(alien, stats, ["event_type"], ["value"])
-    out = stream_tag_learned_threshold(scored_a, thr, ["event_type"]).collect()
+    out = zscore.tag_with_keyed_threshold(scored_a, thr, ["event_type"]).collect()
     assert [r.label for r in out] == ["I"]
 
 

@@ -954,3 +954,177 @@ def test_multigram_multivariate_hand_checked(spark):
         ("x", "a|a|a", 1, 1.0),
         ("y", "a|a|a", 1, 1.0),
     }
+
+
+@pytest.fixture(scope="module")
+def two_attr_df(spark):
+    """Two keys with two attributes over both halves of the day, a NULL in
+    ``b``, and a one-row (key, half-day) group; ``half`` is the pandas
+    halfDayOfDay index of the UTC timestamp."""
+    rng = np.random.RandomState(7)
+    rows = []
+    for k, n in (("x", 40), ("y", 25)):
+        for i in range(n):
+            hour = int(rng.randint(0, 24))
+            rows.append((k, 86400 * i + 3600 * hour, float(rng.normal(5, 2)),
+                         float(rng.exponential(3.0))))
+    rows.append(("z", 3600 * 3, 1.5, 2.5))
+    rows[3] = (*rows[3][:3], None)
+    pdf = pd.DataFrame(rows, columns=["k", "epoch", "a", "b"])
+    pdf["half"] = (pd.to_datetime(pdf["epoch"], unit="s").dt.hour >= 12).astype(int)
+    df = spark.createDataFrame(
+        pdf[["k", "epoch", "a", "b"]], "k string, epoch long, a double, b double"
+    ).withColumn("ts", F.timestamp_seconds("epoch"))
+    return df, pdf
+
+
+def _per_group(pdf, group, values, fn):
+    """{(group..., attr): fn(non-null values of attr in the group)}."""
+    out = {}
+    for key, g in pdf.groupby(group):
+        for v in values:
+            out[(*key, v)] = fn(g[v].dropna().to_numpy())
+    return out
+
+
+def _assert_model(rows, group, expected, cols):
+    got = {tuple(r[c] for c in [*group, "attr"]): r for r in rows}
+    assert set(got) == set(expected)
+    for key, want in expected.items():
+        for c, w in zip(cols, want):
+            if w is None or (isinstance(w, float) and np.isnan(w)):
+                assert got[key][c] is None, (key, c, got[key][c])
+            else:
+                assert got[key][c] == pytest.approx(w, rel=1e-9, abs=1e-12), (key, c)
+
+
+def test_long_form_builders_two_attrs_with_cycle(spark, two_attr_df):
+    """The five per-attribute model builders on two attributes, keyed by
+    (k, halfDayOfDay), against numpy per group: the seven moments, exact
+    quartiles, median/MAD and the (lo, hi, mid) range model."""
+    from beymani_spark.operators import profile, ranges, zscore
+
+    df, pdf = two_attr_df
+    vals = ["a", "b"]
+    group = ["k", "cycle_index"]
+    pdf = pdf.rename(columns={"half": "cycle_index"})
+    cyc = {"cycle": "halfDayOfDay", "ts": "ts"}
+
+    def moments(x):
+        return (len(x), x.sum(), (x * x).sum(), x.mean(),
+                x.std(ddof=1) if len(x) > 1 else None, x.min(), x.max())
+
+    def quarts(x):
+        q1, q3 = np.percentile(x, [25, 75])
+        return q1, q3, q3 - q1
+
+    stat_cols = ["cnt", "sum", "sum_sq", "mean", "std", "min", "max"]
+    want_stats = _per_group(pdf, group, vals, moments)
+    want_q = _per_group(pdf, group, vals, quarts)
+    _assert_model(profile.numerical_stats(df, ["k"], vals, **cyc).collect(),
+                  group, want_stats, stat_cols)
+    _assert_model(zscore.quartiles(df, ["k"], vals, **cyc).collect(),
+                  group, want_q, ["q1", "q3", "iqr"])
+    fused_stats, fused_q = profile.stats_and_quartiles(df, ["k"], vals, **cyc)
+    assert fused_stats.columns == [*group, "attr", *stat_cols]
+    _assert_model(fused_stats.collect(), group, want_stats, stat_cols)
+    _assert_model(fused_q.collect(), group, want_q, ["q1", "q3", "iqr"])
+
+    def med_mad(x):
+        med = np.median(x)
+        return med, np.median(np.abs(x - med))
+
+    _assert_model(profile.median_mad(df, ["k"], vals, **cyc).collect(),
+                  group, _per_group(pdf, group, vals, med_mad), ["median", "mad"])
+
+    def rng(x):
+        lo, hi = np.percentile(x, [5, 95])
+        return lo, hi, (lo + hi) / 2.0
+
+    _assert_model(ranges.range_model_from_quantiles(df, ["k"], vals).collect(),
+                  ["k"], _per_group(pdf, ["k"], vals, rng), ["lo", "hi", "mid"])
+
+
+@pytest.mark.parametrize("inside", [False, True])
+def test_range_scores_two_attrs(spark, inside):
+    """out_range_score / in_range_score over two attributes against numpy:
+    per attribute logistic(k*delta) (1 - that inside), averaged over the
+    attributes with a range; a row with no range for either scores NULL
+    and tags 'I'; the range columns are dropped."""
+    from beymani_spark.operators import ranges
+
+    model = spark.createDataFrame(
+        [("x", "a", 0.0, 10.0), ("x", "b", -1.0, 1.0), ("y", "a", 5.0, 6.0)],
+        "k string, attr string, lo double, hi double",
+    ).withColumn("mid", (F.col("lo") + F.col("hi")) / 2.0)
+    rows = [(1, "x", 12.0, 0.5), (2, "x", 3.0, -4.0), (3, "y", 5.5, 9.0),
+            (4, "y", 1.0, None), (5, "w", 1.0, 1.0)]
+    df = spark.createDataFrame(rows, "id long, k string, a double, b double")
+    k, thr = 0.5, 0.7
+    fn = ranges.in_range_score if inside else ranges.out_range_score
+    got = {r["id"]: r for r in fn(df, model, ["k"], ["a", "b"], exp_const=k,
+                                  threshold=thr).collect()}
+    assert set(fn(df, model, ["k"], ["a", "b"]).columns) == {*df.columns, "score", "label"}
+    bands = {("x", "a"): (0.0, 10.0), ("x", "b"): (-1.0, 1.0), ("y", "a"): (5.0, 6.0)}
+    for rid, key, *vals in rows:
+        scores = []
+        for attr, v in zip(("a", "b"), vals):
+            if (key, attr) not in bands or v is None:
+                continue
+            lo, hi = bands[(key, attr)]
+            delta = v - hi if v > (lo + hi) / 2.0 else lo - v
+            s = 1.0 / (1.0 + np.exp(-k * delta))
+            scores.append(1.0 - s if inside else s)
+        if not scores:
+            assert got[rid]["score"] is None and got[rid]["label"] == "I", rid
+            continue
+        want = float(np.mean(scores))
+        assert got[rid]["score"] == pytest.approx(want, rel=1e-12), rid
+        assert got[rid]["label"] == ("O" if want > thr else "N"), rid
+
+
+def test_prob_scores_neglog_unseen_bucket(spark):
+    """K5 and K6 with strategy='negLog' against pandas: per attribute -ln p
+    (K5: the bucket's probability; K6: the mass of buckets no more likely
+    than it), NEG_LOG_CAP for a bucket the histogram never saw, averaged
+    over the two attributes."""
+    from beymani_spark.operators import histogram
+
+    train = [("x", float(a), float(b)) for a, b in
+             [(1, 10), (1, 10), (1, 20), (2, 20), (2, 30), (3, 10), (1, 30), (2, 10)]]
+    train += [("y", 5.0, 50.0), ("y", 5.0, 50.0), ("y", 6.0, 40.0)]
+    tdf = spark.createDataFrame(train, "k string, a double, b double")
+    widths = [1.0, 10.0]
+    hist = histogram.attr_histogram(tdf, ["k"], ["a", "b"], widths)
+    score_rows = [(1, "x", 1.0, 10.0), (2, "x", 3.0, 30.0), (3, "x", 9.0, 20.0),
+                  (4, "y", 6.0, 50.0), (5, "y", 5.0, 70.0)]
+    sdf = spark.createDataFrame(score_rows, "id long, k string, a double, b double")
+
+    tp = pd.DataFrame(train, columns=["k", "a", "b"])
+    prob, meta = {}, {}
+    for attr, w in zip(("a", "b"), widths):
+        for key, g in tp.groupby("k"):
+            p = (np.floor(g[attr] / w).astype(int)).value_counts(normalize=True)
+            for bucket, pb in p.items():
+                prob[(key, attr, bucket)] = pb
+                meta[(key, attr, bucket)] = p[p <= pb].sum()
+
+    def neglog(m):
+        return -np.log(m) if m is not None else histogram.NEG_LOG_CAP
+
+    for fn, model in ((histogram.est_attr_prob_score, prob),
+                      (histogram.est_meta_prob_score, meta)):
+        out = fn(sdf, hist, ["k"], ["a", "b"], widths, strategy="negLog", threshold=3.0)
+        assert set(out.columns) == {*sdf.columns, "score", "label"}
+        got = {r["id"]: r for r in out.collect()}
+        for rid, key, a, b in score_rows:
+            per = [neglog(model.get((key, attr, int(np.floor(v / w)))))
+                   for attr, v, w in (("a", a, 1.0), ("b", b, 10.0))]
+            want = float(np.mean(per))
+            assert got[rid]["score"] == pytest.approx(want, rel=1e-12), (fn.__name__, rid)
+            assert got[rid]["label"] == ("O" if want > 3.0 else "N")
+    # row 3's a=9 is unseen for key x: exactly the cap on that attribute
+    r3 = got[3]["score"]
+    assert r3 == pytest.approx((histogram.NEG_LOG_CAP + neglog(meta[("x", "b", 2)])) / 2)
+    with pytest.raises(ValueError, match="unknown strategy"):
+        histogram.est_attr_prob_score(sdf, hist, ["k"], ["a"], [1.0], strategy="bogus")

@@ -567,9 +567,7 @@ def test_salted_join_equivalence_and_spread(spark):
         assert got.exceptAll(plain).count() == 0
         assert plain.exceptAll(got).count() == 0
     # the hot key's left rows actually fan across several salt buckets
-    salted_l = left.withColumn(
-        "_salt", F.pmod(F.xxhash64(F.monotonically_increasing_id()), F.lit(8))
-    )
+    salted_l = left.withColumn("_salt", F.pmod(F.xxhash64(*left.columns), F.lit(8)))
     n_buckets = (
         salted_l.filter("k = 'h'").select("_salt").distinct().count()
     )

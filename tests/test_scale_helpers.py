@@ -30,6 +30,23 @@ def test_salted_stats_match_direct(spark):
 
     pt.assert_frame_equal(direct, salted, check_exact=False, rtol=1e-9)
 
+    # a one-row key: std is NULL in both (no ANSI divide-by-zero), and a
+    # constant two-row key has std 0.0 in both
+    tiny = ev.sparkSession.createDataFrame(
+        [("one", 3.0), ("two", 5.0), ("two", 5.0)], "event_type string, value double"
+    )
+    cols = ["event_type", "cnt", "mean", "std", "min", "max"]
+    got = {
+        r["event_type"]: r.asDict()
+        for r in salted_numerical_stats(tiny, ["event_type"], "value").select(*cols).collect()
+    }
+    want = {
+        r["event_type"]: r.asDict()
+        for r in profile.numerical_stats(tiny, ["event_type"], ["value"]).select(*cols).collect()
+    }
+    assert got == want
+    assert got["one"]["std"] is None and got["two"]["std"] == 0.0
+
 
 def test_observed_label_counts(spark):
     ev = load_table(spark, "/root/testdata/sf0.001", "events")
