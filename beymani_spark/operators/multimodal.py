@@ -1153,7 +1153,9 @@ def sample_frames(
     one row with NULL frame columns (explode_outer semantics).
 
     ``decode='fake'``: frame count derives from meta.duration_ms and the
-    per-frame features are the deterministic pseudo-decode.
+    per-frame features are the deterministic pseudo-decode; an item with
+    no duration (a NULL ``meta`` or a NULL ``meta.duration_ms``) gives one
+    frame at offset 0.
     ``decode='avi'``: REAL bytes->frames execution in pure numpy —
     uncompressed RIFF-AVI payloads are walked frame by frame
     (``_avi_frames``), duration and native frame times come from the
@@ -1173,7 +1175,8 @@ def sample_frames(
                 duration_ms = len(frames) * usec // 1000
             else:
                 base = hashlib.sha256(p + b":")
-                duration_ms = int(meta["duration_ms"]) if meta is not None else 0
+                d = None if meta is None else meta["duration_ms"]
+                duration_ms = 0 if d is None else int(d)
             for k in range(max(1, int(duration_ms / 1000.0 * fps))):
                 off = int(k * 1000.0 / fps)
                 if decode == "avi":  # the native frame covering the offset

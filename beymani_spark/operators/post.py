@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import caching
+from .profile import percentiles
 
 
 def outlier_counts(df: DataFrame, keys: Sequence[str], label_col: str = "label") -> DataFrame:
@@ -61,8 +62,7 @@ def score_stats(
         F.stddev_samp(score_col).alias("std"),
         F.min(score_col).alias("min"),
         F.max(score_col).alias("max"),
-        F.percentile(score_col, F.lit(0.5)).alias("median"),
-        F.percentile(score_col, F.lit(0.95)).alias("p95"),
+        *percentiles(score_col, {"median": 0.5, "p95": 0.95}).values(),
     )
     hist = (
         scored.withColumn(
@@ -102,8 +102,7 @@ def winsorize(
     bitwise, so an oracle-replayed run pins round_bounds=6 to keep the
     capped flag deterministic for the sample sitting exactly at a
     bound."""
-    lo = F.percentile(value_col, F.lit(float(lower)))
-    hi = F.percentile(value_col, F.lit(float(upper)))
+    lo, hi = percentiles(value_col, {"_lo": lower, "_hi": upper}).values()
     if round_bounds is not None:
         lo, hi = F.round(lo, round_bounds), F.round(hi, round_bounds)
     bounds = df.groupBy(*keys).agg(lo.alias("_lo"), hi.alias("_hi"))
@@ -198,10 +197,9 @@ def pseudo_relevance_threshold(
     """Per-key threshold = score at the top-``top_fraction`` quantile (exact
     percentile of the score distribution); keys with fewer than ``min_count``
     rows fall back to ``default_threshold`` (reference behavior :62-86)."""
-    q = 1.0 - top_fraction
     out = scored.groupBy(*keys).agg(
         F.count("*").alias("n"),
-        F.percentile(score_col, F.lit(q)).alias("_thr"),
+        *percentiles(score_col, {"_thr": 1.0 - top_fraction}).values(),
     )
     thr = F.when(F.col("n") >= min_count, F.col("_thr"))
     if default_threshold is not None:

@@ -30,14 +30,8 @@ def range_model_from_quantiles(
 ) -> DataFrame:
     """Build a (keys..., attr, lo, hi, mid) range model from exact quantiles."""
     long, group = profile.long_form(df, keys, values, None, None)
-    return (
-        long.groupBy(*group)
-        .agg(
-            F.percentile("value", F.lit(lo_q)).alias("lo"),
-            F.percentile("value", F.lit(hi_q)).alias("hi"),
-        )
-        .withColumn("mid", (F.col("lo") + F.col("hi")) / 2.0)
-    )
+    lo, hi = profile.percentiles("value", {"lo": lo_q, "hi": hi_q}).values()
+    return long.groupBy(*group).agg(lo, hi, ((lo + hi) / 2.0).alias("mid"))
 
 
 def _range_scored(

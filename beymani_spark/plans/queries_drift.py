@@ -9,7 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators import knn, multimodal
+from ..operators import knn, multimodal, profile
 from ..sources import load_table
 from ..streaming import drift as drift_mod
 from .queries_knn import _pairs
@@ -20,9 +20,8 @@ from .registry import register
 
 def _error_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
-    thr = ev.groupBy("event_type").agg(
-        F.percentile("value", F.lit(0.9)).alias("_p90")
-    )
+    p90 = profile.percentiles("value", {"_p90": 0.9}).values()
+    thr = ev.groupBy("event_type").agg(*p90)
     return ev.join(F.broadcast(thr), "event_type").select(
         "event_type",
         "event_id",
@@ -808,33 +807,28 @@ def _png_encode_media(media: DataFrame) -> DataFrame:
     """Encode (media_id, payload) rows as genuine PNGs via the shared
     fixture convention (level-0 zlib, scanline filters cycling y % 5 —
     ONE copy for media_features_png and media_phash_png, so the encoding
-    convention cannot drift between their oracles). The input is spread
-    FIRST: the per-row Python encode dominates, and a one-file source
-    would otherwise run the whole encode stage in a single task. NULL
-    payloads are filtered (the _planted_media convention) so the encode
-    kernel's bytes(p) never sees None — matching how compression_ratio
-    maps NULL through instead of crashing."""
-    media = media.filter(F.col("payload").isNotNull())
+    convention cannot drift between their oracles), in the one media
+    batch frame (``multimodal._media_map``, which spreads a one-file
+    source before the per-row encode). NULL payloads are filtered first
+    (the _planted_media convention), so both queries keep their row
+    counts."""
     png_filters = [y % 5 for y in range(32)]
 
-    def encode(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            payloads = [
+    def kernel(payloads, pdf):
+        return {
+            "payload": [
                 multimodal.png_encode(
-                    multimodal._fake_pixels(bytes(p), 32, 32).astype("int64"),
+                    multimodal._fake_pixels(p, 32, 32).astype("int64"),
                     color=0,
                     filters=png_filters,
                 )
-                for p in pdf["payload"]
+                for p in payloads
             ]
-            yield pd.DataFrame(
-                {"media_id": pdf["media_id"].to_numpy(), "payload": payloads}
-            )
+        }
 
-    return multimodal._spread(media).mapInPandas(
-        encode, schema="media_id long, payload binary"
+    return multimodal._media_map(
+        media.filter(F.col("payload").isNotNull()),
+        "media_id", "payload", "media_id long, payload binary", kernel,
     )
 
 

@@ -390,7 +390,7 @@ def q_subsequence_distance_ref(spark: SparkSession, sf_dir: str) -> DataFrame:
     # BOTH sides below, re-running its percentile aggregate per side
     mid = caching.persist(
         ev.groupBy("event_type")
-        .agg(F.percentile("event_id", F.lit(0.6)).alias("_m"))
+        .agg(*profile.percentiles("event_id", {"_m": 0.6}).values())
     )
     # fresh scans per side: cogroup over two filters of one plan is ambiguous
     ref = (

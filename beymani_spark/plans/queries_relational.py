@@ -191,7 +191,7 @@ def q_asof_join_snapshots(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     snaps = ev.groupBy(
         "event_type", F.date_trunc("hour", "ts").alias("snap_ts")
-    ).agg(F.percentile("value", F.lit(0.9)).alias("p90"))
+    ).agg(*profile.percentiles("value", {"p90": 0.9}).values())
     out = asof_join(
         ev.select("event_id", "event_type", "ts"),
         snaps,

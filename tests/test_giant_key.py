@@ -78,6 +78,31 @@ def test_change_point_giant_key_completes(spark, skewed):
     assert c["s1"] == (SMALL_N - 64) // 8 + 1
 
 
+def test_quantile_engines_agree_on_giant_key(spark, skewed):
+    """Both exact quantile engines on the 20k-row key. The keyed models'
+    percentile helper (``zscore.quartiles``: one value map per (group,
+    value)) gives numpy's linear quartiles on every key, and the numeric
+    card's prefix CDF (no per-group value map) gives the same numbers,
+    bit for bit, on the big key alone."""
+    import numpy as np
+
+    from beymani_spark.functions import caching
+    from beymani_spark.operators import profile, zscore
+
+    vals: dict[str, list[float]] = {}
+    for r in skewed.select("k", "v").collect():
+        vals.setdefault(r.k, []).append(r.v)
+    want = {k: np.quantile(v, [0.25, 0.75], method="linear") for k, v in vals.items()}
+    got = {r.k: (r.q1, r.q3) for r in zscore.quartiles(skewed, ["k"], ["v"]).collect()}
+    assert got.keys() == want.keys() and len(vals["big"]) == BIG_N
+    for k, q in want.items():
+        assert got[k] == pytest.approx(tuple(q), rel=1e-12, abs=1e-12), k
+    big = skewed.filter(F.col("k") == "big")
+    with caching.scope():
+        (card,) = profile.numeric_profile(big, ["v"], quantiles=(0.25, 0.75)).collect()
+    assert (card.q25, card.q75) == got["big"]
+
+
 def test_subsequence_chunked_equals_serial_on_giant_key(spark):
     """The parallelism off-ramp must be score-identical to the serial sweep
     (it re-partitions the O(n^2) profile by diagonals, not an approximation).

@@ -103,3 +103,21 @@ def test_media_kernel_null_payload_and_empty_frame(spark, name):
     empty = kernel(df.limit(0))
     assert empty.schema.simpleString() == f"struct<{schema}>"
     assert empty.collect() == []
+
+
+def test_sample_frames_without_duration_gives_one_frame(spark):
+    """A present ``meta`` with a NULL ``duration_ms`` follows the NULL-meta
+    rule (one frame at offset 0) instead of failing the query, and both
+    read the same frame as a sub-second clip."""
+    rows = [
+        (1, "video", b"clip", ("mp4", 16, 16, None)),
+        (2, "video", b"clip", None),
+        (3, "video", b"clip", ("mp4", 16, 16, 400)),
+        (4, "video", b"other", ("mp4", 16, 16, 2500)),
+    ]
+    df = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
+    got = multimodal.sample_frames(df).orderBy("media_id", "frame_idx").collect()
+    assert [(r.media_id, r.frame_idx, r.offset_ms) for r in got] == [
+        (1, 0, 0), (2, 0, 0), (3, 0, 0), (4, 0, 0), (4, 1, 1000),
+    ]
+    assert got[0].frame_features == got[1].frame_features == got[2].frame_features

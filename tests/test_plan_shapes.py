@@ -934,6 +934,60 @@ def test_numeric_profile_plan_shapes(spark):
     assert "CartesianProduct" not in pplan
 
 
+def test_one_percentile_per_value_column(spark):
+    """Every exact keyed quantile model reads ONE percentile aggregate per
+    value column (``profile.percentiles``), however many quantiles it
+    needs: one value->count map per (group, value), not one per quantile."""
+    from beymani_spark.functions import caching
+    from beymani_spark.operators import post, ranges
+
+    ev = load_table(spark, SF, "events")
+    k = ["event_type"]
+    builders = {
+        "zscore.quartiles": lambda: zscore.quartiles(ev, k, ["value"]),
+        "profile.stats_and_quartiles": lambda: profile.stats_and_quartiles(ev, k, ["value"])[1],
+        "ranges.range_model_from_quantiles": lambda: ranges.range_model_from_quantiles(
+            ev, k, ["value"]
+        ),
+        "post.winsorize": lambda: post.winsorize(ev, k, "value"),
+        "post.score_stats": lambda: post.score_stats(ev, k, score_col="value")[0],
+        "profile.discretize": lambda: profile.discretize(ev, "value", quantiles=4, keys=k),
+    }
+    with caching.scope():
+        counts = {name: _plan(b()).count("partial_percentile(") for name, b in builders.items()}
+    assert counts == dict.fromkeys(builders, 1)
+
+
+def test_percentile_only_in_the_helper():
+    """``profile.percentiles`` is the one exact keyed quantile engine: no
+    other code in the package calls Spark's ``percentile`` aggregate, so a
+    second per-site value map cannot come back unnoticed."""
+    import ast
+    from pathlib import Path
+
+    import beymani_spark
+
+    root = Path(beymani_spark.__file__).parent
+    sites = []
+    for path in sorted(root.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        # innermost enclosing function of every node (walk is outer-first)
+        owner = {
+            id(node): fn.name
+            for fn in ast.walk(tree)
+            if isinstance(fn, ast.FunctionDef)
+            for node in ast.walk(fn)
+        }
+        sites += [
+            (path.relative_to(root).as_posix(), owner.get(id(node)))
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "percentile"
+        ]
+    assert sites == [("operators/profile.py", "percentiles")]
+
+
 def test_gram_topk_partial_agg_broadcast_totals_no_cartesian(spark):
     """gram_topk's gram counts partial-aggregate (a viral gram combines
     map-side), the totals join back broadcast, and nothing goes
