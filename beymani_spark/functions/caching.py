@@ -1,10 +1,11 @@
 """Query-scoped cache lifetime for lazily-returned operator results.
 
 Several operators persist an intermediate frame that several branches of
-the RETURNED (still lazy) plan consume, e.g. the exploded shingle set in
-``minhash_lsh_pairs`` feeds both the signature aggregation and the
-verification join. The operator cannot unpersist before returning (the
-cache would never be read), so the cache must outlive the operator.
+the RETURNED (still lazy) plan consume, e.g. the per-document MinHash
+sketch in ``minhash_lsh_pairs`` feeds both sides of the band join and both
+sides of the verification join-back. The operator cannot unpersist before
+returning (the cache would never be read), so the cache must outlive the
+operator.
 
 The lifetime rule, stated once for the package: a cache lives as long as
 the query that made it. Whoever runs a query (the CLI, ``bench.py``, a
@@ -44,7 +45,10 @@ def _register(free: Callable[[], None]) -> None:
 
 
 def persist(df: DataFrame) -> DataFrame:
-    """``df.persist()``, freed when the innermost open scope exits."""
+    """``df.persist()``, freed when the innermost open scope exits. A frame
+    this call already persisted is returned as it is: its owner frees it."""
+    if df.is_cached:
+        return df
     df = df.persist()
     _register(lambda: df.unpersist(blocking=True))
     return df

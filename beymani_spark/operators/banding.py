@@ -43,11 +43,13 @@ def banded_pairs(
 
     The sketch is persisted here, once, because both join sides read it —
     unpersisted, each side would re-run the sketch lineage (the shingle
-    aggregation, the perceptual-hash or hyperplane mapInPandas kernel,
-    decode included). The cached frame is one fingerprint-sized row per
-    item at any scale. Join keys are small (band int, sig string/long) and
-    equi-only: no cartesian product anywhere, and candidate volume is the
-    sum of squared bucket sizes."""
+    and minhash arrays, the perceptual-hash or hyperplane mapInPandas
+    kernel, decode included). A caller that joins its candidates back to
+    the sketch persists it first and passes the persisted frame; it is
+    not cached twice. The cached frame is one row per item at any scale:
+    a fingerprint, plus the shingle array for MinHash. Join keys are
+    small (band int, sig string/long) and equi-only: no cartesian product
+    anywhere, and candidate volume is the sum of squared bucket sizes."""
     sketch = caching.persist(sketch)
 
     def keyed(exprs: Sequence[Column]) -> DataFrame:

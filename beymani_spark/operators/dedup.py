@@ -5,19 +5,22 @@ Scale posture:
 - exact_duplicates: one groupBy on md5(text) — the canonical 100 TB dedup.
 - jaccard_pairs: *exact* near-dup within token-length bands — the
   correctness/oracle path. O(B²) per band; band width bounds the blow-up.
-- minhash_lsh_pairs / containment_pairs / simhash_dup_pairs: the scale
-  paths — a per-doc sketch (k minhashes, or a SimHash) feeds the banded
-  candidate-pair engine (banding.banded_pairs, which states the join
-  shape and the sketch persist once), and only the candidates are
-  verified exactly (shingle counts, or bit_count(xor)).
+- minhash_lsh_pairs / containment_pairs / incremental_minhash: one
+  row-wise sketch per document (minhash_sketch: its distinct shingle
+  array and k array_min minhashes, no explode, no aggregation) feeds the
+  banded candidate-pair engine (banding.banded_pairs), and each
+  candidate pair is verified exactly from its two shingle arrays
+  (size of array_intersect), joined back from the same persisted sketch.
+- simhash_dup_pairs: the same engine over a SimHash, verified by
+  bit_count(xor).
 
 Hashing: every MinHash and SimHash sketch derives from Spark's md5() hex
 string, which DuckDB computes identically, so MinHash-LSH and SimHash are
 fully DuckDB-oracle-verifiable (hash parity, not just rows). MinHash takes
 a 32-bit base hash from the first md5 word; SimHash takes sketch bit b
 from md5 word b // 32. md5 is a JVM codegen built-in: one digest per
-shingle/token occurrence. The streaming bands (rowwise_minhash_bands) use
-the same arithmetic, so batch and stream bands always match.
+shingle/token occurrence. The streaming bands (rowwise_minhash_bands) band
+the same sketch, so batch and stream bands always match.
 """
 from __future__ import annotations
 
@@ -193,30 +196,18 @@ def minhash_signatures(
     num_hashes: int = 16,
     n: int = 3,
 ) -> DataFrame:
-    """k minhashes per doc: minhash_i = min over shingles of h_i(sh).
+    """(_id, mh_0..mh_{k-1}): minhash_i = min over shingles of h_i(sh), by
+    one explode and one partial-aggregated groupBy.
 
-    ONE md5 per shingle occurrence: the first 8 hex chars are a 32-bit
-    base hash, and the k hashes are affine maps (a_i*h+b_i) mod 2^61-1
-    (Kirsch-Mitzenmacher double hashing) — k-1 of the k digests are
-    replaced by integer multiply-adds, and DuckDB reproduces every step
-    bit-for-bit.
-
-    One explode + one partial-aggregated groupBy — the hash/min aggregates
-    run in a single codegen pass."""
-    ex = exploded_shingles(df, id_col, text_col, n)
-    return _signatures_from_shingles(ex, num_hashes)
-
-
-def _signatures_from_shingles(ex: DataFrame, num_hashes: int) -> DataFrame:
-    """Signature aggregation over an existing (_id, sh) frame — lets
-    minhash_lsh_pairs feed both the signatures and the verification join
-    from ONE persisted shingle set instead of exploding twice.
+    Kept: reference + test. No operator reads it; it is the independent
+    relational form that test_lsh_recall and test_drift_streaming check
+    :func:`minhash_sketch` (array_min per row) against, so an arithmetic
+    slip in either form shows as a band mismatch.
 
     The md5 base hash is projected as its own column before the k affine
     aggregates: CollapseProject won't inline a non-cheap alias referenced k
-    times, so each shingle pays ONE digest+conv instead of k (the
-    Kirsch-Mitzenmacher point)."""
-    keyed = ex.select(
+    times, so each shingle pays ONE digest+conv instead of k."""
+    keyed = exploded_shingles(df, id_col, text_col, n).select(
         "_id",
         F.conv(F.substring(F.md5("sh"), 1, 8), 16, 10).cast("long").alias("_h32"),
     )
@@ -232,10 +223,10 @@ def _signatures_from_shingles(ex: DataFrame, num_hashes: int) -> DataFrame:
 def minhash_band_sigs(num_hashes: int, bands: int) -> list[Column]:
     """LSH band signature expressions over the ``mh_0..mh_{k-1}`` minhash
     columns: band b digests its ``num_hashes // bands`` minhashes (md5 of
-    the '|'-joined decimals, DuckDB-reproducible). ONE
-    source of truth for the batch candidate join, the band manifest of the
-    incremental path (_banded_signatures) and the row-wise streaming form
-    (rowwise_minhash_bands), so the three can never band differently."""
+    the '|'-joined decimals, DuckDB-reproducible). ONE source of truth for
+    every banding of a :func:`minhash_sketch` (the batch candidate join,
+    the incremental ingest and the row-wise streaming bands), so they can
+    never band differently."""
     if bands <= 0 or num_hashes % bands != 0:
         raise ValueError(
             f"bands ({bands}) must evenly divide num_hashes ({num_hashes}); "
@@ -250,13 +241,45 @@ def minhash_band_sigs(num_hashes: int, bands: int) -> list[Column]:
     return [band_sig(b) for b in range(bands)]
 
 
-def _banded_signatures(sigs: DataFrame, num_hashes: int, bands: int) -> DataFrame:
-    """(_id, band, sig) — one LSH band signature row per (doc, band): the
-    persisted manifest format of the incremental near-dup path
-    (incremental_minhash, corpus_band_manifest). A single posexplode emits
-    the band rows, no shuffle."""
-    band_sigs = minhash_band_sigs(num_hashes, bands)
-    return sigs.select("_id", F.posexplode(F.array(*band_sigs)).alias("band", "sig"))
+def minhash_sketch(
+    df: DataFrame, id_col: str, text_col: str, num_hashes: int, n: int
+) -> DataFrame:
+    """(id_col, sh, mh_0..mh_{k-1}): one row per document — its distinct
+    shingle array (:func:`shingles`) and its k minhashes, each an
+    array_min over that array. No aggregation and no explode: the whole
+    sketch is a stateless column expression, so batch and streaming
+    callers share it, and a document's exact-Jaccard verification reads
+    the same ``sh`` its minhashes came from.
+
+    ONE md5 per shingle: the first 8 hex chars are a 32-bit base hash,
+    and the k hashes are affine maps (a_i*h+b_i) mod 2^61-1
+    (Kirsch-Mitzenmacher double hashing); DuckDB reproduces every step
+    bit-for-bit. The base hashes are projected as their own array column
+    so the k array_min transforms reuse it (CollapseProject keeps a
+    non-cheap multi-referenced alias) instead of re-digesting k times.
+
+    Documents with no shingles (NULL text, or fewer than n tokens) are
+    dropped: a NULL minhash would band as md5('') and falsely match every
+    other shingle-less document."""
+    base = df.select(F.col(id_col), shingles(F.col(text_col), n).alias("sh"))
+    hashed = base.select(
+        id_col,
+        "sh",
+        F.transform(
+            "sh", lambda s: F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast("long")
+        ).alias("_h32s"),
+    )
+
+    def _h(a: int, b: int):
+        # single-arg closure: F.transform treats default args as lambda
+        # arity and would pass the element index as the second parameter
+        return lambda x: F.pmod(F.lit(a) * x + F.lit(b), F.lit(MINHASH_P))
+
+    mins = [
+        F.array_min(F.transform(F.col("_h32s"), _h(a, b))).alias(f"mh_{i}")
+        for i, (a, b) in enumerate(minhash_affine_constants(num_hashes))
+    ]
+    return hashed.select(id_col, "sh", *mins).filter(F.col("mh_0").isNotNull())
 
 
 def _shingle_overlap_pairs(
@@ -269,42 +292,36 @@ def _shingle_overlap_pairs(
 ) -> DataFrame:
     """Banded-minhash candidates with their exact shingle counts:
     (src, dst, _inter, _na, _nb) — |A∩B|, |A|, |B|. The one verification
-    join of minhash_lsh_pairs and containment_pairs, which differ only in
-    the final ratio.
+    of minhash_lsh_pairs and containment_pairs, which differ only in the
+    final ratio.
 
-    The exploded shingle set is persisted ONCE and feeds the signature
-    aggregation, the sizes and the intersection join — a single explode
-    pass (sharing it measured ~25% faster at sf0.1 than exploding for
-    signatures separately). The signatures are the engine's sketch
-    (banding.banded_pairs).
+    The sketch is persisted once: the band self-join
+    (banding.banded_pairs) and both verification sides read it. The
+    candidates join back to it for the two shingle arrays, and the counts
+    are array expressions on each candidate row — the arrays are distinct
+    per document, so |A∩B| is the size of their array_intersect.
+    Candidates are near-dup-proportional, so AQE broadcasts them into
+    both join-backs and the sketch is scanned, never shuffled. Carrying
+    ``sh`` through the band join instead (``carry``) pushes every array
+    through the self-join and its distinct; measured slower at sf0.1."""
+    sketch = caching.persist(minhash_sketch(df, id_col, text_col, num_hashes, n))
+    cand = banded_pairs(sketch, id_col, minhash_band_sigs(num_hashes, bands))
 
-    Verification is candidate-bounded by join STRATEGY, not an extra
-    semi-join pass: candidates are near-dup-proportional (tiny), so AQE
-    broadcasts them into both shingle joins — the shingle stream never
-    shuffles, it is scanned once from cache and hash-probed against the
-    broadcast candidates (an explicit semi-join prefilter measured 2-3x
-    slower at sf0.1). sizes partial-aggregates the cached shingles:
-    shuffle volume is |docs| counts, not shingle rows."""
-    sh = caching.persist(exploded_shingles(df, id_col, text_col, n))
-    cand = banded_pairs(
-        _signatures_from_shingles(sh, num_hashes),
-        "_id",
-        minhash_band_sigs(num_hashes, bands),
+    def side(name: str) -> DataFrame:
+        return sketch.select(F.col(id_col).alias(name), F.col("sh").alias(f"sh_{name}"))
+
+    a, b = F.col("sh_src"), F.col("sh_dst")
+    return (
+        cand.join(side("src"), "src")
+        .join(side("dst"), "dst")
+        .select(
+            "src",
+            "dst",
+            F.size(F.array_intersect(a, b)).cast("long").alias("_inter"),
+            F.size(a).cast("long").alias("_na"),
+            F.size(b).cast("long").alias("_nb"),
+        )
     )
-    sizes = sh.groupBy("_id").agg(F.count("*").alias("_n"))
-    inter = (
-        cand.join(sh.select(F.col("_id").alias("src"), "sh"), "src")
-        .join(sh.select(F.col("_id").alias("dst"), "sh"), ["dst", "sh"])
-        .groupBy("src", "dst")
-        .agg(F.count("*").alias("_inter"))
-    )
-    counted = (
-        cand.join(inter, ["src", "dst"], "left")
-        .join(sizes.select(F.col("_id").alias("src"), F.col("_n").alias("_na")), "src")
-        .join(sizes.select(F.col("_id").alias("dst"), F.col("_n").alias("_nb")), "dst")
-        .withColumn("_inter", F.coalesce(F.col("_inter"), F.lit(0)))
-    )
-    return counted
 
 
 def minhash_lsh_pairs(
@@ -336,9 +353,10 @@ def _cluster_labels(
     max_iter: int = 25,
     local_threshold: int = 1_000_000,
     stats: dict | None = None,
-) -> tuple[DataFrame, int]:
+) -> tuple[DataFrame, bool]:
     """Shared labeling core of the cluster consumers: returns
-    ((id_col, _rep) with _rep NULL for docs in no pair, n_pairs). The
+    ((id_col, _rep) with _rep NULL for docs in no pair, local), local
+    True when the labels came from the driver union-find. The
     keep-one/keep-best/histogram consumers need only the labels — the
     per-cluster size attach lives in :func:`dedup_clusters` so they don't
     pay its aggregate+join.
@@ -358,17 +376,25 @@ def _cluster_labels(
       each, no driver-side graph state. Labels only decrease, so
       convergence is an unchanged decimal label sum between rounds.
 
+    One ``limit(local_threshold + 1)`` collect picks the mode: the driver
+    bound is the same on both sides of the threshold, and under it the
+    collected rows are the union-find input (no separate count job).
+
     ``stats``, if given, receives {'n_pairs', 'mode', 'rounds'} after plan
-    construction ('rounds' only in distributed mode) — the observability
-    hook the giant-chain stress test uses to assert the O(log n) bound."""
+    construction ('rounds' only in distributed mode, where 'n_pairs' costs
+    one count job) — the observability hook the giant-chain stress test
+    uses to assert the O(log n) bound."""
     edges_df = caching.persist(
         pairs.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     )
-    n_pairs = edges_df.count()
+    # one bounded collect decides the mode and, under the bound, IS the
+    # union-find input: at most local_threshold + 1 rows reach the driver
+    edge_rows = edges_df.limit(local_threshold + 1).collect()
+    local = len(edge_rows) <= local_threshold
     if stats is not None:
-        stats["n_pairs"] = n_pairs
-        stats["mode"] = "local" if n_pairs <= local_threshold else "distributed"
-    if n_pairs <= local_threshold:
+        stats["n_pairs"] = len(edge_rows) if local else edges_df.count()
+        stats["mode"] = "local" if local else "distributed"
+    if local:
         parent: dict = {}
 
         def find(x):
@@ -380,7 +406,7 @@ def _cluster_labels(
             return root
 
         nodes: set = set()
-        for row in edges_df.collect():
+        for row in edge_rows:
             nodes.add(row["a"])
             nodes.add(row["b"])
             ra, rb = find(row["a"]), find(row["b"])
@@ -393,7 +419,7 @@ def _cluster_labels(
         # comp-matched rows, so a root missing from comp would undercount
         # its own cluster by one
         mapping = [(node, find(node)) for node in nodes]
-        # edges are fully consumed by the union-find collect above — release
+        # edges are fully consumed by the bounded collect above — release
         # the cache now so long sessions (bench, many queries) don't
         # accumulate storage pressure that pushes later caches to disk
         edges_df.unpersist()
@@ -469,12 +495,12 @@ def _cluster_labels(
     # rep is ever hot in distributed mode); _rep stays NULL for docs in
     # no pair so consumers can split singletons without a second pass
     labeled = df.select(F.col(id_col)).join(
-        F.broadcast(comp) if n_pairs <= local_threshold else comp,
+        F.broadcast(comp) if local else comp,
         F.col(id_col) == F.col("_cid"),
         "left",
     ).select(id_col, F.col("_rep"))
     edges_df.unpersist()
-    return labeled, n_pairs
+    return labeled, local
 
 
 def dedup_clusters(
@@ -492,7 +518,7 @@ def dedup_clusters(
     cluster_rep is the minimum id reachable through the pair graph (docs
     in no pair are singletons representing themselves). Labeling strategy
     and knobs: :func:`_cluster_labels`."""
-    labeled, n_pairs = _cluster_labels(
+    labeled, local = _cluster_labels(
         df, id_col, pairs, src, dst, max_iter, local_threshold, stats
     )
     matched = labeled.filter(F.col("_rep").isNotNull())
@@ -504,7 +530,7 @@ def dedup_clusters(
     # are definitionally size 1 and union back as a scan-side branch
     return (
         matched.join(
-            F.broadcast(sizes) if n_pairs <= local_threshold else sizes, "_rep"
+            F.broadcast(sizes) if local else sizes, "_rep"
         )
         .select(
             id_col,
@@ -724,53 +750,22 @@ def rowwise_minhash_bands(
     n: int = 3,
     keep_shingles: bool = False,
 ) -> DataFrame:
-    """(id, band, sig) rows computed per row with NO aggregation — each
-    minhash is array_min over the shingle array, so the whole signature is
-    a stateless column expression. This is the streaming-compatible form of
-    minhash_signatures (a stream cannot groupBy(doc) without state); use it
-    to band NEW documents and stream-static join against a corpus band
-    table. The md5 arithmetic is identical to minhash_signatures, so bands
-    computed here match the batch pipeline's exactly.
+    """(id, band, sig) rows of the :func:`minhash_sketch` — computed per
+    row with NO aggregation, so a stream can band NEW documents and
+    stream-static join them against a corpus band table (a stream cannot
+    groupBy(doc) without state). The bands are those the batch candidate
+    join uses, so stream and batch always band alike.
 
     ``keep_shingles`` carries the distinct-shingle array through as a
     ``sh`` column (needed when the band rows feed an exact-Jaccard
     verification, e.g. streaming.stream_near_dup_verified — a later join
     back to the source would be a stream-stream join, so the array must
     ride along)."""
-    band_sigs = minhash_band_sigs(num_hashes, bands)
-    sh = shingles(F.col(text_col), n)
-    consts = minhash_affine_constants(num_hashes)
-    # one md5+conv per shingle occurrence, projected as its own column so
-    # the k per-hash array_min transforms reuse it (CollapseProject keeps a
-    # non-cheap multi-referenced alias) instead of re-digesting k times
-    extra = [sh.alias("sh")] if keep_shingles else []
-    base = df.select(
-        F.col(id_col),
-        F.transform(
-            sh, lambda s: F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast("long")
-        ).alias("_h32s"),
-        *extra,
-    )
-
-    def _h(a: int, b: int):
-        # single-arg closure: F.transform treats default args as lambda
-        # arity and would pass the element index as the second parameter
-        return lambda x: F.pmod(F.lit(a) * x + F.lit(b), F.lit(MINHASH_P))
-
-    mins = [
-        F.array_min(F.transform(F.col("_h32s"), _h(a, b))).alias(f"mh_{i}")
-        for i, (a, b) in enumerate(consts)
-    ]
-    # docs with no shingles (< n tokens) must emit NO band rows — the batch
-    # explode drops them implicitly; here a null minhash would band as
-    # md5('') and falsely match every other shingle-less doc
     carried = ["sh"] if keep_shingles else []
-    sigs = base.select(F.col(id_col), *mins, *carried).filter(
-        F.col("mh_0").isNotNull()
-    )
-
-    return sigs.select(
-        F.col(id_col), F.posexplode(F.array(*band_sigs)).alias("band", "sig"), *carried
+    return minhash_sketch(df, id_col, text_col, num_hashes, n).select(
+        F.col(id_col),
+        F.posexplode(F.array(*minhash_band_sigs(num_hashes, bands))).alias("band", "sig"),
+        *carried,
     )
 
 
@@ -783,24 +778,18 @@ def corpus_band_manifest(
     n: int = 3,
 ) -> DataFrame:
     """Static (id, band, sig, sh) manifest for stream-side VERIFIED
-    near-dup: the batch band signatures joined with each doc's distinct
-    shingle array. One manifest row per (doc, band); the shingle array is
-    duplicated across a doc's band rows — the storage cost of letting a
-    stateless stream-static join carry everything exact-Jaccard
-    verification needs (the stream side cannot join back to the corpus
-    text later without state). Write it out with the partitioned sinks
-    and refresh it on the batch ingest cadence.
-
-    The shingle column is the same array the signatures derive from
-    (shingles(); distinct per doc), so the manifest is self-consistent by
+    near-dup: each doc's band signatures with its distinct shingle array,
+    one row per (doc, band). The shingle array is duplicated across a
+    doc's band rows — the storage cost of letting a stateless
+    stream-static join carry everything exact-Jaccard verification needs
+    (the stream side cannot join back to the corpus text later without
+    state). Write it out with the partitioned sinks and refresh it on the
+    batch ingest cadence. The array is the one the signatures derive from
+    (:func:`minhash_sketch`), so the manifest is self-consistent by
     construction."""
-    ex = caching.persist(exploded_shingles(df, id_col, text_col, n))
-    bandsdf = _banded_signatures(_signatures_from_shingles(ex, num_hashes), num_hashes, bands)
-    arr = df.select(F.col(id_col).alias("_id"), shingles(F.col(text_col), n).alias("sh"))
-    out = bandsdf.join(arr, "_id").select(
-        F.col("_id").alias(id_col), "band", "sig", "sh"
+    return rowwise_minhash_bands(
+        df, id_col, text_col, num_hashes, bands, n, keep_shingles=True
     )
-    return out
 
 
 def chunk_dedup(
@@ -1152,41 +1141,37 @@ def incremental_minhash(
     pairs (both classes), 0.0 for 'new' — the audit column a data card
     reports.
 
-    Scale shape: the corpus side is touched exactly twice, both times in
-    batch-bounded ways — (1) its band signatures, which in production are a
-    maintained manifest written by _banded_signatures at last ingest (here
-    recomputed from text so the query is self-contained), joined
-    equi-on (band, sig) against the batch's signatures; (2) its shingle
-    rows, probed only by the candidate-bounded verification joins (the tiny
-    candidate set broadcasts, so corpus shingles stream past it without
-    shuffling — the minhash_lsh_pairs verification shape). Batch-internal
-    pairs reuse the batch shingle cache."""
-    bsh = caching.persist(exploded_shingles(new_df, id_col, text_col, n))
-    csh = caching.persist(exploded_shingles(corpus_df, id_col, text_col, n))
-    # batch band signatures feed BOTH sides of the fused candidate join;
-    # persist the |batch| x bands frame so the signature aggregation runs
-    # once (cband is single-use)
-    bband = caching.persist(
-        _banded_signatures(_signatures_from_shingles(bsh, num_hashes), num_hashes, bands)
-    )
-    cband = _banded_signatures(_signatures_from_shingles(csh, num_hashes), num_hashes, bands)
+    Scale shape: both sides are :func:`minhash_sketch` frames, persisted
+    once each, and the corpus side is touched in batch-bounded ways only:
+    (1) its band signatures (in production a maintained manifest,
+    :func:`corpus_band_manifest`, written at last ingest; here recomputed
+    from text so the query is self-contained), joined equi-on (band, sig)
+    against the batch's; (2) its shingle arrays, read only by the
+    candidate-bounded verification join-back (the tiny candidate set
+    broadcasts, so the corpus sketch streams past it without shuffling —
+    the minhash_lsh_pairs verification shape)."""
+    bsk = caching.persist(minhash_sketch(new_df, id_col, text_col, num_hashes, n))
+    csk = caching.persist(minhash_sketch(corpus_df, id_col, text_col, num_hashes, n))
+    band_sigs = minhash_band_sigs(num_hashes, bands)
 
-    # FUSED candidate + verification pass: the former shape ran the
-    # corpus and batch classes as two separate verified sub-operators —
-    # two candidate distincts, two intersection join chains, and THREE
-    # identical batch-side size aggregations (13 in-plan exchanges). The
-    # two classes differ only in which frame the oid side reads, so tag
-    # the side ('c'/'b'), union the oid-side frames, and run ONE
-    # distinct, ONE intersection chain, ONE size aggregation per role,
-    # and ONE hits groupBy (pivoted back to _jc/_jb with conditional
-    # maxes). Arithmetic per pair is unchanged, so jaccard values and the
-    # status precedence are bit-identical.
-    oband = cband.withColumn("_side", F.lit("c")).unionByName(
-        bband.withColumn("_side", F.lit("b"))
-    )
+    def tagged(sk: DataFrame, side: str) -> DataFrame:
+        return sk.withColumnRenamed(id_col, "_id").withColumn("_side", F.lit(side))
+
+    def banded(sk: DataFrame) -> DataFrame:
+        return sk.select(
+            "_id", "_side", F.posexplode(F.array(*band_sigs)).alias("band", "sig")
+        )
+
+    # ONE fused candidate + verification pass for both classes: they
+    # differ only in which sketch the other (oid) side reads, so the oid
+    # sides are tagged ('c'/'b') and unioned, and one distinct, one
+    # join-back and one hits groupBy (pivoted back to _jc/_jb with
+    # conditional maxes) serve both
+    batch = tagged(bsk, "b")
+    other = tagged(csk, "c").unionByName(batch)
     cand = (
-        bband.alias("a")
-        .join(oband.alias("o"), ["band", "sig"])
+        banded(batch).alias("a")
+        .join(banded(other).alias("o"), ["band", "sig"])
         .filter(
             (F.col("o._side") == "c") | (F.col("o._id") < F.col("a._id"))
         )
@@ -1197,33 +1182,15 @@ def incremental_minhash(
         )
         .distinct()
     )
-    osh = csh.withColumn("_side", F.lit("c")).unionByName(
-        bsh.withColumn("_side", F.lit("b"))
-    )
-    sizes_b = bsh.groupBy("_id").agg(F.count("*").alias("_na"))
-    sizes_o = osh.groupBy("_side", "_id").agg(F.count("*").alias("_nb"))
-    # candidate-bounded verification: cand is near-dup-proportional, AQE
-    # broadcasts it into the shingle joins so neither shingle cache
-    # shuffles
-    inter = (
-        cand.join(bsh.select(F.col("_id").alias("bid"), "sh"), "bid")
-        .join(
-            osh.select("_side", F.col("_id").alias("oid"), "sh"),
-            ["oid", "sh", "_side"],
-        )
-        .groupBy("bid", "oid", "_side")
-        .agg(F.count("*").alias("_inter"))
-    )
+    sh_a, sh_b = F.col("sh_a"), F.col("sh_b")
+    inter = F.size(F.array_intersect(sh_a, sh_b))
     verified = (
-        inter.join(sizes_b.select(F.col("_id").alias("bid"), "_na"), "bid")
+        cand.join(batch.select(F.col("_id").alias("bid"), F.col("sh").alias("sh_a")), "bid")
         .join(
-            sizes_o.select("_side", F.col("_id").alias("oid"), "_nb"),
+            other.select("_side", F.col("_id").alias("oid"), F.col("sh").alias("sh_b")),
             ["oid", "_side"],
         )
-        .withColumn(
-            "jaccard",
-            F.col("_inter") / (F.col("_na") + F.col("_nb") - F.col("_inter")),
-        )
+        .withColumn("jaccard", inter / (F.size(sh_a) + F.size(sh_b) - inter))
         .filter(F.col("jaccard") >= min_jaccard)
     )
     hits = verified.groupBy("bid").agg(

@@ -528,21 +528,25 @@ def materialize(
 ) -> Model:
     """Run a fitted model frame once and decide where it lives.
 
-    The checkpoint is lazy and the count materializes it in the same job,
-    so the fit runs exactly once and no later action (a size count, a
-    broadcast, a save) re-runs it. Then the split is on the measured size:
+    The checkpoint is lazy and one bounded collect,
+    ``limit(max_model_rows + 1)``, materializes it, so the fit runs exactly
+    once and no later action (a size count, a broadcast, a save) re-runs
+    it. The split is on what that collect returned:
 
-    - at or under ``max_model_rows`` the rows are collected as well;
-    - above it (a keyed fit over millions of entities) nothing model-sized
-      reaches the driver and ``rows`` is None.
+    - at most ``max_model_rows`` rows: they are the model's rows;
+    - one more (a keyed fit over millions of entities): at most
+      ``max_model_rows + 1`` rows reached the driver, they are dropped,
+      and ``rows`` is None.
 
     ``frame`` is the checkpoint either way; the scorers read ``rows`` when
-    they are there. ``max_model_rows=None`` forces the distributed path."""
+    they are there. ``max_model_rows=None`` forces the distributed path
+    (the collect takes one row)."""
     frame = caching.checkpoint(frame)
-    n_model = frame.count()
-    if max_model_rows is None or n_model > int(max_model_rows):
+    cap = 0 if max_model_rows is None else int(max_model_rows)
+    rows = frame.limit(cap + 1).collect()
+    if max_model_rows is None or len(rows) > cap:
         return Model(frame, None)
-    return Model(frame, frame.collect())
+    return Model(frame, rows)
 
 
 #: inline-literal bound: a model with at most this many key groups is baked

@@ -204,10 +204,11 @@ def cosine_dup_pairs_lsh(
     hyperplane signs are then dominated by the shared mean component, so
     every row lands in ONE bucket and the "sub-quadratic" path degrades
     straight back to all-pairs. Centering spreads the cone across the
-    signature space. The mean comes from one partial-aggregated component-
-    sum pass (scalar-row collect — a bounded model artifact), exact in any
-    summation order for integer-valued components (int8 codes), so every
-    signature bit is deterministic under repartitioning.
+    signature space. The mean comes from one partial-aggregated pass over
+    (position, component) rows (a dim-row collect — a bounded model
+    artifact), exact in any summation order, so every signature bit is
+    deterministic under repartitioning. A NULL or zero vector pairs with
+    nothing; vectors of different lengths raise ``ValueError``.
 
     Output pairs are a SUBSET of cosine_dup_pairs' (true pairs hashed
     >1 bit apart are missed — recall measured in tests/test_lsh_recall.py);
@@ -216,21 +217,13 @@ def cosine_dup_pairs_lsh(
     from .knn import auto_planes
 
     # One persisted pass of the (possibly expensive — decode, quantize)
-    # upstream pipeline: the count, the centering mean, the dim probe, and
-    # the signature sketch read this frame — without the cache the upstream
-    # would execute once per consumer (the build_corpus_mixed trap).
+    # upstream pipeline: the centering-mean pass and the signature sketch
+    # read this frame — without the cache the upstream would execute once
+    # per consumer (the build_corpus_mixed trap).
     base = caching.persist(
         with_norm(df, vec_col)
         .select(F.col(id_col).alias("_id"), "_vec", "_norm")
     )
-    probe = base.select("_vec").first()
-    if probe is None:  # empty input: no pairs, with the right shape
-        base.unpersist()
-        id_t = df.schema[id_col].dataType.simpleString()
-        return df.sparkSession.createDataFrame(
-            [], f"src {id_t}, dst {id_t}, cosine double"
-        )
-    dim = len(probe[0])
     # centering-mean sums over 1e-6-quantized components as EXACT integers:
     # floor(v*1e6 + 0.5) is one deterministic IEEE op per row (replayable
     # bit-for-bit in numpy) and the long sum is order-independent, so the
@@ -241,24 +234,39 @@ def cosine_dup_pairs_lsh(
     # sum: the scaled quotient S*1e6/(n*1e6) is the same correctly-rounded
     # double as S/n. NaN components quantize to 0 (nanvl — better than
     # poisoning the whole mean); NULLs are skipped by sum as before.
-    row = base.agg(
-        F.count(F.lit(1)).alias("_n"),
-        *[
+    # One long aggregate, one row per component position: a NULL (or
+    # empty) vector explodes to the one position NULL, so the row count
+    # is the NULL-position count plus the position-0 count, and equal
+    # per-position counts prove every vector has the same length.
+    per_pos = {
+        r["_pos"]: r
+        for r in base.select(F.posexplode_outer("_vec").alias("_pos", "_v"))
+        .groupBy("_pos")
+        .agg(
+            F.count(F.lit(1)).alias("_c"),
             F.sum(
-                F.floor(
-                    F.nanvl(
-                        F.element_at(F.col("_vec"), i + 1).cast("double"),
-                        F.lit(0.0),
-                    )
-                    * 1e6
-                    + F.lit(0.5)
-                )
-            ).alias(f"_s{i}")
-            for i in range(dim)
-        ],
-    ).first()
+                F.floor(F.nanvl(F.col("_v"), F.lit(0.0)) * 1e6 + F.lit(0.5))
+            ).alias("_s"),
+        )
+        .collect()
+    }
+    dim = len(per_pos) - (None in per_pos)
+    if dim == 0:  # no rows, or no vector to hash: no pairs, with the right shape
+        base.unpersist()
+        id_t = df.schema[id_col].dataType.simpleString()
+        return df.sparkSession.createDataFrame(
+            [], f"src {id_t}, dst {id_t}, cosine double"
+        )
+    counts = {per_pos[i]["_c"] for i in range(dim)}
+    if len(counts) > 1:
+        raise ValueError(
+            f"cosine_dup_pairs_lsh: {vec_col} vectors differ in length (the "
+            f"longest has {dim} components); every non-NULL vector must have "
+            "the same length"
+        )
+    n_rows = per_pos[0]["_c"] + (per_pos[None]["_c"] if None in per_pos else 0)
     if n_planes == "auto":
-        n_planes = auto_planes(row["_n"], target_bucket)
+        n_planes = auto_planes(n_rows, target_bucket)
     planes = hyperplanes(dim, n_planes, seed)
     # determinism contract: the quantized-integer sums above are exact and
     # order-independent, the scaled division is one correctly-rounded
@@ -268,7 +276,7 @@ def cosine_dup_pairs_lsh(
     # partitioning or summation order.
     mean = F.array(
         *[
-            F.lit(round(float(row[f"_s{i}"]) / (row["_n"] * 1e6), 6))
+            F.lit(round(float(per_pos[i]["_s"]) / (n_rows * 1e6), 6))
             for i in range(dim)
         ]
     )

@@ -865,11 +865,9 @@ def stream_near_dup_candidates(
     The corpus side is precomputed once and is a normal static DataFrame,
     so Spark broadcasts or shuffles it per micro-batch without state; the
     stream side needs no watermark because the join is stateless. Build
-    the corpus band table with the BATCH pipeline (minhash_signatures +
-    band explode — identical md5 arithmetic, verified by test): the
-    row-wise expression form below is for the stream side, where batches
-    are small; over a whole corpus its inline shingle transform
-    re-evaluates the tokenizer per element. Downstream, verify candidates
+    the corpus band table with the same rowwise_minhash_bands over the
+    corpus (the sketch the batch near-dup operators band, so stream and
+    corpus bands agree by construction). Downstream, verify candidates
     with an exact-Jaccard batch join or route them to quarantine."""
     from ..operators.dedup import rowwise_minhash_bands
 

@@ -426,6 +426,71 @@ def test_cosine_dup_pairs_lsh_empty_input(spark):
     assert out.columns == ["src", "dst", "cosine"]
 
 
+def test_cosine_dup_pairs_lsh_null_first_vector_pairs_with_nothing(spark):
+    """A NULL vector, even in the first row, pairs with nothing: the rows
+    after it still pair, and the centring mean divides by every row."""
+    rows = [(1, None), (2, [3, 1, 4, 1]), (3, [3, 1, 4, 1]), (4, [-2, 7, 1, 8])]
+    df = spark.createDataFrame(rows, "media_id long, codes array<int>").coalesce(1)
+    out = similarity.cosine_dup_pairs_lsh(df, "media_id", "codes", n_planes=4)
+    assert [(r.src, r.dst) for r in out.collect()] == [(2, 3)]
+
+
+@pytest.mark.parametrize("order", ["long_first", "short_first"])
+def test_cosine_dup_pairs_lsh_ragged_vectors_raise(spark, order):
+    """Vectors of different lengths cannot share a hyperplane set: a clear
+    ValueError before hashing, whichever length comes first."""
+    rows = [(1, [1, 2, 3, 4]), (2, [1, 2, 3])]
+    if order == "short_first":
+        rows.reverse()
+    df = spark.createDataFrame(rows, "media_id long, codes array<int>").coalesce(1)
+    with pytest.raises(ValueError, match="differ in length"):
+        similarity.cosine_dup_pairs_lsh(df, "media_id", "codes", n_planes=4).collect()
+
+
+def test_minhash_pair_counts_are_exact_on_edge_documents(spark):
+    """Every pair minhash_lsh_pairs and containment_pairs return carries
+    the exact Jaccard and containment of the two documents' shingles()
+    sets, on documents at the edges: NULL, empty and too-short text (no
+    shingles, so in no pair), repeated tokens, identical documents and a
+    short document quoted inside a long one."""
+    from pyspark.sql import functions as F
+
+    quote = "to be or not to be that is the question"
+    rows = [
+        (1, None),
+        (2, ""),
+        (3, "two words"),
+        (4, "la la la la la la la la"),
+        (5, "la la la la la la la la la"),
+        (6, "the quick brown fox jumps over the lazy dog"),
+        (7, "the quick brown fox jumps over the lazy dog"),
+        (8, "the quick brown fox jumps over the lazy cat"),
+        (9, quote),
+        (10, "she wrote " + quote + " was asked again"),
+        (11, "a b a b a b a b c"),
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    sh = {
+        r.doc_id: set(r.sh)
+        for r in df.select("doc_id", dedup.shingles(F.col("text"), 3).alias("sh")).collect()
+    }
+    jac = dedup.minhash_lsh_pairs(df, "doc_id", min_jaccard=0.0).collect()
+    con = dedup.containment_pairs(df, "doc_id", min_containment=0.0).collect()
+    for r in jac:
+        a, b = sh[r.src], sh[r.dst]
+        assert r.src < r.dst and r.jaccard == len(a & b) / len(a | b), r
+    for r in con:
+        a, b = sh[r.src], sh[r.dst]
+        assert r.containment == len(a & b) / min(len(a), len(b)), r
+        assert r.jaccard == len(a & b) / len(a | b), r
+    pairs = {(r.src, r.dst) for r in jac}
+    assert {(r.src, r.dst) for r in con} == pairs
+    assert (6, 7) in pairs and (4, 5) in pairs, "identical shingle sets always collide"
+    assert not {1, 2, 3} & {d for p in pairs for d in p}
+    # the quoted pair collides (checked for these texts): containment 1.0
+    assert [r.containment for r in con if (r.src, r.dst) == (9, 10)] == [1.0]
+
+
 def test_embedding_dup_clusters_lsh_refines_exact(spark, alt_sf_dir):
     """LSH candidate edges are a subset of the exact query's edges, so
     every LSH cluster must sit inside one exact cluster (approximation

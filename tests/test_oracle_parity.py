@@ -164,3 +164,31 @@ def test_cluster_label_queries_distributed_match_oracle(spark, sf_dir, name, mon
     _check(spark, sf_dir, name, PHYSICAL_CONFIGS["coalesce_off"], "[distributed]")
     assert runs and all(r["mode"] == "distributed" for r in runs)
     assert any(r["n_pairs"] for r in runs), f"{name}: no pairs, propagation untested"
+
+
+def test_idle_customer_balance_parity_on_idle_customers(spark, sf_dir, tmp_path):
+    """The fixture draws give every customer an order, so the plain parity
+    check of idle_customer_balance compares two empty results. On a copy
+    of the tables with the orders of the three highest-balance customers
+    removed, Spark and DuckDB must agree on a non-empty answer."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    cust = pq.read_table(f"{sf_dir}/customer.parquet").to_pandas()
+    keys = pa.array(cust.nlargest(3, "c_acctbal")["c_custkey"])
+    orders = pq.read_table(f"{sf_dir}/orders.parquet")
+    pq.write_table(
+        orders.filter(pc.invert(pc.is_in(orders["o_custkey"], value_set=keys))),
+        tmp_path / "orders.parquet",
+    )
+    shutil.copy(f"{sf_dir}/customer.parquet", tmp_path / "customer.parquet")
+    q = QUERIES["idle_customer_balance"]
+    with caching.scope():
+        got = q.builder(spark, str(tmp_path))
+        want = duck_run(str(tmp_path), q.oracle_sql(str(tmp_path)))
+        errs = compare(got, want)
+    assert len(want) >= 1, "no idle above-average customer in the copy"
+    assert not errs, "; ".join(errs)

@@ -239,29 +239,43 @@ def test_contamination_broadcasts_bench_grams(spark):
 
 
 def test_minhash_explodes_shingles_once(spark):
-    """minhash_lsh_pairs feeds signatures AND verification from one
-    persisted shingle frame: the executed plan must show the shingle
-    generate as InMemoryTableScan reuse, not two independent explodes."""
+    """minhash_lsh_pairs generates each document's shingles once, into one
+    persisted row-wise sketch: no per-shingle rows exist anywhere, the
+    band self-join and both verification join-backs read that one cache,
+    and the whole operator stays within a job and stage bound (the
+    exploded 32-partition shingle table took 16 jobs and 33 stages on the
+    sf0.01 documents)."""
+    from beymani_spark.functions import caching
     from beymani_spark.operators import dedup
 
+    jsc = spark.sparkContext._jsc
+    tracker = spark.sparkContext.statusTracker()
     docs = load_table(spark, SF, "documents")
-    pairs = dedup.minhash_lsh_pairs(
-        docs, "doc_id", num_hashes=16, bands=4, n=3, min_jaccard=0.5
-    )
-    plan = _plan(pairs)
-    # every shingle consumer (both band-signature sides, the two
-    # verification joins, the size aggregates) must read the cache; the
-    # shingle-explode Generates in the plan text are the cached relation's
-    # build plan rendered per reference, not independent executions
-    assert plan.count("InMemoryTableScan") >= 6, (
-        "signature and verification paths must all read the persisted shingles"
-    )
+    with caching.scope():
+        before = set(jsc.getPersistentRDDs().keys())
+        pairs = dedup.minhash_lsh_pairs(
+            docs, "doc_id", num_hashes=16, bands=4, n=3, min_jaccard=0.5
+        )
+        spark.sparkContext.setJobGroup("minhash_bound", "minhash_bound")
+        try:
+            pairs.collect()
+        finally:
+            spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
+        cached = set(jsc.getPersistentRDDs().keys()) - before
+        plan = _plan(pairs)
+    jobs = list(tracker.getJobIdsForGroup("minhash_bound"))
+    stages = sum(len(tracker.getJobInfo(j).stageIds) for j in jobs)
+    assert len(cached) == 1, "one persisted sketch, nothing else cached"
+    # both band-join sides and both verification sides scan the cache
+    assert plan.count("InMemoryTableScan") >= 4
+    assert "explode(array_distinct" not in plan, "no per-shingle rows"
+    assert len(jobs) <= 9 and stages <= 10, (len(jobs), stages)
 
 
 def test_incremental_minhash_reuses_both_shingle_caches(spark):
-    """incremental_minhash feeds signatures AND candidate verification from
-    one persisted shingle frame per side — no re-explode, no cartesian; the
-    batch ledger join stays an equi-join throughout."""
+    """incremental_minhash reads one persisted sketch per side for its
+    band signatures AND its candidate verification — no per-shingle rows,
+    no cartesian; the batch ledger join stays an equi-join throughout."""
     from beymani_spark.functions import caching
     from beymani_spark.operators import dedup
 
@@ -272,12 +286,14 @@ def test_incremental_minhash_reuses_both_shingle_caches(spark):
         )
         plan = _plan(out)
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
-    # batch shingles feed: batch sigs, 3 verification sides, 2 size aggs;
-    # corpus shingles feed: corpus sigs, 1 verification side, 1 size agg —
-    # every consumer must read a cache, never re-run the explode
-    assert plan.count("InMemoryTableScan") >= 8, (
-        "signature and verification paths must read the persisted shingles"
+    # the batch sketch feeds: its band rows, the batch half of the other
+    # side's band rows, and both verification sides; the corpus sketch
+    # feeds its band rows and one verification side — every consumer
+    # reads a cache, and no shingle is exploded into a row
+    assert plan.count("InMemoryTableScan") >= 6, (
+        "signature and verification paths must read the persisted sketches"
     )
+    assert "explode(array_distinct" not in plan
 
 
 def test_mix_to_targets_broadcasts_rates_no_fact_shuffle(spark):
@@ -1216,10 +1232,13 @@ def test_new_tpch_shapes_broadcast_dims_no_cartesian(spark):
 def test_kmeans_model_over_cap_stays_distributed(spark, monkeypatch):
     """A keyed fit whose |keys|*k model exceeds max_model_rows must never
     land on the driver: the centroid frame localCheckpoints and sizes
-    attach via a distributed join. collect/toPandas are patched to raise
-    while the over-cap model builds AND fully executes; its rows must
-    equal the small-path (driver-collected) model exactly — same fit,
-    same sizes, different materialization only."""
+    attach via a distributed join. While the over-cap model builds AND
+    fully executes, toPandas is patched to raise and collect to record
+    its row counts: no collect may bring more than max_model_rows + 1
+    rows to the driver (the bound of materialize's one collect), and
+    rows is None. Its rows must equal the small-path (driver-collected)
+    model exactly — same fit, same sizes, different materialization
+    only."""
     import pyspark.sql.classic.dataframe as cdf
 
     from beymani_spark.operators.multivariate import (
@@ -1245,8 +1264,15 @@ def test_kmeans_model_over_cap_stays_distributed(spark, monkeypatch):
     def boom(self, *a, **kw):
         raise AssertionError("driver materialization in over-cap model")
 
+    collected: list[int] = []
+
+    def counted(self):
+        rows = real_collect(self)
+        collected.append(len(rows))
+        return rows
+
     monkeypatch.setattr(cdf.DataFrame, "toPandas", boom)
-    monkeypatch.setattr(cdf.DataFrame, "collect", boom)
+    monkeypatch.setattr(cdf.DataFrame, "collect", counted)
     try:
         model = kmeans_model(
             li, keys, vals, n_clusters=3, presample=64, max_model_rows=0
@@ -1266,6 +1292,7 @@ def test_kmeans_model_over_cap_stays_distributed(spark, monkeypatch):
     finally:
         monkeypatch.setattr(cdf.DataFrame, "toPandas", real_to_pandas)
         monkeypatch.setattr(cdf.DataFrame, "collect", real_collect)
+    assert collected and max(collected) <= 1, collected
     got = sorted(tuple(r) for r in model.frame.collect())
     assert got == expected, "over-cap model must equal the collected model"
 
@@ -1297,10 +1324,13 @@ def test_kmeans_model_over_cap_stays_distributed(spark, monkeypatch):
 
 
 def test_iforest_over_cap_scores_match_broadcast_path(spark, monkeypatch):
-    """Round-10 directive: isolation_forest_score above max_model_rows
-    must never materialize the model on the driver — facts cogroup with
-    their key's trees — and must score bit-identically to the broadcast
-    (collected) path, including the missing-model-key 'I'/null contract."""
+    """isolation_forest_score above max_model_rows must never materialize
+    the model on the driver — facts cogroup with their key's trees — and
+    must score bit-identically to the broadcast (collected) path,
+    including the missing-model-key 'I'/null contract. While the over-cap
+    scorer builds and runs, toPandas raises and collect records its row
+    counts: at most max_model_rows + 1 rows reach the driver, and rows is
+    None."""
     import pyspark.sql.classic.dataframe as cdf
 
     from beymani_spark.operators import multivariate as mv
@@ -1336,16 +1366,24 @@ def test_iforest_over_cap_scores_match_broadcast_path(spark, monkeypatch):
     def boom(self, *a, **kw):
         raise AssertionError("driver materialization in over-cap scorer")
 
+    collected: list[int] = []
+
+    def counted(self):
+        rows = real_collect(self)
+        collected.append(len(rows))
+        return rows
+
     monkeypatch.setattr(cdf.DataFrame, "toPandas", boom)
-    monkeypatch.setattr(cdf.DataFrame, "collect", boom)
+    monkeypatch.setattr(cdf.DataFrame, "collect", counted)
     try:
-        scored = mv.isolation_forest_score(
-            li, mv.materialize(frame, max_model_rows=0), keys, vals
-        )
+        over = mv.materialize(frame, max_model_rows=0)
+        assert over.rows is None
+        scored = mv.isolation_forest_score(li, over, keys, vals)
         assert scored.count() == len(expected)
     finally:
         monkeypatch.setattr(cdf.DataFrame, "toPandas", real_to_pandas)
         monkeypatch.setattr(cdf.DataFrame, "collect", real_collect)
+    assert collected and max(collected) <= 1, collected
     got = sorted(tuple(r) for r in scored.collect())
     assert got == expected, "cogroup path must score bit-identically"
 
